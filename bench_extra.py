@@ -15,6 +15,7 @@ from __future__ import annotations
 
 import json
 import os
+import statistics
 import sys
 import time
 
@@ -67,11 +68,10 @@ def main() -> None:
             fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
             samples.append(round(time.time() - t0, 3))
             spark.catalog.clearCache()
-        samples.sort()
         out[name] = {
-            "median": samples[len(samples) // 2],
-            "min": samples[0],
-            "max": samples[-1],
+            "median": round(statistics.median(samples), 3),
+            "min": min(samples),
+            "max": max(samples),
             "n": reps,
         }
         print(json.dumps({name: out[name]}), flush=True)

@@ -25,17 +25,14 @@ from pyspark.sql import SparkSession
 # batches directly, so the row cap can be raised to 8192 while audio
 # payload batches stay ≈32MB (~250 clips) — the same protection the
 # old row cap gave, without taxing narrow rows.
-DEFAULT_ARROW_BATCH = int(os.environ.get("DRIVEL_ARROW_BATCH", "8192"))
-DEFAULT_ARROW_BATCH_BYTES = int(
-    os.environ.get("DRIVEL_ARROW_BATCH_BYTES", str(32 << 20))
-)
+DEFAULT_ARROW_BATCH = 8192
+DEFAULT_ARROW_BATCH_BYTES = 32 << 20
 # Parquet vectorized-reader batch: 1024 rows ≈ 4× the old 256 (less
 # per-batch overhead on narrow scans) while a worst-case 130KB-row
-# binary scan still bounds at ~130MB per in-flight task batch — safe
-# under the 8-stream cap on byte-heavy stages.  (Spark has no byte cap
-# for this reader, so the row count stays conservative; 4096 would be
-# ~0.5GB/task on audio tables.)
-DEFAULT_PARQUET_BATCH = int(os.environ.get("DRIVEL_PARQUET_BATCH", "1024"))
+# binary scan still bounds at ~130MB per in-flight task batch.  (Spark
+# has no byte cap for this reader, so the row count stays conservative;
+# 4096 would be ~0.5GB/task on audio tables.)
+DEFAULT_PARQUET_BATCH = 1024
 
 # Scan-split sizing: with per-row pandas-UDF work (SNR decode) the cost
 # of a partition is driven by ROW COUNT, not bytes; the 128MB default
@@ -58,20 +55,19 @@ DEFAULT_MAX_PARTITION_BYTES = os.environ.get("DRIVEL_MAX_PARTITION_BYTES", "3355
 # concurrent jobs (uniqueness shuffle, referential anti-joins, profile)
 # have runnable tasks.  Within-pool FIFO already gives the concurrency
 # the engine needs — Spark's FIFO scheduler backfills idle slots with
-# later jobs' tasks once the head job's pending tasks are placed (the
-# byte-heavy stage is capped at 8 streams, so 24 of 32 cores are
-# backfillable) — while letting the critical job run unthrottled.  So:
+# later jobs' tasks once the head job's pending tasks are placed —
+# while letting the critical job run unthrottled.  So:
 # scheduler mode stays FAIR (callers can still isolate work in weighted
 # pools via spark.scheduler.pool), but the default pool is explicitly
 # FIFO.  Written driver-local at session build time (a packaged file
 # inside a --py-files zip has no filesystem path).
 # The "critical" pool exists for the one job per batch that sets the
 # wall clock (the audio-decode flag materialization): weight 8 keeps it
-# core-rich whenever it has runnable tasks, while its 8-stream cap
-# leaves the remaining cores to the default pool's concurrent jobs —
-# overlap WITHOUT stretching the critical path.  validate() assigns the
-# pool via sc.setLocalProperty("spark.scheduler.pool", ...) on the
-# materializing thread (thread-local, so only that job is promoted).
+# core-rich whenever it has runnable tasks, while idle cores go to the
+# default pool's concurrent jobs — overlap WITHOUT stretching the
+# critical path.  validate() assigns the pool via
+# sc.setLocalProperty("spark.scheduler.pool", ...) on the materializing
+# thread (thread-local, so only that job is promoted).
 # identifies the scheduler policy in benchmark run records, so scaling
 # campaigns across config changes stay separable in the append-only log
 SCHED_CONFIG_TAG = "fifo-default+critical-w8"

@@ -3,16 +3,20 @@
 The per-row invariant (BASELINE.json input_hint): decoded PCM must
 match the oracle's re-synthesis with SNR ≥ 30 dB, plus transcript
 equality.  Decoding runs per Arrow batch (numpy per clip, no per-sample
-Python); the clip-index needed for re-synthesis is recovered by a
-distributed join against the deterministic (clip_id, idx) mapping —
-never a driver-side lookup.
+Python).  ``audio_row_source`` is the one row source ``--check-audio``
+uses; ``make_snr_udf`` + ``attach_clip_idx`` score the same rows through
+a pandas UDF and a distributed (clip_id, idx) join, and serve as its
+independent reference.
 """
 
 from __future__ import annotations
 
+from dataclasses import dataclass
+from typing import Optional
+
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BooleanType,
@@ -23,7 +27,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..produce.audio import snr_db, snr_vs_synth, synth_pcm, wav_decode
+from ..produce.audio import snr_vs_synth, wav_decode
+from .spec import Constraint
 
 _DECODE_SCHEMA = StructType(
     [
@@ -108,88 +113,158 @@ def _clip_idx_map(n_rows: int, seed: int) -> dict:
     return m
 
 
-# narrow clips columns + the computed SNR; the binary payload is
-# consumed inside the worker and never crosses back to the JVM
-SNR_SOURCE_SCHEMA = (
-    "clip_id string, sr_hz int, dur_ms int, codec string, "
-    "transcript string, __snr double"
-)
+# payload rows per Arrow batch read inside audio_row_source
+PAYLOAD_READ_ROWS = 256
 
 
-def snr_row_source(
-    spark: SparkSession,
-    clips_dir: str,
+def _read_payloads(source, rows: np.ndarray, bytes_col: str):
+    """Yield ``(i, payload)`` for each file row index ``rows[i]``, in
+    file order: reads only the payload column of the row groups those
+    rows fall in, ``PAYLOAD_READ_ROWS`` at a time."""
+    import pyarrow.parquet as pq
+
+    pf = pq.ParquetFile(source)
+    md = pf.metadata
+    starts = np.cumsum(
+        [0] + [md.row_group(g).num_rows for g in range(md.num_row_groups)]
+    )
+    rg_of = np.searchsorted(starts, rows, side="right") - 1
+    rgs = np.unique(rg_of)
+    sizes = starts[rgs + 1] - starts[rgs]
+    # each row's position within the read of just those row groups
+    skipped = starts[rgs] - (np.cumsum(sizes) - sizes)
+    pos = rows - skipped[np.searchsorted(rgs, rg_of)]
+    order = np.argsort(pos)
+    j = off = 0
+    for chunk in pf.iter_batches(
+        batch_size=PAYLOAD_READ_ROWS, row_groups=rgs.tolist(), columns=[bytes_col]
+    ):
+        payload = chunk.column(0)
+        end = off + len(payload)
+        while j < len(order) and pos[order[j]] < end:
+            yield order[j], payload[int(pos[order[j]] - off)].as_py()
+            j += 1
+        if j == len(order):
+            return
+        off = end
+
+
+def audio_row_source(
+    df: DataFrame,
     n_rows: int,
     seed: int = 42,
+    flags: Optional[dict[str, Column]] = None,
     audio_cap_ms: int = 2000,
     sr_range: tuple[int, int] = (4000, 48000),
+    bytes_col: str = "bytes",
 ) -> DataFrame:
-    """Row-level source for the audio-SNR check that never ships the
-    payload through the JVM: one task per parquet file reads its file
-    directly in the Python worker (pyarrow), decodes + scores every
-    clip, and emits only the narrow columns plus ``__snr`` (guide-§8
-    shape: heavy opaque bytes move zero times; decisions travel as a
-    few bytes per row).  Compared with streaming ``bytes`` into a
-    pandas UDF this removes both the JVM parquet materialization of
-    the payload column and the JVM→Python Arrow stream — and with it
-    the local-mode >8-streams-per-JVM collapse that forced the decode
-    stage down to 8 concurrent tasks (BENCH/BASELINE.md): the SNR scan
-    now runs at full core count.  On a cluster the same pattern holds
-    (workers read their own splits from shared storage).
+    """Row source for the audio-SNR check: every column of ``df`` but
+    the payload, one boolean column per ``flags`` entry, and ``__snr``.
 
-    Row-identical to the pandas-UDF path: same wav_decode, same
-    ``snr_vs_synth`` float64 accumulation, same clamps, same
-    missing-idx / decode-failure → −inf policy, one output row per
-    input row in file order.
+    ``df`` is the clips table read from parquet, after any filters
+    (``--where``, a dirty-scope slice).  Spark plans, prunes and splits
+    that scan as usual, minus the payload column; each row instead
+    carries its ``_metadata.file_path`` / ``_metadata.row_index``.  One
+    ``mapInArrow`` then reads the payloads in the Python worker: per
+    batch it opens each file once, finds the row groups its rows fall
+    in from the footer, and reads only the payload column of those row
+    groups, ``PAYLOAD_READ_ROWS`` at a time.  The payload never crosses
+    the JVM→Python Arrow stream, parallelism follows Spark's splits,
+    and a worker's payload memory is bounded by the row groups of one
+    batch, not by the file.
+
+    ``flags`` maps names to boolean Columns that need the payload (the
+    decode-free structural tiers); they are evaluated in the same scan,
+    before the payload is dropped.
+
+    Scores as ``make_snr_udf`` does: same ``wav_decode``, same
+    ``snr_vs_synth``, same clamps, ``-inf`` for a missing payload, an
+    unknown clip id, or an undecodable payload; also ``-inf`` for a NULL
+    ``sr_hz`` / ``dur_ms``, which leaves nothing to re-synthesize.
     """
-    import glob as _glob
-    import os
+    from pyspark.errors import AnalysisException
 
-    files = sorted(_glob.glob(os.path.join(clips_dir, "*.parquet")))
-    if not files:
-        raise ValueError(f"snr_row_source: no parquet files under {clips_dir}")
+    flags = flags or {}
+    try:
+        narrow = df.select(
+            *[c for c in df.columns if c != bytes_col],
+            *[pred.alias(name) for name, pred in flags.items()],
+            F.col("_metadata.file_path").alias("__file"),
+            F.col("_metadata.row_index").alias("__row"),
+        )
+    except AnalysisException as e:
+        raise ValueError(
+            "audio_row_source needs a parquet file scan: its _metadata "
+            "columns locate each row's payload"
+        ) from e
+    out_schema = StructType(
+        [f for f in narrow.schema.fields if f.name not in ("__file", "__row")]
+        + [StructField("__snr", DoubleType())]
+    )
+    out_names = out_schema.fieldNames()
 
     def gen(batches):
         import pyarrow as pa
-        import pyarrow.parquet as pq
+        import pyarrow.compute as pc
+        from pyarrow import fs
 
         idx_map = _clip_idx_map(n_rows, seed)
-        out_type = pa.float64()
-        for batch in batches:
-            for fid in batch.column("id").to_pylist():
-                tbl = pq.read_table(files[fid])
-                payloads = tbl.column("bytes").to_pylist()
-                srs = tbl.column("sr_hz").to_numpy(zero_copy_only=False)
-                durs = tbl.column("dur_ms").to_numpy(zero_copy_only=False)
-                cids = tbl.column("clip_id").to_pylist()
-                snr = np.full(len(payloads), -np.inf)
-                for k in range(len(payloads)):
-                    b = payloads[k]
-                    idx = idx_map.get(cids[k])
-                    if b is None or idx is None:
-                        continue
-                    try:
-                        decoded, _ = wav_decode(b)
-                    except ValueError:
-                        continue
-                    sr_c = int(np.clip(srs[k], sr_range[0], sr_range[1]))
-                    dur_c = int(np.clip(durs[k], 50, audio_cap_ms))
-                    snr[k] = snr_vs_synth(decoded, idx, sr_c, dur_c, seed)
-                out = pa.table(
-                    {
-                        "clip_id": tbl.column("clip_id"),
-                        "sr_hz": tbl.column("sr_hz"),
-                        "dur_ms": tbl.column("dur_ms"),
-                        "codec": tbl.column("codec"),
-                        "transcript": tbl.column("transcript"),
-                        "__snr": pa.array(snr, type=out_type),
-                    }
-                )
-                yield from out.to_batches()
 
-    # exactly one file per partition: spark.range splits [0, n) evenly
-    manifest = spark.range(0, len(files), numPartitions=len(files))
-    return manifest.mapInArrow(gen, SNR_SOURCE_SCHEMA)
+        def score(b, cid, sr, dur) -> float:
+            idx = idx_map.get(cid)
+            if b is None or idx is None or sr is None or dur is None:
+                return -np.inf
+            try:
+                decoded, _ = wav_decode(b)
+            except ValueError:
+                return -np.inf
+            sr_c = int(np.clip(sr, sr_range[0], sr_range[1]))
+            dur_c = int(np.clip(dur, 50, audio_cap_ms))
+            return snr_vs_synth(decoded, idx, sr_c, dur_c, seed)
+
+        for batch in batches:
+            files = batch.column("__file")
+            rows = batch.column("__row").to_numpy()
+            cids = batch.column("clip_id").to_pylist()
+            srs = batch.column("sr_hz").to_pylist()
+            durs = batch.column("dur_ms").to_pylist()
+            snr = np.full(batch.num_rows, -np.inf)
+            for uri in pc.unique(files).to_pylist():
+                at = np.flatnonzero(pc.equal(files, uri).to_numpy(zero_copy_only=False))
+                filesystem, path = fs.FileSystem.from_uri(uri)
+                with filesystem.open_input_file(path) as fh:
+                    for i, b in _read_payloads(fh, rows[at], bytes_col):
+                        k = at[i]
+                        snr[k] = score(b, cids[k], srs[k], durs[k])
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(n) for n in out_names[:-1]] + [pa.array(snr)],
+                names=out_names,
+            )
+
+    return narrow.mapInArrow(gen, out_schema)
+
+
+def audio_check(
+    constraints: list, bytes_col: str = "bytes"
+) -> tuple[dict[str, Column], list]:
+    """The ``--check-audio`` constraint set over ``audio_row_source``:
+    each row-level constraint on the payload column becomes a read of a
+    flag column the source computes in its scan (returned as the
+    source's ``flags``), and the SNR ≥ 30 dB check is appended."""
+    from .validate import RowPredicate
+
+    flags: dict[str, Column] = {}
+    out = []
+    for c in constraints:
+        if c.is_row_level and c.column == bytes_col:
+            name = f"__ok_{len(flags)}"
+            flags[name] = c.predicate()
+            c = RowPredicate(c.name, c.column, F.col(name))
+        out.append(c)
+    out.append(
+        RowPredicate("audio_snr_30db", bytes_col, F.col("__snr") >= F.lit(30.0))
+    )
+    return flags, out
 
 
 def attach_clip_idx(
@@ -220,11 +295,6 @@ def attach_clip_idx(
         mapping = F.broadcast(mapping)
     return df.join(mapping, on=clip_id_col, how="left")
 
-
-from dataclasses import dataclass
-from typing import Optional
-
-from .spec import Constraint
 
 
 @dataclass(frozen=True)

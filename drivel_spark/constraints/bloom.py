@@ -33,7 +33,6 @@ Reference parity: the reference has no referential machinery at all
 from __future__ import annotations
 
 import math
-import os
 from dataclasses import dataclass
 from typing import Optional
 
@@ -129,7 +128,7 @@ def build_bloom(
 # spike driver analysis time (ADVICE r05).  Small bitmaps keep the
 # literal path (zero Python, no broadcast); everything else goes
 # broadcast + Arrow.
-LITERAL_WORDS_MAX = int(os.environ.get("DRIVEL_BLOOM_LITERAL_WORDS", str(1 << 14)))
+LITERAL_WORDS_MAX = 1 << 14
 
 
 def _contains_literal(key: Column, bloom: BloomFilter) -> Column:

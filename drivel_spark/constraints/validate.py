@@ -285,7 +285,7 @@ def validate(
         # count-then-aggregate shape paid a second full 64-task pass
         # over the cached flags in the serial tail).  It runs in the
         # high-weight "critical" scheduler pool (config.py): FAIR
-        # between pools keeps its 8-stream scan core-rich for its
+        # between pools keeps its scan core-rich for its
         # whole span while the default pool's concurrent jobs backfill
         # the remaining cores — plain FIFO instead serializes it
         # behind whichever job got submitted first (measured 35.3s →

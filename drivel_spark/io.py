@@ -301,9 +301,12 @@ def local_df(spark: SparkSession, rows, schema) -> DataFrame:
 
     Values are staged in dtype=object pandas columns so large ints /
     None never round-trip through float64.  Falls back to the classic
-    path when the Arrow conversion cannot represent the rows.
+    path when the Arrow conversion cannot represent the rows; a row
+    whose arity does not match the schema raises ``ValueError``.
     """
     import pandas as pd
+    from pyarrow import ArrowException
+    from pyspark.errors import PySparkTypeError, PySparkValueError
     from pyspark.sql.types import StructType
 
     if isinstance(schema, StructType):
@@ -313,6 +316,11 @@ def local_df(spark: SparkSession, rows, schema) -> DataFrame:
 
         names = [f.name for f in _parse_datatype_string(schema).fields]
     rows = list(rows)
+    for r in rows:
+        if len(r) != len(names):
+            raise ValueError(
+                f"local_df: row {r!r} has {len(r)} values for columns {names}"
+            )
     try:
         pdf = pd.DataFrame(
             {
@@ -322,7 +330,7 @@ def local_df(spark: SparkSession, rows, schema) -> DataFrame:
             columns=names,
         )
         return spark.createDataFrame(pdf, schema)
-    except Exception:
+    except (ArrowException, PySparkTypeError, PySparkValueError):
         return spark.createDataFrame(rows, schema)
 
 

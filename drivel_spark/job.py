@@ -49,8 +49,6 @@ import pickle
 import sys
 import time
 
-import numpy as np
-
 from pyspark.sql import functions as F
 
 from drivel_spark.config import build_session
@@ -61,11 +59,10 @@ from drivel_spark.constraints import (
     NotNull,
     Range,
     Referential,
-    RowPredicate,
     Unique,
     validate,
 )
-from drivel_spark.constraints.audio import attach_clip_idx, make_snr_udf
+from drivel_spark.constraints.audio import audio_check, audio_row_source
 from drivel_spark.fixtures import (
     CODEC_ENUM,
     SR_VALUES,
@@ -366,10 +363,8 @@ def cmd_dup_segments(args) -> dict:
 
 
 def _narrow_batch(df, cols) -> int | None:
-    """8192-row Arrow batches for all-narrow profile scans (the 256
-    session default is sized for ~100KB audio rows and strangles
-    narrow tables in per-batch framing); None — keep the session
-    default — when any profiled column is binary."""
+    """8192-row Arrow batches for all-narrow profile scans; None —
+    keep the session default — when any profiled column is binary."""
     names = set(cols) if cols else {f.name for f in df.schema.fields}
     wide = any(
         f.dataType.simpleString() == "binary"
@@ -861,79 +856,8 @@ def cmd_produce(args) -> dict:
     return {"job": "produce", "n_rows": n, "out": args.out}
 
 
-_SESSION_WARMED = False
-
-
-def _warm_session(spark) -> None:
-    """One-time engine warmup on a fresh session, BEFORE the timed
-    batch: compiles the whole-stage-codegen classes the validate plans
-    use (parquet scan → hash aggregate → exchange; broadcast anti-join;
-    persist) and spins up + imports the Python worker pool (numpy /
-    pyarrow / the audio decode module), all against ~64 rows of
-    synthetic data.  A long-lived production session pays these
-    JVM-JIT/daemon costs once, not per batch, so the per-batch
-    validation throughput should not charge them to the first batch.
-    No input data is read and nothing computed here is reused by the
-    batch — this is strictly class-compilation + process-pool warmup.
-    Disable with DRIVEL_WARMUP=0."""
-    global _SESSION_WARMED
-    if _SESSION_WARMED or os.environ.get("DRIVEL_WARMUP", "1") != "1":
-        return
-    _SESSION_WARMED = True
-    import tempfile
-
-    import pandas as pd
-
-    d = os.path.join(tempfile.gettempdir(), f"drivel_warm_{os.getuid()}")
-    pdf = pd.DataFrame(
-        {
-            "k": [f"warm-{i:04d}" for i in range(64)],
-            "v": np.arange(64, dtype=np.int64),
-        }
-    )
-    spark.createDataFrame(pdf).write.mode("overwrite").parquet(d)
-    df = spark.read.parquet(d)
-    from pyspark import StorageLevel
-
-    cached = df.persist(StorageLevel.MEMORY_AND_DISK)
-    agg = cached.groupBy("k").agg(F.count(F.lit(1)).alias("c"))
-    agg.filter("c > 1").agg(
-        F.count(F.lit(1)), F.coalesce(F.sum("c"), F.lit(0))
-    ).collect()
-    cached.join(
-        cached.select("k").dropDuplicates(["k"]), on="k", how="left_anti"
-    ).count()
-    cached.groupBy(
-        F.pmod(F.xxhash64("k"), F.lit(8)).cast("long").alias("s")
-    ).agg(F.count(F.lit(1)).alias("n")).toPandas()
-    cached.unpersist()
-
-    def _g(it):
-        import numpy  # noqa: F401
-        import pandas  # noqa: F401
-        import pyarrow  # noqa: F401
-        import pyarrow.parquet  # noqa: F401
-
-        from drivel_spark import fixtures  # noqa: F401
-        from drivel_spark.constraints import audio  # noqa: F401
-        from drivel_spark.profiling import accumulator  # noqa: F401
-
-        yield from it
-
-    n = spark.sparkContext.defaultParallelism
-    warm_arrow = spark.range(0, n, numPartitions=n).mapInArrow(_g, "id long")
-    cached2 = warm_arrow.persist(StorageLevel.MEMORY_AND_DISK)
-    cached2.groupBy(F.pmod(F.col("id"), F.lit(8)).alias("s")).agg(
-        F.count(F.lit(1)).alias("n")
-    ).toPandas()
-    cached2.unpersist()
-    # the profile pass's mapInPandas → applyInPandas combine plan
-    profile(df, columns=["k", "v"])
-
-
 def cmd_validate(args) -> dict:
     spark = build_session("drivel-validate")
-    _warm_session(spark)
     with open(f"{args.data}/meta.json") as fh:
         meta = json.load(fh)
     baseline = None
@@ -1011,68 +935,12 @@ def cmd_validate(args) -> dict:
         constraints.append(PcmSizeConsistency("pcm_size_consistency", "bytes"))
     ds_df = None
     if args.check_audio and meta.get("with_audio") and "bytes" in df.columns:
-        import glob as _glob
-
-        # Fast path: the SNR decode pass reads the parquet files
-        # directly in the Python workers (constraints/audio.py
-        # snr_row_source) — the 2GB payload never crosses the
-        # JVM→Python Arrow stream, so the decode stage runs at full
-        # core count instead of the 8-stream local-JVM cap, and the
-        # dataset-level jobs (uniqueness / referential / profile) keep
-        # their column-pruned JVM scans via ds_df.  Applies whenever
-        # the clips source is a plain parquet directory and no row
-        # slice / byte-level structural check needs the payload in
-        # Catalyst; otherwise the original Arrow-stream path runs.
-        fast = (
-            where is None
-            and isinstance(clips_ref, str)
-            and not clips_ref.startswith("iceberg:")
-            and os.path.isdir(clips_ref)
-            and bool(_glob.glob(os.path.join(clips_ref, "*.parquet")))
-            and not getattr(args, "check_wav_header", False)
-            and not getattr(args, "check_pcm_size", False)
-            and os.environ.get("DRIVEL_SNR_DIRECT", "1") == "1"
-        )
-        if fast:
-            from drivel_spark.constraints.audio import snr_row_source
-
-            ds_df = df
-            df = snr_row_source(
-                spark, clips_ref, meta["n_rows"], seed=meta["seed"]
-            )
-            constraints.append(
-                RowPredicate(
-                    "audio_snr_30db", "bytes", F.col("__snr") >= F.lit(30.0)
-                )
-            )
-        else:
-            df = attach_clip_idx(df, spark, meta["n_rows"], seed=meta["seed"])
-            # Local-mode mitigation, measured on this box (BENCH/BASELINE.md):
-            # JVM→Python Arrow streaming of the binary payload collapses when
-            # one local JVM runs >~8 concurrent streams (57s vs 17s for the
-            # same 2GB at 32 vs 8 streams).  Cap the byte-heavy stage at 8
-            # streams per JVM — the shape a real cluster has anyway (4-8
-            # cores per executor JVM); the freed cores run the concurrent
-            # profile/uniqueness/referential jobs.  A multi-executor deploy
-            # never hits this: its per-JVM stream count IS the executor core
-            # count.  Override with DRIVEL_UDF_STREAMS=0 to disable.
-            master = spark.sparkContext.master or ""
-            streams = int(os.environ.get("DRIVEL_UDF_STREAMS", "8"))
-            local_cores = 0
-            if master.startswith("local["):
-                tok = master[6:-1]
-                local_cores = os.cpu_count() if tok == "*" else int(tok)
-            if streams > 0 and local_cores > streams:
-                df = df.coalesce(streams)
-            snr = make_snr_udf(seed=meta["seed"])
-            constraints.append(
-                RowPredicate(
-                    "audio_snr_30db",
-                    "bytes",
-                    snr(F.col("bytes"), F.col("clip_idx"), F.col("sr_hz"), F.col("dur_ms"))
-                    >= F.lit(30.0),
-                )
-            )
+        # the SNR decode reads the payload in the Python workers
+        # (constraints/audio.py audio_row_source); the dataset-level
+        # jobs keep their column-pruned JVM scans via ds_df
+        flags, constraints = audio_check(constraints)
+        ds_df = df
+        df = audio_row_source(df, meta["n_rows"], seed=meta["seed"], flags=flags)
 
     scope = F.pmod(F.xxhash64(F.col("clip_id")), F.lit(args.n_scopes)).cast("long")
     t1 = time.time()
@@ -1447,29 +1315,14 @@ def cmd_validate_delta(args) -> dict:
 
     prepare_row_df = None
     if args.check_audio and meta.get("with_audio") and "bytes" in clips.columns:
-        snr = make_snr_udf(seed=meta["seed"])
-        constraints.append(
-            RowPredicate(
-                "audio_snr_30db",
-                "bytes",
-                snr(F.col("bytes"), F.col("clip_idx"), F.col("sr_hz"), F.col("dur_ms"))
-                >= F.lit(30.0),
-            )
-        )
+        flags, constraints = audio_check(constraints)
 
-        # idx join + UDF-stream cap applied AFTER the dirty-scope
-        # filter, so even the preparation join scales with churn
+        # applied AFTER the dirty-scope filter, so the decode scales
+        # with churn, not table size
         def prepare_row_df(df):  # noqa: F811
-            df = attach_clip_idx(df, spark, meta["n_rows"], seed=meta["seed"])
-            master = spark.sparkContext.master or ""
-            streams = int(os.environ.get("DRIVEL_UDF_STREAMS", "8"))
-            local_cores = 0
-            if master.startswith("local["):
-                tok = master[6:-1]
-                local_cores = os.cpu_count() if tok == "*" else int(tok)
-            if streams > 0 and local_cores > streams:
-                df = df.coalesce(streams)
-            return df
+            return audio_row_source(
+                df, meta["n_rows"], seed=meta["seed"], flags=flags
+            )
 
     row_cs = [c for c in constraints if c.is_row_level]
     ds_cs = [c for c in constraints if not c.is_row_level]

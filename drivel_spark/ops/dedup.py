@@ -1180,7 +1180,9 @@ def dedup_against_corpus(
         bloom = build_bloom(
             corpus_keys, "__dkey", expected_n=expected, fpp=bloom_fpp
         )
-        hit = bloom_contains(keyed, "__dkey", bloom)
+        # a NULL key probes to NULL; count it as a miss so it survives
+        # like it does in the anti-join arm (NULL never equi-joins)
+        hit = F.coalesce(bloom_contains(keyed, "__dkey", bloom), F.lit(False))
         definite_new = keyed.where(~hit)
         confirmed_new = keyed.where(hit).join(
             corpus_keys, on="__dkey", how="left_anti"

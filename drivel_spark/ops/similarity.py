@@ -775,7 +775,6 @@ def retrieval_recall_report(
     # small independent Spark job: submit them all concurrently on
     # driver threads (the engine's validate pass-2 pattern) instead of
     # a sequential loop — wall time becomes max(job) not sum(job).
-    # Worker cap 8 matches the per-JVM Arrow stream cap (config.py).
     from concurrent.futures import ThreadPoolExecutor
 
     def _truth(qv):

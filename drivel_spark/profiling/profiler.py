@@ -301,14 +301,15 @@ def profile(
 
     ``arrow_batch``: temporarily raise the session's
     ``spark.sql.execution.arrow.maxRecordsPerBatch`` for this scan.
-    The session default (config.py) is 256 rows — sized for ~100KB
-    binary audio rows — which makes NARROW tables arrive in thousands
-    of tiny Arrow batches whose JVM-side framing dominates the scan
-    (measured 7.1s → 4.4s on 600k×3 lineitem at 8192).  Only use when
-    no concurrently-planned job carries wide binary rows: the conf is
-    session-global at planning time, so a wide-row job planned inside
-    this window would inherit the large batch (cmd_validate therefore
-    does NOT set it — its profile overlaps the audio SNR stage).
+    The session default (config.py) is already 8192 rows, with wide
+    binary rows bounded by the 32 MB ``maxBytesPerBatch`` cap, so the
+    override only matters for a session built with a smaller row cap
+    (at 256 rows, measured 7.1s → 4.4s on 600k×3 lineitem at 8192).
+    Only use when no concurrently-planned job carries wide binary rows:
+    the conf is session-global at planning time, so a wide-row job
+    planned inside this window would inherit the large batch
+    (cmd_validate therefore does NOT set it — its profile overlaps the
+    audio SNR stage).
     Concurrent ``profile(arrow_batch=...)`` calls serialize on a module
     lock so set/restore can't interleave, and the override is skipped
     when the session value already meets the request."""

@@ -309,3 +309,22 @@ def test_write_zorder_clusters_both_columns(spark, tmp_path):
         write_zorder(
             df.withColumn("s", df.x.cast("string")), zpath, ["x", "s"]
         )
+
+
+def test_local_df_rejects_wrong_arity_rows(spark):
+    """A malformed row raises instead of being silently truncated or
+    re-tried on the classic path; well-formed rows (None, a 2^62 long,
+    an array) round-trip exactly."""
+    import pytest as _pytest
+
+    from drivel_spark.io import local_df
+
+    schema = "a long, b string, c array<double>"
+    ok = local_df(spark, [(1 << 62, None, [1.0, 2.0]), (None, "x", [])], schema)
+    assert [tuple(r) for r in ok.collect()] == [
+        (1 << 62, None, [1.0, 2.0]),
+        (None, "x", []),
+    ]
+    for bad in ([(1, "x")], [(1, "x", [], 4)]):
+        with _pytest.raises(ValueError, match="values for columns"):
+            local_df(spark, [(2, "y", [0.5]), *bad], schema)

@@ -1178,36 +1178,149 @@ def test_validate_history_window(spark, tmp_path, capsys):
     assert flagged["n_rows"]["rel_change"] == pytest.approx(-0.6667, abs=1e-3)
 
 
-def test_validate_snr_direct_source_matches_arrow_stream_path(spark, tmp_path):
-    """The direct-pyarrow SNR row source (constraints/audio.py
-    snr_row_source, r06 optimization) must be report-identical to the
-    original bytes-through-Arrow pandas-UDF path: same passfail digest,
-    same violation count, on a table with planted audio defects."""
-    import os
+# n ≥ 1501 so the built-in duplicate-clip_id rule (i % 1000 == 500,
+# i ≥ 1000) plants a real SNR failure (an sr_hz = 8000 clip) next to the
+# codec / header defects
+AUDIO_N = 1600
 
-    from drivel_spark.fixtures import build_transcripts
-    from drivel_spark.job import cmd_validate
 
-    # n ≥ 1501 so the built-in duplicate-clip_id rule (i % 1000 == 500,
-    # i ≥ 1000) plants real SNR failures for both paths to agree on
-    spec = ClipFixtureSpec(with_audio=True)
-    n = 1600
-    db = tmp_path / "db"
-    build_clips(spark, n, 4, spec).write.parquet(f"{db}/clips")
-    build_transcripts(spark, n, 4, spec).write.parquet(f"{db}/transcripts")
+def _write_audio_db(db, clips_df, transcripts_df, n):
+    """clips_df None: the caller has written ``db/clips`` itself."""
+    if clips_df is not None:
+        clips_df.write.parquet(f"{db}/clips")
+    transcripts_df.write.parquet(f"{db}/transcripts")
     (db / "meta.json").write_text(json.dumps(
         {"n_rows": n, "partitions": 4, "seed": 42,
          "variant": "default", "with_audio": True}
     ))
+
+
+@pytest.fixture(scope="module")
+def audio_dbs(spark, tmp_path_factory):
+    """The planted-defect audio table in two layouts: Spark's default
+    write (4 files, one row group each) and ONE file of 97-row row
+    groups (many row groups per scan split)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from drivel_spark.fixtures import build_transcripts
+
+    spec = ClipFixtureSpec(with_audio=True)
+    root = tmp_path_factory.mktemp("audio_dbs")
+    clips = build_clips(spark, AUDIO_N, 4, spec)
+    transcripts = build_transcripts(spark, AUDIO_N, 4, spec)
+    default, row_groups = root / "default", root / "row_groups"
+    _write_audio_db(default, clips, transcripts, AUDIO_N)
+    table = pa.Table.from_pandas(
+        spark.read.parquet(f"{default}/clips").toPandas(), preserve_index=False
+    )
+    os.makedirs(f"{row_groups}/clips")
+    pq.write_table(table, f"{row_groups}/clips/part-0.parquet", row_group_size=97)
+    assert pq.ParquetFile(f"{row_groups}/clips/part-0.parquet").num_row_groups > 10
+    _write_audio_db(row_groups, None, transcripts, AUDIO_N)
+    return {"default": default, "row_groups": row_groups}
+
+
+def _validate_args(db, **kw):
     base = dict(data=str(db), baseline=None, checkpoint=None, run_id="r",
                 check_audio=True, n_scopes=8, report=None, clips=None,
                 transcripts=None, where=None)
-    fast = cmd_validate(argparse.Namespace(**base))
-    os.environ["DRIVEL_SNR_DIRECT"] = "0"
-    try:
-        slow = cmd_validate(argparse.Namespace(**base))
-    finally:
-        os.environ.pop("DRIVEL_SNR_DIRECT", None)
-    assert fast["passfail_digest"] == slow["passfail_digest"]
-    assert fast["n_violation_rows"] == slow["n_violation_rows"]
-    assert fast["n_passfail_rows"] == slow["n_passfail_rows"]
+    return argparse.Namespace(**{**base, **kw})
+
+
+@pytest.mark.parametrize(
+    "layout,where",
+    [("default", None), ("row_groups", None),
+     ("default", "sr_hz = 8000"), ("row_groups", "sr_hz = 8000")],
+    ids=["default", "row_groups", "default-where", "row_groups-where"],
+)
+def test_audio_row_source_matches_snr_udf_reference(spark, audio_dbs, layout, where):
+    """audio_row_source scores every row exactly as the independent
+    reference does (the payload streamed into make_snr_udf, the clip
+    index joined by attach_clip_idx): same (clip_id, __snr) multiset,
+    on the default layout, on a file of many small row groups, and on
+    a --where slice of each."""
+    from pyspark.sql import functions as F
+
+    from drivel_spark.constraints.audio import (
+        attach_clip_idx,
+        audio_row_source,
+        make_snr_udf,
+    )
+
+    clips = spark.read.parquet(f"{audio_dbs[layout]}/clips")
+    if where:
+        clips = clips.filter(where)
+    src = audio_row_source(clips, AUDIO_N, seed=42)
+    assert src.columns == [c for c in clips.columns if c != "bytes"] + ["__snr"]
+    got = sorted(
+        (r["clip_id"], r["__snr"]) for r in src.select("clip_id", "__snr").collect()
+    )
+
+    snr = make_snr_udf(seed=42)
+    ref = attach_clip_idx(clips, spark, AUDIO_N, seed=42).select(
+        "clip_id",
+        snr(F.col("bytes"), F.col("clip_idx"), F.col("sr_hz"), F.col("dur_ms")).alias("s"),
+    )
+    want = sorted((r["clip_id"], r["s"]) for r in ref.collect())
+    assert got == want
+    assert len(got) == clips.count()
+    assert any(s < 30.0 for _, s in got)  # planted failures are scored
+
+
+def test_audio_row_source_rejects_non_file_source(spark):
+    from drivel_spark.constraints.audio import audio_row_source
+
+    df = spark.createDataFrame(
+        [("a", 16000, 500, b"RIFF")], "clip_id string, sr_hz int, dur_ms int, bytes binary"
+    )
+    with pytest.raises(ValueError, match="parquet file scan"):
+        audio_row_source(df, 10, seed=42)
+
+
+def test_validate_where_check_audio_slice(spark, audio_dbs, tmp_path):
+    """--where with --check-audio: the report digest equals a full
+    --check-audio validate over a physically pre-filtered copy, on both
+    layouts (the slice is pushed to the scan the audio source reads)."""
+    from pyspark.sql import functions as F
+
+    from drivel_spark.fixtures import build_transcripts
+    from drivel_spark.job import cmd_validate
+
+    spec = ClipFixtureSpec(with_audio=True)
+    src = spark.read.parquet(f"{audio_dbs['default']}/clips")
+    filtered = tmp_path / "filtered"
+    _write_audio_db(
+        filtered, src.filter(F.col("sr_hz") == 8000),
+        build_transcripts(spark, AUDIO_N, 4, spec), AUDIO_N,
+    )
+    want = cmd_validate(_validate_args(filtered))
+    for layout in ("default", "row_groups"):
+        got = cmd_validate(_validate_args(audio_dbs[layout], where="sr_hz = 8000"))
+        assert got["passfail_digest"] == want["passfail_digest"], layout
+        assert got["n_violation_rows"] == want["n_violation_rows"], layout
+    assert want["n_violation_rows"] > 0
+
+
+def test_check_audio_keeps_structural_tier_counts(spark, audio_dbs, tmp_path):
+    """--check-wav-header / --check-pcm-size report the same per-scope
+    counts whether they run as plain Catalyst predicates or as flag
+    columns inside the audio source's scan (with --check-audio)."""
+    from drivel_spark.job import cmd_validate
+
+    tiers = ["pcm_size_consistency", "wav_header"]
+
+    def tier_rows(check_audio):
+        report = str(tmp_path / f"rep_{check_audio}")
+        cmd_validate(_validate_args(
+            audio_dbs["default"], check_audio=check_audio, report=report,
+            check_wav_header=True, check_pcm_size=True,
+        ))
+        pdf = spark.read.parquet(f"{report}/passfail").toPandas()
+        pdf = pdf[pdf.constraint.isin(tiers)]
+        return pdf.sort_values(["constraint", "partition_id"]).reset_index(drop=True)
+
+    with_audio, without = tier_rows(True), tier_rows(False)
+    assert sorted(set(with_audio.constraint)) == tiers
+    assert with_audio.equals(without)
+    assert with_audio.n_violations.sum() > 0

@@ -2616,6 +2616,42 @@ def test_dedup_against_corpus_exact(spark):
     assert got == [12, 13, 14, 15]
 
 
+@pytest.mark.parametrize("literal_words_max", [1 << 14, 0])
+def test_dedup_against_corpus_bloom_keeps_null_text(spark, monkeypatch, literal_words_max):
+    """The bloom arm returns the anti-join arm's rows when the batch
+    holds NULL text: a NULL key is a bloom miss, so the row survives
+    instead of falling out of both the hit and the miss branch.  Both
+    probe paths (array literal, Arrow UDF) are covered."""
+    import pandas as pd
+
+    from drivel_spark.constraints import bloom
+    from drivel_spark.ops import dedup_against_corpus
+
+    monkeypatch.setattr(bloom, "LITERAL_WORDS_MAX", literal_words_max)
+    corpus = spark.createDataFrame(
+        pd.DataFrame({"doc_id": [1, 2], "text": ["alpha beta", None]})
+    )
+    new = spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "doc_id": [10, 11, 12, 13],
+                "text": ["alpha  BETA", None, "zeta", None],
+            }
+        )
+    )
+
+    def kept(use_bloom):
+        return sorted(
+            r["doc_id"]
+            for r in dedup_against_corpus(
+                new, corpus, in_batch=False, use_bloom=use_bloom
+            ).collect()
+        )
+
+    assert kept(use_bloom=False) == [11, 12, 13]
+    assert kept(use_bloom=True) == kept(use_bloom=False)
+
+
 def test_near_dup_against_corpus(spark):
     import pandas as pd
 
