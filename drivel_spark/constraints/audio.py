@@ -13,6 +13,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 from typing import Optional
+from urllib.parse import quote
 
 import numpy as np
 import pandas as pd
@@ -116,8 +117,50 @@ def _clip_idx_map(n_rows: int, seed: int) -> dict:
 # payload rows per Arrow batch read inside audio_row_source
 PAYLOAD_READ_ROWS = 256
 
+# URI schemes Spark uses for stores that pyarrow opens under another name
+_SCHEME_ALIASES = {"s3a": "s3", "s3n": "s3"}
 
-def _read_payloads(source, rows: np.ndarray, bytes_col: str):
+
+def _pyarrow_uri(loc: str, raw: bool = False) -> str:
+    """``loc`` as a URI ``pyarrow.fs.FileSystem.from_uri`` opens: a
+    bare path becomes ``file://``, Spark's ``s3a`` / ``s3n`` become
+    ``s3``.  ``raw``: ``loc`` is a plain location (Iceberg's ``_file``)
+    rather than a percent-encoded URI (Spark's ``_metadata.file_path``),
+    so its path is quoted to survive from_uri's decoding."""
+    scheme, sep, rest = loc.partition(":")
+    if not sep or "/" in scheme:
+        scheme, rest = "file", loc
+    netloc, path = "", rest
+    if rest.startswith("//"):
+        netloc, _, path = rest[2:].partition("/")
+        path = "/" + path
+    if raw:
+        path = quote(path)
+    return f"{_SCHEME_ALIASES.get(scheme, scheme)}://{netloc}{path}"
+
+
+def _check_stores(uris) -> None:
+    """Raise ``ValueError`` unless pyarrow opens the store of every
+    URI: an unknown scheme, or a store pyarrow fails to open (no
+    libhdfs, no credentials), stops the plan on the driver instead of a
+    task in a worker.  Opens each distinct ``scheme://netloc/`` once."""
+    from pyarrow import fs
+
+    roots = set()
+    for u in uris:
+        scheme, _, rest = _pyarrow_uri(u).partition("://")
+        roots.add(f"{scheme}://{rest.partition('/')[0]}/")
+    for root in sorted(roots):
+        try:
+            fs.FileSystem.from_uri(root)
+        except Exception as e:
+            raise ValueError(
+                f"--check-audio reads payloads with pyarrow, which cannot "
+                f"open {root}: {e}"
+            ) from e
+
+
+def _read_payloads(source, rows: np.ndarray):
     """Yield ``(i, payload)`` for each file row index ``rows[i]``, in
     file order: reads only the payload column of the row groups those
     rows fall in, ``PAYLOAD_READ_ROWS`` at a time."""
@@ -137,7 +180,7 @@ def _read_payloads(source, rows: np.ndarray, bytes_col: str):
     order = np.argsort(pos)
     j = off = 0
     for chunk in pf.iter_batches(
-        batch_size=PAYLOAD_READ_ROWS, row_groups=rgs.tolist(), columns=[bytes_col]
+        batch_size=PAYLOAD_READ_ROWS, row_groups=rgs.tolist(), columns=["bytes"]
     ):
         payload = chunk.column(0)
         end = off + len(payload)
@@ -156,22 +199,26 @@ def audio_row_source(
     flags: Optional[dict[str, Column]] = None,
     audio_cap_ms: int = 2000,
     sr_range: tuple[int, int] = (4000, 48000),
-    bytes_col: str = "bytes",
 ) -> DataFrame:
     """Row source for the audio-SNR check: every column of ``df`` but
-    the payload, one boolean column per ``flags`` entry, and ``__snr``.
+    ``bytes``, one boolean column per ``flags`` entry, and ``__snr``.
 
-    ``df`` is the clips table read from parquet, after any filters
-    (``--where``, a dirty-scope slice).  Spark plans, prunes and splits
-    that scan as usual, minus the payload column; each row instead
-    carries its ``_metadata.file_path`` / ``_metadata.row_index``.  One
-    ``mapInArrow`` then reads the payloads in the Python worker: per
-    batch it opens each file once, finds the row groups its rows fall
-    in from the footer, and reads only the payload column of those row
-    groups, ``PAYLOAD_READ_ROWS`` at a time.  The payload never crosses
-    the JVM→Python Arrow stream, parallelism follows Spark's splits,
-    and a worker's payload memory is bounded by the row groups of one
-    batch, not by the file.
+    ``df`` is the clips table read from parquet files, by path or as a
+    catalog table, after any filters (``--where``, a dirty-scope slice).
+    Spark plans, prunes and splits that scan as usual, minus the
+    payload column; each row instead carries the location of its file
+    and its row index in it: Spark's ``_metadata.file_path`` /
+    ``_metadata.row_index`` on a file scan, else Iceberg's ``_file`` /
+    ``_pos`` metadata columns.  One ``mapInArrow`` then reads the
+    payloads in the Python worker: per batch it opens each file once,
+    finds the row groups its rows fall in from the footer, and reads
+    only the payload column of those row groups, ``PAYLOAD_READ_ROWS``
+    at a time.  The payload never crosses the JVM→Python Arrow stream,
+    parallelism follows Spark's splits, and a worker's payload memory is
+    bounded by the row groups of one batch, not by the file.  The files
+    are opened with pyarrow (``s3a://`` / ``s3n://`` as ``s3://``); a
+    store it cannot open raises ``ValueError`` here, on the driver,
+    for every scan that lists its files.
 
     ``flags`` maps names to boolean Columns that need the payload (the
     decode-free structural tiers); they are evaluated in the same scan,
@@ -185,18 +232,27 @@ def audio_row_source(
     from pyspark.errors import AnalysisException
 
     flags = flags or {}
-    try:
-        narrow = df.select(
-            *[c for c in df.columns if c != bytes_col],
-            *[pred.alias(name) for name, pred in flags.items()],
-            F.col("_metadata.file_path").alias("__file"),
-            F.col("_metadata.row_index").alias("__row"),
-        )
-    except AnalysisException as e:
+    keep = [c for c in df.columns if c != "bytes"]
+    keep += [pred.alias(name) for name, pred in flags.items()]
+    narrow, raw = None, False
+    for file_col, row_col in (("_metadata.file_path", "_metadata.row_index"),
+                              ("_file", "_pos")):
+        try:
+            narrow = df.select(
+                *keep,
+                F.col(file_col).alias("__file"),
+                F.col(row_col).cast("long").alias("__row"),
+            )
+            break
+        except AnalysisException:
+            raw = True  # Iceberg's _file is a plain location, not a URI
+    if narrow is None:
         raise ValueError(
-            "audio_row_source needs a parquet file scan: its _metadata "
-            "columns locate each row's payload"
-        ) from e
+            "audio_row_source needs a parquet file scan or an Iceberg "
+            "table: its _metadata (or _file / _pos) columns locate each "
+            "row's payload"
+        )
+    _check_stores(df.inputFiles())
     out_schema = StructType(
         [f for f in narrow.schema.fields if f.name not in ("__file", "__row")]
         + [StructField("__snr", DoubleType())]
@@ -229,11 +285,11 @@ def audio_row_source(
             srs = batch.column("sr_hz").to_pylist()
             durs = batch.column("dur_ms").to_pylist()
             snr = np.full(batch.num_rows, -np.inf)
-            for uri in pc.unique(files).to_pylist():
-                at = np.flatnonzero(pc.equal(files, uri).to_numpy(zero_copy_only=False))
-                filesystem, path = fs.FileSystem.from_uri(uri)
+            for loc in pc.unique(files).to_pylist():
+                at = np.flatnonzero(pc.equal(files, loc).to_numpy(zero_copy_only=False))
+                filesystem, path = fs.FileSystem.from_uri(_pyarrow_uri(loc, raw))
                 with filesystem.open_input_file(path) as fh:
-                    for i, b in _read_payloads(fh, rows[at], bytes_col):
+                    for i, b in _read_payloads(fh, rows[at]):
                         k = at[i]
                         snr[k] = score(b, cids[k], srs[k], durs[k])
             yield pa.RecordBatch.from_arrays(
@@ -244,25 +300,23 @@ def audio_row_source(
     return narrow.mapInArrow(gen, out_schema)
 
 
-def audio_check(
-    constraints: list, bytes_col: str = "bytes"
-) -> tuple[dict[str, Column], list]:
+def audio_check(constraints: list) -> tuple[dict[str, Column], list]:
     """The ``--check-audio`` constraint set over ``audio_row_source``:
-    each row-level constraint on the payload column becomes a read of a
-    flag column the source computes in its scan (returned as the
-    source's ``flags``), and the SNR ≥ 30 dB check is appended."""
+    each row-level constraint on ``bytes`` becomes a read of a flag
+    column the source computes in its scan (returned as the source's
+    ``flags``), and the SNR ≥ 30 dB check is appended."""
     from .validate import RowPredicate
 
     flags: dict[str, Column] = {}
     out = []
     for c in constraints:
-        if c.is_row_level and c.column == bytes_col:
+        if c.is_row_level and c.column == "bytes":
             name = f"__ok_{len(flags)}"
             flags[name] = c.predicate()
             c = RowPredicate(c.name, c.column, F.col(name))
         out.append(c)
     out.append(
-        RowPredicate("audio_snr_30db", bytes_col, F.col("__snr") >= F.lit(30.0))
+        RowPredicate("audio_snr_30db", "bytes", F.col("__snr") >= F.lit(30.0))
     )
     return flags, out
 

@@ -1197,11 +1197,15 @@ def _write_audio_db(db, clips_df, transcripts_df, n):
 
 @pytest.fixture(scope="module")
 def audio_dbs(spark, tmp_path_factory):
-    """The planted-defect audio table in two layouts: Spark's default
-    write (4 files, one row group each) and ONE file of 97-row row
-    groups (many row groups per scan split)."""
+    """The planted-defect audio table in three layouts: Spark's default
+    write (4 files, one row group each), ONE file of 97-row row groups
+    (many row groups per scan split), and a Hive-partitioned write on an
+    added ``part`` column whose values Spark escapes in directory names
+    (``:`` and ``%``) or leaves raw (a space), so ``_metadata.file_path``
+    holds percent-encoded escapes."""
     import pyarrow as pa
     import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
 
     from drivel_spark.fixtures import build_transcripts
 
@@ -1210,15 +1214,26 @@ def audio_dbs(spark, tmp_path_factory):
     clips = build_clips(spark, AUDIO_N, 4, spec)
     transcripts = build_transcripts(spark, AUDIO_N, 4, spec)
     default, row_groups = root / "default", root / "row_groups"
+    partitioned = root / "partitioned"
     _write_audio_db(default, clips, transcripts, AUDIO_N)
-    table = pa.Table.from_pandas(
-        spark.read.parquet(f"{default}/clips").toPandas(), preserve_index=False
-    )
+    written = spark.read.parquet(f"{default}/clips")
+    table = pa.Table.from_pandas(written.toPandas(), preserve_index=False)
     os.makedirs(f"{row_groups}/clips")
     pq.write_table(table, f"{row_groups}/clips/part-0.parquet", row_group_size=97)
     assert pq.ParquetFile(f"{row_groups}/clips/part-0.parquet").num_row_groups > 10
     _write_audio_db(row_groups, None, transcripts, AUDIO_N)
-    return {"default": default, "row_groups": row_groups}
+    part = F.expr(
+        "element_at(array('a:b c', 'x%y', 'p q'), "
+        "CAST(pmod(xxhash64(clip_id), 3) + 1 AS INT))"
+    )
+    written.withColumn("part", part).write.partitionBy("part").parquet(
+        f"{partitioned}/clips"
+    )
+    assert sorted(
+        d for d in os.listdir(f"{partitioned}/clips") if d.startswith("part=")
+    ) == ["part=a%3Ab c", "part=p q", "part=x%25y"]
+    _write_audio_db(partitioned, None, transcripts, AUDIO_N)
+    return {"default": default, "row_groups": row_groups, "partitioned": partitioned}
 
 
 def _validate_args(db, **kw):
@@ -1230,16 +1245,19 @@ def _validate_args(db, **kw):
 
 @pytest.mark.parametrize(
     "layout,where",
-    [("default", None), ("row_groups", None),
-     ("default", "sr_hz = 8000"), ("row_groups", "sr_hz = 8000")],
-    ids=["default", "row_groups", "default-where", "row_groups-where"],
+    [("default", None), ("row_groups", None), ("partitioned", None),
+     ("default", "sr_hz = 8000"), ("row_groups", "sr_hz = 8000"),
+     ("partitioned", "sr_hz = 8000")],
+    ids=["default", "row_groups", "partitioned",
+         "default-where", "row_groups-where", "partitioned-where"],
 )
 def test_audio_row_source_matches_snr_udf_reference(spark, audio_dbs, layout, where):
     """audio_row_source scores every row exactly as the independent
     reference does (the payload streamed into make_snr_udf, the clip
     index joined by attach_clip_idx): same (clip_id, __snr) multiset,
-    on the default layout, on a file of many small row groups, and on
-    a --where slice of each."""
+    on the default layout, on a file of many small row groups, on
+    partition directories with escaped names, and on a --where slice of
+    each."""
     from pyspark.sql import functions as F
 
     from drivel_spark.constraints.audio import (
@@ -1278,10 +1296,75 @@ def test_audio_row_source_rejects_non_file_source(spark):
         audio_row_source(df, 10, seed=42)
 
 
+def test_audio_row_source_reads_iceberg_style_file_pos(spark, audio_dbs):
+    """A scan without Spark's _metadata (an Iceberg table) locates each
+    payload by the _file / _pos metadata columns instead, where _file
+    is a plain location, not a percent-encoded URI.  Emulated with a
+    checkpointed scan (no _metadata) of the partitioned layout, whose
+    directory names contain '%' and spaces: same (clip_id, __snr)
+    multiset as the _metadata route."""
+    from pyspark.sql import functions as F
+
+    from drivel_spark.constraints.audio import audio_row_source
+
+    clips = spark.read.parquet(f"{audio_dbs['partitioned']}/clips")
+    located = clips.drop("bytes").select(
+        "*",
+        F.expr("url_decode(_metadata.file_path)").alias("_file"),
+        F.col("_metadata.row_index").alias("_pos"),
+    ).localCheckpoint()
+    assert any("%" in r["_file"] for r in located.select("_file").distinct().collect())
+
+    def scores(src):
+        return sorted(
+            (r["clip_id"], r["__snr"]) for r in src.select("clip_id", "__snr").collect()
+        )
+
+    assert scores(audio_row_source(located, AUDIO_N, seed=42)) == scores(
+        audio_row_source(clips, AUDIO_N, seed=42)
+    )
+
+
+def test_audio_row_source_store_uris():
+    """Payload files open through pyarrow: Spark's s3a / s3n URIs map to
+    s3, a plain location is quoted into a URI, and a scheme pyarrow
+    cannot open is refused on the driver."""
+    from drivel_spark.constraints.audio import _check_stores, _pyarrow_uri
+
+    assert _pyarrow_uri("s3a://bkt/clips/p.parquet") == "s3://bkt/clips/p.parquet"
+    assert _pyarrow_uri("s3n://bkt/p.parquet") == "s3://bkt/p.parquet"
+    assert _pyarrow_uri("file:/d/c=a%253Ab/p.parquet") == "file:///d/c=a%253Ab/p.parquet"
+    assert _pyarrow_uri("/d/c=a%3Ab/p q.parquet", raw=True) == (
+        "file:///d/c%3Da%253Ab/p%20q.parquet"
+    )
+    _check_stores(["file:/tmp/p.parquet", "/tmp/q.parquet"])
+    with pytest.raises(ValueError, match="cannot open wasb://c@acct"):
+        _check_stores(["wasb://c@acct.blob.core.windows.net/clips/p.parquet"])
+
+
+def test_validate_check_audio_catalog_table(spark, audio_dbs):
+    """--clips as a catalog table ref (saveAsTable, read through
+    spark.read.table): --check-audio gives the digest of the same rows
+    read by path."""
+    from drivel_spark.job import cmd_validate
+
+    tbl = "default.drivel_audio_clips"
+    spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+    spark.read.parquet(f"{audio_dbs['default']}/clips").write.saveAsTable(tbl)
+    try:
+        got = cmd_validate(_validate_args(audio_dbs["default"], clips=tbl))
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+    want = cmd_validate(_validate_args(audio_dbs["default"]))
+    assert got["passfail_digest"] == want["passfail_digest"]
+    assert got["n_violation_rows"] == want["n_violation_rows"] > 0
+
+
 def test_validate_where_check_audio_slice(spark, audio_dbs, tmp_path):
     """--where with --check-audio: the report digest equals a full
-    --check-audio validate over a physically pre-filtered copy, on both
-    layouts (the slice is pushed to the scan the audio source reads)."""
+    --check-audio validate over a physically pre-filtered copy, on all
+    three layouts (the slice is pushed to the scan the audio source
+    reads)."""
     from pyspark.sql import functions as F
 
     from drivel_spark.fixtures import build_transcripts
@@ -1295,7 +1378,7 @@ def test_validate_where_check_audio_slice(spark, audio_dbs, tmp_path):
         build_transcripts(spark, AUDIO_N, 4, spec), AUDIO_N,
     )
     want = cmd_validate(_validate_args(filtered))
-    for layout in ("default", "row_groups"):
+    for layout in ("default", "row_groups", "partitioned"):
         got = cmd_validate(_validate_args(audio_dbs[layout], where="sr_hz = 8000"))
         assert got["passfail_digest"] == want["passfail_digest"], layout
         assert got["n_violation_rows"] == want["n_violation_rows"], layout
