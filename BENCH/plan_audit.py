@@ -53,9 +53,9 @@ def main() -> None:
     sections: list[tuple[str, str, list[str]]] = []
 
     # 1. profile scan: column pruning through mapInPandas
-    from drivel_spark.profiling import partition_accumulators
+    from drivel_spark.profiling import keyed_accumulators
 
-    acc = partition_accumulators(li, columns=["l_quantity", "l_returnflag"])
+    acc = keyed_accumulators(li, columns=["l_quantity", "l_returnflag"])
     p = fmt(acc)
     sections.append(
         (

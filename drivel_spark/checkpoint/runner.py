@@ -1,64 +1,95 @@
-"""Resumable profiling: per-file accumulators + commit table.
+"""Resumable runs: per-file units + a commit table, one protocol.
 
-Protocol (north_rule: "resumable from checkpoint with per-partition
-lineage + metrics"):
+The three runners — :func:`resumable_profile`,
+:func:`resumable_row_validation` and :func:`resumable_screen` — share
+one resume protocol, :func:`_resume` (north_rule: "resumable from
+checkpoint with per-partition lineage + metrics"):
 
-1. enumerate the table's input files (the lineage units);
+1. enumerate the table's input files (the lineage units) and derive
+   the snapshot id from them;
 2. anti-set against the commit table → only *uncommitted* files are
    ever scheduled for scan (skipped files are pruned at plan time by
    reading only the remaining paths — no wasted IO on restart);
-3. scan remaining files once; the profiler keys accumulators by
-   ``input_file_name()`` so one mapInPandas pass yields per-file
-   partials even when Spark packs several files into one partition or
-   splits one file across partitions;
-4. executor-side ``groupBy(unit)`` merge → one accumulator per file →
-   commit rows (digest + metrics + blob) appended to the store;
-5. final profile = merge of ALL units' stored accumulators (previous
-   runs' blobs + this run's).
+3. the runner's ``compute`` scans the remaining files once and returns
+   one blob + metrics per file; every remaining file commits, a
+   zero-row file with the runner's empty blob (else every restart
+   would rescan it);
+4. re-read the commit table, verify every blob's ``sha256`` against
+   its ``accumulator_digest``, and hand the runner ``{unit: blob}``
+   for ALL units (previous runs' blobs + this run's) to finalize.
+
+The profile runner keys its accumulators by ``input_file_name()``
+through the profiler's keyed pass (profiling/profiler.py), so one
+mapInPandas pass yields per-file partials even when Spark packs
+several files into one partition or splits one file across
+partitions; the profiler's merger then gives one accumulator per file.
 """
 
 from __future__ import annotations
 
+import hashlib
 import pickle
-from typing import Iterable, Optional
+from typing import Callable, Optional
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..profiling.accumulator import ProfilerOptions, TableAccumulator
-from ..profiling.profiler import TableProfile
+from ..profiling.profiler import (
+    TableProfile,
+    fold_accumulators,
+    keyed_accumulators,
+    merge_keyed,
+)
 from .store import CheckpointStore, make_commit_row
 
-_UNIT_ACC_SCHEMA = "unit string, acc binary"
+
+def _snapshot_id(units: list[str]) -> str:
+    return hashlib.sha256("\n".join(units).encode()).hexdigest()[:16]
 
 
-def _per_file_profiler(columns: list[tuple[str, str]], opts: ProfilerOptions):
-    def fn(batches: Iterable[pd.DataFrame]):
-        accs: dict[str, TableAccumulator] = {}
-        for pdf in batches:
-            for unit, grp in pdf.groupby("__unit", sort=False):
-                acc = accs.get(unit)
-                if acc is None:
-                    acc = accs[unit] = TableAccumulator(columns, opts)
-                acc.update(grp.drop(columns="__unit"))
-        yield pd.DataFrame(
-            {"unit": list(accs), "acc": [a.to_bytes() for a in accs.values()]}
+def _resume(
+    spark: SparkSession,
+    table_path: str,
+    store: CheckpointStore,
+    run: str,
+    input_snapshot: Optional[str],
+    compute: Callable[[DataFrame], tuple[dict, tuple[bytes, dict]]],
+) -> tuple[dict[str, bytes], dict]:
+    """The resume protocol of the module docstring.  ``compute`` gets
+    the uncommitted files as one DataFrame (the full table's schema)
+    and returns ``{unit: (blob, metrics)}`` plus the ``(blob,
+    metrics)`` to commit for a unit with no rows.  Returns ``{unit:
+    blob}`` in unit order and the resume stats."""
+    full = spark.read.parquet(table_path)
+    units = sorted(full.inputFiles())
+    snapshot = input_snapshot or _snapshot_id(units)
+
+    done = store.committed(run, snapshot)
+    done_units = set(done["unit"]) if not done.empty else set()
+    todo = [u for u in units if u not in done_units]
+    if todo:
+        results, empty = compute(spark.read.schema(full.schema).parquet(*todo))
+        store.append(
+            [make_commit_row(run, u, snapshot, *results.get(u, empty)) for u in todo]
         )
 
-    return fn
-
-
-def _unit_merger():
-    def fn(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        accs = [TableAccumulator.from_bytes(b) for b in pdf["acc"]]
-        merged = accs[0]
-        for a in accs[1:]:
-            merged = merged.merge(a)
-        merged.n_partitions = 1  # one lineage unit
-        return pd.DataFrame({"unit": [key[0]], "acc": [merged.to_bytes()]})
-
-    return fn
+    committed = store.committed(run, snapshot)
+    rows = {r.unit: r for r in committed.itertuples()}
+    missing = [u for u in units if u not in rows]
+    if missing:
+        raise RuntimeError(f"units missing after commit: {missing}")
+    for u in units:
+        if hashlib.sha256(rows[u].acc).hexdigest() != rows[u].accumulator_digest:
+            raise ValueError(f"checkpoint blob of unit {u} does not match its digest")
+    stats = {
+        "n_units": len(units),
+        "n_recomputed": len(todo),
+        "n_restored": len(units) - len(todo),
+        "snapshot": snapshot,
+    }
+    return {u: rows[u].acc for u in units}, stats
 
 
 def resumable_profile(
@@ -71,59 +102,30 @@ def resumable_profile(
     opts: ProfilerOptions = ProfilerOptions(),
 ) -> tuple[TableProfile, dict]:
     """Profile a parquet table resumably.  Returns (profile, stats) where
-    stats reports how many units were recomputed vs restored."""
-    full = spark.read.parquet(table_path)
-    units = sorted(full.inputFiles())
-    snapshot = input_snapshot or _snapshot_id(units)
+    stats reports how many units were recomputed vs restored.  Each
+    file commits one accumulator (an empty one for a zero-row file),
+    so the profile's ``n_partitions`` is the unit count."""
 
-    done = store.committed(run_id, snapshot)
-    done_units = set(done["unit"]) if not done.empty else set()
-    todo = [u for u in units if u not in done_units]
-
-    new_rows: list[dict] = []
-    if todo:
-        df = spark.read.schema(full.schema).parquet(*todo)
-        if columns is not None:
-            df = df.select(*columns)
-        col_types = [(f.name, f.dataType.simpleString()) for f in df.schema.fields]
-        acc_df = (
-            df.withColumn("__unit", F.input_file_name())
-            .mapInPandas(_per_file_profiler(col_types, opts), _UNIT_ACC_SCHEMA)
-            .groupBy("unit")
-            .applyInPandas(_unit_merger(), _UNIT_ACC_SCHEMA)
-        )
-        for row in acc_df.collect():
+    def compute(df):
+        accs = merge_keyed(keyed_accumulators(df, F.input_file_name(), columns, opts))
+        results = {}
+        for row in accs.collect():
             acc = TableAccumulator.from_bytes(row["acc"])
+            acc.n_partitions = 1  # one lineage unit
             metrics = {
                 "n_rows": acc.n_rows,
                 "n_null": {c: a.n_null for c, a in acc.cols.items()},
             }
-            new_rows.append(make_commit_row(run_id, row["unit"], snapshot, row["acc"], metrics))
-        store.append(new_rows)
+            results[row["key"]] = (acc.to_bytes(), metrics)
+        proj = df.select(*columns) if columns is not None else df
+        empty = TableAccumulator(
+            [(f.name, f.dataType.simpleString()) for f in proj.schema.fields], opts
+        )
+        metrics = {"n_rows": 0, "n_null": {c: 0 for c in empty.cols}}
+        return results, (empty.to_bytes(), metrics)
 
-    committed = store.committed(run_id, snapshot)
-    blobs = {r.unit: r.acc for r in committed.itertuples()}
-    missing = [u for u in units if u not in blobs]
-    if missing:
-        raise RuntimeError(f"units missing after commit: {missing}")
-    accs = [TableAccumulator.from_bytes(blobs[u]) for u in units]
-    merged = accs[0]
-    for a in accs[1:]:
-        merged = merged.merge(a)
-    stats = {
-        "n_units": len(units),
-        "n_recomputed": len(todo),
-        "n_restored": len(units) - len(todo),
-        "snapshot": snapshot,
-    }
-    return TableProfile(merged, opts), stats
-
-
-def _snapshot_id(units: list[str]) -> str:
-    import hashlib
-
-    return hashlib.sha256("\n".join(units).encode()).hexdigest()[:16]
-
+    blobs, stats = _resume(spark, table_path, store, run_id, input_snapshot, compute)
+    return TableProfile(fold_accumulators(blobs.values()), opts), stats
 
 
 def resumable_row_validation(
@@ -157,18 +159,9 @@ def resumable_row_validation(
     row_cs = [c for c in constraints if c.is_row_level]
     if not row_cs:
         raise ValueError("need at least one row-level constraint")
-    full = spark.read.parquet(table_path)
-    units = sorted(full.inputFiles())
-    snapshot = input_snapshot or _snapshot_id(units)
-    pf_run = f"{run_id}:rowpf"
-
-    done = store.committed(pf_run, snapshot)
-    done_units = set(done["unit"]) if not done.empty else set()
-    todo = [u for u in units if u not in done_units]
-
     names = [c.name for c in row_cs]
-    if todo:
-        df = spark.read.schema(full.schema).parquet(*todo)
+
+    def compute(df):
         from ..constraints.validate import row_flag_columns, row_violation_aggs
 
         flagged = df.select(
@@ -180,7 +173,7 @@ def resumable_row_validation(
             .agg(*row_violation_aggs(row_cs))
             .toPandas()
         )
-        new_rows = []
+        results = {}
         for unit, grp in agg.groupby("__unit", sort=False):
             blob = pickle.dumps(
                 grp.drop(columns="__unit").reset_index(drop=True), protocol=4
@@ -189,31 +182,16 @@ def resumable_row_validation(
                 "n_rows": int(grp["n_rows"].sum()),
                 "n_any_violation": int(grp["__v_any"].sum()),
             }
-            new_rows.append(make_commit_row(pf_run, unit, snapshot, blob, metrics))
-        # files with ZERO rows produce no agg groups but must still
-        # commit (else every restart rescans them)
-        seen = {r["unit"] for r in new_rows}
-        for unit in todo:
-            if unit not in seen:
-                empty = pickle.dumps(
-                    agg.drop(columns="__unit").iloc[0:0].reset_index(drop=True),
-                    protocol=4,
-                )
-                new_rows.append(
-                    make_commit_row(
-                        pf_run, unit, snapshot, empty,
-                        {"n_rows": 0, "n_any_violation": 0},
-                    )
-                )
-        store.append(new_rows)
+            results[unit] = (blob, metrics)
+        empty = pickle.dumps(
+            agg.drop(columns="__unit").iloc[0:0].reset_index(drop=True), protocol=4
+        )
+        return results, (empty, {"n_rows": 0, "n_any_violation": 0})
 
-    committed = store.committed(pf_run, snapshot)
-    blobs = {r.unit: r.acc for r in committed.itertuples()}
-    missing = [u for u in units if u not in blobs]
-    if missing:
-        raise RuntimeError(f"units missing after commit: {missing}")
-    parts = [pickle.loads(blobs[u]) for u in units]
-    merged = pd.concat(parts, ignore_index=True)
+    blobs, stats = _resume(
+        spark, table_path, store, f"{run_id}:rowpf", input_snapshot, compute
+    )
+    merged = pd.concat([pickle.loads(b) for b in blobs.values()], ignore_index=True)
     if merged["__scope"].isna().any():
         # pandas groupby would silently drop NaN groups, undercounting
         # the report — fail loudly like the batch engine does
@@ -240,12 +218,6 @@ def resumable_row_validation(
         columns=["partition_id", "constraint", "n_rows", "n_violations",
                  "passed"],
     ).sort_values(["partition_id", "constraint"]).reset_index(drop=True)
-    stats = {
-        "n_units": len(units),
-        "n_recomputed": len(todo),
-        "n_restored": len(units) - len(todo),
-        "snapshot": snapshot,
-    }
     return passfail, stats
 
 
@@ -288,20 +260,16 @@ def resumable_screen(
     )
 
     kinds = list(kinds or FUSED_SCREEN_FIELDS)
-    full = spark.read.parquet(table_path)
-    units = sorted(full.inputFiles())
-    snapshot = input_snapshot or _snapshot_id(units)
-    run = f"{run_id}:screen[{','.join(sorted(kinds))}]"
+    zero = {"n_clips": 0, "n_undec": 0}
+    for kind in kinds:
+        zero[f"f_{kind}"] = zero[f"b_{kind}"] = 0
+    n_decoded = 0
 
-    done = store.committed(run, snapshot)
-    done_units = set(done["unit"]) if not done.empty else set()
-    todo = [u for u in units if u not in done_units]
-
-    if todo:
-        df = spark.read.schema(full.schema).parquet(*todo).withColumn(
-            "__unit", F.input_file_name()
+    def compute(df):
+        nonlocal n_decoded
+        rep = screen_report(
+            df.withColumn("__unit", F.input_file_name()), kinds, id_cols=["__unit"]
         )
-        rep = screen_report(df, kinds, id_cols=["__unit"])
         aggs = [
             F.count(F.lit(1)).alias("n_clips"),
             F.count(F.when(F.expr("n_samples IS NULL"), 1)).alias("n_undec"),
@@ -312,42 +280,21 @@ def resumable_screen(
             aggs.append(F.count(F.when(F.expr(flag), 1)).alias(f"f_{kind}"))
             aggs.append(F.count(F.when(F.expr(bad), 1)).alias(f"b_{kind}"))
         agg = rep.groupBy("__unit").agg(*aggs).toPandas()
-        new_rows = []
+        results = {}
         for _, rec in agg.iterrows():
-            counts = {"n_clips": int(rec["n_clips"]),
-                      "n_undec": int(rec["n_undec"])}
-            for kind in kinds:
-                counts[f"f_{kind}"] = int(rec[f"f_{kind}"])
-                counts[f"b_{kind}"] = int(rec[f"b_{kind}"])
+            counts = {k: int(rec[k]) for k in zero}
             metrics = {
                 "n_clips": counts["n_clips"],
                 "n_flagged_total": sum(counts[f"f_{k}"] for k in kinds),
             }
-            new_rows.append(
-                make_commit_row(run, rec["__unit"], snapshot,
-                                pickle.dumps(counts, protocol=4), metrics)
-            )
-        # files with ZERO rows produce no agg groups but must still
-        # commit (else every restart rescans them)
-        seen = {r["unit"] for r in new_rows}
-        for unit in todo:
-            if unit not in seen:
-                zero = {"n_clips": 0, "n_undec": 0}
-                for kind in kinds:
-                    zero[f"f_{kind}"] = zero[f"b_{kind}"] = 0
-                new_rows.append(
-                    make_commit_row(run, unit, snapshot,
-                                    pickle.dumps(zero, protocol=4),
-                                    {"n_clips": 0, "n_flagged_total": 0})
-                )
-        store.append(new_rows)
+            results[rec["__unit"]] = (pickle.dumps(counts, protocol=4), metrics)
+            n_decoded += counts["n_clips"]
+        empty = (pickle.dumps(zero, protocol=4), {"n_clips": 0, "n_flagged_total": 0})
+        return results, empty
 
-    committed = store.committed(run, snapshot)
-    blobs = {r.unit: r.acc for r in committed.itertuples()}
-    missing = [u for u in units if u not in blobs]
-    if missing:
-        raise RuntimeError(f"units missing after commit: {missing}")
-    parts = [pickle.loads(blobs[u]) for u in units]
+    run = f"{run_id}:screen[{','.join(sorted(kinds))}]"
+    blobs, stats = _resume(spark, table_path, store, run, input_snapshot, compute)
+    parts = [pickle.loads(b) for b in blobs.values()]
     totals = pd.DataFrame(
         [
             (
@@ -360,23 +307,13 @@ def resumable_screen(
         ],
         columns=["kind", "n_clips", "n_flagged", "n_undecodable"],
     )
-    todo_set = set(todo)
-    by_unit = dict(zip(units, parts))
     undecs = [p.get("n_undec") for p in parts]
-    stats = {
-        "n_units": len(units),
-        "n_recomputed": len(todo),
-        "n_restored": len(units) - len(todo),
-        # clips actually decoded THIS call (restored blobs cost no
-        # decode) — the honest base for a throughput rate on resume
-        "n_clips_recomputed": sum(
-            by_unit[u]["n_clips"] for u in units if u in todo_set
-        ),
-        # corpus-wide undecodable count (fused-run output parity);
-        # None when a pre-upgrade store blob lacks the field
-        "n_undecodable": (
-            int(sum(undecs)) if all(u is not None for u in undecs) else None
-        ),
-        "snapshot": snapshot,
-    }
+    # clips actually decoded THIS call (restored blobs cost no decode)
+    # — the honest base for a throughput rate on resume
+    stats["n_clips_recomputed"] = n_decoded
+    # corpus-wide undecodable count (fused-run output parity); None
+    # when a pre-upgrade store blob lacks the field
+    stats["n_undecodable"] = (
+        int(sum(undecs)) if all(u is not None for u in undecs) else None
+    )
     return totals, stats

@@ -362,18 +362,6 @@ def cmd_dup_segments(args) -> dict:
     }
 
 
-def _narrow_batch(df, cols) -> int | None:
-    """8192-row Arrow batches for all-narrow profile scans; None —
-    keep the session default — when any profiled column is binary."""
-    names = set(cols) if cols else {f.name for f in df.schema.fields}
-    wide = any(
-        f.dataType.simpleString() == "binary"
-        for f in df.schema.fields
-        if f.name in names
-    )
-    return None if wide else 8192
-
-
 def _profile_columns(df, columns_arg) -> list:
     """Shared default column policy for the baseline and diff verbs —
     they MUST agree or a vanilla baseline→diff round-trip reports
@@ -419,12 +407,7 @@ def cmd_baseline(args) -> dict:
             "n_groups": len(gp),
             "n_rows": int(sum(p.n_rows for p in gp.values())),
         }
-    prof = profile(
-        df,
-        columns=cols,
-        opts=ProfilerOptions(),
-        arrow_batch=_narrow_batch(df, cols),
-    )
+    prof = profile(df, columns=cols, opts=ProfilerOptions())
     with open(args.out, "wb") as fh:
         pickle.dump(prof, fh)
     return {"baseline": args.out, "n_rows": prof.acc.n_rows}
@@ -489,7 +472,7 @@ def cmd_diff(args) -> dict:
             "report": rows,
         }
     cols = _profile_columns(df, args.columns)
-    prof = profile(df, columns=cols, arrow_batch=_narrow_batch(df, cols))
+    prof = profile(df, columns=cols)
     if getattr(args, "gate", False):
         # compat gate: same diff rows + a severity each, folded to the
         # table-level verdict — the CI decision "may this batch land"
@@ -620,7 +603,7 @@ def cmd_suggest(args) -> dict:
             raise SystemExit("--quantile-range must be 'p_lo,p_hi'")
         qr = (float(parts[0]), float(parts[1]))
     t0 = time.time()
-    prof = profile(df, columns=cols, arrow_batch=_narrow_batch(df, cols))
+    prof = profile(df, columns=cols)
     constraints = from_profile(
         prof,
         columns=cols,
@@ -816,7 +799,7 @@ def cmd_describe(args) -> dict:
         enum_max_unique_ratio=float(getattr(args, "enum_max_uniq", 0.1)),
         enum_min_sample_size=int(getattr(args, "enum_min_n", 1)),
     )
-    prof = profile(df, columns=cols, opts=opts, arrow_batch=_narrow_batch(df, cols))
+    prof = profile(df, columns=cols, opts=opts)
     if args.json_schema:
         doc = prof.to_json_schema(extended=args.extended)
         sys.stderr.write(_json.dumps(doc, indent=2) + "\n")
@@ -849,11 +832,27 @@ def cmd_produce(args) -> dict:
         from drivel_spark.produce.generator import produce_from_profile
 
         src = read_table(spark, args.data)
-        prof = profile(src, arrow_batch=_narrow_batch(src, None))
+        prof = profile(src)
         out_df = produce_from_profile(spark, prof, args.n_rows, seed=args.seed)
     out_df.write.mode("overwrite").parquet(args.out)
     n = spark.read.parquet(args.out).count()
     return {"job": "produce", "n_rows": n, "out": args.out}
+
+
+def _append_byte_tiers(constraints: list, args, df) -> None:
+    """The opt-in payload tiers below the SNR decode, shared by validate
+    and validate-delta: ``--check-wav-header`` (magics + declared
+    fmt/sr/sizes) and ``--check-pcm-size`` (byte-length arithmetic),
+    both pure Catalyst byte arithmetic in the scan, no decode
+    (constraints/audio.py)."""
+    if "bytes" not in df.columns:
+        return
+    from drivel_spark.constraints import PcmSizeConsistency, WavHeaderCheck
+
+    if getattr(args, "check_wav_header", False):
+        constraints.append(WavHeaderCheck("wav_header", "bytes"))
+    if getattr(args, "check_pcm_size", False):
+        constraints.append(PcmSizeConsistency("pcm_size_consistency", "bytes"))
 
 
 def cmd_validate(args) -> dict:
@@ -921,18 +920,7 @@ def cmd_validate(args) -> dict:
         constraints = load_spec_file(args.constraints)
     else:
         constraints = _constraints(meta, baseline)
-    if getattr(args, "check_wav_header", False) and "bytes" in df.columns:
-        from drivel_spark.constraints import WavHeaderCheck
-
-        # structural header tier: magics + declared fmt/sr/sizes from
-        # pure Catalyst byte arithmetic, no decode (constraints/audio.py)
-        constraints.append(WavHeaderCheck("wav_header", "bytes"))
-    if getattr(args, "check_pcm_size", False) and "bytes" in df.columns:
-        from drivel_spark.constraints import PcmSizeConsistency
-
-        # cheap tier below the SNR decode: byte-length arithmetic in
-        # the scan, no decode (constraints/audio.py PcmSizeConsistency)
-        constraints.append(PcmSizeConsistency("pcm_size_consistency", "bytes"))
+    _append_byte_tiers(constraints, args, df)
     ds_df = None
     if args.check_audio and meta.get("with_audio") and "bytes" in df.columns:
         # the SNR decode reads the payload in the Python workers
@@ -1304,14 +1292,7 @@ def cmd_validate_delta(args) -> dict:
     fut_prof = prof_pool.submit(profile, clips, columns=PROFILE_COLUMNS)
 
     constraints = _constraints(meta, baseline)
-    if getattr(args, "check_wav_header", False) and "bytes" in clips.columns:
-        from drivel_spark.constraints import WavHeaderCheck
-
-        constraints.append(WavHeaderCheck("wav_header", "bytes"))
-    if getattr(args, "check_pcm_size", False) and "bytes" in clips.columns:
-        from drivel_spark.constraints import PcmSizeConsistency
-
-        constraints.append(PcmSizeConsistency("pcm_size_consistency", "bytes"))
+    _append_byte_tiers(constraints, args, clips)
 
     prepare_row_df = None
     if args.check_audio and meta.get("with_audio") and "bytes" in clips.columns:

@@ -1,5 +1,5 @@
-"""Distributed profiling: per-column mergeable accumulators, one-scan
-mapInPandas seqOp, tree combine, TableProfile result object."""
+"""Distributed profiling: per-column mergeable accumulators, one keyed
+mapInPandas fold, one merger, tree combine, TableProfile result object."""
 
 from .accumulator import ProfilerOptions, TableAccumulator, make_column_acc
 from .compat import (
@@ -12,7 +12,9 @@ from .diff import DIFF_SCHEMA, diff_profiles
 from .grouped import grouped_drift, grouped_profile
 from .profiler import (
     TableProfile,
-    partition_accumulators,
+    fold_accumulators,
+    keyed_accumulators,
+    merge_keyed,
     profile,
     profile_json_column,
     tree_combine,
@@ -31,7 +33,9 @@ __all__ = [
     "diff_profiles",
     "grouped_profile",
     "grouped_drift",
-    "partition_accumulators",
+    "fold_accumulators",
+    "keyed_accumulators",
+    "merge_keyed",
     "profile",
     "profile_json_column",
     "tree_combine",

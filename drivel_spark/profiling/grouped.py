@@ -7,12 +7,13 @@ one language's quality collapsing — and the global profile averages
 them away.  ``grouped_profile`` runs the SAME mergeable-accumulator
 fold (accumulator.py) once per group value, in ONE scan:
 
-* mapInPandas seqOp: each Arrow batch is pandas-grouped by the key
-  and folded into a per-group :class:`TableAccumulator` dict — the
+* the profiler's keyed accumulator pass (profiler.keyed_accumulators)
+  keyed by the group value: each Arrow batch is pandas-grouped by the
+  key and folded into a per-group :class:`TableAccumulator` — the
   scan stays single-pass regardless of group count;
 * one shuffle of O(partitions × groups) pickled partials (KBs each)
-  hashed on the group, merged per group with ``applyInPandas`` — the
-  data itself never reshuffles;
+  hashed on the group, merged per group by the profiler's one merger
+  (profiler.merge_keyed) — the data itself never reshuffles;
 * the O(groups) merged rows collect to a ``{group: TableProfile}``
   dict on the driver.
 
@@ -32,54 +33,16 @@ north rule's codec/sr frequency maps, taken to full per-group stats).
 
 from __future__ import annotations
 
-import pickle
-from typing import Iterable, Optional
+from typing import Optional
 
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from .accumulator import ProfilerOptions, TableAccumulator
-from .profiler import TableProfile
+from .profiler import NULL_GROUP, TableProfile, keyed_accumulators, merge_keyed
 
 __all__ = ["grouped_profile", "grouped_drift"]
-
-_GACC_SCHEMA = "group string, acc binary"
-# NULL group values profile under this key (a pandas groupby would drop
-# them; an unlabeled-source profile is itself a data-quality signal)
-NULL_GROUP = "␀null"
-
-
-def _grouped_partition_profiler(
-    by: str, columns: list[tuple[str, str]], opts: ProfilerOptions
-):
-    def fn(batches: Iterable[pd.DataFrame]):
-        accs: dict[str, TableAccumulator] = {}
-        for pdf in batches:
-            keys = pdf[by].astype("object").where(pdf[by].notna(), NULL_GROUP)
-            for key, sub in pdf.groupby(keys.astype(str), sort=False):
-                acc = accs.get(key)
-                if acc is None:
-                    acc = accs[key] = TableAccumulator(columns, opts)
-                acc.update(sub)
-        yield pd.DataFrame(
-            {
-                "group": list(accs.keys()),
-                "acc": [a.to_bytes() for a in accs.values()],
-            }
-        )
-
-    return fn
-
-
-def _group_merger():
-    def fn(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        accs = [TableAccumulator.from_bytes(b) for b in pdf["acc"]]
-        merged = accs[0]
-        for a in accs[1:]:
-            merged = merged.merge(a)
-        return pd.DataFrame({"group": [key[0]], "acc": [merged.to_bytes()]})
-
-    return fn
 
 
 def grouped_profile(
@@ -101,21 +64,10 @@ def grouped_profile(
     missing = [c for c in cols if c not in df.columns]
     if missing:
         raise ValueError(f"grouped_profile: unknown column(s) {missing}")
-    proj = df.select(by, *cols)
-    col_types = [
-        (f.name, f.dataType.simpleString())
-        for f in proj.schema.fields
-        if f.name != by
-    ]
-    partials = proj.mapInPandas(
-        _grouped_partition_profiler(by, col_types, opts), _GACC_SCHEMA
-    )
-    merged = partials.groupBy("group").applyInPandas(
-        _group_merger(), _GACC_SCHEMA
-    )
+    merged = merge_keyed(keyed_accumulators(df, F.col(by), cols, opts))
     out: dict[Optional[str], TableProfile] = {}
     for row in merged.collect():
-        key = None if row["group"] == NULL_GROUP else row["group"]
+        key = None if row["key"] == NULL_GROUP else row["key"]
         out[key] = TableProfile(
             TableAccumulator.from_bytes(bytes(row["acc"])), opts
         )

@@ -1,11 +1,19 @@
 """Distributed partition-parallel profiling.
 
-Lifecycle (SURVEY.md §3.1 Spark mapping): scan → Catalyst-pruned columns
-→ ``mapInPandas`` partition profiler emitting ONE pickled accumulator
-row per partition (vectorized seqOp, no per-row Python) → optional
-executor-side tree combine (``groupBy(bucket).applyInPandas`` — the
-treeAggregate/rayon-reduce analog, SURVEY.md §2.9) → driver merge →
-:class:`TableProfile`.
+Every profile path — :func:`profile`, per-group (grouped.py),
+per-file resumable (checkpoint/runner.py) and streaming
+(streaming/profile_stream.py) — runs the same three steps:
+
+1. :func:`keyed_accumulators` — ONE ``mapInPandas`` kernel folding
+   each partition's rows into one :class:`TableAccumulator` per key
+   (vectorized seqOp, no per-row Python) and emitting ``(key, acc)``
+   rows; ``key=None`` means one accumulator per partition;
+2. :func:`merge_keyed` — ONE executor-side merger,
+   ``groupBy(key).applyInPandas``; :func:`tree_combine` applies it
+   level by level on ``pmod(partition, buckets)`` buckets (the
+   treeAggregate/rayon-reduce analog, SURVEY.md §2.9);
+3. :func:`fold_accumulators` — the driver fold of the collected blobs
+   into one accumulator → :class:`TableProfile`.
 
 Scale notes:
 
@@ -13,8 +21,9 @@ Scale notes:
   reader because ``df.select(cols)`` precedes the UDF;
 * accumulators are O(KB) per column independent of row count, so the
   shuffle moving them is negligible;
-* with tens of thousands of partitions, ``tree_fanin`` bounds both the
-  driver's merge work and the single-task combine fan-in.
+* with tens of thousands of partitions, the :data:`TREE_FANIN`-way
+  combine levels bound both the driver's merge work and the
+  single-task combine fan-in.
 """
 
 from __future__ import annotations
@@ -26,7 +35,7 @@ import threading
 from typing import Any, Iterable, Optional
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..core import (
@@ -44,7 +53,7 @@ from .accumulator import ProfilerOptions, StringAcc, TableAccumulator
 # batch-size conf (ADVICE r02: concurrent set/restore races)
 _ARROW_BATCH_LOCK = threading.Lock()
 
-_ACC_SCHEMA = "partition_id long, acc binary"
+_ACC_SCHEMA = "key string, acc binary"
 
 
 class TableProfile:
@@ -189,104 +198,127 @@ class TableProfile:
 # ---------------------------------------------------------------------------
 
 
-def _partition_profiler(columns: list[tuple[str, str]], opts: ProfilerOptions):
+# NULL key values fold under this key (a pandas groupby would drop them;
+# an unlabeled-source profile is itself a data-quality signal)
+NULL_GROUP = "␀null"
+# tree_combine: partials merged per executor-side combine task, and the
+# row count at or below which the partials go to the driver instead
+TREE_FANIN = 64
+COLLECT_THRESHOLD = 256
+
+
+def _rebuffered(batches: Iterable[pd.DataFrame]) -> Iterable[pd.DataFrame]:
+    """Re-buffer Arrow batches to ~8k rows, unless rows are wide (the
+    first batch probes the bytes/row), in which case pass batches on
+    as they come.  Small batches (wide-row sessions, partition tails)
+    would otherwise make per-batch Python overhead dominate."""
+    buf: list[pd.DataFrame] = []
+    buffered = 0
+    target = None  # rows per update, decided on the first batch
+    for pdf in batches:
+        if target is None:
+            row_b = (
+                int(pdf.memory_usage(deep=True).sum() / max(len(pdf), 1))
+                if len(pdf)
+                else 0
+            )
+            target = 1 if row_b > 4096 else 8192
+        if target == 1:
+            yield pdf
+            continue
+        buf.append(pdf)
+        buffered += len(pdf)
+        if buffered >= target:
+            yield pd.concat(buf, ignore_index=True)
+            buf, buffered = [], 0
+    if buf:
+        yield pd.concat(buf, ignore_index=True)
+
+
+def _fold_partition(keyed: bool, columns: list[tuple[str, str]], opts: ProfilerOptions):
     def fn(batches: Iterable[pd.DataFrame]):
-        from pyspark import TaskContext
+        accs: dict[str, TableAccumulator] = {}
+        if not keyed:
+            from pyspark import TaskContext
 
-        acc = TableAccumulator(columns, opts)
-        # The session Arrow batch cap is sized for ~100KB binary audio
-        # rows (config.py); narrow tables then arrive in tiny batches
-        # and per-batch Python overhead dominates.  Re-buffer to ~8k
-        # rows before updating — unless rows are wide (first batch
-        # probes the bytes/row), in which case update per batch.
-        buf: list[pd.DataFrame] = []
-        buffered = 0
-        target = None  # rows per update, decided on the first batch
-        for pdf in batches:
-            if target is None:
-                row_b = (
-                    int(pdf.memory_usage(deep=True).sum() / max(len(pdf), 1))
-                    if len(pdf)
-                    else 0
-                )
-                target = 1 if row_b > 4096 else 8192
-            if target == 1:
+            ctx = TaskContext.get()
+            pid = ctx.partitionId() if ctx is not None else -1
+            acc = accs[str(pid)] = TableAccumulator(columns, opts)
+            for pdf in _rebuffered(batches):
                 acc.update(pdf)
-                continue
-            buf.append(pdf)
-            buffered += len(pdf)
-            if buffered >= target:
-                acc.update(pd.concat(buf, ignore_index=True))
-                buf, buffered = [], 0
-        if buf:
-            acc.update(pd.concat(buf, ignore_index=True))
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else -1
-        yield pd.DataFrame({"partition_id": [pid], "acc": [acc.to_bytes()]})
+        else:
+            for pdf in batches:
+                keys = pdf["__key"].astype("object").where(pdf["__key"].notna(), NULL_GROUP)
+                for key, sub in pdf.groupby(keys.astype(str), sort=False):
+                    acc = accs.get(key)
+                    if acc is None:
+                        acc = accs[key] = TableAccumulator(columns, opts)
+                    acc.update(sub)
+        yield pd.DataFrame({"key": list(accs), "acc": [a.to_bytes() for a in accs.values()]})
 
     return fn
 
 
-def _pairwise_merger():
-    def fn(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        accs = [TableAccumulator.from_bytes(b) for b in pdf["acc"]]
-        merged = accs[0]
-        for a in accs[1:]:
-            merged = merged.merge(a)
-        return pd.DataFrame({"partition_id": [int(key[0])], "acc": [merged.to_bytes()]})
-
-    return fn
-
-
-def partition_accumulators(
+def keyed_accumulators(
     df: DataFrame,
+    key: Optional[Column] = None,
     columns: Optional[list[str]] = None,
     opts: ProfilerOptions = ProfilerOptions(),
-    min_parallelism: bool = False,
 ) -> DataFrame:
-    """One pickled :class:`TableAccumulator` row per input partition.
+    """The one accumulator pass: ``(key string, acc binary)`` rows, one
+    pickled :class:`TableAccumulator` per key value per partition.
 
-    ``min_parallelism=True`` round-robin repartitions the (pruned,
-    narrow) input up to the core count when the scan gives fewer
-    partitions — a single-row-group parquet file is UNSPLITTABLE, so
-    without it the whole accumulator pass runs on one task (guide
-    §2.5).  Off by default: streaming micro-batch profiling calls this
-    per tiny batch, where an extra exchange costs more than it buys.
-    The profile's exact fields (counts, min/max, sums, HLL registers)
-    are partitioning-independent mergeable monoids (pinned by
-    test_profiler); the BOUNDED sketches (SpaceSaving freq, KLL) are
-    merge-order-sensitive above capacity by design and only promise
-    their error contracts, so repartitioning here may legitimately
-    change their internals."""
-    if columns is not None:
-        df = df.select(*columns)
-    if min_parallelism:
-        from ..io import ensure_map_parallelism
-
-        df = ensure_map_parallelism(df)
-    col_types = [(f.name, f.dataType.simpleString()) for f in df.schema.fields]
-    return df.mapInPandas(_partition_profiler(col_types, opts), _ACC_SCHEMA)
+    ``key=None`` folds each partition into ONE accumulator keyed by
+    its partition id (no pandas groupby; batches re-buffered to ~8k
+    rows).  Otherwise ``key`` is evaluated in the same projection as
+    the profiled ``columns`` (all of ``df``'s when None) — before any
+    exchange, so ``input_file_name()`` still resolves — and NULL key
+    values fold under :data:`NULL_GROUP`.  Column pruning reaches the
+    scan because the projection precedes the UDF."""
+    proj = df.select(*columns) if columns is not None else df
+    col_types = [(f.name, f.dataType.simpleString()) for f in proj.schema.fields]
+    if key is not None:
+        proj = df.select(key.alias("__key"), *proj.columns)
+    return proj.mapInPandas(_fold_partition(key is not None, col_types, opts), _ACC_SCHEMA)
 
 
-def tree_combine(acc_df: DataFrame, fanin: int = 64, collect_threshold: int = 256) -> DataFrame:
-    """Executor-side combine levels until few enough rows to collect —
-    the treeAggregate combOp tree across executors.
+def fold_accumulators(blobs: Iterable[bytes]) -> TableAccumulator:
+    """Merge pickled accumulators into one (at least one blob)."""
+    it = iter(blobs)
+    merged = TableAccumulator.from_bytes(next(it))
+    for b in it:
+        merged = merged.merge(TableAccumulator.from_bytes(b))
+    return merged
+
+
+def _merge_group(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+    return pd.DataFrame({"key": [key[0]], "acc": [fold_accumulators(pdf["acc"]).to_bytes()]})
+
+
+def merge_keyed(acc_df: DataFrame) -> DataFrame:
+    """The one accumulator merger: one ``(key, acc)`` row per key of a
+    :func:`keyed_accumulators` frame, merged executor-side."""
+    return acc_df.groupBy("key").applyInPandas(_merge_group, _ACC_SCHEMA)
+
+
+def tree_combine(
+    acc_df: DataFrame, fanin: int = TREE_FANIN, collect_threshold: int = COLLECT_THRESHOLD
+) -> DataFrame:
+    """Executor-side combine levels over partition-keyed partials until
+    few enough rows to collect — the treeAggregate combOp tree across
+    executors.  Each level merges ``fanin`` partials per
+    ``pmod(key, buckets)`` bucket.
 
     The accumulator DataFrame has exactly one row per input partition,
     so the partition count (known from the plan, no job) bounds the row
     count — sizing the combine tree without running the profiler scan
     an extra time for a ``count()``."""
     n = acc_df.rdd.getNumPartitions()
-    level = 0
     while n > collect_threshold:
         buckets = max(1, math.ceil(n / fanin))
-        acc_df = (
-            acc_df.withColumn("bucket", F.pmod(F.col("partition_id"), F.lit(buckets)))
-            .groupBy("bucket")
-            .applyInPandas(_pairwise_merger(), _ACC_SCHEMA)
-        )
+        bucket = F.pmod(F.col("key").cast("long"), F.lit(buckets)).cast("string")
+        acc_df = merge_keyed(acc_df.withColumn("key", bucket))
         n = buckets
-        level += 1
     return acc_df
 
 
@@ -294,7 +326,6 @@ def profile(
     df: DataFrame,
     columns: Optional[list[str]] = None,
     opts: ProfilerOptions = ProfilerOptions(),
-    tree_fanin: int = 64,
     arrow_batch: Optional[int] = None,
 ) -> TableProfile:
     """Profile a DataFrame in one distributed scan.
@@ -312,16 +343,26 @@ def profile(
     audio SNR stage).
     Concurrent ``profile(arrow_batch=...)`` calls serialize on a module
     lock so set/restore can't interleave, and the override is skipped
-    when the session value already meets the request."""
+    when the session value already meets the request.
+
+    A single-row-group parquet file is UNSPLITTABLE, so the pruned
+    input is round-robin repartitioned up to the core count when the
+    scan gives fewer partitions (guide §2.5).  The profile's exact
+    fields (counts, min/max, sums, HLL registers) are
+    partitioning-independent mergeable monoids (pinned by
+    test_profiler); the BOUNDED sketches (SpaceSaving freq, KLL) are
+    merge-order-sensitive above capacity by design and only promise
+    their error contracts."""
+    from ..io import ensure_map_parallelism
+
     spark = df.sparkSession
     key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    proj = df.select(*columns) if columns is not None else df
 
     def _run():
-        acc_df = tree_combine(
-            partition_accumulators(df, columns, opts, min_parallelism=True),
-            fanin=tree_fanin,
-        )
-        return acc_df.collect()
+        return tree_combine(
+            keyed_accumulators(ensure_map_parallelism(proj), opts=opts)
+        ).collect()
 
     # the conf is session-global at planning time: serialize overriders
     # so two concurrent profile() calls can't interleave set/restore
@@ -346,14 +387,9 @@ def profile(
     else:
         rows = _run()
     if not rows:
-        cols = columns or [f.name for f in df.schema.fields]
-        col_types = [(f.name, f.dataType.simpleString()) for f in df.schema.fields if f.name in set(cols)]
+        col_types = [(f.name, f.dataType.simpleString()) for f in proj.schema.fields]
         return TableProfile(TableAccumulator(col_types, opts), opts)
-    accs = [TableAccumulator.from_bytes(r["acc"]) for r in rows]
-    merged = accs[0]
-    for a in accs[1:]:
-        merged = merged.merge(a)
-    return TableProfile(merged, opts)
+    return TableProfile(fold_accumulators(r["acc"] for r in rows), opts)
 
 
 # ---------------------------------------------------------------------------

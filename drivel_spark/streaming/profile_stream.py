@@ -11,7 +11,7 @@ treeAggregate correct), an incremental profile is just:
 * ``readStream`` file source — each micro-batch sees only NEW files
   (Spark's file-source log is the dedup ledger);
 * inside ``foreachBatch`` the micro-batch runs the IDENTICAL
-  distributed path as the batch engine — ``partition_accumulators``
+  distributed path as the batch engine — ``keyed_accumulators``
   (vectorized mapInPandas seqOp) + ``tree_combine`` — so per-batch
   cost is O(new data) with the same plan shape at any history size;
 * the merged running :class:`TableAccumulator` is persisted per batch
@@ -37,7 +37,12 @@ from typing import Optional
 from pyspark.sql import SparkSession
 
 from ..profiling.accumulator import ProfilerOptions, TableAccumulator
-from ..profiling.profiler import TableProfile, partition_accumulators, tree_combine
+from ..profiling.profiler import (
+    TableProfile,
+    fold_accumulators,
+    keyed_accumulators,
+    tree_combine,
+)
 
 _STATE_RE = re.compile(r"^state_(\d+)\.bin$")
 _IDENT_FILE = "checkpoint_identity"
@@ -171,19 +176,15 @@ def profile_stream(
         final = os.path.join(state_dir, f"state_{batch_id}.bin")
         if os.path.exists(final):
             return  # replayed batch — already folded, skip (idempotent)
-        acc_df = tree_combine(partition_accumulators(batch_df, columns, opts))
-        rows = acc_df.collect()
+        acc_df = tree_combine(keyed_accumulators(batch_df, None, columns, opts))
+        blobs = [r["acc"] for r in acc_df.collect()]
         prev = _latest_state(state_dir, below=batch_id)
         if prev is not None:
             with open(prev[1], "rb") as fh:
-                merged = TableAccumulator.from_bytes(fh.read())
-        elif rows:
-            merged = TableAccumulator.from_bytes(rows[0]["acc"])
-            rows = rows[1:]
-        else:
+                blobs.insert(0, fh.read())
+        if not blobs:
             return
-        for r in rows:
-            merged = merged.merge(TableAccumulator.from_bytes(r["acc"]))
+        merged = fold_accumulators(blobs)
         tmp = final + ".tmp"
         with open(tmp, "wb") as fh:
             fh.write(merged.to_bytes())

@@ -43,6 +43,18 @@ def test_resume_skips_committed_units(spark, clip_table, tmp_path):
     assert stats2["n_restored"] == n_units
     a, b = sub_path_profile.column("dur_ms"), prof2.column("dur_ms")
     assert (a.n, a.n_null, a.min_v, a.max_v, a.sum_v) == (b.n, b.n_null, b.min_v, b.max_v, b.sum_v)
+    # one accumulator per file, and the same exact fields as profile()
+    assert prof2.n_partitions == n_units
+    whole = profile(full)
+    for col in ("dur_ms", "sr_hz", "codec"):
+        a, b = whole.column(col), prof2.column(col)
+        assert (a.n, a.n_null) == (b.n, b.n_null)
+        assert np.array_equal(a.hll.registers, b.hll.registers)
+        if a.kind == "numeric":
+            assert (a.min_v, a.max_v) == (b.min_v, b.max_v)
+            assert a.sum_v == pytest.approx(b.sum_v, rel=1e-12)
+        else:
+            assert a.freq.counts == b.freq.counts
 
 
 def test_partial_commit_then_resume(spark, clip_table, tmp_path):
@@ -72,6 +84,70 @@ def _snapshot(spark, path):
 
     units = sorted(spark.read.parquet(path).inputFiles())
     return hashlib.sha256("\n".join(units).encode()).hexdigest()[:16]
+
+
+def test_restore_rejects_blob_that_fails_its_digest(spark, clip_table, tmp_path):
+    """A committed blob whose bytes changed after its digest was taken
+    is refused on restore, naming the unit, before anything merges."""
+    import re
+
+    store = CheckpointStore(str(tmp_path / "ckpt"))
+    resumable_profile(spark, clip_table, store, run_id="r1")
+    rows = store.committed("r1", _snapshot(spark, clip_table))
+    unit, blob = rows.iloc[0]["unit"], rows.iloc[0]["acc"]
+    rows.at[rows.index[0], "acc"] = blob[:-2] + bytes([blob[-2] ^ 1]) + blob[-1:]
+    tampered = CheckpointStore(str(tmp_path / "tampered"))
+    tampered.append(rows.to_dict("records"))
+    with pytest.raises(ValueError, match=re.escape(unit)):
+        resumable_profile(spark, clip_table, tampered, run_id="r1")
+
+
+@pytest.fixture()
+def table_with_empty_file(spark, tmp_path):
+    """24 audio clips in one parquet file plus a zero-row file."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "clips_empty_pq")
+    build_clips(spark, 24, 1, ClipFixtureSpec(with_audio=True)).write.parquet(path)
+    (data,) = glob.glob(f"{path}/part-*.parquet")
+    pq.write_table(pq.read_table(data).slice(0, 0), f"{path}/part-empty.parquet")
+    return path
+
+
+def test_runners_commit_zero_row_units(spark, table_with_empty_file, tmp_path):
+    """All three resumable runners commit a zero-row file, so a rerun
+    on the same store restores every unit and recomputes none."""
+    from drivel_spark.checkpoint import resumable_row_validation, resumable_screen
+    from drivel_spark.constraints import NotNull, Range
+
+    path = table_with_empty_file
+    cs = [Range("dur_range", "dur_ms", 200, 30000), NotNull("tx", "transcript")]
+    scope = F.pmod(F.xxhash64(F.col("clip_id")), F.lit(4))
+    runs = {
+        "profile": lambda store: resumable_profile(
+            spark, path, store, "z", columns=["sr_hz", "dur_ms", "codec"]
+        ),
+        "rowpf": lambda store: resumable_row_validation(
+            spark, path, store, "z", cs, scope
+        ),
+        "screen": lambda store: resumable_screen(
+            spark, path, store, "z", kinds=["quality", "dropout"]
+        ),
+    }
+    for name, run in runs.items():
+        store = CheckpointStore(str(tmp_path / name))
+        first, stats = run(store)
+        assert stats["n_units"] == stats["n_recomputed"] == 2, name
+        again, stats2 = run(store)
+        assert (stats2["n_recomputed"], stats2["n_restored"]) == (0, 2), name
+        if name == "profile":
+            assert first.n_rows == again.n_rows == 24
+            assert first.n_partitions == again.n_partitions == 2
+        else:
+            assert first.equals(again), name
+            assert int(first["n_clips" if name == "screen" else "n_rows"].max()) > 0
 
 
 def test_snapshot_mismatch_recomputes(spark, clip_table, tmp_path):

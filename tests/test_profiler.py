@@ -52,11 +52,32 @@ def test_string_profile_matches_pandas(lineitem, lineitem_pd):
     assert acc.freq.counts == lineitem_pd["l_returnflag"].value_counts().to_dict()
 
 
+def _keyed_profile(df, key):
+    """Profile through the keyed path: per-key partials, the executor
+    merger, then the driver fold over the per-key accumulators."""
+    from drivel_spark.profiling import (
+        TableProfile,
+        fold_accumulators,
+        keyed_accumulators,
+        merge_keyed,
+    )
+
+    rows = merge_keyed(keyed_accumulators(df, key)).collect()
+    return TableProfile(fold_accumulators(r["acc"] for r in rows), ProfilerOptions())
+
+
 def test_partitioning_invariance(lineitem):
+    from pyspark.sql import functions as F
+
     p1 = profile(lineitem.coalesce(1))
     p8 = profile(lineitem.repartition(8))
     p17 = profile(lineitem.repartition(17, "l_partkey"))
-    for prof in (p8, p17):
+    # the keyed paths (grouped_profile's group key, resumable_profile's
+    # file key) fold to the same exact fields
+    by_group = _keyed_profile(lineitem.repartition(5), F.col("l_returnflag"))
+    by_file = _keyed_profile(lineitem, F.input_file_name())
+    assert by_group.n_rows == by_file.n_rows == p1.n_rows
+    for prof in (p8, p17, by_group, by_file):
         for col in prof.columns():
             a, b = p1.column(col), prof.column(col)
             assert a.n == b.n and a.n_null == b.n_null
@@ -69,6 +90,34 @@ def test_partitioning_invariance(lineitem):
                 assert a.min_len == b.min_len and a.max_len == b.max_len
                 assert a.freq.counts == b.freq.counts
                 assert sorted(map(str, a.sample.sample())) == sorted(map(str, b.sample.sample()))
+
+
+def test_tree_combine_levels_match_flat_fold(lineitem):
+    """9 partitions, fan-in 2, collect threshold 2: three executor-side
+    combine levels (9 → 5 → 3 → 2 rows) give the same exact fields
+    as folding the 9 partition partials on the driver."""
+    from drivel_spark.profiling import fold_accumulators, keyed_accumulators, tree_combine
+
+    partials = keyed_accumulators(lineitem.repartition(9))
+    flat_rows = partials.collect()
+    tree_rows = tree_combine(partials, fanin=2, collect_threshold=2).collect()
+    assert len(flat_rows) == 9 and len(tree_rows) == 2
+    flat = fold_accumulators(r["acc"] for r in flat_rows)
+    tree = fold_accumulators(r["acc"] for r in tree_rows)
+    assert tree.n_rows == flat.n_rows > 0
+    assert tree.n_partitions == flat.n_partitions == 9
+    for name, a in flat.cols.items():
+        b = tree.cols[name]
+        assert (a.n, a.n_null) == (b.n, b.n_null)
+        if a.kind == "numeric":
+            assert (a.min_v, a.max_v) == (b.min_v, b.max_v)
+            # float sums differ only by addition order
+            assert a.sum_v == pytest.approx(b.sum_v, rel=1e-12)
+            assert np.array_equal(a.hll.registers, b.hll.registers)
+        if a.kind == "string":
+            assert (a.min_len, a.max_len) == (b.min_len, b.max_len)
+            assert np.array_equal(a.hll.registers, b.hll.registers)
+            assert a.freq.counts == b.freq.counts
 
 
 def test_enum_detection_on_low_cardinality(lineitem):
@@ -345,17 +394,17 @@ def test_grouped_profile_and_drift(spark):
     assert wav.min_v == 0.0 and wav.max_v == 590.0
     assert gp[None].column("dur").min_v == 7.0
     # monoid invariant: merged group accs == global profile
-    from drivel_spark.profiling import TableAccumulator
+    from drivel_spark.profiling import fold_accumulators
 
-    accs = [p.acc for p in gp.values()]
-    merged = accs[0]
-    for a in accs[1:]:
-        merged = merged.merge(a)
+    merged = fold_accumulators(p.acc.to_bytes() for p in gp.values())
     full = profile(df, columns=["dur"])
     assert merged.n_rows == full.n_rows == 100
     assert merged.cols["dur"].min_v == full.column("dur").min_v
     assert merged.cols["dur"].max_v == full.column("dur").max_v
     assert merged.cols["dur"].sum_v == full.column("dur").sum_v
+    assert np.array_equal(
+        merged.cols["dur"].hll.registers, full.column("dur").hll.registers
+    )
 
     # drift: shift only the flac group; wav must stay calm
     pdf2 = pdf.copy()
