@@ -157,6 +157,14 @@ class NumericAcc(ColumnAcc):
 
 
 class StringAcc(ColumnAcc):
+    """String columns.  Each batch is reduced to its distinct values
+    first (one ``value_counts``): the length bounds, HLL registers and
+    format detection see each distinct value once, the frequency map
+    gets the counts.  All are exact — min/max and register max are
+    idempotent — so a profile equals the one per-row updates give.
+    Detection stops once the column is demoted to ``unknown``; the
+    char histogram still samples the batch's leading rows."""
+
     kind = "string"
 
     def __init__(self, name: str, dtype: str, opts: ProfilerOptions):
@@ -174,20 +182,22 @@ class StringAcc(ColumnAcc):
         if len(v) == 0:
             return
         v = v.astype(str)
-        lens = v.str.len()
+        counts = v.value_counts()
+        distinct = pd.Series(counts.index, dtype=object)
+        lens = distinct.str.len()
         lo, hi = int(lens.min()), int(lens.max())
         self.min_len = lo if self.min_len is None else min(self.min_len, lo)
         self.max_len = hi if self.max_len is None else max(self.max_len, hi)
-        self.hll.update(v.to_numpy())
-        self.freq.update(v)
+        self.hll.update(distinct.to_numpy())
+        self.freq.update_counts(counts.to_dict())
         self.sample.update(v)
         # bounded char evidence: a prefix sample per batch
         chars = Counter("".join(v.iloc[:CHAR_SAMPLE_PER_BATCH]))
         self.char_hist.update(chars)
         if len(self.char_hist) > self.opts.max_chars:
             self.char_hist = Counter(dict(self.char_hist.most_common(self.opts.max_chars)))
-        if self.opts.detect_formats:
-            self.formats_seen.update(detect_series(v).dropna().unique())
+        if self.opts.detect_formats and not self._demoted:
+            self.formats_seen.update(detect_series(distinct).dropna().unique())
 
     def merge(self, other: "StringAcc") -> "StringAcc":
         self.merge_base(other)
@@ -202,6 +212,11 @@ class StringAcc(ColumnAcc):
             self.char_hist = Counter(dict(self.char_hist.most_common(self.opts.max_chars)))
         self.formats_seen |= other.formats_seen
         return self
+
+    @property
+    def _demoted(self) -> bool:
+        # unknown or two formats: no later value can resolve a format
+        return STR_UNKNOWN in self.formats_seen or len(self.formats_seen) > 1
 
     @property
     def resolved_format(self) -> str:

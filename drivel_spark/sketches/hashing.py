@@ -21,10 +21,15 @@ def hash64(values, salt: int = 0) -> np.ndarray:
     """
     arr = pd.array(values) if not isinstance(values, (pd.Series, pd.arrays.StringArray)) else values
     h = pd.util.hash_array(np.asarray(arr, dtype=object), categorize=False).astype(np.uint64)
-    if salt:
-        with np.errstate(over="ignore"):
-            h = h ^ (np.uint64(salt) * _GOLDEN)
-            h ^= h >> np.uint64(33)
-            h = h * np.uint64(0xFF51AFD7ED558CCD)
-            h ^= h >> np.uint64(33)
+    return mix64(h, salt) if salt else h
+
+
+def mix64(h: np.ndarray, salt: int) -> np.ndarray:
+    """The splitmix-style post-mix of :func:`hash64`: a bijection of
+    uint64 hashes per ``salt`` (any int; taken mod 2**64)."""
+    with np.errstate(over="ignore"):
+        h = h ^ (np.uint64(salt & 0xFFFFFFFFFFFFFFFF) * _GOLDEN)
+        h ^= h >> np.uint64(33)
+        h = h * np.uint64(0xFF51AFD7ED558CCD)
+        h ^= h >> np.uint64(33)
     return h

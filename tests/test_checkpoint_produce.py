@@ -5,7 +5,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from drivel_spark.checkpoint import CheckpointStore, resumable_profile
-from drivel_spark.core import SchemaNode, parse_json_schema
+from drivel_spark.core import SchemaNode, detect, parse_json_schema
 from drivel_spark.fixtures import ClipFixtureSpec, build_clips
 from drivel_spark.produce.generator import produce_df, produce_from_profile
 from drivel_spark.profiling import profile
@@ -162,6 +162,17 @@ def test_snapshot_mismatch_recomputes(spark, clip_table, tmp_path):
 # ---------------------------------------------------------------------------
 
 
+_FORMATS = ["email", "hostname", "url", "iso-date", "datetime-iso8601", "datetime-rfc2822"]
+
+
+def _with_format_fields(doc: dict) -> SchemaNode:
+    """``doc`` parsed, plus one required ``s_<format>`` string field per
+    format (rfc2822 has no JSON Schema format keyword)."""
+    node = parse_json_schema(doc)
+    fmts = {f"s_{f}": SchemaNode.string(str_type=f) for f in _FORMATS}
+    return SchemaNode.object(required={**node.required, **fmts}, optional=node.optional)
+
+
 def test_produce_df_deterministic_and_partition_invariant(spark):
     doc = {
         "type": "object",
@@ -174,7 +185,7 @@ def test_produce_df_deterministic_and_partition_invariant(spark):
         },
         "required": ["n", "f", "flag", "codec", "id"],
     }
-    node = parse_json_schema(doc)
+    node = _with_format_fields(doc)
     a = produce_df(spark, node, 500, seed=1, n_partitions=3).toPandas().sort_values("id")
     b = produce_df(spark, node, 500, seed=1, n_partitions=7).toPandas().sort_values("id")
     assert a.reset_index(drop=True).equals(b.reset_index(drop=True))
@@ -182,6 +193,51 @@ def test_produce_df_deterministic_and_partition_invariant(spark):
     assert a["f"].between(0.0, 1.0).all()
     assert set(a["codec"].unique()) <= {"a", "b", "c"}
     assert a["id"].str.match(r"^[0-9a-f-]{36}$").all()
+    for f in ["uuid", *_FORMATS]:
+        col = a["id" if f == "uuid" else f"s_{f}"]
+        assert col.notna().all()
+        assert {detect(v) for v in col} == {f}
+
+
+def test_produce_df_seed_changes_every_column(spark):
+    """``seed`` reaches every generator: two seeds differ in every
+    column (null masks included), and one seed is partition-invariant."""
+    doc = {
+        "type": "object",
+        "properties": {
+            "n": {"type": "integer", "minimum": 0, "maximum": 1000},
+            "f": {"type": "number", "minimum": 0.0, "maximum": 1.0},
+            "flag": {"type": "boolean"},
+            "codec": {"type": "string", "enum": ["a", "b", "c"]},
+            "id": {"type": "string", "format": "uuid"},
+            "opt_n": {"type": "integer", "minimum": 0, "maximum": 9},
+            "text": {"type": "string", "minLength": 3, "maxLength": 12},
+        },
+        "required": ["n", "f", "flag", "codec", "id", "text"],
+    }
+    node = _with_format_fields(doc)
+    one = produce_df(spark, node, 300, seed=1, n_partitions=3).toPandas()
+    two = produce_df(spark, node, 300, seed=2, n_partitions=3).toPandas()
+    assert list(one.columns) == list(two.columns)
+    for c in one.columns:
+        assert not one[c].equals(two[c]), c
+    assert not one["opt_n"].isna().equals(two["opt_n"].isna())
+    again = produce_df(spark, node, 300, seed=1, n_partitions=7).toPandas()
+    assert one.equals(again)
+
+
+@pytest.mark.parametrize("nullable", [False, True])
+@pytest.mark.parametrize("fmt", _FORMATS)
+def test_generated_formats_detect_as_themselves(fmt, nullable):
+    from drivel_spark.produce.generator import _gen_column
+
+    node = SchemaNode.string(str_type=fmt).with_nullable(nullable)
+    col = _gen_column(node, np.arange(10_000, 14_000), 3, 5)
+    vals = col.dropna()
+    assert len(col) == 4000
+    assert (0 < len(vals) < 4000) if nullable else len(vals) == 4000
+    assert {detect(v) for v in vals} == {fmt}
+    assert vals.nunique() > (100 if fmt == "hostname" else 1000)
 
 
 def test_produce_optional_fields_nullable(spark):
@@ -197,9 +253,18 @@ def test_produce_optional_fields_nullable(spark):
 
 
 def test_produce_roundtrip_from_profile(spark):
-    """profile → produce → re-profile: schema kinds and bounds subsumed."""
+    """profile → produce → re-profile: schema kinds and bounds subsumed,
+    and the re-inferred JSON Schema equals the source's."""
     src = build_clips(spark, 1000, 4, ClipFixtureSpec(variant="clean", with_audio=False))
-    prof = profile(src, columns=["sr_hz", "dur_ms", "codec"])
+    h = F.md5(F.col("clip_id").cast("string"))
+    src = src.withColumn(
+        "ts", F.timestamp_seconds(F.lit(1_600_000_000) + F.col("dur_ms") * 1000)
+    ).withColumn(
+        "uid",
+        F.concat_ws("-", *(F.substring(h, a, b) for a, b in
+                           ((1, 8), (9, 4), (13, 4), (17, 4), (21, 12)))),
+    )
+    prof = profile(src, columns=["sr_hz", "dur_ms", "codec", "ts", "uid"])
     gen = produce_from_profile(spark, prof, 2000, seed=3)
     prof2 = profile(gen)
     assert prof2.column("sr_hz").min_v >= prof.column("sr_hz").min_v
@@ -209,6 +274,10 @@ def test_produce_roundtrip_from_profile(spark):
     node, node2 = prof.to_schema_node(), prof2.to_schema_node()
     assert node2.required["codec"].str_type == "enum"
     assert node2.required["codec"].variants <= node.required["codec"].variants
+    assert prof.column("uid").resolved_format == "uuid"
+    assert node2.required["ts"].str_type == "datetime-iso8601"
+    assert node2.required["uid"].str_type == "uuid"
+    assert prof2.to_json_schema() == prof.to_json_schema()
 
 
 def test_resumable_row_validation_matches_batch(spark, clip_table, tmp_path):

@@ -422,3 +422,131 @@ def test_grouped_profile_and_drift(spark):
     rep2 = grouped_drift(gp, gp2)
     status = {r.group: r.status for r in rep2.itertuples() if r.status != "both"}
     assert status == {"flac": "removed", "opus": "added"}
+
+
+class _RowLevelStrings:
+    """Reference string accumulator: every sketch is fed every row of a
+    batch, and formats come from scalar ``detect`` on every value."""
+
+    def __init__(self, opts):
+        from collections import Counter
+
+        from drivel_spark.sketches import BottomK, HyperLogLog, SpaceSaving
+
+        self.opts = opts
+        self.n = self.n_null = 0
+        self.lens: list[int] = []
+        self.hll = HyperLogLog(p=opts.hll_p)
+        self.freq = SpaceSaving(capacity=opts.freq_capacity)
+        self.sample = BottomK(k=opts.sample_k)
+        self.char_hist = Counter()
+        self.formats: set[str] = set()
+
+    def _cap_chars(self):
+        from collections import Counter
+
+        if len(self.char_hist) > self.opts.max_chars:
+            self.char_hist = Counter(dict(self.char_hist.most_common(self.opts.max_chars)))
+
+    def update(self, s: pd.Series):
+        from drivel_spark.core import detect
+        from drivel_spark.profiling.accumulator import CHAR_SAMPLE_PER_BATCH
+
+        self.n += len(s)
+        self.n_null += int(s.isna().sum())
+        v = s.dropna().astype(str)
+        if len(v) == 0:
+            return
+        self.lens += [len(x) for x in v]
+        self.hll.update(v.to_numpy())
+        self.freq.update(v)
+        self.sample.update(v)
+        self.char_hist.update("".join(v.iloc[:CHAR_SAMPLE_PER_BATCH]))
+        self._cap_chars()
+        self.formats |= {detect(x) for x in v}
+
+    def merge(self, other):
+        self.n += other.n
+        self.n_null += other.n_null
+        self.lens += other.lens
+        self.hll = self.hll.merge(other.hll)
+        self.freq = self.freq.merge(other.freq)
+        self.sample = self.sample.merge(other.sample)
+        self.char_hist.update(other.char_hist)
+        self._cap_chars()
+        self.formats |= other.formats
+        return self
+
+
+def _string_batches(n_batches=4, rows=8192):
+    import uuid
+
+    rng = np.random.default_rng(11)
+    n = n_batches * rows
+    emails = np.array([f"user{i % 977}@host{i % 13}.com" for i in range(n)], dtype=object)
+    # free text arrives in the third batch only; the fourth is emails again
+    third = slice(2 * rows, 3 * rows)
+    emails[third] = np.where(rng.random(rows) < 0.05, "free text value", emails[third])
+    hosts = np.array([f"host{i % 301}.org" for i in range(n)], dtype=object)
+    hosts[rng.random(n) < 0.3] = None
+    days = rng.integers(0, 20_000, n).astype("timedelta64[D]") + np.datetime64("1970-01-01")
+    cols = {
+        "enum": rng.choice(np.array(["N", "R", "A"], dtype=object), n),
+        "uuid": np.array([str(uuid.UUID(bytes=rng.bytes(16))) for _ in range(n)], dtype=object),
+        "iso_date": np.datetime_as_string(days, unit="D").astype(object),
+        "email_then_text": emails,
+        "with_nulls": hosts,
+        "all_null": np.full(n, None, dtype=object),
+    }
+    pdf = pd.DataFrame(cols)
+    return [pdf.iloc[i: i + rows] for i in range(0, n, rows)]
+
+
+def test_string_accumulator_is_exact():
+    """Distinct-value batch updates give exactly the row-level sketches,
+    folded as one pass and as two merged halves; the resolved format is
+    scalar ``detect`` on every value under the first-match/demote rule."""
+    from drivel_spark.core.node import STR_UNKNOWN
+    from drivel_spark.profiling.accumulator import TableAccumulator
+
+    opts = ProfilerOptions()
+    batches = _string_batches()
+    names = list(batches[0].columns)
+
+    def fold(part):
+        acc = TableAccumulator([(c, "string") for c in names], opts)
+        refs = {c: _RowLevelStrings(opts) for c in names}
+        for b in part:
+            acc.update(b)
+            for c in names:
+                refs[c].update(b[c])
+        return acc, refs
+
+    one, refs = fold(batches)
+    lo, lo_refs = fold(batches[:2])
+    hi, hi_refs = fold(batches[2:])
+    halves = lo.merge(hi)
+    for c in names:
+        lo_refs[c].merge(hi_refs[c])
+    for acc, ref in ((one, refs), (halves, lo_refs)):
+        for c in names:
+            a, r = acc.cols[c], ref[c]
+            assert (a.n, a.n_null) == (r.n, r.n_null), c
+            assert (a.min_len, a.max_len) == (
+                (min(r.lens), max(r.lens)) if r.lens else (None, None)
+            ), c
+            assert np.array_equal(a.hll.registers, r.hll.registers), c
+            assert a.freq.counts == r.freq.counts, c
+            assert a.freq.errors == r.freq.errors, c
+            assert a.sample.values == r.sample.values, c
+            assert np.array_equal(a.sample.hashes, r.sample.hashes), c
+            assert a.char_hist == r.char_hist, c
+            expected = next(iter(r.formats)) if len(r.formats) == 1 else STR_UNKNOWN
+            assert a.resolved_format == expected, c
+            assert a.formats_seen <= r.formats, c
+    fmt = {c: one.cols[c].resolved_format for c in names}
+    assert fmt == {"enum": STR_UNKNOWN, "uuid": "uuid", "iso_date": "iso-date",
+                   "email_then_text": STR_UNKNOWN, "with_nulls": "hostname",
+                   "all_null": STR_UNKNOWN}
+    # demoted in the third batch: the fourth batch's emails were never detected
+    assert one.cols["email_then_text"].formats_seen == {"email", STR_UNKNOWN}
