@@ -161,9 +161,9 @@ class StringAcc(ColumnAcc):
     first (one ``value_counts``): the length bounds, HLL registers and
     format detection see each distinct value once, the frequency map
     gets the counts.  All are exact — min/max and register max are
-    idempotent — so a profile equals the one per-row updates give.
-    Detection stops once the column is demoted to ``unknown``; the
-    char histogram still samples the batch's leading rows."""
+    idempotent — so the sketches equal those fed every row.  Detection
+    stops once the column can only resolve to ``unknown``; the char
+    histogram still samples the batch's leading rows."""
 
     kind = "string"
 
