@@ -78,8 +78,8 @@ def main() -> None:
         scope=F.pmod(F.xxhash64("l_orderkey"), F.lit(16)).cast("long"),
         cache_flags=False,
     )
-    res.passfail.collect()  # run once so AQE finalizes (isFinalPlan=true)
-    p = fmt(res.passfail)
+    res.agg.collect()  # run once so AQE finalizes (isFinalPlan=true)
+    p = fmt(res.agg)
     sections.append(
         (
             "Pass-2 one-scan constraint aggregation (pass/fail rows)",
@@ -841,7 +841,7 @@ def main() -> None:
         scope=F.pmod(F.xxhash64("l_orderkey"), F.lit(16)).cast("long"),
         cache_flags=False,
     )
-    p = fmt(res.passfail)
+    p = fmt(res.agg)
     sections.append(
         (
             "Conditional constraint pass (implication as one boolean)",
@@ -1526,7 +1526,7 @@ def main() -> None:
         cache_flags=False,
         keep_columns=["o_orderkey"],
     )
-    p = fmt(res.passfail)
+    p = fmt(res.agg)
     m_filter = re.search(r"\((\d+)\) Filter", p)
     m_py = re.search(r"\((\d+)\) MapInPandas", p)
     ordered = bool(m_filter and m_py and int(m_filter.group(1)) < int(m_py.group(1)))

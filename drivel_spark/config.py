@@ -4,7 +4,9 @@ One place owns the conf so local tests, bench runs, and spark-submit
 jobs agree: AQE on (runtime coalesce + skew-join split), Arrow on
 (every UDF in this engine is pandas/Arrow-vectorized), shuffle
 partitions scaled with cores, Arrow batches capped so wide binary
-(audio) columns don't blow executor memory (SURVEY.md §7.4).
+(audio) columns don't blow executor memory (SURVEY.md §7.4).  Job
+scheduling is Spark's default FIFO: concurrent jobs come from driver
+threads, and FIFO backfills the cores the head job leaves idle.
 """
 
 from __future__ import annotations
@@ -43,73 +45,6 @@ DEFAULT_PARQUET_BATCH = 1024
 DEFAULT_MAX_PARTITION_BYTES = os.environ.get("DRIVEL_MAX_PARTITION_BYTES", "33554432")
 
 
-# Job-scheduling policy, MEASURED on the validation workload
-# (48k-clip table, local[32], back-to-back A/B via spark-submit):
-#
-#   default pool FIFO:  29.4s wall  (1,631 clips/s)
-#   default pool FAIR:  38.1s wall  (1,261 clips/s)
-#
-# Strict fair-share within the pool timeshares cores ACROSS jobs, which
-# stretches the critical path: the audio-decode scan (the job that sets
-# the batch wall clock) gets a fraction of the cores whenever the small
-# concurrent jobs (uniqueness shuffle, referential anti-joins, profile)
-# have runnable tasks.  Within-pool FIFO already gives the concurrency
-# the engine needs — Spark's FIFO scheduler backfills idle slots with
-# later jobs' tasks once the head job's pending tasks are placed —
-# while letting the critical job run unthrottled.  So:
-# scheduler mode stays FAIR (callers can still isolate work in weighted
-# pools via spark.scheduler.pool), but the default pool is explicitly
-# FIFO.  Written driver-local at session build time (a packaged file
-# inside a --py-files zip has no filesystem path).
-# The "critical" pool exists for the one job per batch that sets the
-# wall clock (the audio-decode flag materialization): weight 8 keeps it
-# core-rich whenever it has runnable tasks, while idle cores go to the
-# default pool's concurrent jobs — overlap WITHOUT stretching the
-# critical path.  validate() assigns the pool via
-# sc.setLocalProperty("spark.scheduler.pool", ...) on the materializing
-# thread (thread-local, so only that job is promoted).
-# identifies the scheduler policy in benchmark run records, so scaling
-# campaigns across config changes stay separable in the append-only log
-SCHED_CONFIG_TAG = "fifo-default+critical-w8"
-
-_FAIR_XML = """<?xml version="1.0"?>
-<allocations>
-  <pool name="default">
-    <schedulingMode>FIFO</schedulingMode>
-    <weight>1</weight>
-    <minShare>0</minShare>
-  </pool>
-  <pool name="critical">
-    <schedulingMode>FIFO</schedulingMode>
-    <weight>8</weight>
-    <minShare>8</minShare>
-  </pool>
-</allocations>
-"""
-
-
-def _fair_allocation_file() -> str:
-    import tempfile
-
-    # per-uid filename: a fixed world-shared /tmp name would belong to
-    # whichever user wrote it first, and os.replace over another user's
-    # file fails in a sticky /tmp once the XML content changes
-    path = os.path.join(
-        tempfile.gettempdir(), f"drivel_fairscheduler_{os.getuid()}.xml"
-    )
-    try:
-        with open(path) as fh:
-            if fh.read() == _FAIR_XML:
-                return path
-    except OSError:
-        pass
-    tmp = f"{path}.{os.getpid()}"
-    with open(tmp, "w") as fh:
-        fh.write(_FAIR_XML)
-    os.replace(tmp, path)
-    return path
-
-
 def build_session(
     app_name: str = "drivel-spark",
     master: str | None = None,
@@ -146,13 +81,6 @@ def build_session(
         .config("spark.sql.parquet.columnarReaderBatchSize", str(DEFAULT_PARQUET_BATCH))
         .config("spark.sql.files.maxPartitionBytes", DEFAULT_MAX_PARTITION_BYTES)
         .config("spark.sql.session.timeZone", "UTC")
-        # FAIR job scheduling: the validate pass runs its independent
-        # actions (row-flag materialization, uniqueness shuffle,
-        # referential anti-join) from concurrent driver threads; FAIR
-        # keeps the small jobs from queueing behind the heavy decode
-        # scan, which is what makes the wall clock scale with cores
-        .config("spark.scheduler.mode", "FAIR")
-        .config("spark.scheduler.allocation.file", _fair_allocation_file())
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
     )

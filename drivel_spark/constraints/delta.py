@@ -36,7 +36,7 @@ from typing import Any, Callable, Optional
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .validate import GLOBAL_SCOPE, PASSFAIL_COLS, validate
+from .validate import GLOBAL_SCOPE, normalize_passfail, validate
 
 
 def scope_of(key_col: str, n_scopes: int) -> Column:
@@ -97,20 +97,6 @@ class DeltaValidationResult:
         return bool(self.passfail_pdf["passed"].all()) and ds_ok
 
 
-def _normalize_pdf(pdf):
-    out = pdf[PASSFAIL_COLS].astype(
-        {
-            "partition_id": "int64",
-            "n_rows": "int64",
-            "n_violations": "int64",
-            "passed": "bool",
-        }
-    )
-    return out.sort_values(["constraint", "partition_id"]).reset_index(
-        drop=True
-    )
-
-
 def validate_delta(
     new_df: DataFrame,
     row_constraints: list,
@@ -148,7 +134,7 @@ def validate_delta(
     s = scope if scope is not None else scope_of(key_col, n_scopes)
     if hasattr(prev_passfail, "toPandas"):
         prev_passfail = prev_passfail.toPandas()
-    prev_passfail = _normalize_pdf(prev_passfail)
+    prev_passfail = normalize_passfail(prev_passfail)
 
     # ---- fresh row-level pass over dirty scopes only -----------------
     frames = []
@@ -195,7 +181,7 @@ def validate_delta(
         )
         frames.append(fresh_ds.passfail_pdf())
 
-    merged = _normalize_pdf(pd.concat(frames, ignore_index=True))
+    merged = normalize_passfail(pd.concat(frames, ignore_index=True))
 
     # ---- violations: fresh dirty-scope rows + carried clean-scope rows
     if fresh_row is not None:

@@ -6,8 +6,11 @@ Physical shape, designed for 10^12 rows:
 * ALL row-level constraints evaluate in ONE scan: each compiles to a
   JVM boolean column, a single ``groupBy(partition_scope)`` computes
   every violation count map-side-partially (Catalyst partial+final
-  hash agg), then ``stack`` unpivots to (partition, constraint) rows.
-  No Python touches row data.
+  hash agg).  No Python touches row data.
+* The pass/fail report is O(scopes × constraints) rows, so it is built
+  once on the driver: the wide per-scope aggregate (one row per scope,
+  one column per constraint) is collected and unpivoted in pandas, and
+  the dataset-level rows are appended.
 * Violation rows come from the same predicate columns
   (``filter(size(failed) > 0)``) — Catalyst reuses the scan via
   whole-stage codegen; filters/pruning still push down to parquet.
@@ -46,86 +49,96 @@ from .spec import (
 GLOBAL_SCOPE = -1  # partition_id for dataset-level constraint rows
 
 PASSFAIL_COLS = ["partition_id", "constraint", "n_rows", "n_violations", "passed"]
+PASSFAIL_SCHEMA = (
+    "partition_id long, constraint string, n_rows long, n_violations long, passed boolean"
+)
 
 
 @dataclass
 class ValidationResult:
+    """Pass/fail report + violation rows of one ``validate()`` call.
+
+    The report is built once on the driver before ``validate()``
+    returns: ``passfail_pdf()`` is that pandas frame (PASSFAIL_COLS,
+    sorted by constraint, partition_id) and ``passfail`` is the same
+    rows as an Arrow local relation, so reading or writing it never
+    re-runs the aggregation.  ``agg`` is the per-scope aggregate plan
+    behind the row-level rows (None without row constraints), kept for
+    plan audits."""
+
     passfail: DataFrame
     violations: DataFrame  # input rows + failed: array<string>
     dataset: list[dict[str, Any]] = dc_field(default_factory=list)
     violation_tables: dict[str, DataFrame] = dc_field(default_factory=dict)
-    # fast driver-side report path: the pre-unpivot per-scope agg DF and
-    # the constraint names, so passfail_pdf needs ONE Spark action (a
-    # collect of ≤ n_scopes wide rows from the warm cache) instead of
-    # the stack/union/orderBy plan behind `passfail`
-    _agg: Any = None
-    _agg_pdf_fut: Any = None  # Future[pandas] collected during validate()
-    _row_names: list[str] = dc_field(default_factory=list)
-    _extra_rows: list[tuple] = dc_field(default_factory=list)
+    agg: Optional[DataFrame] = None
+    _pdf: Any = None  # the report frame passfail_pdf() returns
 
     def all_passed(self) -> bool:
-        pdf = self.passfail_pdf()
         ds_ok = all(d.get("passed", True) for d in self.dataset)
-        return bool(pdf["passed"].all()) and ds_ok
+        return bool(self._pdf["passed"].all()) and ds_ok
 
     def passfail_pdf(self):
-        """Deterministically-ordered pandas view (for byte-comparisons).
-
-        The per-scope aggregation collects wide (one row per scope,
-        one column per constraint) and unpivots driver-side: the
-        report is O(scopes×constraints) rows, so Spark-side stack /
-        union / orderBy stages would be pure scheduling overhead.
-        Memoized — repeated calls cost no Spark actions."""
-        import pandas as pd
-
-        if getattr(self, "_pdf_cache", None) is not None:
-            return self._pdf_cache
-        if self._agg is None:
-            pdf = self.passfail.toPandas()
-            pdf = pdf.sort_values(["constraint", "partition_id"]).reset_index(drop=True)
-            object.__setattr__(self, "_pdf_cache", pdf)
-            return pdf
-        wide = (
-            self._agg_pdf_fut.result()
-            if self._agg_pdf_fut is not None
-            else self._agg.toPandas()
-        )
-        names = [*self._row_names, "_rows_any_violation"]
-        frames = []
-        for i, name in enumerate(names):
-            col = f"__v_{i}" if name != "_rows_any_violation" else "__v_any"
-            frames.append(
-                pd.DataFrame(
-                    {
-                        "partition_id": wide["__scope"].astype("int64"),
-                        "constraint": name,
-                        "n_rows": wide["n_rows"].astype("int64"),
-                        "n_violations": wide[col].astype("int64"),
-                        "passed": wide[col] == 0,
-                    }
-                )
-            )
-        for row in self._extra_rows:
-            frames.append(
-                pd.DataFrame(
-                    [dict(zip(PASSFAIL_COLS, row))]
-                )
-            )
-        out = pd.concat(frames, ignore_index=True) if frames else pd.DataFrame(
-            columns=PASSFAIL_COLS
-        )
-        out = out[PASSFAIL_COLS].astype(
-            {"partition_id": "int64", "n_rows": "int64", "n_violations": "int64", "passed": "bool"}
-        )
-        out = out.sort_values(["constraint", "partition_id"]).reset_index(drop=True)
-        object.__setattr__(self, "_pdf_cache", out)
-        return out
+        """Deterministically-ordered pandas report (for byte-comparisons)."""
+        return self._pdf
 
     def n_violation_rows(self) -> int:
         """Rows failing ≥1 row-level constraint, from the pass/fail
         aggregation (no extra scan)."""
-        pdf = self.passfail_pdf()
+        pdf = self._pdf
         return int(pdf.loc[pdf.constraint == "_rows_any_violation", "n_violations"].sum())
+
+
+def _passfail_frame(wide, row_names: list[str], ds_rows: list[tuple], scope: Column):
+    """The sorted PASSFAIL_COLS report: ``wide`` (the collected per-scope
+    aggregate: ``__scope``, ``n_rows``, one ``__v_i`` per row constraint
+    and ``__v_any``; None without row constraints) unpivoted to one row
+    per (scope, constraint), plus the dataset-level ``ds_rows``."""
+    import pandas as pd
+
+    frames = []
+    if wide is not None:
+        if wide["__scope"].isna().any():
+            # a NULL partition_id cannot be reported, and dropping it
+            # would undercount — fail loudly like the resumable engine
+            raise ValueError(
+                f"scope expression {scope} produced NULL for some rows; use "
+                "a null-safe, layout-stable scope (e.g. pmod(xxhash64(id), n))"
+            )
+        cols = [f"__v_{i}" for i in range(len(row_names))] + ["__v_any"]
+        for name, col in zip([*row_names, "_rows_any_violation"], cols):
+            frames.append(
+                pd.DataFrame(
+                    {
+                        "partition_id": wide["__scope"],
+                        "constraint": name,
+                        "n_rows": wide["n_rows"],
+                        "n_violations": wide[col],
+                        "passed": wide[col] == 0,
+                    }
+                )
+            )
+    if ds_rows:
+        frames.append(pd.DataFrame(ds_rows, columns=PASSFAIL_COLS))
+    return normalize_passfail(
+        pd.concat(frames, ignore_index=True) if frames else pd.DataFrame(columns=PASSFAIL_COLS)
+    )
+
+
+def normalize_passfail(pdf):
+    """A report frame in the one order and dtypes every pass/fail digest
+    is taken over: PASSFAIL_COLS, sorted by (constraint, partition_id)."""
+    out = pdf[PASSFAIL_COLS].astype(
+        {"partition_id": "int64", "n_rows": "int64", "n_violations": "int64", "passed": "bool"}
+    )
+    return out.sort_values(["constraint", "partition_id"]).reset_index(drop=True)
+
+
+def passfail_df(spark, pdf) -> DataFrame:
+    """A report frame as an Arrow local relation (built on the driver,
+    no Spark job)."""
+    from ..io import local_df
+
+    return local_df(spark, zip(*(pdf[c].tolist() for c in PASSFAIL_COLS)), PASSFAIL_SCHEMA)
 
 
 class RowPredicate(Constraint):
@@ -228,19 +241,6 @@ def validate(
         # aggregation — callers get the violation-row count without
         # a second job over the (cached) flags
         agg = flagged.groupBy("__scope").agg(*row_violation_aggs(row_cs))
-        stack_args = ", ".join(f"'{c.name}', __v_{i}" for i, c in enumerate(row_cs))
-        stack_args += ", '_rows_any_violation', __v_any"
-        passfail = agg.select(
-            F.col("__scope").cast("long").alias("partition_id"),
-            F.expr(f"stack({len(row_cs) + 1}, {stack_args}) as (constraint, n_violations)"),
-            F.col("n_rows"),
-        ).select(
-            "partition_id",
-            "constraint",
-            "n_rows",
-            "n_violations",
-            (F.col("n_violations") == 0).alias("passed"),
-        )
 
         failed_arr = F.array_compact(
             F.array(
@@ -255,25 +255,20 @@ def validate(
             .filter(F.size("failed") > 0)
         )
     else:
-        spark = df.sparkSession
-        from ..io import local_df
-
-        passfail = local_df(
-            spark, [], "partition_id long, constraint string, n_rows long, n_violations long, passed boolean"
-        )
+        agg = None
         violations = df.limit(0).withColumn("failed", F.array().cast("array<string>"))
 
     # ---- dataset-level constraints --------------------------------------
     # All independent Spark actions run CONCURRENTLY from driver
-    # threads (FAIR scheduler, config.py): the heavy row-flag
-    # materialization (decode UDFs), the uniqueness shuffle, and each
-    # referential anti-join overlap instead of queueing — this is what
-    # keeps the serial fraction near zero as executor count grows.
+    # threads: the heavy row-flag materialization (decode UDFs), the
+    # uniqueness shuffle, and each referential anti-join overlap
+    # instead of queueing — Spark's FIFO scheduler backfills the cores
+    # the head job leaves idle with the later jobs' tasks.
     from concurrent.futures import ThreadPoolExecutor
 
     dataset: list[dict[str, Any]] = []
     violation_tables: dict[str, DataFrame] = {}
-    extra_passfail_rows: list[tuple] = []
+    ds_rows: list[tuple] = []
 
     lazy_cs: list[tuple] = []  # (constraint, future(s) ...)
     with ThreadPoolExecutor(max_workers=8) as pool:
@@ -283,29 +278,14 @@ def validate(
         # n_rows sum IS the exact row count, so no separate count()
         # pass over the flags is needed (r06: the old
         # count-then-aggregate shape paid a second full 64-task pass
-        # over the cached flags in the serial tail).  It runs in the
-        # high-weight "critical" scheduler pool (config.py): FAIR
-        # between pools keeps its scan core-rich for its
-        # whole span while the default pool's concurrent jobs backfill
-        # the remaining cores — plain FIFO instead serializes it
-        # behind whichever job got submitted first (measured 35.3s →
-        # 26.1s batch wall at local[32])
-        def _in_critical_pool(fn):
-            sc = df.sparkSession.sparkContext
-            sc.setLocalProperty("spark.scheduler.pool", "critical")
-            try:
-                return fn()
-            finally:
-                sc.setLocalProperty("spark.scheduler.pool", None)
-
-        fut_agg_pdf = None
+        # over the cached flags in the serial tail).  Submitted first,
+        # so Spark's FIFO queue normally runs its stages ahead of the
+        # concurrent jobs'.
+        fut_agg_pdf = fut_n_total = None
         if row_cs:
-            fut_agg_pdf = pool.submit(_in_critical_pool, agg.toPandas)
-            fut_n_total = None
+            fut_agg_pdf = pool.submit(agg.toPandas)
         elif ds_cs:
-            fut_n_total = pool.submit(_in_critical_pool, ds_src.count)
-        else:
-            fut_n_total = None
+            fut_n_total = pool.submit(ds_src.count)
         for c in ds_cs:
             if isinstance(c, Unique):
                 dup_keys = (
@@ -461,8 +441,10 @@ def validate(
         # exact row count: from the aggregation's per-scope n_rows when
         # row constraints ran (one pass gives cache + count + report),
         # else from the dedicated count
+        wide = None
         if fut_agg_pdf is not None:
-            n_total = int(fut_agg_pdf.result()["n_rows"].sum())
+            wide = fut_agg_pdf.result()
+            n_total = int(wide["n_rows"].sum())
         elif fut_n_total is not None:
             n_total = fut_n_total.result()
         else:
@@ -510,30 +492,18 @@ def validate(
         dataset.append(res)
         if vtab is not None:
             violation_tables[c.name] = vtab
-        extra_passfail_rows.append(
+        ds_rows.append(
             (GLOBAL_SCOPE, c.name, res.get("n_rows", n_total or 0), res["n_violations"], res["passed"])
         )
 
-    if extra_passfail_rows:
-        spark = df.sparkSession
-        from ..io import local_df
-
-        extra = local_df(
-            spark,
-            extra_passfail_rows,
-            "partition_id long, constraint string, n_rows long, n_violations long, passed boolean",
-        )
-        passfail = passfail.unionByName(extra)
-
+    pdf = _passfail_frame(wide, [c.name for c in row_cs], ds_rows, scope_col)
     return ValidationResult(
-        passfail,
+        passfail_df(df.sparkSession, pdf),
         violations,
         dataset,
         violation_tables,
-        _agg=agg if row_cs else None,
-        _agg_pdf_fut=fut_agg_pdf,
-        _row_names=[c.name for c in row_cs],
-        _extra_rows=extra_passfail_rows,
+        agg=agg,
+        _pdf=pdf,
     )
 
 

@@ -63,6 +63,7 @@ from drivel_spark.constraints import (
     validate,
 )
 from drivel_spark.constraints.audio import audio_check, audio_row_source
+from drivel_spark.constraints.validate import passfail_df
 from drivel_spark.fixtures import (
     CODEC_ENUM,
     SR_VALUES,
@@ -855,6 +856,14 @@ def _append_byte_tiers(constraints: list, args, df) -> None:
         constraints.append(PcmSizeConsistency("pcm_size_consistency", "bytes"))
 
 
+def _write_report(report: str, passfail, violations) -> None:
+    """``{report}/passfail`` (one file, written from the driver-side
+    report frame's local relation) + ``{report}/violations`` — the
+    layout a later ``validate-delta --prev-report`` reads back."""
+    passfail.coalesce(1).write.mode("overwrite").parquet(f"{report}/passfail")
+    violations.write.mode("overwrite").parquet(f"{report}/violations")
+
+
 def cmd_validate(args) -> dict:
     spark = build_session("drivel-validate")
     with open(f"{args.data}/meta.json") as fh:
@@ -870,9 +879,15 @@ def cmd_validate(args) -> dict:
 
     t0 = time.time()
     phases: dict[str, float] = {}
-    from drivel_spark.io import read_table
+    from drivel_spark.io import is_table_ref, read_table
 
     clips_ref = getattr(args, "clips", None) or f"{args.data}/clips"
+    if args.checkpoint and is_table_ref(clips_ref):
+        raise SystemExit(
+            "--checkpoint needs a parquet path for --clips: the resumable "
+            "profile commits one unit per file, which a catalog table "
+            "ref does not expose"
+        )
     transcripts_ref = getattr(args, "transcripts", None) or f"{args.data}/transcripts"
     clips = read_table(spark, clips_ref)
     transcripts = read_table(spark, transcripts_ref)
@@ -890,8 +905,8 @@ def cmd_validate(args) -> dict:
         clips = clips.filter(where)
 
     # ---- pass 1: schema + stats profile (optionally resumable) -------
-    # launched on a driver thread so its scan overlaps pass 2 (FAIR
-    # scheduler); validate() resolves the future at report-assembly time
+    # launched on a driver thread so its scan overlaps pass 2;
+    # validate() resolves the future at report-assembly time
     prof_pool = ThreadPoolExecutor(max_workers=1)
     resume_stats = None
     if args.checkpoint:
@@ -899,7 +914,7 @@ def cmd_validate(args) -> dict:
 
         def _prof():
             return resumable_profile(
-                spark, f"{args.data}/clips", store, run_id=args.run_id,
+                spark, clips_ref, store, run_id=args.run_id,
                 columns=PROFILE_COLUMNS,
             )
 
@@ -951,18 +966,15 @@ def cmd_validate(args) -> dict:
     prof_pool.shutdown()
     phases["profile_join_s"] = round(time.time() - t1, 3)
 
-    # report materialization: ONE action — the violation-row count is
-    # folded into the pass/fail aggregation as the _rows_any_violation
-    # constraint, so no second job touches the flags
+    # the report was built on the driver inside validate(); the
+    # violation-row count is its _rows_any_violation constraint, so no
+    # job touches the flags here
     t1 = time.time()
     passfail = res.passfail_pdf()
-    n_violation_rows = int(
-        passfail.loc[passfail.constraint == "_rows_any_violation", "n_violations"].sum()
-    )
+    n_violation_rows = res.n_violation_rows()
     phases["reports_s"] = round(time.time() - t1, 3)
     if args.report:
-        res.passfail.coalesce(1).write.mode("overwrite").parquet(f"{args.report}/passfail")
-        res.violations.write.mode("overwrite").parquet(f"{args.report}/violations")
+        _write_report(args.report, res.passfail, res.violations)
     wall = time.time() - t0
 
     n_rows = meta["n_rows"]
@@ -975,7 +987,6 @@ def cmd_validate(args) -> dict:
     digest = hashlib.sha256(
         passfail.to_csv(index=False).encode()
     ).hexdigest()[:16]
-    from drivel_spark.config import SCHED_CONFIG_TAG
 
     # ---- enforcement mode (outside the timed region) ----------------
     # --quarantine-out writes the violating rows (kept columns + the
@@ -1114,14 +1125,13 @@ def cmd_validate(args) -> dict:
     return {
         "job": "validate",
         "master": spark.sparkContext.master,
-        "sched_config": SCHED_CONFIG_TAG,
         "where": where,
         "n_rows": n_rows,
         "wall_s": round(wall, 3),
         "clips_per_sec": round(n_rows / wall, 1),
         "n_passfail_rows": int(len(passfail)),
         "passfail_digest": digest,  # must match across parallelism levels
-        "n_violation_rows": int(n_violation_rows),
+        "n_violation_rows": n_violation_rows,
         "all_passed": bool(res.all_passed()),
         "dataset_checks": [
             {k: d[k] for k in ("constraint", "n_violations", "passed")}
@@ -1339,21 +1349,14 @@ def cmd_validate_delta(args) -> dict:
     ).hexdigest()[:16]
     if args.report:
         t1 = time.time()
-        spark.createDataFrame(passfail).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(f"{args.report}/passfail")
-        res.violations.write.mode("overwrite").parquet(
-            f"{args.report}/violations"
-        )
+        _write_report(args.report, passfail_df(spark, passfail), res.violations)
         phases["report_write_s"] = round(time.time() - t1, 3)
     wall = time.time() - t0
     n_total = int(meta["n_rows"])
-    from drivel_spark.config import SCHED_CONFIG_TAG
 
     return {
         "job": "validate-delta",
         "master": spark.sparkContext.master,
-        "sched_config": SCHED_CONFIG_TAG,
         "n_rows": n_total,
         "n_rows_revalidated": int(res.n_rows_revalidated),
         "revalidate_fraction": round(

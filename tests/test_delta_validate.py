@@ -16,7 +16,7 @@ from drivel_spark.constraints import (
     validate,
     validate_delta,
 )
-from drivel_spark.constraints.delta import _normalize_pdf
+from drivel_spark.constraints.validate import normalize_passfail
 
 N_SCOPES = 16
 KEY = "k"
@@ -104,7 +104,7 @@ def test_delta_report_equals_full_validate(spark):
         new, row_cs + ds_cs, scope=s, ref_tables=ref, keep_columns=keep
     )
     pd.testing.assert_frame_equal(
-        res.passfail_pdf, _normalize_pdf(full.passfail_pdf())
+        res.passfail_pdf, normalize_passfail(full.passfail_pdf())
     )
 
     # violation ROW MULTISETS agree (order-free compare)
@@ -153,7 +153,7 @@ def test_delta_no_churn_carries_everything(spark):
     )
     assert res.n_rows_revalidated == 0
     pd.testing.assert_frame_equal(
-        res.passfail_pdf, _normalize_pdf(prev.passfail_pdf())
+        res.passfail_pdf, normalize_passfail(prev.passfail_pdf())
     )
     assert res.violations.count() == prev.violations.count()
 

@@ -387,6 +387,43 @@ def test_validate_where_slice(spark, tmp_path):
             **{**base, "checkpoint": str(tmp_path / "ck")}))
 
 
+def test_validate_clips_ref_checkpoint_profiles_that_table(spark, tmp_path):
+    """validate --clips <path> --checkpoint profiles the --clips table,
+    the one the constraints read, not {data}/clips; a catalog ref with
+    --checkpoint is refused."""
+    import glob as _glob
+
+    import pytest as _pytest
+
+    from drivel_spark.fixtures import build_transcripts
+    from drivel_spark.job import cmd_validate
+
+    spec = ClipFixtureSpec(with_audio=False)
+    n = 300
+    db = tmp_path / "db"
+    clips = build_clips(spark, n, 4, spec)
+    clips.write.parquet(f"{db}/clips")
+    build_transcripts(spark, n, 4, spec).write.parquet(f"{db}/transcripts")
+    (db / "meta.json").write_text(json.dumps(
+        {"n_rows": n, "partitions": 4, "seed": 42,
+         "variant": "default", "with_audio": False}
+    ))
+    copy = str(tmp_path / "copy")
+    clips.repartition(3).write.parquet(copy)
+    n_files = len(_glob.glob(f"{copy}/*.parquet"))
+    assert n_files != len(_glob.glob(f"{db}/clips/*.parquet"))
+
+    base = dict(data=str(db), baseline=None, run_id="r", check_audio=False,
+                n_scopes=8, report=None, transcripts=None, where=None)
+    out = cmd_validate(argparse.Namespace(
+        clips=copy, checkpoint=str(tmp_path / "ck"), **base))
+    assert out["resume"]["n_units"] == n_files
+
+    with _pytest.raises(SystemExit):
+        cmd_validate(argparse.Namespace(
+            clips="db.clips", checkpoint=str(tmp_path / "ck2"), **base))
+
+
 def test_validate_where_on_partitioned_layout_prunes_files(spark, tmp_path):
     """validate --where composed with the write_partitioned layout
     (VERDICT r04 #7): slicing on the partition column must (a) show the

@@ -161,6 +161,52 @@ def test_referential_both_directions(spark, clips):
     assert res2.dataset[0]["n_violations"] == len(ids[ids % 500 == 29])
 
 
+@pytest.mark.parametrize(
+    "kinds", [("row",), ("dataset",), ("row", "dataset"), ()],
+    ids=["row_only", "dataset_only", "mixed", "empty"],
+)
+def test_passfail_views_agree(spark, clips, kinds):
+    """The report is built once on the driver: ``passfail`` holds the
+    same rows as ``passfail_pdf()``, and reading ``passfail_pdf()``
+    after validate() runs no Spark job."""
+    from drivel_spark.constraints.validate import PASSFAIL_COLS
+
+    cs = []
+    if "row" in kinds:
+        cs += CONSTRAINTS
+    if "dataset" in kinds:
+        cs.append(Unique("clip_id_unique", "clip_id"))
+    res = validate(
+        clips, cs, scope=F.pmod(F.xxhash64("clip_id"), F.lit(4)).cast("long")
+    )
+    sc = spark.sparkContext._jsc.sc()
+    n_jobs = sc.dagScheduler().numTotalJobs()
+    pdf = res.passfail_pdf()
+    assert sc.dagScheduler().numTotalJobs() == n_jobs
+    assert res.passfail.columns == PASSFAIL_COLS
+    assert [f.dataType.simpleString() for f in res.passfail.schema.fields] == [
+        "bigint", "string", "bigint", "bigint", "boolean"
+    ]
+    got = [tuple(r) for r in res.passfail.collect()]
+    want = [
+        (int(p), c, int(n), int(v), bool(ok))
+        for p, c, n, v, ok in pdf.itertuples(index=False, name=None)
+    ]
+    assert got == want
+    n_row_cs = sum(c.is_row_level for c in cs)
+    n_ds = len(cs) - n_row_cs
+    assert len(pdf) == (4 * (n_row_cs + 1) if n_row_cs else 0) + n_ds
+
+
+def test_null_scope_fails_loudly(spark):
+    """A scope expression that yields NULL cannot be reported as a
+    partition_id: validate() raises and names the scope."""
+    df = spark.range(20).withColumn("sr_hz", F.lit(16000))
+    scope = F.when(F.col("id") < 15, F.col("id") % 3)
+    with pytest.raises(ValueError, match="scope expression .*CASE WHEN"):
+        validate(df, [Enum("sr_enum", "sr_hz", SR_ENUM)], scope=scope)
+
+
 def test_from_profile_roundtrip(spark):
     """Infer-then-check: constraints derived from a clean profile pass on
     clean data and catch the injected violations on dirty data."""
