@@ -6,12 +6,15 @@ jobs agree: AQE on (runtime coalesce + skew-join split), Arrow on
 partitions scaled with cores, Arrow batches capped so wide binary
 (audio) columns don't blow executor memory (SURVEY.md §7.4).  Job
 scheduling is Spark's default FIFO: concurrent jobs come from driver
-threads, and FIFO backfills the cores the head job leaves idle.
+threads, and FIFO backfills the cores the head job leaves idle.  On
+``local[...]`` masters the Python workers run from
+``drivel_spark.pydaemon`` (see there), on the pyspark the driver runs.
 """
 
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
@@ -43,6 +46,36 @@ DEFAULT_PARQUET_BATCH = 1024
 # core on local[32] for multi-GB inputs while still giving ~full-size
 # splits to 100TB tables on a 1000-executor cluster (tune per deploy).
 DEFAULT_MAX_PARTITION_BYTES = os.environ.get("DRIVEL_MAX_PARTITION_BYTES", "33554432")
+
+# the directory or zip this package is imported from: the daemon module
+# must import from there too, whatever the JVM's working directory
+PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _submitted_conf() -> dict:
+    """The conf of the JVM spark-submit already started, or {} when no
+    JVM is up yet (``PYSPARK_SUBMIT_ARGS`` launches it later)."""
+    if "PYSPARK_GATEWAY_PORT" not in os.environ:
+        return {}
+    from pyspark import SparkConf, SparkContext
+
+    SparkContext._ensure_initialized()
+    return dict(SparkConf().getAll())
+
+
+def _daemon_conf(conf: dict) -> dict:
+    """Run the Python workers from ``drivel_spark.pydaemon`` on a local
+    master, where they share the driver's files; ``PACKAGE_ROOT`` goes
+    in front of any executor PYTHONPATH ``conf`` already sets.
+    Executors elsewhere may not have this package before a task ships
+    it, so any other master keeps Spark's stock daemon."""
+    if not re.fullmatch(r"local(\[.+\])?", conf.get("spark.master", "")):
+        return {}
+    pythonpath = [PACKAGE_ROOT, conf.get("spark.executorEnv.PYTHONPATH", "")]
+    return {
+        "spark.python.daemon.module": "drivel_spark.pydaemon",
+        "spark.executorEnv.PYTHONPATH": os.pathsep.join(p for p in pythonpath if p),
+    }
 
 
 def build_session(
@@ -84,6 +117,11 @@ def build_session(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
     )
+    conf = _submitted_conf()
+    if master is not None:
+        conf["spark.master"] = master
+    for k, v in _daemon_conf(conf).items():
+        builder = builder.config(k, v)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

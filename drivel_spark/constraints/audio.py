@@ -13,7 +13,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 from typing import Optional
-from urllib.parse import quote
+from urllib.parse import quote, unquote
 
 import numpy as np
 import pandas as pd
@@ -139,20 +139,43 @@ def _pyarrow_uri(loc: str, raw: bool = False) -> str:
     return f"{_SCHEME_ALIASES.get(scheme, scheme)}://{netloc}{path}"
 
 
+def _split_store(loc: str, raw: bool = False) -> tuple[str, str]:
+    """``loc``'s store as ``scheme://netloc/`` and its still-encoded
+    path within that store."""
+    scheme, _, rest = _pyarrow_uri(loc, raw).partition("://")
+    netloc, _, path = rest.partition("/")
+    return f"{scheme}://{netloc}/", path
+
+
+def _open_store(root: str):
+    """The pyarrow filesystem of ``root`` (``scheme://netloc/``) and the
+    prefix of its paths: an S3 bucket, "" for a local disk."""
+    from pyarrow import fs
+
+    filesystem, root_path = fs.FileSystem.from_uri(root)
+    return filesystem, root_path.rstrip("/")
+
+
+def _open_file(loc: str, raw: bool, stores: dict):
+    """The file at ``loc`` (see ``_pyarrow_uri``), its path decoded as
+    ``FileSystem.from_uri`` decodes it.  ``stores`` keeps one filesystem
+    per ``scheme://netloc``, so a task makes each store's client once
+    rather than once per file per batch."""
+    root, path = _split_store(loc, raw)
+    if root not in stores:
+        stores[root] = _open_store(root)
+    filesystem, prefix = stores[root]
+    return filesystem.open_input_file(f"{prefix}/{unquote(path)}")
+
+
 def _check_stores(uris) -> None:
     """Raise ``ValueError`` unless pyarrow opens the store of every
     URI: an unknown scheme, or a store pyarrow fails to open (no
     libhdfs, no credentials), stops the plan on the driver instead of a
     task in a worker.  Opens each distinct ``scheme://netloc/`` once."""
-    from pyarrow import fs
-
-    roots = set()
-    for u in uris:
-        scheme, _, rest = _pyarrow_uri(u).partition("://")
-        roots.add(f"{scheme}://{rest.partition('/')[0]}/")
-    for root in sorted(roots):
+    for root in sorted({_split_store(u)[0] for u in uris}):
         try:
-            fs.FileSystem.from_uri(root)
+            _open_store(root)
         except Exception as e:
             raise ValueError(
                 f"--check-audio reads payloads with pyarrow, which cannot "
@@ -262,9 +285,9 @@ def audio_row_source(
     def gen(batches):
         import pyarrow as pa
         import pyarrow.compute as pc
-        from pyarrow import fs
 
         idx_map = _clip_idx_map(n_rows, seed)
+        stores: dict = {}
 
         def score(b, cid, sr, dur) -> float:
             idx = idx_map.get(cid)
@@ -287,8 +310,7 @@ def audio_row_source(
             snr = np.full(batch.num_rows, -np.inf)
             for loc in pc.unique(files).to_pylist():
                 at = np.flatnonzero(pc.equal(files, loc).to_numpy(zero_copy_only=False))
-                filesystem, path = fs.FileSystem.from_uri(_pyarrow_uri(loc, raw))
-                with filesystem.open_input_file(path) as fh:
+                with _open_file(loc, raw, stores) as fh:
                     for i, b in _read_payloads(fh, rows[at]):
                         k = at[i]
                         snr[k] = score(b, cids[k], srs[k], durs[k])

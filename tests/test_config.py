@@ -1,5 +1,14 @@
 """Session conf: the scale-oriented defaults must actually take effect."""
 
+import json
+import os
+import shutil
+import subprocess
+import sys
+import zipfile
+
+import pytest
+
 
 def test_arrow_and_aqe_defaults(spark):
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
@@ -11,3 +20,142 @@ def test_default_fifo_scheduler(spark):
     Spark's default FIFO queue."""
     assert spark.conf.get("spark.scheduler.mode", "FIFO") == "FIFO"
     assert spark.sparkContext.getConf().get("spark.scheduler.allocation.file") is None
+
+
+def test_workers_import_the_drivers_pyspark(spark):
+    """On a local master the workers run ``drivel_spark.pydaemon``:
+    pyspark comes from a directory at the driver's version, and no
+    ``zipimporter`` is left for the per-task ``invalidate_caches()`` to
+    re-read (the stock daemon leaves 16)."""
+    import pyspark
+
+    def probe(batches):
+        import sys
+        import zipimport
+
+        import pandas as pd
+        import pyspark as worker_pyspark
+
+        zips = [v for v in sys.path_importer_cache.values()
+                if isinstance(v, zipimport.zipimporter)]
+        for _ in batches:
+            yield pd.DataFrame({"file": [worker_pyspark.__file__],
+                                "version": [worker_pyspark.__version__],
+                                "zips": [len(zips)]})
+
+    row = spark.range(1).mapInPandas(
+        probe, "file string, version string, zips long").collect()[0]
+    assert os.path.isfile(row.file), row.file  # not a member of an archive
+    assert row.version == pyspark.__version__
+    assert row.zips == 0
+
+
+def _zip_package(dest, package, version):
+    os.makedirs(os.path.dirname(dest), exist_ok=True)
+    with zipfile.ZipFile(dest, "w") as z:
+        z.writestr(f"{package}/__init__.py", "")
+        z.writestr(f"{package}/version.py", f'__version__: str = "{version}"\n')
+
+
+def _dir_package(root, package, version):
+    os.makedirs(os.path.join(root, package))
+    open(os.path.join(root, package, "__init__.py"), "w").close()
+    with open(os.path.join(root, package, "version.py"), "w") as fh:
+        fh.write(f"__version__ = '{version}'\n")
+
+
+@pytest.fixture
+def fake_spark_path(tmp_path):
+    """A daemon path as the JVM builds it: pyspark.zip, the py4j zip and
+    a jar, then a site directory holding py4j at the archive's version.
+    The test puts its own pyspark in the site directory."""
+    lib, site = tmp_path / "lib", str(tmp_path / "site")
+    _zip_package(str(lib / "pyspark.zip"), "pyspark", "4.1.2")
+    _zip_package(str(lib / "py4j-0.10.9.9-src.zip"), "py4j", "0.10.9.9")
+    _zip_package(str(tmp_path / "jars" / "spark-core.jar"), "org", "0")
+    _dir_package(site, "py4j", "0.10.9.9")
+    archives = [str(lib / "pyspark.zip"), str(lib / "py4j-0.10.9.9-src.zip"),
+                str(tmp_path / "jars" / "spark-core.jar")]
+    cache = dict(sys.path_importer_cache)
+    yield archives, site
+    sys.path_importer_cache.clear()
+    sys.path_importer_cache.update(cache)
+
+
+@pytest.mark.parametrize("site_version,dropped", [("4.1.2", True), ("4.0.1", False)])
+def test_jvm_archives_dropped_only_for_the_same_pyspark(fake_spark_path, site_version, dropped):
+    from drivel_spark.pydaemon import jvm_archives
+
+    archives, site = fake_spark_path
+    _dir_package(site, "pyspark", site_version)
+    path = [os.path.dirname(site)] + archives + [site]
+    got = jvm_archives(path, os.pathsep.join(archives))
+    assert got == (archives if dropped else [])
+
+
+@pytest.mark.parametrize("master,daemon", [
+    ("local", True), ("local[2]", True), ("local[*, 3]", True),
+    ("local-cluster[1,1,1024]", False), ("spark://host:7077", False), ("yarn", False), ("", False),
+])
+def test_daemon_module_only_on_local_masters(master, daemon):
+    from drivel_spark.config import PACKAGE_ROOT, _daemon_conf
+
+    conf = _daemon_conf({"spark.master": master, "spark.executorEnv.PYTHONPATH": "/libs"})
+    assert conf == ({
+        "spark.python.daemon.module": "drivel_spark.pydaemon",
+        "spark.executorEnv.PYTHONPATH": PACKAGE_ROOT + os.pathsep + "/libs",
+    } if daemon else {})
+
+
+def test_spark_submit_py_files_from_another_directory(tmp_path):
+    """``spark-submit --py-files drivel_spark.zip`` run outside the repo:
+    the daemon imports this package from the zip the driver imports it
+    from, the workers keep an executor PYTHONPATH given to spark-submit,
+    and a Python job runs."""
+    home = os.environ.get("SPARK_HOME")
+    spark_submit = os.path.join(home, "bin", "spark-submit") if home else shutil.which("spark-submit")
+    if not spark_submit or not os.path.exists(spark_submit):
+        pytest.skip("no Spark distribution with spark-submit")
+    from drivel_spark.config import PACKAGE_ROOT
+
+    bundle = tmp_path / "drivel_spark.zip"
+    with zipfile.ZipFile(bundle, "w") as z:
+        for root, _, files in os.walk(os.path.join(PACKAGE_ROOT, "drivel_spark")):
+            for f in files:
+                if f.endswith(".py"):
+                    p = os.path.join(root, f)
+                    z.write(p, os.path.relpath(p, PACKAGE_ROOT))
+    libs = tmp_path / "libs"
+    libs.mkdir()
+    (libs / "extra_mod.py").write_text("VALUE = 'from libs'\n")
+    script = tmp_path / "job.py"
+    script.write_text(
+        "import json\n"
+        "from drivel_spark.config import build_session\n"
+        "spark = build_session('py-files-test')\n"
+        "def probe(batches):\n"
+        "    import drivel_spark, extra_mod, pyspark\n"
+        "    for b in batches:\n"
+        "        yield b.assign(pkg=drivel_spark.__file__, pyspark=pyspark.__file__,\n"
+        "                       extra=extra_mod.VALUE)\n"
+        "row = spark.range(1).mapInPandas(\n"
+        "    probe, 'id long, pkg string, pyspark string, extra string').collect()[0]\n"
+        "print(json.dumps({'pkg': row.pkg, 'pyspark': row.pyspark, 'extra': row.extra, 'daemon':\n"
+        "    spark.sparkContext.getConf().get('spark.python.daemon.module')}))\n"
+        "spark.stop()\n"
+    )
+    work = tmp_path / "cwd"
+    work.mkdir()
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    proc = subprocess.run(
+        [spark_submit, "--master", "local[2]", "--conf", "spark.ui.enabled=false",
+         "--conf", f"spark.executorEnv.PYTHONPATH={libs}",
+         "--py-files", str(bundle), str(script)],
+        cwd=work, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    got = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert got["daemon"] == "drivel_spark.pydaemon"
+    assert got["pkg"].startswith(str(bundle) + os.sep)
+    assert os.path.isfile(got["pyspark"]), got["pyspark"]
+    assert got["extra"] == "from libs"

@@ -1379,6 +1379,32 @@ def test_audio_row_source_store_uris():
         _check_stores(["wasb://c@acct.blob.core.windows.net/clips/p.parquet"])
 
 
+def test_audio_payload_files_share_one_filesystem_per_store(tmp_path):
+    """Payload files open through one cached pyarrow filesystem per
+    ``scheme://netloc``, at the path ``FileSystem.from_uri`` decodes,
+    for Spark's encoded ``file_path`` and a raw location alike."""
+    from urllib.parse import quote
+
+    from pyarrow import fs
+
+    from drivel_spark.constraints.audio import _open_file, _pyarrow_uri
+
+    part = tmp_path / "c=a%3Ab"
+    part.mkdir()
+    files = [part / "p q.parquet", part / "r+s.parquet"]
+    for i, f in enumerate(files):
+        f.write_bytes(b"x" * (i + 1))
+    stores = {}
+    for f in files:
+        for loc, raw in (("file:" + quote(str(f), safe="/=+"), False), (str(f), True)):
+            with _open_file(loc, raw, stores) as fh:
+                got = fh.read()
+            filesystem, path = fs.FileSystem.from_uri(_pyarrow_uri(loc, raw))
+            with filesystem.open_input_file(path) as fh:
+                assert got == fh.read() == f.read_bytes()
+    assert list(stores) == ["file:///"]
+
+
 def test_validate_check_audio_catalog_table(spark, audio_dbs):
     """--clips as a catalog table ref (saveAsTable, read through
     spark.read.table): --check-audio gives the digest of the same rows
