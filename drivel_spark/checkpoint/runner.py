@@ -23,6 +23,9 @@ through the profiler's keyed pass (profiling/profiler.py), so one
 mapInPandas pass yields per-file partials even when Spark packs
 several files into one partition or splits one file across
 partitions; the profiler's merger then gives one accumulator per file.
+The row-validation runner folds its per-file counts through the batch
+engine's report builder (constraints/validate.py), so it returns the
+batch engine's report frame.
 """
 
 from __future__ import annotations
@@ -153,23 +156,23 @@ def resumable_row_validation(
 
     ``scope`` must be a layout-stable Column (e.g. pmod(xxhash64(id),
     n_scopes)); physical partition ids would not survive the per-file
-    re-scan.  Returns (passfail pandas frame in the batch engine's
-    row-level shape, stats dict).
+    re-scan.  The file partials fold through the batch engine's own
+    report builder (constraints/validate.py ``flag_rows``,
+    ``row_violation_aggs``, ``passfail_frame``), so the returned
+    (report frame, stats dict) holds exactly ``validate(...)
+    .passfail_pdf()`` of the same row constraints: same rows, order
+    and dtypes.
     """
+    from ..constraints.validate import flag_rows, passfail_frame, row_violation_aggs
+
     row_cs = [c for c in constraints if c.is_row_level]
     if not row_cs:
         raise ValueError("need at least one row-level constraint")
-    names = [c.name for c in row_cs]
 
     def compute(df):
-        from ..constraints.validate import row_flag_columns, row_violation_aggs
-
-        flagged = df.select(
-            F.input_file_name().alias("__unit"), scope.alias("__scope"),
-            *row_flag_columns(row_cs),
-        )
         agg = (
-            flagged.groupBy("__unit", "__scope")
+            flag_rows(df, row_cs, scope, [F.input_file_name().alias("__unit")])
+            .groupBy("__unit", "__scope")
             .agg(*row_violation_aggs(row_cs))
             .toPandas()
         )
@@ -192,33 +195,10 @@ def resumable_row_validation(
         spark, table_path, store, f"{run_id}:rowpf", input_snapshot, compute
     )
     merged = pd.concat([pickle.loads(b) for b in blobs.values()], ignore_index=True)
-    if merged["__scope"].isna().any():
-        # pandas groupby would silently drop NaN groups, undercounting
-        # the report — fail loudly like the batch engine does
-        raise ValueError(
-            "scope expression produced NULL for some rows; use a "
-            "null-safe, layout-stable scope (e.g. pmod(xxhash64(id), n))"
-        )
-    per_scope = merged.groupby("__scope", as_index=False).sum()
-
-    rows = []
-    # iterrows, not itertuples: namedtuple fields can't start with "_",
-    # so itertuples would silently rename __scope/__v_i positionally
-    for _, rec in per_scope.iterrows():
-        for i, name in enumerate(names):
-            v = int(rec[f"__v_{i}"])
-            rows.append((int(rec["__scope"]), name, int(rec["n_rows"]), v, v == 0))
-        v_any = int(rec["__v_any"])
-        rows.append(
-            (int(rec["__scope"]), "_rows_any_violation", int(rec["n_rows"]),
-             v_any, v_any == 0)
-        )
-    passfail = pd.DataFrame(
-        rows,
-        columns=["partition_id", "constraint", "n_rows", "n_violations",
-                 "passed"],
-    ).sort_values(["partition_id", "constraint"]).reset_index(drop=True)
-    return passfail, stats
+    # dropna=False keeps a NULL scope's group, so passfail_frame refuses
+    # it instead of groupby silently dropping (undercounting) its rows
+    wide = merged.groupby("__scope", as_index=False, dropna=False).sum()
+    return passfail_frame(wide, [c.name for c in row_cs], scope), stats
 
 
 def resumable_screen(
@@ -252,12 +232,7 @@ def resumable_screen(
     mixing incompatible blobs.  Returns (per-kind totals frame in the
     screen-stream report shape, stats dict).
     """
-    from ..ops.multimodal import (
-        AUDIO_SCREENS,
-        FUSED_SCREEN_BAD,
-        FUSED_SCREEN_FIELDS,
-        screen_report,
-    )
+    from ..ops.multimodal import FUSED_SCREEN_FIELDS, screen_count_aggs, screen_report
 
     kinds = list(kinds or FUSED_SCREEN_FIELDS)
     zero = {"n_clips": 0, "n_undec": 0}
@@ -270,16 +245,7 @@ def resumable_screen(
         rep = screen_report(
             df.withColumn("__unit", F.input_file_name()), kinds, id_cols=["__unit"]
         )
-        aggs = [
-            F.count(F.lit(1)).alias("n_clips"),
-            F.count(F.when(F.expr("n_samples IS NULL"), 1)).alias("n_undec"),
-        ]
-        for kind in kinds:
-            flag = AUDIO_SCREENS[kind][1]
-            bad = FUSED_SCREEN_BAD.get(kind, "n_samples IS NULL")
-            aggs.append(F.count(F.when(F.expr(flag), 1)).alias(f"f_{kind}"))
-            aggs.append(F.count(F.when(F.expr(bad), 1)).alias(f"b_{kind}"))
-        agg = rep.groupBy("__unit").agg(*aggs).toPandas()
+        agg = rep.groupBy("__unit").agg(*screen_count_aggs(kinds)).toPandas()
         results = {}
         for _, rec in agg.iterrows():
             counts = {k: int(rec[k]) for k in zero}

@@ -44,8 +44,9 @@ DEFAULT_PARQUET_BATCH = 1024
 # packs a GB-scale audio table into ~a dozen partitions and caps
 # parallelism below the core count.  32MB keeps ≳2 waves of tasks per
 # core on local[32] for multi-GB inputs while still giving ~full-size
-# splits to 100TB tables on a 1000-executor cluster (tune per deploy).
-DEFAULT_MAX_PARTITION_BYTES = os.environ.get("DRIVEL_MAX_PARTITION_BYTES", "33554432")
+# splits to 100TB tables on a 1000-executor cluster (tune per deploy
+# through build_session(extra_conf=...)).
+DEFAULT_MAX_PARTITION_BYTES = "33554432"
 
 # the directory or zip this package is imported from: the daemon module
 # must import from there too, whatever the JVM's working directory

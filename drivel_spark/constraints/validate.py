@@ -81,14 +81,8 @@ class ValidationResult:
         """Deterministically-ordered pandas report (for byte-comparisons)."""
         return self._pdf
 
-    def n_violation_rows(self) -> int:
-        """Rows failing ≥1 row-level constraint, from the pass/fail
-        aggregation (no extra scan)."""
-        pdf = self._pdf
-        return int(pdf.loc[pdf.constraint == "_rows_any_violation", "n_violations"].sum())
 
-
-def _passfail_frame(wide, row_names: list[str], ds_rows: list[tuple], scope: Column):
+def passfail_frame(wide, row_names: list[str], scope: Column, ds_rows=()):
     """The sorted PASSFAIL_COLS report: ``wide`` (the collected per-scope
     aggregate: ``__scope``, ``n_rows``, one ``__v_i`` per row constraint
     and ``__v_any``; None without row constraints) unpivoted to one row
@@ -99,7 +93,7 @@ def _passfail_frame(wide, row_names: list[str], ds_rows: list[tuple], scope: Col
     if wide is not None:
         if wide["__scope"].isna().any():
             # a NULL partition_id cannot be reported, and dropping it
-            # would undercount — fail loudly like the resumable engine
+            # would undercount
             raise ValueError(
                 f"scope expression {scope} produced NULL for some rows; use "
                 "a null-safe, layout-stable scope (e.g. pmod(xxhash64(id), n))"
@@ -154,33 +148,56 @@ class RowPredicate(Constraint):
         return self._expr
 
 
-def row_flag_columns(row_cs: list) -> list[Column]:
-    """One boolean flag column per row constraint (``__p_i``) — the
-    SHARED naming/shape contract between the one-pass batch engine and
-    the resumable per-file engine (checkpoint/runner.py); change
-    violation-counting semantics here and both stay in sync."""
-    return [c.predicate().alias(f"__p_{i}") for i, c in enumerate(row_cs)]
+def n_violation_rows(pdf) -> int:
+    """Rows failing ≥1 row-level constraint: the report's
+    ``_rows_any_violation`` counts (no extra scan)."""
+    return int(pdf.loc[pdf.constraint == "_rows_any_violation", "n_violations"].sum())
 
 
-def row_any_fail(row_cs: list) -> Column:
-    any_fail = ~F.col("__p_0")
-    for i in range(1, len(row_cs)):
-        any_fail = any_fail | ~F.col(f"__p_{i}")
-    return any_fail
+def passfail_digest(pdf) -> str:
+    """16 hex digits of sha256 over a report frame's CSV, in the frame's
+    order (``normalize_passfail``'s for a pass/fail report): equal
+    across parallelism levels and file layouts for a stable scope."""
+    import hashlib
+
+    return hashlib.sha256(pdf.to_csv(index=False).encode()).hexdigest()[:16]
+
+
+def flag_rows(df: DataFrame, row_cs: list, scope: Column, keep=()) -> DataFrame:
+    """``keep``, the scope as ``__scope`` and one boolean flag column per
+    row constraint (``__p_i``, true = passed): the projection every
+    row-level engine (batch, stream, resumable) aggregates."""
+    return df.select(
+        *keep,
+        scope.alias("__scope"),
+        *[c.predicate().alias(f"__p_{i}") for i, c in enumerate(row_cs)],
+    )
 
 
 def row_violation_aggs(row_cs: list) -> list[Column]:
     """The per-scope aggregation list over the flag columns: row count,
     one violation counter per constraint (``__v_i``), and the
     any-violation counter (``__v_any``)."""
+    any_fail = ~F.col("__p_0")
+    for i in range(1, len(row_cs)):
+        any_fail = any_fail | ~F.col(f"__p_{i}")
     return [
         F.count(F.lit(1)).alias("n_rows"),
         *[
             F.sum((~F.col(f"__p_{i}")).cast("long")).alias(f"__v_{i}")
             for i in range(len(row_cs))
         ],
-        F.sum(row_any_fail(row_cs).cast("long")).alias("__v_any"),
+        F.sum(any_fail.cast("long")).alias("__v_any"),
     ]
+
+
+def violation_rows(flagged: DataFrame, row_cs: list, keep: list[str]) -> DataFrame:
+    """The flagged rows failing ≥1 row constraint: ``keep`` plus
+    ``failed``, the names of the constraints each row fails."""
+    failed = F.array_compact(
+        F.array(*[F.when(~F.col(f"__p_{i}"), F.lit(c.name)) for i, c in enumerate(row_cs)])
+    ).alias("failed")
+    return flagged.select(*keep, failed).filter(F.size("failed") > 0)
 
 
 def validate(
@@ -228,11 +245,7 @@ def validate(
     # written table; MEMORY_AND_DISK is the local analog.
     if row_cs:
         keep = keep_columns or df.columns
-        flagged = df.select(
-            *keep,
-            scope_col.alias("__scope"),
-            *row_flag_columns(row_cs),
-        )
+        flagged = flag_rows(df, row_cs, scope_col, keep)
         if cache_flags:
             from pyspark import StorageLevel
 
@@ -241,19 +254,7 @@ def validate(
         # aggregation — callers get the violation-row count without
         # a second job over the (cached) flags
         agg = flagged.groupBy("__scope").agg(*row_violation_aggs(row_cs))
-
-        failed_arr = F.array_compact(
-            F.array(
-                *[
-                    F.when(~F.col(f"__p_{i}"), F.lit(c.name)).otherwise(F.lit(None))
-                    for i, c in enumerate(row_cs)
-                ]
-            )
-        ).alias("failed")
-        violations = (
-            flagged.select(*keep, failed_arr)
-            .filter(F.size("failed") > 0)
-        )
+        violations = violation_rows(flagged, row_cs, keep)
     else:
         agg = None
         violations = df.limit(0).withColumn("failed", F.array().cast("array<string>"))
@@ -496,7 +497,7 @@ def validate(
             (GLOBAL_SCOPE, c.name, res.get("n_rows", n_total or 0), res["n_violations"], res["passed"])
         )
 
-    pdf = _passfail_frame(wide, [c.name for c in row_cs], ds_rows, scope_col)
+    pdf = passfail_frame(wide, [c.name for c in row_cs], scope_col, ds_rows)
     return ValidationResult(
         passfail_df(df.sparkSession, pdf),
         violations,

@@ -3,7 +3,7 @@ JSON-Schema parser, seeded generator.  No Spark imports — this layer is
 shipped to executors inside vectorized UDFs and used driver-side for
 merge/describe/IO."""
 
-from .detect import detect, detect_series, format_case_sql
+from .detect import detect, detect_series
 from .emit import describe, to_json_schema, to_json_schema_document
 from .infer import (
     EnumInference,
@@ -27,7 +27,6 @@ __all__ = [
     "SchemaNode",
     "detect",
     "detect_series",
-    "format_case_sql",
     "describe",
     "to_json_schema",
     "to_json_schema_document",

@@ -173,36 +173,3 @@ def detect_series(s: pd.Series) -> pd.Series:
     res = pd.Series(out, index=s.index, dtype="object")
     res[~notna] = None
     return res
-
-
-# The same cascade as a Spark-SQL CASE expression over a column name —
-# lets format profiling run fully JVM-side (whole-stage codegen) and be
-# checked against a DuckDB oracle.  Regex syntax below is valid in both
-# Spark and DuckDB.
-def format_case_sql(col: str) -> str:
-    uuid_re = "^[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}$"
-    email_re = "[a-zA-Z0-9]+@[a-zA-Z0-9]+\\.[a-zA-Z]{2,}$"
-    url_re = "^[a-zA-Z][a-zA-Z0-9+.\\-]*://[^ ]+$"
-    host_re = "^[a-zA-Z0-9\\-]+\\.[a-zA-Z]{2,}$"
-    iso_date_re = "^[0-9]{4}-[0-9]{2}-[0-9]{2}$"
-    rfc3339_re = (
-        "^[0-9]{4}-[0-9]{2}-[0-9]{2}[Tt][0-9]{2}:[0-9]{2}:[0-9]{2}"
-        "(\\.[0-9]+)?([Zz]|[+-][0-9]{2}:[0-9]{2})$"
-    )
-    rfc2822_re = (
-        "^((Mon|Tue|Wed|Thu|Fri|Sat|Sun), *)?[0-9]{1,2} "
-        "(Jan|Feb|Mar|Apr|May|Jun|Jul|Aug|Sep|Oct|Nov|Dec) [0-9]{2,4} "
-        "[0-9]{2}:[0-9]{2}(:[0-9]{2})? ([+-][0-9]{4}|[A-Z]{1,5})$"
-    )
-    c = col
-    return (
-        "CASE "
-        f"WHEN length({c}) = 36 AND regexp_matches({c}, '{uuid_re}') THEN 'uuid' "
-        f"WHEN contains({c}, '@') AND regexp_matches({c}, '{email_re}') THEN 'email' "
-        f"WHEN contains({c}, '.') AND regexp_matches({c}, '{url_re}') THEN 'url' "
-        f"WHEN contains({c}, '.') AND regexp_matches({c}, '{host_re}') THEN 'hostname' "
-        f"WHEN regexp_matches({c}, '{iso_date_re}') THEN 'iso-date' "
-        f"WHEN regexp_matches({c}, '{rfc3339_re}') THEN 'datetime-iso8601' "
-        f"WHEN regexp_matches({c}, '{rfc2822_re}') THEN 'datetime-rfc2822' "
-        "ELSE 'unknown' END"
-    )

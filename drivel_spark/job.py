@@ -63,7 +63,13 @@ from drivel_spark.constraints import (
     validate,
 )
 from drivel_spark.constraints.audio import audio_check, audio_row_source
-from drivel_spark.constraints.validate import passfail_df
+from drivel_spark.constraints.validate import (
+    PASSFAIL_COLS,
+    n_violation_rows,
+    normalize_passfail,
+    passfail_df,
+    passfail_digest,
+)
 from drivel_spark.fixtures import (
     CODEC_ENUM,
     SR_VALUES,
@@ -264,7 +270,7 @@ def _screen_fused(args, kinds: list[str]) -> dict:
     """Multi-kind arm of cmd_screen: the whole set in ONE decode pass
     via the fused kernel, all counts in one aggregation job."""
     from drivel_spark.io import read_table
-    from drivel_spark.ops.multimodal import FUSED_SCREEN_BAD, FUSED_SCREEN_FIELDS
+    from drivel_spark.ops.multimodal import FUSED_SCREEN_FIELDS, screen_count_aggs
     from drivel_spark.ops import screen_report
 
     if args.flag:
@@ -286,32 +292,23 @@ def _screen_fused(args, kinds: list[str]) -> dict:
     if args.out:
         rep.write.mode("overwrite").parquet(args.out)
         rep = spark.read.parquet(args.out)
-    aggs = [
-        F.count(F.lit(1)).alias("__n"),
-        F.count(F.when(F.col("n_samples").isNull(), 1)).alias("__bad"),
-    ]
-    for kind in kinds:
-        flag = AUDIO_SCREENS[kind][1]
-        bad = FUSED_SCREEN_BAD.get(kind, "n_samples IS NULL")
-        aggs.append(F.count(F.when(F.expr(flag), 1)).alias(f"__f_{kind}"))
-        aggs.append(F.count(F.when(F.expr(bad), 1)).alias(f"__b_{kind}"))
-    row = rep.agg(*aggs).collect()[0]
+    row = rep.agg(*screen_count_aggs(kinds)).collect()[0]
     wall = time.time() - t0
     return {
         "job": "screen",
         "kinds": kinds,
-        "n_clips": int(row["__n"]),
+        "n_clips": int(row["n_clips"]),
         "n_flagged_total": int(
-            sum(row[f"__f_{k}"] for k in kinds)
+            sum(row[f"f_{k}"] for k in kinds)
         ),
-        "n_undecodable": int(row["__bad"]),
+        "n_undecodable": int(row["n_undec"]),
         "per_kind": {
-            k: {"n_flagged": int(row[f"__f_{k}"]),
-                "n_undecodable": int(row[f"__b_{k}"])}
+            k: {"n_flagged": int(row[f"f_{k}"]),
+                "n_undecodable": int(row[f"b_{k}"])}
             for k in kinds
         },
         "wall_s": round(wall, 3),
-        "clips_per_sec": round(row["__n"] / wall, 1) if wall > 0 else None,
+        "clips_per_sec": round(row["n_clips"] / wall, 1) if wall > 0 else None,
         "out": args.out,
     }
 
@@ -501,7 +498,7 @@ def cmd_diff(args) -> dict:
     }
 
 
-def _constraints(meta: dict, baseline) -> list:
+def _constraints(baseline) -> list:
     cs = [
         Enum("sr_enum", "sr_hz", tuple(int(v) for v in sorted(SR_VALUES.tolist()))),
         Range("dur_range", "dur_ms", 200, 30000),
@@ -934,7 +931,7 @@ def cmd_validate(args) -> dict:
 
         constraints = load_spec_file(args.constraints)
     else:
-        constraints = _constraints(meta, baseline)
+        constraints = _constraints(baseline)
     _append_byte_tiers(constraints, args, df)
     ds_df = None
     if args.check_audio and meta.get("with_audio") and "bytes" in df.columns:
@@ -971,7 +968,7 @@ def cmd_validate(args) -> dict:
     # job touches the flags here
     t1 = time.time()
     passfail = res.passfail_pdf()
-    n_violation_rows = res.n_violation_rows()
+    n_violations = n_violation_rows(passfail)
     phases["reports_s"] = round(time.time() - t1, 3)
     if args.report:
         _write_report(args.report, res.passfail, res.violations)
@@ -982,11 +979,7 @@ def cmd_validate(args) -> dict:
         # slice validation: throughput must be measured on rows actually
         # scanned, not the full-table metadata count
         n_rows = int(passfail[passfail.constraint == "_rows_any_violation"]["n_rows"].sum())
-    import hashlib
-
-    digest = hashlib.sha256(
-        passfail.to_csv(index=False).encode()
-    ).hexdigest()[:16]
+    digest = passfail_digest(passfail)
 
     # ---- enforcement mode (outside the timed region) ----------------
     # --quarantine-out writes the violating rows (kept columns + the
@@ -1131,7 +1124,7 @@ def cmd_validate(args) -> dict:
         "clips_per_sec": round(n_rows / wall, 1),
         "n_passfail_rows": int(len(passfail)),
         "passfail_digest": digest,  # must match across parallelism levels
-        "n_violation_rows": n_violation_rows,
+        "n_violation_rows": n_violations,
         "all_passed": bool(res.all_passed()),
         "dataset_checks": [
             {k: d[k] for k in ("constraint", "n_violations", "passed")}
@@ -1301,7 +1294,7 @@ def cmd_validate_delta(args) -> dict:
     prof_pool = ThreadPoolExecutor(max_workers=1)
     fut_prof = prof_pool.submit(profile, clips, columns=PROFILE_COLUMNS)
 
-    constraints = _constraints(meta, baseline)
+    constraints = _constraints(baseline)
     _append_byte_tiers(constraints, args, clips)
 
     prepare_row_df = None
@@ -1342,11 +1335,7 @@ def cmd_validate_delta(args) -> dict:
     prof_pool.shutdown()
 
     passfail = res.passfail_pdf
-    import hashlib
-
-    digest = hashlib.sha256(
-        passfail.to_csv(index=False).encode()
-    ).hexdigest()[:16]
+    digest = passfail_digest(passfail)
     if args.report:
         t1 = time.time()
         _write_report(args.report, passfail_df(spark, passfail), res.violations)
@@ -1369,11 +1358,7 @@ def cmd_validate_delta(args) -> dict:
         "clips_per_sec": round(n_total / wall, 1),
         "n_passfail_rows": int(len(passfail)),
         "passfail_digest": digest,  # must equal full validate's digest
-        "n_violation_rows": int(
-            passfail.loc[
-                passfail.constraint == "_rows_any_violation", "n_violations"
-            ].sum()
-        ),
+        "n_violation_rows": n_violation_rows(passfail),
         "all_passed": bool(res.all_passed()),
         "dataset_checks": [
             {k: d[k] for k in ("constraint", "n_violations", "passed")}
@@ -1390,8 +1375,6 @@ def cmd_validate_stream(args) -> dict:
     appends per-batch delta report rows, and prints the CUMULATIVE
     pass/fail digest — which must equal the batch engine's digest on
     the same input (pinned by tests/test_streaming.py)."""
-    import hashlib
-
     from drivel_spark.fixtures import CLIPS_SCHEMA
     from drivel_spark.streaming import cumulative_passfail, validate_stream
 
@@ -1406,13 +1389,9 @@ def cmd_validate_stream(args) -> dict:
 
         row_cs = load_spec_file(args.constraints)
     else:
-        row_cs = [
-            Enum("sr_enum", "sr_hz", tuple(int(v) for v in sorted(SR_VALUES.tolist()))),
-            Range("dur_range", "dur_ms", 200, 30000),
-            Enum("codec_enum", "codec", tuple(sorted(CODEC_ENUM))),
-            NotNull("transcript_not_null", "transcript"),
-            Format("clip_id_uuid", "clip_id", "uuid"),
-        ]
+        # the batch suite's row-level half; its dataset-level checks
+        # belong to the reconcile verb
+        row_cs = [c for c in _constraints(None) if c.is_row_level]
     scope = F.pmod(F.xxhash64(F.col("clip_id")), F.lit(args.n_scopes)).cast("long")
     validate_stream(
         spark,
@@ -1445,12 +1424,7 @@ def cmd_validate_stream(args) -> dict:
     from pyspark.errors import AnalysisException
 
     try:
-        totals = (
-            cumulative_passfail(spark, args.report)
-            .toPandas()
-            .sort_values(["constraint", "partition_id"])
-            .reset_index(drop=True)
-        )
+        totals = normalize_passfail(cumulative_passfail(spark, args.report).toPandas())
     except AnalysisException as ex:
         cond = ""
         for attr in ("getCondition", "getErrorClass"):
@@ -1461,10 +1435,8 @@ def cmd_validate_stream(args) -> dict:
                 continue
         if "PATH_NOT_FOUND" not in (cond or str(ex)):
             raise
-        totals = _pd.DataFrame(
-            columns=["partition_id", "constraint", "n_rows", "n_violations", "passed"]
-        )
-    digest = hashlib.sha256(totals.to_csv(index=False).encode()).hexdigest()[:16]
+        totals = _pd.DataFrame(columns=PASSFAIL_COLS)
+    digest = passfail_digest(totals)
     n_rows = int(
         totals.loc[totals.constraint == totals.constraint.iloc[0], "n_rows"].sum()
     ) if len(totals) else 0
@@ -1476,9 +1448,7 @@ def cmd_validate_stream(args) -> dict:
         "wall_s": round(wall, 3),
         "n_report_rows": int(len(totals)),
         "cumulative_digest": digest,
-        "n_violation_rows_total": int(
-            totals.loc[totals.constraint == "_rows_any_violation", "n_violations"].sum()
-        ),
+        "n_violation_rows_total": n_violation_rows(totals),
     }
 
 
@@ -1492,8 +1462,6 @@ def cmd_screen_stream(args) -> dict:
     tests/test_streaming.py).  Decode being the dominant cost of every
     screen, this is the verb that keeps content-level QA O(new data)
     on a continuously-growing corpus."""
-    import hashlib
-
     from drivel_spark.fixtures import CLIPS_SCHEMA
     from drivel_spark.streaming import cumulative_screen, screen_stream
 
@@ -1520,7 +1488,7 @@ def cmd_screen_stream(args) -> dict:
         .sort_values("kind")
         .reset_index(drop=True)
     )
-    digest = hashlib.sha256(totals.to_csv(index=False).encode()).hexdigest()[:16]
+    digest = passfail_digest(totals)
     wall = time.time() - t0
     return {
         "job": "screen-stream",
@@ -1548,8 +1516,6 @@ def cmd_reconcile(args) -> dict:
     stream micro-batch ids are always >= 0), so the cumulative report
     after stream + reconcile equals the full batch engine's pass/fail
     table on the same data (pinned by tests/test_streaming.py)."""
-    import hashlib
-
     from drivel_spark.fixtures import CLIPS_SCHEMA
     from drivel_spark.io import read_table
     from drivel_spark.streaming import cumulative_passfail
@@ -1568,13 +1534,8 @@ def cmd_reconcile(args) -> dict:
     res.passfail.coalesce(1).write.mode("overwrite").parquet(
         f"{args.report}/batch_id=-1"
     )
-    totals = (
-        cumulative_passfail(spark, args.report)
-        .toPandas()
-        .sort_values(["constraint", "partition_id"])
-        .reset_index(drop=True)
-    )
-    digest = hashlib.sha256(totals.to_csv(index=False).encode()).hexdigest()[:16]
+    totals = normalize_passfail(cumulative_passfail(spark, args.report).toPandas())
+    digest = passfail_digest(totals)
     wall = time.time() - t0
     return {
         "job": "reconcile",

@@ -2779,6 +2779,24 @@ FUSED_SCREEN_BAD: dict = {
 }
 
 
+def screen_count_aggs(kinds: list[str], flags: Optional[dict] = None) -> list:
+    """The counts of a fused ``screen_report``, as one aggregation list:
+    ``n_clips``, ``n_undec`` (undecodable clips), and per kind
+    ``f_{kind}`` (flagged under ``flags[kind]``, else the published
+    policy) and ``b_{kind}`` (undecodable under FUSED_SCREEN_BAD)."""
+    flags = flags or {}
+    aggs = [
+        F.count(F.lit(1)).alias("n_clips"),
+        F.count(F.when(F.expr("n_samples IS NULL"), 1)).alias("n_undec"),
+    ]
+    for kind in kinds:
+        flag = flags.get(kind) or AUDIO_SCREENS[kind][1]
+        bad = FUSED_SCREEN_BAD.get(kind, "n_samples IS NULL")
+        aggs.append(F.count(F.when(F.expr(flag), 1)).alias(f"f_{kind}"))
+        aggs.append(F.count(F.when(F.expr(bad), 1)).alias(f"b_{kind}"))
+    return aggs
+
+
 def screen_report(df: DataFrame, kinds: Optional[list[str]] = None,
                   bytes_col: str = "bytes",
                   id_cols: Optional[list[str]] = None,

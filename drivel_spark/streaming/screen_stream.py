@@ -49,8 +49,8 @@ from pyspark.sql import functions as F
 
 from ..ops.multimodal import (
     AUDIO_SCREENS,
-    FUSED_SCREEN_BAD,
     FUSED_SCREEN_FIELDS,
+    screen_count_aggs,
     screen_report,
     screen_undecodable_col,
 )
@@ -145,31 +145,20 @@ def screen_stream(
             counts: dict = {}
             flagged = []
             if fused_screens:
-                rep = screen_report(
-                    batch_df, [kind for kind, _, _ in fused_screens],
-                    id_cols=ids,
-                )
+                fused = [kind for kind, _, _ in fused_screens]
+                rep = screen_report(batch_df, fused, id_cols=ids)
                 if quarantine_dir is not None:
                     # the quarantine projection is a second job over the
                     # (small, bytes-free) metric report: keep the single
                     # decode pass single by persisting its output
                     rep = rep.persist(StorageLevel.MEMORY_AND_DISK)
                     persisted.append(rep)
-                aggs = [F.count(F.lit(1)).alias("__n")]
-                for kind, _, flag in fused_screens:
-                    bad = FUSED_SCREEN_BAD.get(kind, "n_samples IS NULL")
-                    aggs.append(
-                        F.count(F.when(F.expr(flag), 1)).alias(f"__f_{kind}")
-                    )
-                    aggs.append(
-                        F.count(F.when(F.expr(bad), 1)).alias(f"__b_{kind}")
-                    )
-                row = rep.agg(*aggs).collect()[0]
-                if row["__n"] == 0 and not rest_screens:
+                row = rep.agg(*screen_count_aggs(fused, flags)).collect()[0]
+                if row["n_clips"] == 0 and not rest_screens:
                     return
-                for kind, _, _ in fused_screens:
-                    counts[kind] = (int(row["__n"]), int(row[f"__f_{kind}"]),
-                                    int(row[f"__b_{kind}"]))
+                for kind in fused:
+                    counts[kind] = (int(row["n_clips"]), int(row[f"f_{kind}"]),
+                                    int(row[f"b_{kind}"]))
                 if quarantine_dir is not None:
                     flag_arr = F.array_compact(
                         F.array(

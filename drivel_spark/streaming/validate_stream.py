@@ -8,9 +8,11 @@ compiled row-level constraint predicates over a stream of clip files:
 * ``readStream`` file source (parquet here; an Iceberg streaming source
   is the same one-line conf swap as the batch reader) — each
   micro-batch sees only NEW files;
-* the identical one-scan aggregation shape as the batch pass-2
-  (every predicate a JVM boolean column, one hash agg per scope,
-  driver-side unpivot) applied per micro-batch inside ``foreachBatch``;
+* the batch engine's own report builder (constraints/validate.py:
+  ``flag_rows``, ``row_violation_aggs``, ``passfail_frame`` and, for
+  the quarantine gate, ``violation_rows``) applied per micro-batch
+  inside ``foreachBatch`` — every predicate a JVM boolean column, one
+  hash agg per scope, the driver-side unpivot with its NULL-scope check;
 * per-batch pass/fail DELTA rows appended to the report table with the
   micro-batch id — cumulative state is a trivial SUM over the report,
   so the streaming state itself stays empty (no watermark, no state
@@ -38,42 +40,13 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..constraints.spec import Constraint
-
-# batch_id lives in the directory name (report_dir/batch_id=N/), not
-# the rows: each micro-batch OVERWRITES its own partition directory, so
-# an at-least-once foreachBatch replay rewrites the same delta instead
-# of appending a duplicate — cumulative totals stay exactly-once.
-REPORT_SCHEMA = (
-    "partition_id long, constraint string, "
-    "n_rows long, n_violations long, passed boolean"
+from ..constraints.validate import (
+    flag_rows,
+    passfail_df,
+    passfail_frame,
+    row_violation_aggs,
+    violation_rows,
 )
-
-
-def _flag_columns(row_cs: list[Constraint]) -> list[Column]:
-    return [c.predicate().alias(f"__p_{i}") for i, c in enumerate(row_cs)]
-
-
-def _batch_report(pdf_agg, names: list[str]):
-    """Unpivot the per-scope wide aggregate to report rows (pandas,
-    driver-side — O(scopes × constraints), same as the batch engine)."""
-    import pandas as pd
-
-    frames = []
-    for i, name in enumerate([*names, "_rows_any_violation"]):
-        col = f"__v_{i}" if name != "_rows_any_violation" else "__v_any"
-        frames.append(
-            pd.DataFrame(
-                {
-                    "partition_id": pdf_agg["__scope"].astype("int64"),
-                    "constraint": name,
-                    "n_rows": pdf_agg["n_rows"].astype("int64"),
-                    "n_violations": pdf_agg[col].astype("int64"),
-                    "passed": pdf_agg[col] == 0,
-                }
-            )
-        )
-    out = pd.concat(frames, ignore_index=True)
-    return out.sort_values(["constraint", "partition_id"]).reset_index(drop=True)
 
 
 def validate_stream(
@@ -121,21 +94,7 @@ def validate_stream(
     stream = reader.parquet(source_dir)
 
     keep = list(keep_columns or stream.columns) if quarantine_dir else []
-    flagged = stream.select(
-        *keep, scope.alias("__scope"), *_flag_columns(row_cs)
-    )
-    any_fail = ~F.col("__p_0")
-    for i in range(1, len(row_cs)):
-        any_fail = any_fail | ~F.col(f"__p_{i}")
-    names = [c.name for c in row_cs]
-    failed_arr = F.array_compact(
-        F.array(
-            *[
-                F.when(~F.col(f"__p_{i}"), F.lit(c.name)).otherwise(F.lit(None))
-                for i, c in enumerate(row_cs)
-            ]
-        )
-    ).alias("failed")
+    flagged = flag_rows(stream, row_cs, scope, keep)
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         if quarantine_dir is not None:
@@ -145,25 +104,20 @@ def validate_stream(
             from pyspark import StorageLevel
 
             batch_df = batch_df.persist(StorageLevel.MEMORY_AND_DISK)
-            batch_df.filter(any_fail).select(*keep, failed_arr).write.mode(
-                "overwrite"
-            ).parquet(f"{quarantine_dir}/batch_id={int(batch_id)}")
-        agg = batch_df.groupBy("__scope").agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            *[
-                F.sum((~F.col(f"__p_{i}")).cast("long")).alias(f"__v_{i}")
-                for i in range(len(row_cs))
-            ],
-            F.sum(any_fail.cast("long")).alias("__v_any"),
-        )
-        pdf = agg.toPandas()
+            violation_rows(batch_df, row_cs, keep).write.mode("overwrite").parquet(
+                f"{quarantine_dir}/batch_id={int(batch_id)}"
+            )
+        wide = batch_df.groupBy("__scope").agg(*row_violation_aggs(row_cs)).toPandas()
         if quarantine_dir is not None:
             batch_df.unpersist()
-        if pdf.empty:
+        if wide.empty:
             return
-        report = _batch_report(pdf, names)
-        # idempotent per-batch commit: overwrite THIS batch's partition
-        spark.createDataFrame(report, REPORT_SCHEMA).write.mode("overwrite").parquet(
+        report = passfail_frame(wide, [c.name for c in row_cs], scope)
+        # batch_id lives in the directory name, not the rows: each
+        # micro-batch OVERWRITES its own partition, so an at-least-once
+        # foreachBatch replay rewrites the same delta instead of
+        # appending a duplicate — cumulative totals stay exactly-once
+        passfail_df(spark, report).coalesce(1).write.mode("overwrite").parquet(
             f"{report_dir}/batch_id={int(batch_id)}"
         )
 

@@ -167,6 +167,54 @@ def test_stream_rejects_dataset_constraints(spark, tmp_path):
         )
 
 
+def test_stream_quarantine_equals_batch_violations(spark, tmp_path):
+    """The streaming gate quarantines exactly the batch engine's
+    violation rows: the kept columns plus ``failed``, as a multiset
+    over every micro-batch."""
+    from collections import Counter
+
+    source = str(tmp_path / "qsrc")
+    quar = str(tmp_path / "quar")
+    keep = ["clip_id", "sr_hz", "codec"]
+    _write_wave(spark, source, 0, 300)
+    _write_wave(spark, source, 300, 600)
+    validate_stream(
+        spark, source, CLIPS_SCHEMA, _constraints(), _scope(),
+        str(tmp_path / "qrep"), str(tmp_path / "qck"),
+        max_files_per_trigger=1, quarantine_dir=quar, keep_columns=keep,
+    )
+    got = spark.read.option("basePath", quar).parquet(f"{quar}/batch_id=*")
+    assert got.columns == [*keep, "failed", "batch_id"]
+    want = validate(
+        spark.read.parquet(source), _constraints(), scope=_scope(),
+        keep_columns=keep, cache_flags=False,
+    ).violations
+
+    def rows(df):
+        return Counter(
+            (*(r[c] for c in keep), tuple(r["failed"]))
+            for r in df.select(*keep, "failed").collect()
+        )
+
+    assert rows(got) == rows(want)
+    assert len(rows(want)) > 0
+
+
+def test_stream_null_scope_raises_batch_error(spark, tmp_path):
+    """A scope that yields NULL fails the stream with the batch engine's
+    NULL-scope ValueError, not a pandas cast error."""
+    from pyspark.errors import StreamingQueryException
+
+    source = str(tmp_path / "nsrc")
+    _write_wave(spark, source, 0, 200)
+    scope = F.when(F.col("dur_ms") > 1000, _scope())
+    with pytest.raises(StreamingQueryException, match="ValueError: scope expression"):
+        validate_stream(
+            spark, source, CLIPS_SCHEMA, _constraints(), scope,
+            str(tmp_path / "nrep"), str(tmp_path / "nck"),
+        )
+
+
 # ---------------------------------------------------------------------------
 # incremental profile stream
 # ---------------------------------------------------------------------------

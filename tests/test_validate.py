@@ -198,13 +198,24 @@ def test_passfail_views_agree(spark, clips, kinds):
     assert len(pdf) == (4 * (n_row_cs + 1) if n_row_cs else 0) + n_ds
 
 
-def test_null_scope_fails_loudly(spark):
+def test_null_scope_fails_loudly(spark, tmp_path):
     """A scope expression that yields NULL cannot be reported as a
-    partition_id: validate() raises and names the scope."""
+    partition_id: validate() and the resumable row validation (whose
+    per-file partials would otherwise lose the NULL group in pandas'
+    groupby) raise and name the scope."""
+    from drivel_spark.checkpoint import CheckpointStore, resumable_row_validation
+
     df = spark.range(20).withColumn("sr_hz", F.lit(16000))
     scope = F.when(F.col("id") < 15, F.col("id") % 3)
+    cs = [Enum("sr_enum", "sr_hz", SR_ENUM)]
     with pytest.raises(ValueError, match="scope expression .*CASE WHEN"):
-        validate(df, [Enum("sr_enum", "sr_hz", SR_ENUM)], scope=scope)
+        validate(df, cs, scope=scope)
+    path = str(tmp_path / "t")
+    df.write.parquet(path)
+    with pytest.raises(ValueError, match="scope expression .*CASE WHEN"):
+        resumable_row_validation(
+            spark, path, CheckpointStore(str(tmp_path / "ck")), "n", cs, scope
+        )
 
 
 def test_from_profile_roundtrip(spark):
