@@ -14,6 +14,13 @@ Physical shape, designed for 10^12 rows:
 * Violation rows come from the same predicate columns
   (``filter(size(failed) > 0)``) — Catalyst reuses the scan via
   whole-stage codegen; filters/pruning still push down to parquet.
+* Each dataset-level kind is one check function, ``_<kind>(c, ctx)``
+  in the ``_CHECKS`` table: it builds its plan, runs its action(s) and
+  returns its result dict and violation table.  ``validate()`` first
+  checks every such constraint's inputs (a check for its kind, its ref
+  table, profile, baseline), so a bad suite fails before any Spark
+  job; then it submits the row-flag aggregate (or a plain count) and
+  the checks to one thread pool, where their jobs overlap.
 * Uniqueness = HLL sketch pre-estimate (from the profile pass, free)
   + exact confirm via hash-shuffle ``groupBy(key).count().filter(>1)``;
   AQE splits skewed keys.
@@ -24,6 +31,7 @@ Physical shape, designed for 10^12 rows:
 
 from __future__ import annotations
 
+import threading
 from dataclasses import dataclass, field as dc_field
 from typing import Any, Optional
 
@@ -221,7 +229,8 @@ def validate(
     of the baseline, used by Unique (HLL pre-gate) and Drift;
     ``profile`` may also be a zero-arg callable returning the
     TableProfile, letting the caller run the profile scan concurrently
-    with this pass (it is resolved only when reports are assembled).
+    with this pass (it is called once, by the first check that needs
+    it, and always before ``validate()`` returns).
     ``ds_df``: evaluate DATASET-level constraints (uniqueness,
     referential, group bounds, …) against this frame instead of ``df``.
     They are column-pruned scans; when ``df``'s row-level source is
@@ -229,10 +238,13 @@ def validate(
     narrow source here so each dataset job scans only the columns it
     needs instead of re-running the opaque pass.  Must hold the same
     rows (same table) as ``df``.
+    A dataset-level constraint with no check, or without the ref table
+    or profile it needs, raises ``ValueError`` before any Spark job.
     """
     row_cs = [c for c in constraints if c.is_row_level]
     ds_cs = [c for c in constraints if not c.is_row_level]
     ds_src = ds_df if ds_df is not None else df
+    checks = [_check_of(c, ref_tables, profile, baseline_profile) for c in ds_cs]
 
     scope_col = scope if scope is not None else F.spark_partition_id()
 
@@ -267,265 +279,121 @@ def validate(
     # the head job leaves idle with the later jobs' tasks.
     from concurrent.futures import ThreadPoolExecutor
 
-    dataset: list[dict[str, Any]] = []
-    violation_tables: dict[str, DataFrame] = {}
-    ds_rows: list[tuple] = []
-
-    lazy_cs: list[tuple] = []  # (constraint, future(s) ...)
     with ThreadPoolExecutor(max_workers=8) as pool:
-        # run the per-scope aggregation first — it is the heaviest job
+        # the per-scope aggregation goes first — it is the heaviest job
         # (the audio-decode scan when present), it materializes the
         # persisted flags cache as a side effect, and its per-scope
         # n_rows sum IS the exact row count, so no separate count()
-        # pass over the flags is needed (r06: the old
-        # count-then-aggregate shape paid a second full 64-task pass
-        # over the cached flags in the serial tail).  Submitted first,
-        # so Spark's FIFO queue normally runs its stages ahead of the
-        # concurrent jobs'.
-        fut_agg_pdf = fut_n_total = None
-        if row_cs:
-            fut_agg_pdf = pool.submit(agg.toPandas)
-        elif ds_cs:
-            fut_n_total = pool.submit(ds_src.count)
-        for c in ds_cs:
-            if isinstance(c, Unique):
-                dup_keys = (
-                    ds_src.groupBy(c.column)
-                    .agg(F.count(F.lit(1)).alias("cnt"))
-                    .filter(F.col("cnt") > 1)
-                )
-                fut = pool.submit(
-                    lambda dk=dup_keys: dk.agg(
-                        F.count(F.lit(1)).alias("k"),
-                        F.coalesce(F.sum("cnt"), F.lit(0)).alias("r"),
-                    ).collect()[0]
-                )
-                lazy_cs.append((c, fut, dup_keys))
-            elif isinstance(c, Referential):
-                if not ref_tables or c.ref_table not in ref_tables:
-                    raise ValueError(
-                        f"Referential constraint {c.name} needs ref_tables[{c.ref_table!r}]"
-                    )
-                if c.strategy == "bloom":
-                    from .bloom import referential_bloom
-
-                    orphans = referential_bloom(
-                        ds_src,
-                        c.column,
-                        ref_tables[c.ref_table],
-                        c.ref_column,
-                        fpp=c.bloom_fpp,
-                    ).drop("bloom_definite")
-                else:
-                    orphans = ds_src.join(
-                        ref_tables[c.ref_table]
-                        .select(F.col(c.ref_column).alias(c.column))
-                        .dropDuplicates([c.column]),
-                        on=c.column,
-                        how="left_anti",
-                    )
-                lazy_cs.append((c, pool.submit(orphans.count), orphans))
-            elif isinstance(c, GroupBound):
-                gtab = group_bound_table(ds_src, c)
-                fut = pool.submit(
-                    lambda g=gtab: g.agg(
-                        F.count(F.lit(1)).alias("n_groups"),
-                        F.coalesce(
-                            F.sum((~F.col("passed")).cast("long")), F.lit(0)
-                        ).alias("n_fail"),
-                    ).collect()[0]
-                )
-                lazy_cs.append((c, fut, gtab))
-            elif isinstance(c, FunctionalDependency):
-                bad_keys = (
-                    ds_src.select(
-                        F.col(c.column).alias("key"),
-                        F.col(c.determines).alias("dep"),
-                    )
-                    .distinct()
-                    .groupBy("key")
-                    .agg(F.count(F.lit(1)).alias("n_bindings"))
-                    .filter(F.col("n_bindings") > 1)
-                )
-                fut = pool.submit(
-                    lambda b=bad_keys: b.agg(
-                        F.count(F.lit(1)).alias("k"),
-                        F.coalesce(F.sum("n_bindings"), F.lit(0)).alias("b"),
-                    ).collect()[0]
-                )
-                lazy_cs.append((c, fut, bad_keys))
-            elif isinstance(c, DistinctRatio):
-                if c.method == "exact":
-                    fut = pool.submit(
-                        lambda col=c.column: ds_src.agg(
-                            F.countDistinct(F.col(col)).alias("d"),
-                            F.sum(
-                                F.col(col).isNotNull().cast("long")
-                            ).alias("nn"),
-                        ).collect()[0]
-                    )
-                    lazy_cs.append((c, fut, None))
-                else:
-                    if profile is None:
-                        raise ValueError(
-                            f"DistinctRatio {c.name} (sketch) needs profile"
-                        )
-                    lazy_cs.append((c, None, None))
-            elif isinstance(c, Monotonic):
-                from ..ops.timeseries import monotonic_violations
-
-                pairs = monotonic_violations(
-                    ds_src,
-                    c.column,
-                    list(c.order_by),
-                    group_col=c.group_col,
-                    strict=c.strict,
-                )
-                lazy_cs.append((c, pool.submit(pairs.count), pairs))
-            elif isinstance(c, EntropyBound):
-                from ..ops.infostats import column_entropy
-
-                fut = pool.submit(
-                    lambda col=c.column: column_entropy(ds_src, [col]).collect()[0]
-                )
-                lazy_cs.append((c, fut, None))
-            elif isinstance(c, CorrelationBound):
-                from ..ops.infostats import _pearson
-
-                fut = pool.submit(
-                    lambda a=c.column, b=c.other: ds_src.agg(
-                        _pearson(a, b).alias("corr"),
-                        F.count(
-                            F.when(
-                                F.col(a).isNotNull() & F.col(b).isNotNull(),
-                                1,
-                            )
-                        ).alias("n"),
-                    ).collect()[0]
-                )
-                lazy_cs.append((c, fut, None))
-            elif isinstance(c, MutualInformationBound):
-                from ..ops.infostats import mutual_information
-
-                fut = pool.submit(
-                    lambda a=c.column, b=c.other: mutual_information(
-                        ds_src, a, b
-                    ).collect()[0]
-                )
-                lazy_cs.append((c, fut, None))
-            elif isinstance(c, QuantileBound):
-                if c.method == "exact":
-                    from ..ops.selection import exact_quantile
-
-                    def _exq(col=c.column, q=c.q):
-                        try:
-                            return exact_quantile(ds_src, col, q)
-                        except ValueError:  # no non-null values → fail
-                            return None
-
-                    lazy_cs.append((c, pool.submit(_exq), None))
-                else:  # sketch: free from the pass-1 profile, no job
-                    if profile is None:
-                        raise ValueError(
-                            f"QuantileBound {c.name} (sketch) needs profile"
-                        )
-                    lazy_cs.append((c, None, None))
-            elif isinstance(c, Drift):
-                if profile is None or baseline_profile is None:
-                    raise ValueError(
-                        f"Drift constraint {c.name} needs profile + baseline_profile"
-                    )
-                lazy_cs.append((c, None, None))
-            else:
-                raise ValueError(f"unknown dataset constraint {type(c)}")
-
-        # exact row count: from the aggregation's per-scope n_rows when
-        # row constraints ran (one pass gives cache + count + report),
-        # else from the dedicated count
-        wide = None
-        if fut_agg_pdf is not None:
-            wide = fut_agg_pdf.result()
-            n_total = int(wide["n_rows"].sum())
-        elif fut_n_total is not None:
-            n_total = fut_n_total.result()
-        else:
-            n_total = 0
-
-    # `profile` may be a zero-arg callable (e.g. a Future's .result) so
-    # the pass-1 profile scan can run CONCURRENTLY with the pass-2 jobs
-    # above; it is only needed here, at report-assembly time
-    if callable(profile):
-        profile = profile()
-
-    for c, fut, aux in lazy_cs:
-        if isinstance(c, Unique):
-            res, vtab = _unique_result(c, fut.result(), aux, profile, n_total)
-        elif isinstance(c, Referential):
-            res, vtab = _referential_result(c, fut.result(), aux, n_total)
-        elif isinstance(c, GroupBound):
-            res, vtab = _group_bound_result(c, fut.result(), aux)
-        elif isinstance(c, FunctionalDependency):
-            res, vtab = _functional_dependency_result(c, fut.result(), aux)
-        elif isinstance(c, DistinctRatio):
-            res, vtab = (
-                _distinct_ratio_result(
-                    c, fut.result() if fut is not None else None, profile
-                ),
-                None,
-            )
-        elif isinstance(c, Monotonic):
-            res, vtab = _monotonic_result(c, fut.result()), aux
-        elif isinstance(c, EntropyBound):
-            res, vtab = _entropy_bound_result(c, fut.result()), None
-        elif isinstance(c, CorrelationBound):
-            res, vtab = _correlation_bound_result(c, fut.result()), None
-        elif isinstance(c, MutualInformationBound):
-            res, vtab = _mutual_information_result(c, fut.result()), None
-        elif isinstance(c, QuantileBound):
-            res, vtab = (
-                _quantile_bound_result(
-                    c, fut.result() if fut is not None else None, profile
-                ),
-                None,
-            )
-        else:
-            res, vtab = _check_drift(c, profile, baseline_profile), None
-        dataset.append(res)
-        if vtab is not None:
-            violation_tables[c.name] = vtab
-        ds_rows.append(
-            (GLOBAL_SCOPE, c.name, res.get("n_rows", n_total or 0), res["n_violations"], res["passed"])
+        # pass over the flags is needed.  It (or the plain count) is
+        # submitted before any check, so a check waiting on n_total()
+        # never holds the thread it needs, and Spark's FIFO queue
+        # normally runs its stages ahead of the checks' jobs.
+        ctx = _Context(
+            ds_src,
+            ref_tables or {},
+            profile,
+            baseline_profile,
+            wide=pool.submit(agg.toPandas) if row_cs else None,
+            count=pool.submit(ds_src.count) if ds_cs and not row_cs else None,
         )
+        futs = [pool.submit(check, c, ctx) for c, check in zip(ds_cs, checks)]
+        checked = [f.result() for f in futs]
+        wide = ctx.wide.result() if row_cs else None
+    ctx.profile()  # also when no check read it: a failing profile fails here
 
+    ds_rows = [
+        (GLOBAL_SCOPE, c.name, res.get("n_rows", ctx.n_total()), res["n_violations"], res["passed"])
+        for c, (res, _) in zip(ds_cs, checked)
+    ]
     pdf = passfail_frame(wide, [c.name for c in row_cs], scope_col, ds_rows)
     return ValidationResult(
         passfail_df(df.sparkSession, pdf),
         violations,
-        dataset,
-        violation_tables,
+        [res for res, _ in checked],
+        {c.name: vtab for c, (_, vtab) in zip(ds_cs, checked) if vtab is not None},
         agg=agg,
         _pdf=pdf,
     )
 
 
-def _unique_result(c: Unique, agg_row, dup_keys: DataFrame, profile, n_total: int):
+class _Context:
+    """What the dataset-level checks share: the frame they scan
+    (``ds``), the ref tables, the two profiles and the exact row count
+    (from the row-flag aggregate future ``wide``, else from ``count``)."""
+
+    def __init__(self, ds, ref_tables, profile, baseline, wide, count):
+        self.ds, self.ref_tables, self.baseline = ds, ref_tables, baseline
+        self.wide, self._count = wide, count
+        self._profile, self._lock = profile, threading.Lock()
+
+    def profile(self):
+        """The caller's profile; a zero-arg callable is called once."""
+        with self._lock:
+            if callable(self._profile):
+                self._profile = self._profile()
+            return self._profile
+
+    def n_total(self) -> int:
+        if self.wide is not None:
+            return int(self.wide.result()["n_rows"].sum())
+        return self._count.result()
+
+
+def _check_of(c: Constraint, ref_tables, profile, baseline_profile):
+    """The check function of dataset-level constraint ``c``, once the
+    inputs it needs are known to be there."""
+    check = next((_CHECKS[t] for t in type(c).__mro__ if t in _CHECKS), None)
+    if check is None:
+        raise ValueError(f"unknown dataset constraint {type(c)}")
+    if isinstance(c, Referential) and c.ref_table not in (ref_tables or {}):
+        raise ValueError(f"Referential constraint {c.name} needs ref_tables[{c.ref_table!r}]")
+    if isinstance(c, (DistinctRatio, QuantileBound)) and c.method != "exact" and profile is None:
+        raise ValueError(f"{type(c).__name__} {c.name} (sketch) needs profile")
+    if isinstance(c, Drift) and (profile is None or baseline_profile is None):
+        raise ValueError(f"Drift constraint {c.name} needs profile + baseline_profile")
+    return check
+
+
+def _out_of_bounds(value, c) -> bool:
+    """A gated statistic fails when it is undefined (None) or outside
+    ``[c.lo, c.hi]`` (a None bound is open)."""
+    return (
+        value is None
+        or (c.lo is not None and value < float(c.lo))
+        or (c.hi is not None and value > float(c.hi))
+    )
+
+
+def _column_acc(profile, column: str):
+    """``column``'s profile accumulator, or None when it was not profiled."""
+    if profile is None or column not in profile.acc.cols:
+        return None
+    return profile.column(column)
+
+
+def _unique(c: Unique, ctx: _Context):
     """HLL pre-estimate (free, from the profile scan) + exact confirm
     (hash repartition groupBy — the only correct answer at enforce
     level; the sketch only contextualizes the report)."""
-    hll_est = None
-    if profile is not None and c.column in profile.acc.cols:
-        acc = profile.column(c.column)
-        if hasattr(acc, "hll"):
-            hll_est = round(acc.hll.estimate())
-    n_dup_keys, n_dup_rows = int(agg_row["k"]), int(agg_row["r"])
-    n_violations = n_dup_rows - n_dup_keys  # rows beyond the first per key
+    dup_keys = (
+        ctx.ds.groupBy(c.column)
+        .agg(F.count(F.lit(1)).alias("cnt"))
+        .filter(F.col("cnt") > 1)
+    )
+    row = dup_keys.agg(
+        F.count(F.lit(1)).alias("k"),
+        F.coalesce(F.sum("cnt"), F.lit(0)).alias("r"),
+    ).collect()[0]
+    hll = getattr(_column_acc(ctx.profile(), c.column), "hll", None)
+    n_dup_keys = int(row["k"])
+    n_violations = int(row["r"]) - n_dup_keys  # rows beyond the first per key
     return (
         {
             "constraint": c.name,
             "type": "unique",
             "column": c.column,
-            "n_rows": n_total,
-            "hll_estimate": hll_est,
+            "n_rows": ctx.n_total(),
+            "hll_estimate": round(hll.estimate()) if hll is not None else None,
             "n_duplicate_keys": n_dup_keys,
             "n_violations": n_violations,
             "passed": n_violations == 0,
@@ -534,14 +402,28 @@ def _unique_result(c: Unique, agg_row, dup_keys: DataFrame, profile, n_total: in
     )
 
 
-def _referential_result(c: Referential, n_orphans: int, orphans: DataFrame, n_total: int):
+def _referential(c: Referential, ctx: _Context):
+    ref = ctx.ref_tables[c.ref_table]
+    if c.strategy == "bloom":
+        from .bloom import referential_bloom
+
+        orphans = referential_bloom(
+            ctx.ds, c.column, ref, c.ref_column, fpp=c.bloom_fpp
+        ).drop("bloom_definite")
+    else:
+        orphans = ctx.ds.join(
+            ref.select(F.col(c.ref_column).alias(c.column)).dropDuplicates([c.column]),
+            on=c.column,
+            how="left_anti",
+        )
+    n_orphans = orphans.count()
     return (
         {
             "constraint": c.name,
             "type": "referential",
             "column": c.column,
             "ref": f"{c.ref_table}.{c.ref_column}",
-            "n_rows": n_total,
+            "n_rows": ctx.n_total(),
             "n_violations": n_orphans,
             "passed": n_orphans == 0,
         },
@@ -576,8 +458,13 @@ def group_bound_table(df: DataFrame, c: GroupBound) -> DataFrame:
     )
 
 
-def _group_bound_result(c: GroupBound, agg_row, gtab: DataFrame):
-    n_groups, n_fail = int(agg_row["n_groups"]), int(agg_row["n_fail"])
+def _group_bound(c: GroupBound, ctx: _Context):
+    gtab = group_bound_table(ctx.ds, c)
+    row = gtab.agg(
+        F.count(F.lit(1)).alias("n_groups"),
+        F.coalesce(F.sum((~F.col("passed")).cast("long")), F.lit(0)).alias("n_fail"),
+    ).collect()[0]
+    n_groups, n_fail = int(row["n_groups"]), int(row["n_fail"])
     return (
         {
             "constraint": c.name,
@@ -595,12 +482,22 @@ def _group_bound_result(c: GroupBound, agg_row, gtab: DataFrame):
     )
 
 
-def _functional_dependency_result(c: FunctionalDependency, agg_row, bad_keys):
-    """Verdict for an FD check: n_violations = keys bound to more than
-    one dependent value; the violation table lists those keys with
-    their binding counts."""
-    n_bad_keys = int(agg_row["k"])
-    n_bindings = int(agg_row["b"])
+def _functional_dependency(c: FunctionalDependency, ctx: _Context):
+    """FD check: n_violations = keys bound to more than one dependent
+    value; the violation table lists those keys with their binding
+    counts."""
+    bad_keys = (
+        ctx.ds.select(F.col(c.column).alias("key"), F.col(c.determines).alias("dep"))
+        .distinct()
+        .groupBy("key")
+        .agg(F.count(F.lit(1)).alias("n_bindings"))
+        .filter(F.col("n_bindings") > 1)
+    )
+    row = bad_keys.agg(
+        F.count(F.lit(1)).alias("k"),
+        F.coalesce(F.sum("n_bindings"), F.lit(0)).alias("b"),
+    ).collect()[0]
+    n_bad_keys = int(row["k"])
     return (
         {
             "constraint": c.name,
@@ -608,7 +505,7 @@ def _functional_dependency_result(c: FunctionalDependency, agg_row, bad_keys):
             "column": c.column,
             "determines": c.determines,
             "n_violating_keys": n_bad_keys,
-            "n_bindings": n_bindings,
+            "n_bindings": int(row["b"]),
             "n_violations": n_bad_keys,
             "passed": n_bad_keys == 0,
         },
@@ -616,24 +513,24 @@ def _functional_dependency_result(c: FunctionalDependency, agg_row, bad_keys):
     )
 
 
-def _distinct_ratio_result(c: DistinctRatio, agg_row, profile) -> dict[str, Any]:
-    """Verdict for a distinct-ratio check: ratio = distinct non-null
-    values / non-null rows (NULLs neither count as values nor depress
-    an id-column's ratio).  Empty input (no non-null rows) fails."""
+def _distinct_ratio(c: DistinctRatio, ctx: _Context):
+    """Distinct-ratio check: ratio = distinct non-null values / non-null
+    rows (NULLs neither count as values nor depress an id-column's
+    ratio).  Exact counts both in one scan; sketch reads the profile's
+    HLL.  Empty input (no non-null rows) fails."""
     if c.method == "exact":
-        d = int(agg_row["d"])
-        nn = int(agg_row["nn"] or 0)
+        row = ctx.ds.agg(
+            F.countDistinct(F.col(c.column)).alias("d"),
+            F.sum(F.col(c.column).isNotNull().cast("long")).alias("nn"),
+        ).collect()[0]
+        d, nn = int(row["d"]), int(row["nn"] or 0)
     else:
-        acc = profile.column(c.column) if c.column in profile.acc.cols else None
+        acc = _column_acc(ctx.profile(), c.column)
         hll = getattr(acc, "hll", None)
         d = int(round(hll.estimate())) if hll is not None else 0
         nn = (acc.n - acc.n_null) if acc is not None else 0
     ratio = (d / nn) if nn else None
-    failed = (
-        ratio is None
-        or (c.lo is not None and ratio < float(c.lo))
-        or (c.hi is not None and ratio > float(c.hi))
-    )
+    failed = _out_of_bounds(ratio, c)
     return {
         "constraint": c.name,
         "type": "distinct_ratio",
@@ -646,12 +543,18 @@ def _distinct_ratio_result(c: DistinctRatio, agg_row, profile) -> dict[str, Any]
         "hi": c.hi,
         "n_violations": int(failed),
         "passed": not failed,
-    }
+    }, None
 
 
-def _monotonic_result(c: Monotonic, n_bad: int) -> dict[str, Any]:
-    """Verdict for an ordering check: n_violations = violating
-    adjacent pairs; the violation table lists them."""
+def _monotonic(c: Monotonic, ctx: _Context):
+    """Ordering check: n_violations = violating adjacent pairs; the
+    violation table lists them."""
+    from ..ops.timeseries import monotonic_violations
+
+    pairs = monotonic_violations(
+        ctx.ds, c.column, list(c.order_by), group_col=c.group_col, strict=c.strict
+    )
+    n_bad = pairs.count()
     return {
         "constraint": c.name,
         "type": "monotonic",
@@ -661,20 +564,19 @@ def _monotonic_result(c: Monotonic, n_bad: int) -> dict[str, Any]:
         "strict": c.strict,
         "n_violations": int(n_bad),
         "passed": n_bad == 0,
-    }
+    }, pairs
 
 
-def _entropy_bound_result(c: EntropyBound, row) -> dict[str, Any]:
-    """Verdict for an entropy gate: the gated statistic is
-    entropy_bits, or normalized_entropy when c.normalized.  A column
-    with no non-null values fails loudly (entropy of nothing is a
-    broken contract, not a pass)."""
+def _entropy_bound(c: EntropyBound, ctx: _Context):
+    """Entropy gate: the gated statistic is entropy_bits, or
+    normalized_entropy when c.normalized.  A column with no non-null
+    values fails loudly (entropy of nothing is a broken contract, not
+    a pass)."""
+    from ..ops.infostats import column_entropy
+
+    row = column_entropy(ctx.ds, [c.column]).collect()[0]
     value = row["normalized_entropy"] if c.normalized else row["entropy_bits"]
-    failed = (
-        value is None
-        or (c.lo is not None and value < float(c.lo))
-        or (c.hi is not None and value > float(c.hi))
-    )
+    failed = _out_of_bounds(value, c)
     return {
         "constraint": c.name,
         "type": "entropy_bound",
@@ -688,18 +590,21 @@ def _entropy_bound_result(c: EntropyBound, row) -> dict[str, Any]:
         "hi": c.hi,
         "n_violations": int(failed),
         "passed": not failed,
-    }
+    }, None
 
 
-def _correlation_bound_result(c: CorrelationBound, row) -> dict[str, Any]:
-    """Verdict for a correlation gate: undefined corr (constant column
-    or <2 complete pairs) fails loudly."""
+def _correlation_bound(c: CorrelationBound, ctx: _Context):
+    """Correlation gate: undefined corr (constant column or <2 complete
+    pairs) fails loudly."""
+    from ..ops.infostats import _pearson
+
+    a, b = c.column, c.other
+    row = ctx.ds.agg(
+        _pearson(a, b).alias("corr"),
+        F.count(F.when(F.col(a).isNotNull() & F.col(b).isNotNull(), 1)).alias("n"),
+    ).collect()[0]
     value = row["corr"]
-    failed = (
-        value is None
-        or (c.lo is not None and value < float(c.lo))
-        or (c.hi is not None and value > float(c.hi))
-    )
+    failed = _out_of_bounds(value, c)
     return {
         "constraint": c.name,
         "type": "correlation_bound",
@@ -711,22 +616,19 @@ def _correlation_bound_result(c: CorrelationBound, row) -> dict[str, Any]:
         "hi": c.hi,
         "n_violations": int(failed),
         "passed": not failed,
-    }
+    }, None
 
 
-def _mutual_information_result(
-    c: MutualInformationBound, row
-) -> dict[str, Any]:
-    """Verdict for a mutual-information gate: gated statistic is
-    mi_bits, or nmi when c.normalized.  No observed (non-null, non-null)
-    pairs fails loudly."""
+def _mutual_information_bound(c: MutualInformationBound, ctx: _Context):
+    """Mutual-information gate: gated statistic is mi_bits, or nmi when
+    c.normalized.  No observed (non-null, non-null) pairs fails
+    loudly."""
+    from ..ops.infostats import mutual_information
+
+    row = mutual_information(ctx.ds, c.column, c.other).collect()[0]
     n = int(row["n"])
     value = None if n == 0 else (row["nmi"] if c.normalized else row["mi_bits"])
-    failed = (
-        value is None
-        or (c.lo is not None and value < float(c.lo))
-        or (c.hi is not None and value > float(c.hi))
-    )
+    failed = _out_of_bounds(value, c)
     return {
         "constraint": c.name,
         "type": "mutual_information_bound",
@@ -742,27 +644,25 @@ def _mutual_information_result(
         "hi": c.hi,
         "n_violations": int(failed),
         "passed": not failed,
-    }
+    }, None
 
 
-def _quantile_bound_result(
-    c: QuantileBound, exact_value, profile
-) -> dict[str, Any]:
-    """Verdict for a QuantileBound: exact path carries the refinement
-    search's value (None = empty column), sketch path reads the pass-1
-    profile's KLL.  A value of None FAILS — a quantile bound over no
-    data is a broken contract, never a silent pass."""
+def _quantile_bound(c: QuantileBound, ctx: _Context):
+    """QuantileBound: exact runs the refinement search, sketch reads the
+    pass-1 profile's KLL (no job).  A value of None FAILS — a quantile
+    bound over no data is a broken contract, never a silent pass."""
     if c.method == "exact":
-        value = None if exact_value is None else float(exact_value)
+        from ..ops.selection import exact_quantile
+
+        try:
+            value = exact_quantile(ctx.ds, c.column, c.q)
+        except ValueError:  # no non-null values → fail
+            value = None
+        value = None if value is None else float(value)
     else:
-        acc = profile.column(c.column) if c.column in profile.acc.cols else None
-        kll = getattr(acc, "kll", None)
+        kll = getattr(_column_acc(ctx.profile(), c.column), "kll", None)
         value = float(kll.quantile(c.q)) if kll is not None and kll.n else None
-    failed = (
-        value is None
-        or (c.lo is not None and value < float(c.lo))
-        or (c.hi is not None and value > float(c.hi))
-    )
+    failed = _out_of_bounds(value, c)
     return {
         "constraint": c.name,
         "type": "quantile_bound",
@@ -774,11 +674,13 @@ def _quantile_bound_result(
         "hi": c.hi,
         "n_violations": int(failed),
         "passed": not failed,
-    }
+    }, None
 
 
-def _check_drift(c: Drift, profile, baseline_profile) -> dict[str, Any]:
-    metrics = drift_column(baseline_profile.column(c.column), profile.column(c.column))
+def _drift(c: Drift, ctx: _Context):
+    """Drift: this batch's profile sketches against the baseline's
+    (drift.py), no job."""
+    metrics = drift_column(ctx.baseline.column(c.column), ctx.profile().column(c.column))
     ks, psi = metrics.get("ks"), metrics.get("psi")
     w1, chi2 = metrics.get("w1"), metrics.get("chi2")
     failed = (
@@ -801,4 +703,21 @@ def _check_drift(c: Drift, profile, baseline_profile) -> dict[str, Any]:
         "max_chi2": c.max_chi2,
         "n_violations": int(failed),
         "passed": not failed,
-    }
+    }, None
+
+
+# one check per dataset-level kind: (result dict, violation table or
+# None); a subclass takes its nearest base's check
+_CHECKS = {
+    Unique: _unique,
+    Referential: _referential,
+    GroupBound: _group_bound,
+    FunctionalDependency: _functional_dependency,
+    DistinctRatio: _distinct_ratio,
+    Monotonic: _monotonic,
+    EntropyBound: _entropy_bound,
+    CorrelationBound: _correlation_bound,
+    MutualInformationBound: _mutual_information_bound,
+    QuantileBound: _quantile_bound,
+    Drift: _drift,
+}

@@ -64,7 +64,6 @@ from drivel_spark.constraints import (
 )
 from drivel_spark.constraints.audio import audio_check, audio_row_source
 from drivel_spark.constraints.validate import (
-    PASSFAIL_COLS,
     n_violation_rows,
     normalize_passfail,
     passfail_df,
@@ -1412,30 +1411,7 @@ def cmd_validate_stream(args) -> dict:
             else None
         ),
     )
-    import pandas as _pd
-
-    # empty-source case ONLY: no batches streamed → the report path was
-    # never created → Spark raises PATH_NOT_FOUND → zero totals.  Any
-    # other failure (corrupt report parquet, permission error, schema
-    # mismatch) must raise — a bare except here would mask data loss as
-    # a clean empty run (ADVICE r02).  Matching on the error CLASS (not
-    # os.path.exists) keeps the guard correct for URI report paths
-    # (hdfs://, s3a://) that the local filesystem can't see.
-    from pyspark.errors import AnalysisException
-
-    try:
-        totals = normalize_passfail(cumulative_passfail(spark, args.report).toPandas())
-    except AnalysisException as ex:
-        cond = ""
-        for attr in ("getCondition", "getErrorClass"):
-            try:
-                cond = getattr(ex, attr)() or ""
-                break
-            except Exception:
-                continue
-        if "PATH_NOT_FOUND" not in (cond or str(ex)):
-            raise
-        totals = _pd.DataFrame(columns=PASSFAIL_COLS)
+    totals = normalize_passfail(cumulative_passfail(spark, args.report).toPandas())
     digest = passfail_digest(totals)
     n_rows = int(
         totals.loc[totals.constraint == totals.constraint.iloc[0], "n_rows"].sum()
@@ -1530,7 +1506,7 @@ def cmd_reconcile(args) -> dict:
         cs.append(
             Referential("clip_has_transcript", "clip_id", "transcripts", "clip_id")
         )
-    res = validate(clips, cs, ref_tables=ref_tables, cache_flags=False)
+    res = validate(clips, cs, ref_tables=ref_tables)
     res.passfail.coalesce(1).write.mode("overwrite").parquet(
         f"{args.report}/batch_id=-1"
     )

@@ -54,6 +54,7 @@ from ..ops.multimodal import (
     screen_report,
     screen_undecodable_col,
 )
+from .sink import read_batch_dirs
 
 SCREEN_REPORT_SCHEMA = (
     "kind string, n_clips long, n_flagged long, n_undecodable long"
@@ -231,19 +232,8 @@ def cumulative_screen(spark: SparkSession, report_dir: str) -> DataFrame:
     screen kind — a tiny aggregation over the report table (O(batches ×
     kinds) rows), never a rescan of the audio.  A report dir with no
     ``batch_id=*`` commits yet yields an empty DataFrame with the
-    report schema (same guard as load_windowed_stats, ADVICE r04)."""
-    import glob
-    import os
-
-    if not glob.glob(os.path.join(report_dir, "batch_id=*")):
-        from ..io import local_df
-
-        return local_df(spark, [], SCREEN_REPORT_SCHEMA)
-    rep = (
-        spark.read.option("basePath", report_dir)
-        .parquet(f"{report_dir}/batch_id=*")
-        .drop("batch_id")
-    )
+    report schema."""
+    rep = read_batch_dirs(spark, report_dir, SCREEN_REPORT_SCHEMA)
     return rep.groupBy("kind").agg(
         F.sum("n_clips").alias("n_clips"),
         F.sum("n_flagged").alias("n_flagged"),

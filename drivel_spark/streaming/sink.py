@@ -4,12 +4,12 @@ One place for the ``out_dir/batch_id=N`` contract (overwrite per batch
 — a replayed batch after checkpoint recovery rewrites its own directory
 byte-identically instead of appending duplicates).  Writes the batch
 DataFrame directly from the executors; no driver round-trip (VERDICT
-r03 #6).
+r03 #6).  ``read_batch_dirs`` is the one reader of those commits.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 
 def batch_dir_sink(out_dir: str):
@@ -24,3 +24,22 @@ def batch_dir_sink(out_dir: str):
         )
 
     return commit
+
+
+def read_batch_dirs(spark: SparkSession, out_dir: str, schema) -> DataFrame:
+    """Every ``out_dir/batch_id=N`` commit (``batch_id`` dropped), or an
+    empty frame with ``schema`` when there is none yet: a missing or
+    pre-created dir, or a checkpoint resume before the first commit.
+    "None yet" is decided through the dir's own Hadoop filesystem, so a
+    ``file://``, ``hdfs://`` or ``s3a://`` dir reads like a plain path."""
+    sc = spark.sparkContext
+    pattern = sc._jvm.org.apache.hadoop.fs.Path(f"{out_dir}/batch_id=*")
+    if not pattern.getFileSystem(sc._jsc.hadoopConfiguration()).globStatus(pattern):
+        from ..io import local_df
+
+        return local_df(spark, [], schema)
+    return (
+        spark.read.option("basePath", out_dir)
+        .parquet(f"{out_dir}/batch_id=*")
+        .drop("batch_id")
+    )

@@ -41,12 +41,14 @@ from pyspark.sql import functions as F
 
 from ..constraints.spec import Constraint
 from ..constraints.validate import (
+    PASSFAIL_SCHEMA,
     flag_rows,
     passfail_df,
     passfail_frame,
     row_violation_aggs,
     violation_rows,
 )
+from .sink import read_batch_dirs
 
 
 def validate_stream(
@@ -135,8 +137,8 @@ def cumulative_passfail(spark: SparkSession, report_dir: str) -> DataFrame:
     """Fold the per-batch delta rows into the batch engine's pass/fail
     shape: totals per (scope, constraint) over everything streamed so
     far — a tiny aggregation over the report table, NOT a rescan of
-    the data."""
-    rep = spark.read.parquet(report_dir)
+    the data.  A report dir with no commits yet gives no rows."""
+    rep = read_batch_dirs(spark, report_dir, PASSFAIL_SCHEMA)
     return (
         rep.groupBy("partition_id", "constraint")
         .agg(

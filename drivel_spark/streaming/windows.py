@@ -40,6 +40,8 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .sink import batch_dir_sink, read_batch_dirs
+
 __all__ = [
     "windowed_stats",
     "windowed_stats_stream",
@@ -134,8 +136,6 @@ def windowed_stats_stream(
         stream, event_col, value_col, window, slide, watermark, key_col
     )
 
-    from .sink import batch_dir_sink
-
     commit = batch_dir_sink(out_dir)
 
     q = (
@@ -223,15 +223,4 @@ def load_windowed_stats(spark: SparkSession, out_dir: str) -> DataFrame:
     subdirectories yet (pre-created dir, or checkpoint resume before any
     window closed) yields an empty DataFrame with the stats schema
     instead of PATH_NOT_FOUND (ADVICE r04)."""
-    import glob
-    import os
-
-    if not glob.glob(os.path.join(out_dir, "batch_id=*")):
-        from ..io import local_df
-
-        return local_df(spark, [], WINDOWED_STATS_FIELDS)
-    return (
-        spark.read.option("basePath", out_dir)
-        .parquet(f"{out_dir}/batch_id=*")
-        .drop("batch_id")
-    )
+    return read_batch_dirs(spark, out_dir, WINDOWED_STATS_FIELDS)

@@ -967,3 +967,69 @@ def test_screen_stream_mixed_kinds_matches_batch(spark, tmp_path):
         for r in op(full).filter(F.expr(flag)).select("clip_id").collect():
             want.add((r["clip_id"], kind))
     assert got == want
+
+
+def _batch_dir_case(name):
+    """(reader, per-batch commit schema, {batch_id: rows}) of one of the
+    three readers of ``batch_id=N`` report dirs."""
+    from datetime import datetime
+
+    from drivel_spark.constraints.validate import PASSFAIL_SCHEMA
+    from drivel_spark.streaming import SCREEN_REPORT_SCHEMA, cumulative_screen, load_windowed_stats
+    from drivel_spark.streaming.windows import WINDOWED_STATS_FIELDS
+
+    t0, t1, t2 = (datetime(2024, 1, 1, 0, m) for m in (0, 10, 20))
+    return {
+        "screen": (
+            cumulative_screen,
+            SCREEN_REPORT_SCHEMA,
+            {0: [("hum", 10, 2, 0), ("quality", 10, 0, 1)], 1: [("hum", 5, 1, 0)]},
+        ),
+        "passfail": (
+            cumulative_passfail,
+            PASSFAIL_SCHEMA,
+            {
+                0: [(0, "c", 10, 1, False), (1, "c", 5, 0, True)],
+                1: [(0, "c", 3, 0, True)],
+                -1: [(-1, "u", 18, 0, True)],
+            },
+        ),
+        "windows": (
+            load_windowed_stats,
+            WINDOWED_STATS_FIELDS,
+            {0: [(t0, t1, 4, 0, 1.0, 3.0, 2.0)], 1: [(t1, t2, 2, 1, 5.0, 5.0, 5.0)]},
+        ),
+    }[name]
+
+
+def _commit(spark, out, schema, batches):
+    from drivel_spark.io import local_df
+
+    for b, rows in batches.items():
+        local_df(spark, rows, schema).write.parquet(f"{out}/batch_id={b}")
+
+
+@pytest.mark.parametrize("name", ["screen", "passfail", "windows"])
+def test_batch_dir_readers_read_uri_dirs(spark, tmp_path, name):
+    """A ``file://`` report dir reads the same rows as the plain path
+    (the screen reader used to see no commits behind a URI)."""
+    read, schema, batches = _batch_dir_case(name)
+    out = tmp_path / "report"
+    _commit(spark, out, schema, batches)
+    plain = sorted(read(spark, str(out)).collect())
+    assert plain
+    assert sorted(read(spark, f"file://{out}").collect()) == plain
+
+
+@pytest.mark.parametrize("name", ["screen", "passfail", "windows"])
+def test_batch_dir_readers_missing_and_empty_dirs(spark, tmp_path, name):
+    """No commits yet (a missing or a pre-created dir) gives zero rows
+    with the same columns and types as a dir with commits."""
+    read, schema, batches = _batch_dir_case(name)
+    _commit(spark, tmp_path / "full", schema, batches)
+    want = [(f.name, f.dataType) for f in read(spark, str(tmp_path / "full")).schema]
+    (tmp_path / "empty").mkdir()
+    for d in (tmp_path / "missing", tmp_path / "empty"):
+        got = read(spark, str(d))
+        assert got.count() == 0
+        assert [(f.name, f.dataType) for f in got.schema] == want

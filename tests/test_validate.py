@@ -1371,3 +1371,90 @@ def test_bloom_literal_and_arrow_paths_agree(spark, monkeypatch):
     }
     assert lit_rows == udf_rows
     assert lit_rows[None] is None
+
+
+# ---------------------------------------------------------------------------
+# dataset-level check inputs and the profile callable
+# ---------------------------------------------------------------------------
+
+
+def _bad_suites():
+    from dataclasses import dataclass
+
+    from drivel_spark.constraints import Constraint, DistinctRatio, QuantileBound
+
+    @dataclass(frozen=True)
+    class NoCheck(Constraint):
+        @property
+        def is_row_level(self) -> bool:
+            return False
+
+    return {
+        "missing_ref_table": (
+            Referential("ref", "clip_id", "nope", "clip_id"),
+            {},
+            "needs ref_tables",
+        ),
+        "sketch_distinct_ratio": (
+            DistinctRatio("dr", "clip_id", lo=0.9),
+            {},
+            "needs profile",
+        ),
+        "sketch_quantile_bound": (
+            QuantileBound("qb", "dur_ms", q=0.5, hi=1e9),
+            {},
+            "needs profile",
+        ),
+        "drift_without_baseline": (
+            Drift("dur_drift", "dur_ms"),
+            {"profile": object()},
+            "needs profile \\+ baseline_profile",
+        ),
+        "kind_without_check": (NoCheck("nc", "clip_id"), {}, "unknown dataset constraint"),
+    }
+
+
+@pytest.mark.parametrize("case", list(_bad_suites()))
+def test_bad_suite_fails_before_any_job(spark, clips, case):
+    """A dataset-level constraint validate() cannot check raises before
+    the row-flag aggregate (or any other Spark job) is submitted."""
+    bad, kwargs, match = _bad_suites()[case]
+    suite = [NotNull("transcript_not_null", "transcript"), bad]
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    before = dag.numTotalJobs()
+    with pytest.raises(ValueError, match=match):
+        validate(clips, suite, ref_tables={"transcripts": clips}, **kwargs)
+    assert dag.numTotalJobs() == before
+
+
+@pytest.mark.parametrize("needs_profile", [True, False])
+def test_profile_callable_called_once(spark, clips, needs_profile):
+    """A zero-arg ``profile`` is called exactly once: shared by every
+    check that reads it (the sleep holds the first call open while the
+    other checks' threads ask for it), and resolved before validate()
+    returns even when no check does."""
+    import time
+
+    from drivel_spark.constraints import DistinctRatio
+
+    prof = profile(clips, columns=["clip_id", "dur_ms", "codec"])
+    calls = []
+
+    def counting_profile():
+        calls.append(1)
+        time.sleep(0.2)
+        return prof
+
+    suite = list(CONSTRAINTS)
+    if needs_profile:
+        suite += [
+            Unique("clip_id_unique", "clip_id"),
+            Drift("dur_drift", "dur_ms"),
+            Drift("codec_drift", "codec"),
+            DistinctRatio("clip_id_ratio", "clip_id", lo=0.5),
+        ]
+    res = validate(clips, suite, profile=counting_profile, baseline_profile=prof)
+    assert len(calls) == 1
+    if needs_profile:
+        assert [d["constraint"] for d in res.dataset] == [c.name for c in suite[4:]]
+        assert res.dataset[0]["hll_estimate"] is not None
