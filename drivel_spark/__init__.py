@@ -7,7 +7,7 @@ Layers:
 * :mod:`drivel_spark.core` — pure-Python semantic core (schema tree,
   merge lattice, detectors, emitters, JSON-Schema parser, generator).
 * :mod:`drivel_spark.profiling` — distributed partition-parallel profiling
-  (one ``mapInPandas`` pass of mergeable per-column sketch accumulators,
+  (one ``mapInArrow`` pass of mergeable per-column sketch accumulators,
   folded on the driver).
 * :mod:`drivel_spark.constraints` — constraint compilation + validation
   pass (per-partition pass/fail rows, violation DataFrames, drift).

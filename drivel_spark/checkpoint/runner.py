@@ -20,9 +20,11 @@ checkpoint with per-partition lineage + metrics"):
 
 The profile runner keys its accumulators by ``input_file_name()``
 through the profiler's keyed pass (profiling/profiler.py), so one
-mapInPandas pass yields per-file partials even when Spark packs
+mapInArrow pass yields per-file partials even when Spark packs
 several files into one partition or splits one file across
-partitions; the profiler's merger then gives one accumulator per file.
+partitions; the driver folds them into one accumulator per file
+(``fold_keyed``): there are about as many partials as input splits,
+too few to pay for a shuffle and a merge task.
 The row-validation runner folds its per-file counts through the batch
 engine's report builder (constraints/validate.py), so it returns the
 batch engine's report frame.
@@ -42,8 +44,8 @@ from ..profiling.accumulator import ProfilerOptions, TableAccumulator
 from ..profiling.profiler import (
     TableProfile,
     fold_accumulators,
+    fold_keyed,
     keyed_accumulators,
-    merge_keyed,
 )
 from .store import CheckpointStore, make_commit_row
 
@@ -110,16 +112,15 @@ def resumable_profile(
     so the profile's ``n_partitions`` is the unit count."""
 
     def compute(df):
-        accs = merge_keyed(keyed_accumulators(df, F.input_file_name(), columns, opts))
+        partials = keyed_accumulators(df, F.input_file_name(), columns, opts).collect()
         results = {}
-        for row in accs.collect():
-            acc = TableAccumulator.from_bytes(row["acc"])
+        for unit, acc in fold_keyed((r["key"], r["acc"]) for r in partials).items():
             acc.n_partitions = 1  # one lineage unit
             metrics = {
                 "n_rows": acc.n_rows,
                 "n_null": {c: a.n_null for c, a in acc.cols.items()},
             }
-            results[row["key"]] = (acc.to_bytes(), metrics)
+            results[unit] = (acc.to_bytes(), metrics)
         proj = df.select(*columns) if columns is not None else df
         empty = TableAccumulator(
             [(f.name, f.dataType.simpleString()) for f in proj.schema.fields], opts

@@ -1,22 +1,22 @@
-"""Audio row-level checks as Arrow-vectorized pandas UDFs.
+"""Audio row-level checks over Arrow batches.
 
 The per-row invariant (BASELINE.json input_hint): decoded PCM must
 match the oracle's re-synthesis with SNR ≥ 30 dB, plus transcript
 equality.  Decoding runs per Arrow batch (numpy per clip, no per-sample
 Python).  ``audio_row_source`` is the one row source ``--check-audio``
-uses; ``make_snr_udf`` + ``attach_clip_idx`` score the same rows through
-a pandas UDF and a distributed (clip_id, idx) join, and serve as its
-independent reference.
+uses, a ``mapInArrow`` whose workers never import pandas;
+``make_snr_udf`` + ``attach_clip_idx`` score the same rows through a
+pandas UDF and a distributed (clip_id, idx) join, and serve as its
+independent reference.  Those two import pandas when called, not at
+module import (annotations are evaluated here, so their UDFs' ``pd.Series``
+hints resolve to that local import).
 """
-
-from __future__ import annotations
 
 from dataclasses import dataclass
 from typing import Optional
 from urllib.parse import quote, unquote
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -28,6 +28,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..arrow_np import from_numpy, values
 from ..produce.audio import snr_vs_synth, wav_decode
 from .spec import Constraint
 
@@ -40,24 +41,29 @@ _DECODE_SCHEMA = StructType(
 )
 
 
-@F.pandas_udf(_DECODE_SCHEMA)
-def _decode_meta_udf(payload: pd.Series) -> pd.DataFrame:
-    ok, srs, ns = [], [], []
-    for b in payload:
-        if b is None:
-            ok.append(False), srs.append(None), ns.append(None)
-            continue
-        try:
-            pcm, sr = wav_decode(bytes(b))
-            ok.append(True), srs.append(sr), ns.append(len(pcm))
-        except ValueError:
-            ok.append(False), srs.append(None), ns.append(None)
-    return pd.DataFrame({"wav_ok": ok, "wav_sr": srs, "wav_n_samples": ns})
+def _decode_meta_udf():
+    import pandas as pd
+
+    @F.pandas_udf(_DECODE_SCHEMA)
+    def decode_meta(payload: pd.Series) -> pd.DataFrame:
+        ok, srs, ns = [], [], []
+        for b in payload:
+            if b is None:
+                ok.append(False), srs.append(None), ns.append(None)
+                continue
+            try:
+                pcm, sr = wav_decode(bytes(b))
+                ok.append(True), srs.append(sr), ns.append(len(pcm))
+            except ValueError:
+                ok.append(False), srs.append(None), ns.append(None)
+        return pd.DataFrame({"wav_ok": ok, "wav_sr": srs, "wav_n_samples": ns})
+
+    return decode_meta
 
 
 def with_decoded_meta(df: DataFrame, bytes_col: str = "bytes") -> DataFrame:
     """Adds wav_ok / wav_sr / wav_n_samples columns (batch-vectorized)."""
-    return df.withColumn("__wav", _decode_meta_udf(F.col(bytes_col))).select(
+    return df.withColumn("__wav", _decode_meta_udf()(F.col(bytes_col))).select(
         "*", "__wav.wav_ok", "__wav.wav_sr", "__wav.wav_n_samples"
     ).drop("__wav")
 
@@ -67,6 +73,7 @@ def make_snr_udf(seed: int = 42, audio_cap_ms: int = 2000,
     """SNR of decoded payload vs deterministic re-synthesis keyed by the
     clip index (fixture oracle).  Returns a pandas UDF
     (bytes, idx, sr_hz, dur_ms) → double."""
+    import pandas as pd
 
     @F.pandas_udf(DoubleType())
     def snr_udf(payload: pd.Series, idx: pd.Series, sr: pd.Series, dur: pd.Series) -> pd.Series:
@@ -215,6 +222,55 @@ def _read_payloads(source, rows: np.ndarray):
         off = end
 
 
+def _snr_batches(n_rows: int, seed: int, raw: bool, out_names: list[str],
+                 audio_cap_ms: int, sr_range: tuple[int, int]):
+    """``audio_row_source``'s ``mapInArrow`` function: per batch, the
+    rows' payloads read from their files, scored, and the batch's
+    columns but ``__file`` / ``__row`` plus ``__snr`` yielded.  Built on
+    Arrow buffers only (no ``pa.array``, no ``to_numpy``), so the worker
+    does not load pandas."""
+
+    def gen(batches):
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        idx_map = _clip_idx_map(n_rows, seed)
+        stores: dict = {}
+
+        def score(b, cid, sr, dur) -> float:
+            idx = idx_map.get(cid)
+            if b is None or idx is None or sr is None or dur is None:
+                return -np.inf
+            try:
+                decoded, _ = wav_decode(b)
+            except ValueError:
+                return -np.inf
+            sr_c = int(np.clip(sr, sr_range[0], sr_range[1]))
+            dur_c = int(np.clip(dur, 50, audio_cap_ms))
+            return snr_vs_synth(decoded, idx, sr_c, dur_c, seed)
+
+        for batch in batches:
+            files = pc.dictionary_encode(batch.column("__file"))
+            file_of = values(files.indices, np.int32)
+            rows = values(batch.column("__row"), np.int64)
+            cids = batch.column("clip_id").to_pylist()
+            srs = batch.column("sr_hz").to_pylist()
+            durs = batch.column("dur_ms").to_pylist()
+            snr = np.full(batch.num_rows, -np.inf)
+            for f, loc in enumerate(files.dictionary.to_pylist()):
+                at = np.flatnonzero(file_of == f)
+                with _open_file(loc, raw, stores) as fh:
+                    for i, b in _read_payloads(fh, rows[at]):
+                        k = at[i]
+                        snr[k] = score(b, cids[k], srs[k], durs[k])
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(n) for n in out_names[:-1]] + [from_numpy(snr)],
+                names=out_names,
+            )
+
+    return gen
+
+
 def audio_row_source(
     df: DataFrame,
     n_rows: int,
@@ -280,45 +336,7 @@ def audio_row_source(
         [f for f in narrow.schema.fields if f.name not in ("__file", "__row")]
         + [StructField("__snr", DoubleType())]
     )
-    out_names = out_schema.fieldNames()
-
-    def gen(batches):
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        idx_map = _clip_idx_map(n_rows, seed)
-        stores: dict = {}
-
-        def score(b, cid, sr, dur) -> float:
-            idx = idx_map.get(cid)
-            if b is None or idx is None or sr is None or dur is None:
-                return -np.inf
-            try:
-                decoded, _ = wav_decode(b)
-            except ValueError:
-                return -np.inf
-            sr_c = int(np.clip(sr, sr_range[0], sr_range[1]))
-            dur_c = int(np.clip(dur, 50, audio_cap_ms))
-            return snr_vs_synth(decoded, idx, sr_c, dur_c, seed)
-
-        for batch in batches:
-            files = batch.column("__file")
-            rows = batch.column("__row").to_numpy()
-            cids = batch.column("clip_id").to_pylist()
-            srs = batch.column("sr_hz").to_pylist()
-            durs = batch.column("dur_ms").to_pylist()
-            snr = np.full(batch.num_rows, -np.inf)
-            for loc in pc.unique(files).to_pylist():
-                at = np.flatnonzero(pc.equal(files, loc).to_numpy(zero_copy_only=False))
-                with _open_file(loc, raw, stores) as fh:
-                    for i, b in _read_payloads(fh, rows[at]):
-                        k = at[i]
-                        snr[k] = score(b, cids[k], srs[k], durs[k])
-            yield pa.RecordBatch.from_arrays(
-                [batch.column(n) for n in out_names[:-1]] + [pa.array(snr)],
-                names=out_names,
-            )
-
+    gen = _snr_batches(n_rows, seed, raw, out_schema.fieldNames(), audio_cap_ms, sr_range)
     return narrow.mapInArrow(gen, out_schema)
 
 
@@ -353,6 +371,8 @@ def attach_clip_idx(
     from ..fixtures import clip_id_for
 
     def gen(batches):
+        import pandas as pd
+
         for pdf in batches:
             ids = pdf["id"].to_numpy()
             yield pd.DataFrame({clip_id_col: clip_id_for(ids, seed), "clip_idx": ids})

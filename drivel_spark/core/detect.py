@@ -9,8 +9,9 @@ evidence-carrying ``unknown`` string.
 Two call surfaces:
 
 * :func:`detect` — scalar, used by the pure-Python inference fold;
-* :func:`detect_series` — vectorized over a pandas Series (numpy
-  ``select`` over match masks), used by the distributed profiler; and
+* :func:`detect_series` — vectorized over an Arrow string array (RE2
+  match masks, first match by ``argmax``), used by the distributed
+  profiler; and
 * :data:`FORMAT_SQL_PREDICATES` — the same detectors as Spark-SQL /
   ANSI-SQL boolean expressions so constraint checks stay JVM-side and
   are DuckDB-oracle-checkable.
@@ -24,8 +25,10 @@ from email.utils import parsedate_to_datetime
 from typing import Optional
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 
+from ..arrow_np import bool_mask, from_numpy, values
 from .node import (
     STR_DATETIME_ISO8601,
     STR_DATETIME_RFC2822,
@@ -68,8 +71,10 @@ FORMAT_ORDER = [
 
 
 def _valid_rfc3339(s: str) -> bool:
-    if not RFC3339_RE.match(s):
-        return False
+    return bool(RFC3339_RE.match(s)) and _parses_rfc3339(s)
+
+
+def _parses_rfc3339(s: str) -> bool:
     try:
         datetime.fromisoformat(s.replace("Z", "+00:00").replace("z", "+00:00"))
         return True
@@ -115,61 +120,64 @@ def detect(s: str) -> str:
     return STR_UNKNOWN
 
 
-def detect_series(s: pd.Series) -> pd.Series:
-    """Vectorized first-match detector over a string Series.
+def _re2(pattern: re.Pattern) -> str:
+    """``pattern`` for RE2 (Arrow's regex engine), matching exactly what
+    Python's ``re`` matches on ASCII strings: ``\\d`` / ``\\s`` spelled
+    out as Python's ASCII classes (RE2's ``\\s`` lacks ``\\v`` and
+    ``\\x1c``-``\\x1f``), and ``$`` also matching before a final newline."""
+    ws = r"\t\n\x0b\x0c\r\x1c-\x1f "
+    return (
+        pattern.pattern.replace(r"\d", "[0-9]")
+        .replace(r"\s", f"[{ws}]")
+        .replace(r"\S", f"[^{ws}]")
+        .replace("$", r"\n?$")
+    )
 
-    Uses pandas str ops (regex engine is C-side) + ``np.select`` so the
-    per-partition profiler never loops rows in Python.  RFC3339/RFC2822
-    validity matches the scalar path's chrono parity exactly: the regex
-    pre-filters the shape, then the survivors are parse-validated — the
-    RFC3339 survivors vectorized via ``pd.to_datetime(format="ISO8601",
-    errors="coerce")`` (C-side), the RFC2822 survivors (rare in real
-    columns; the regex already rejects almost everything) through the
-    same stdlib parser the scalar path uses.  A shape-valid but
-    parse-invalid string (``2024-02-30T00:00:00Z``) now classifies
-    identically on both paths (VERDICT r02 "What's missing" #3).
+
+# the detectors in FORMAT_ORDER, as RE2 patterns (all but the email
+# search start with ^, so they anchor as re.match does)
+_ASCII_PATTERNS = [
+    _re2(p)
+    for p in (UUID_RE, EMAIL_RE, URL_RE, HOSTNAME_RE, ISO_DATE_RE, RFC3339_RE, RFC2822_RE)
+]
+# parse-validation of regex survivors, as the scalar path does it
+_PARSES = {STR_DATETIME_ISO8601: _parses_rfc3339, STR_DATETIME_RFC2822: _valid_rfc2822}
+
+
+def detect_series(arr: pa.Array) -> np.ndarray:
+    """Vectorized first-match detector over an Arrow string array: one
+    format tag per value, ``None`` for NULL; equal to :func:`detect` on
+    every value.
+
+    ASCII values run the detectors as RE2 regexes over the whole array
+    (``pc.match_substring_regex``, C++), then ``np.argmax`` over the
+    stacked masks picks the first match.  The shape survivors of the
+    two datetime detectors are parse-validated with the scalar path's
+    own checks (chrono parity: a shape-valid ``2024-02-30T00:00:00Z``
+    is not a datetime).  Values
+    with a non-ASCII character, where Python's Unicode ``\\d`` / ``\\s``
+    and ``str.isnumeric`` differ from RE2's, go through :func:`detect`.
     """
-    s = s.astype("string")
-    notna = s.notna()
-    sv = s.fillna("")
-    rfc3339_shape = sv.str.match(r"\d") & sv.str.match(RFC3339_RE)
-    if rfc3339_shape.any():
-        surv = sv[rfc3339_shape]
-        try:
-            ok = pd.to_datetime(
-                surv.str.upper(), format="ISO8601", errors="coerce", utc=True
-            ).notna()
-        except (ValueError, TypeError):  # pandas < 2 fallback
-            ok = surv.map(_valid_rfc3339)
-        # pandas coerces VALID timestamps outside its ns-Timestamp range
-        # (years <1678 / >2262) to NaT; re-check only the rejects with
-        # the scalar parser so both paths agree everywhere (per-row
-        # Python over genuinely-invalid + extreme-year strings only)
-        if not ok.all():
-            rej = ~ok
-            ok.loc[rej] = surv[rej].map(_valid_rfc3339)
-        rfc3339_valid = rfc3339_shape.copy()
-        rfc3339_valid[rfc3339_shape] = ok.to_numpy(dtype=bool)
-    else:
-        rfc3339_valid = rfc3339_shape
-    rfc2822_shape = sv.str.match(RFC2822_RE)
-    if rfc2822_shape.any():
-        rfc2822_valid = rfc2822_shape.copy()
-        rfc2822_valid[rfc2822_shape] = (
-            sv[rfc2822_shape].map(_valid_rfc2822).to_numpy(dtype=bool)
-        )
-    else:
-        rfc2822_valid = rfc2822_shape
-    masks = [
-        (sv.str.len() == 36) & sv.str.match(UUID_RE),
-        sv.str.contains("@", regex=False) & sv.str.contains(EMAIL_RE),
-        sv.str.contains(".", regex=False) & sv.str.match(URL_RE),
-        sv.str.contains(".", regex=False) & sv.str.match(HOSTNAME_RE),
-        sv.str.match(r"\d") & sv.str.match(ISO_DATE_RE),
-        rfc3339_valid,
-        rfc2822_valid,
+    valid = ~bool_mask(pc.is_null(arr))
+    # detect()'s gates that its patterns do not imply
+    gates = {
+        STR_UUID: values(pc.cast(pc.binary_length(arr), pa.int64()), np.int64) == 36,
+        STR_URL: bool_mask(pc.match_substring(arr, ".")),
+    }
+    masks = []
+    for fmt, pattern in zip(FORMAT_ORDER, _ASCII_PATTERNS):
+        m = bool_mask(pc.match_substring_regex(arr, pattern))
+        if fmt in gates:
+            m &= gates[fmt]
+        if fmt in _PARSES and m.any():
+            at = np.flatnonzero(m)
+            m[at] = [_PARSES[fmt](v) for v in pc.take(arr, from_numpy(at)).to_pylist()]
+        masks.append(m)
+    masks.append(valid)  # matched nothing: unknown
+    out = np.array(FORMAT_ORDER + [STR_UNKNOWN, None], dtype=object)[
+        np.argmax(np.vstack(masks + [~valid]), axis=0)
     ]
-    out = np.select([m.to_numpy(dtype=bool) for m in masks], FORMAT_ORDER, default=STR_UNKNOWN)
-    res = pd.Series(out, index=s.index, dtype="object")
-    res[~notna] = None
-    return res
+    other = np.flatnonzero(valid & ~bool_mask(pc.string_is_ascii(arr)))
+    if len(other):
+        out[other] = [detect(v) for v in pc.take(arr, from_numpy(other)).to_pylist()]
+    return out

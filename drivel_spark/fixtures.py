@@ -32,7 +32,6 @@ from dataclasses import dataclass
 from typing import Iterable, Optional
 
 import numpy as np
-import pandas as pd
 
 from .produce.audio import synth_pcm, synth_wav, wav_encode
 from .sketches.hashing import hash64
@@ -275,6 +274,8 @@ def _sr_dur_raw(ids: np.ndarray, seed: int, variant: str) -> tuple[np.ndarray, n
 
 def clips_pdf(ids: Iterable[int], spec: ClipFixtureSpec = ClipFixtureSpec()) -> pd.DataFrame:
     """The deterministic generator + oracle: clips rows for these indexes."""
+    import pandas as pd
+
     ids = np.asarray(list(ids), dtype=np.int64)
     seed = spec.seed
     inject = spec.variant != "clean"
@@ -483,6 +484,8 @@ def expected_audio_params(ids: np.ndarray, spec: ClipFixtureSpec) -> tuple[np.nd
 def transcripts_pdf(ids: Iterable[int], spec: ClipFixtureSpec = ClipFixtureSpec()) -> pd.DataFrame:
     """FIXTURES.md F2: one row per clip, minus 0.3% missing (i%333==17),
     plus 0.2% orphan rows referencing nonexistent clips (i%500==29)."""
+    import pandas as pd
+
     ids = np.asarray(list(ids), dtype=np.int64)
     seed = spec.seed
     inject = spec.variant != "clean"

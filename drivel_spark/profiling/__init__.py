@@ -1,5 +1,5 @@
 """Distributed profiling: per-column mergeable accumulators, one keyed
-mapInPandas fold, one merger, tree combine, TableProfile result object."""
+mapInArrow fold, one merger, tree combine, TableProfile result object."""
 
 from .accumulator import ProfilerOptions, TableAccumulator, make_column_acc
 from .compat import (
@@ -13,6 +13,7 @@ from .grouped import grouped_drift, grouped_profile
 from .profiler import (
     TableProfile,
     fold_accumulators,
+    fold_keyed,
     keyed_accumulators,
     merge_keyed,
     profile,
@@ -34,6 +35,7 @@ __all__ = [
     "grouped_profile",
     "grouped_drift",
     "fold_accumulators",
+    "fold_keyed",
     "keyed_accumulators",
     "merge_keyed",
     "profile",

@@ -7,9 +7,13 @@ Arrow batch (no per-row Python — BASELINE.json input_hint) and merged
 associatively across partitions (rayon reduce ≈ treeAggregate,
 SURVEY.md §2.9).
 
-Every accumulator supports ``update(pd.Series)`` + ``merge(other)`` and
+Every accumulator supports ``update(pa.Array)`` + ``merge(other)`` and
 is a commutative monoid, so partition count/order never changes the
-profile (pinned by tests/test_profiler.py).
+profile (pinned by tests/test_profiler.py).  Updates read Arrow arrays
+through pyarrow.compute kernels and numpy views of their buffers, so a
+Python worker that runs the profile never imports pandas; the state
+equals what the same batches gave as pandas Series (NaN counts as NULL,
+string counts enter the frequency map in ``value_counts()`` order).
 """
 
 from __future__ import annotations
@@ -20,8 +24,10 @@ from dataclasses import dataclass, field
 from typing import Any, Optional
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 
+from ..arrow_np import non_null, values
 from ..core.detect import detect_series
 from ..core.node import (
     DEFAULT_MAX_CHARS,
@@ -29,7 +35,8 @@ from ..core.node import (
     STR_UNKNOWN,
     SchemaNode,
 )
-from ..sketches import KLL, BottomK, HyperLogLog, SpaceSaving, TDigest
+from ..sketches import KLL, BottomK, HyperLogLog, SpaceSaving, TDigest, hash64
+from ..sketches.hashing import hash_numeric
 
 # per-batch char-histogram sample cap: chars of at most this many strings
 # per batch feed the histogram (keeps the generator's char-distribution
@@ -69,14 +76,13 @@ class ColumnAcc:
         self.n = 0
         self.n_null = 0
 
-    def _count(self, s: pd.Series) -> pd.Series:
-        self.n += int(len(s))
-        nn = s.isna()
-        self.n_null += int(nn.sum())
-        return s[~nn]
+    def _count(self, arr) -> pa.Array:
+        self.n += len(arr)
+        self.n_null += arr.null_count
+        return non_null(arr)
 
-    def update(self, s: pd.Series) -> None:
-        self._count(s)
+    def update(self, arr) -> None:
+        self._count(arr)
 
     def merge_base(self, other: "ColumnAcc") -> None:
         self.n += other.n
@@ -110,11 +116,18 @@ class NumericAcc(ColumnAcc):
         self.hll = HyperLogLog(p=opts.hll_p)
         self.tdigest = TDigest(delta=opts.tdigest_delta) if opts.tdigest_delta else None
 
-    def update(self, s: pd.Series) -> None:
-        v = self._count(s)
-        if len(v) == 0:
+    def update(self, arr) -> None:
+        v = self._count(arr)
+        if pa.types.is_decimal(v.type):
+            arr = np.array([float(d) for d in v.to_pylist()], dtype=np.float64)
+        else:
+            arr = values(pc.cast(v, pa.float64(), safe=False), np.float64)
+        nan = np.isnan(arr)
+        if nan.any():  # NaN is NULL, as pandas counts it
+            self.n_null += int(nan.sum())
+            arr = arr[~nan]
+        if len(arr) == 0:
             return
-        arr = v.to_numpy(dtype=np.float64)
         lo, hi = float(np.min(arr)), float(np.max(arr))
         self.min_v = lo if self.min_v is None else min(self.min_v, lo)
         self.max_v = hi if self.max_v is None else max(self.max_v, hi)
@@ -122,7 +135,7 @@ class NumericAcc(ColumnAcc):
         self.kll.update(arr)
         if self.tdigest is not None:
             self.tdigest.update(arr)
-        self.hll.update_hashes(pd.util.hash_array(arr).astype(np.uint64))
+        self.hll.update_hashes(hash_numeric(arr))
 
     def merge(self, other: "NumericAcc") -> "NumericAcc":
         self.merge_base(other)
@@ -158,8 +171,9 @@ class NumericAcc(ColumnAcc):
 
 class StringAcc(ColumnAcc):
     """String columns.  Each batch is reduced to its distinct values
-    first (one ``value_counts``): the length bounds, HLL registers and
-    format detection see each distinct value once, the frequency map
+    first (one Arrow ``value_counts``): the length bounds, HLL registers,
+    value sample and format detection see each distinct value once (one
+    :func:`hash64` serves the HLL and the sample), the frequency map
     gets the counts.  All are exact — min/max and register max are
     idempotent — so the sketches equal those fed every row.  Detection
     stops once the column can only resolve to ``unknown``; the char
@@ -177,27 +191,30 @@ class StringAcc(ColumnAcc):
         self.char_hist: Counter = Counter()
         self.formats_seen: set[str] = set()
 
-    def update(self, s: pd.Series) -> None:
-        v = self._count(s)
+    def update(self, arr) -> None:
+        v = self._count(arr)
         if len(v) == 0:
             return
-        v = v.astype(str)
-        counts = v.value_counts()
-        distinct = pd.Series(counts.index, dtype=object)
-        lens = distinct.str.len()
-        lo, hi = int(lens.min()), int(lens.max())
+        if not pa.types.is_string(v.type):
+            v = pc.cast(v, pa.string())
+        vc = pc.value_counts(v)
+        distinct = vc.field(0)
+        lens = pc.min_max(pc.utf8_length(distinct))
+        lo, hi = lens["min"].as_py(), lens["max"].as_py()
         self.min_len = lo if self.min_len is None else min(self.min_len, lo)
         self.max_len = hi if self.max_len is None else max(self.max_len, hi)
-        self.hll.update(distinct.to_numpy())
-        self.freq.update_counts(counts.to_dict())
-        self.sample.update(v)
+        h = hash64(distinct)
+        self.hll.update_hashes(h)
+        uniq = distinct.to_pylist()
+        self.freq.update_value_counts(uniq, values(vc.field(1), np.int64))
+        self.sample.update_hashed(uniq, h)
         # bounded char evidence: a prefix sample per batch
-        chars = Counter("".join(v.iloc[:CHAR_SAMPLE_PER_BATCH]))
+        chars = Counter("".join(v.slice(0, CHAR_SAMPLE_PER_BATCH).to_pylist()))
         self.char_hist.update(chars)
         if len(self.char_hist) > self.opts.max_chars:
             self.char_hist = Counter(dict(self.char_hist.most_common(self.opts.max_chars)))
         if self.opts.detect_formats and not self._demoted:
-            self.formats_seen.update(detect_series(distinct).dropna().unique())
+            self.formats_seen.update(detect_series(distinct).tolist())
 
     def merge(self, other: "StringAcc") -> "StringAcc":
         self.merge_base(other)
@@ -246,10 +263,10 @@ class BooleanAcc(ColumnAcc):
         super().__init__(name, dtype, opts)
         self.n_true = 0
 
-    def update(self, s: pd.Series) -> None:
-        v = self._count(s)
+    def update(self, arr) -> None:
+        v = self._count(arr)
         if len(v):
-            self.n_true += int(v.astype(bool).sum())
+            self.n_true += pc.sum(v).as_py()
 
     def merge(self, other: "BooleanAcc") -> "BooleanAcc":
         self.merge_base(other)
@@ -273,11 +290,11 @@ class BinaryAcc(ColumnAcc):
         self.max_size: Optional[int] = None
         self.total_bytes = 0
 
-    def update(self, s: pd.Series) -> None:
-        v = self._count(s)
+    def update(self, arr) -> None:
+        v = self._count(arr)
         if len(v) == 0:
             return
-        sizes = v.map(len).to_numpy(dtype=np.int64)
+        sizes = values(pc.cast(pc.binary_length(v), pa.int64()), np.int64)
         lo, hi = int(sizes.min()), int(sizes.max())
         self.min_size = lo if self.min_size is None else min(self.min_size, lo)
         self.max_size = hi if self.max_size is None else max(self.max_size, hi)
@@ -307,11 +324,11 @@ class ArrayAcc(ColumnAcc):
         self.min_items: Optional[int] = None
         self.max_items: Optional[int] = None
 
-    def update(self, s: pd.Series) -> None:
-        v = self._count(s)
+    def update(self, arr) -> None:
+        v = self._count(arr)
         if len(v) == 0:
             return
-        sizes = v.map(len).to_numpy(dtype=np.int64)
+        sizes = values(pc.cast(pc.list_value_length(v), pa.int64()), np.int64)
         lo, hi = int(sizes.min()), int(sizes.max())
         self.min_items = lo if self.min_items is None else min(self.min_items, lo)
         self.max_items = hi if self.max_items is None else max(self.max_items, hi)
@@ -334,14 +351,26 @@ class TimestampAcc(ColumnAcc):
 
     def __init__(self, name: str, dtype: str, opts: ProfilerOptions):
         super().__init__(name, dtype, opts)
-        self.min_ts: Optional[pd.Timestamp] = None
-        self.max_ts: Optional[pd.Timestamp] = None
+        self.min_ts = None
+        self.max_ts = None
 
-    def update(self, s: pd.Series) -> None:
-        v = self._count(s)
+    def update(self, arr) -> None:
+        v = self._count(arr)
         if len(v) == 0:
             return
-        lo, hi = v.min(), v.max()
+        if pa.types.is_timestamp(v.type):
+            # pandas Timestamps of the session-local wall time, as
+            # Spark's pandas conversion gives them (only this kind of
+            # column loads pandas)
+            import pandas as pd
+
+            if v.type.tz is not None:
+                v = pc.local_timestamp(v)
+            mm = pc.min_max(pc.cast(v, pa.int64()))
+            lo, hi = (pd.Timestamp(mm[k].as_py(), unit=v.type.unit) for k in ("min", "max"))
+        else:
+            mm = pc.min_max(v)
+            lo, hi = mm["min"].as_py(), mm["max"].as_py()
         self.min_ts = lo if self.min_ts is None else min(self.min_ts, lo)
         self.max_ts = hi if self.max_ts is None else max(self.max_ts, hi)
 
@@ -390,11 +419,12 @@ class TableAccumulator:
         self.n_partitions = 1
         self.cols = {name: make_column_acc(name, t, opts) for name, t in columns}
 
-    def update(self, pdf: pd.DataFrame) -> None:
-        self.n_rows += len(pdf)
+    def update(self, batch: pa.RecordBatch) -> None:
+        self.n_rows += batch.num_rows
+        names = set(batch.schema.names)
         for name, acc in self.cols.items():
-            if name in pdf.columns:
-                acc.update(pdf[name])
+            if name in names:
+                acc.update(batch.column(name))
 
     def merge(self, other: "TableAccumulator") -> "TableAccumulator":
         self.n_rows += other.n_rows

@@ -8,9 +8,10 @@ them away.  ``grouped_profile`` runs the SAME mergeable-accumulator
 fold (accumulator.py) once per group value, in ONE scan:
 
 * the profiler's keyed accumulator pass (profiler.keyed_accumulators)
-  keyed by the group value: each Arrow batch is pandas-grouped by the
-  key and folded into a per-group :class:`TableAccumulator` — the
-  scan stays single-pass regardless of group count;
+  keyed by the group value: each Arrow batch is split by the key
+  (dictionary-encoded, stably sorted) and folded into a per-group
+  :class:`TableAccumulator` — the scan stays single-pass regardless
+  of group count;
 * one shuffle of O(partitions × groups) pickled partials (KBs each)
   hashed on the group, merged per group by the profiler's one merger
   (profiler.merge_keyed) — the data itself never reshuffles;
@@ -35,7 +36,6 @@ from __future__ import annotations
 
 from typing import Optional
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -86,6 +86,8 @@ def grouped_drift(
     ``added``/``removed`` with NULL metrics — a vanished codec is
     drift a distance metric can't express.  Driver-side O(groups ×
     columns) over O(KB) sketch state; no Spark job."""
+    import pandas as pd
+
     from ..constraints.drift import drift_column
 
     rows = []

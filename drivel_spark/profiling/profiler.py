@@ -4,16 +4,22 @@ Every profile path — :func:`profile`, per-group (grouped.py),
 per-file resumable (checkpoint/runner.py) and streaming
 (streaming/profile_stream.py) — runs the same three steps:
 
-1. :func:`keyed_accumulators` — ONE ``mapInPandas`` kernel folding
-   each partition's rows into one :class:`TableAccumulator` per key
-   (vectorized seqOp, no per-row Python) and emitting ``(key, acc)``
-   rows; ``key=None`` means one accumulator per partition;
-2. :func:`merge_keyed` — ONE executor-side merger,
-   ``groupBy(key).applyInPandas``; :func:`tree_combine` applies it
-   level by level on ``pmod(partition, buckets)`` buckets (the
-   treeAggregate/rayon-reduce analog, SURVEY.md §2.9);
-3. :func:`fold_accumulators` — the driver fold of the collected blobs
-   into one accumulator → :class:`TableProfile`.
+1. :func:`keyed_accumulators` — ONE ``mapInArrow`` kernel folding
+   each partition's Arrow batches into one :class:`TableAccumulator`
+   per key (vectorized seqOp, no per-row Python) and emitting
+   ``(key, acc)`` rows; ``key=None`` means one accumulator per
+   partition;
+2. :func:`merge_keyed` — ONE executor-side merger, a key-partitioned
+   ``mapInArrow``; :func:`tree_combine` applies it level by level on
+   ``pmod(partition, buckets)`` buckets (the treeAggregate/rayon-reduce
+   analog, SURVEY.md §2.9);
+3. :func:`fold_accumulators` / :func:`fold_keyed` — the driver fold of
+   the collected blobs into one accumulator (per key) →
+   :class:`TableProfile`.
+
+Both kernels run on Arrow batches and never import pandas, so the
+Python workers that run them do not carry it (drivel_spark/arrow_np.py
+says which pyarrow calls would load it).
 
 Scale notes:
 
@@ -34,7 +40,9 @@ import pickle
 import threading
 from typing import Any, Iterable, Optional
 
-import pandas as pd
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -46,6 +54,7 @@ from ..core import (
     infer_many,
     to_json_schema as core_to_json_schema,
 )
+from ..arrow_np import binary_array, bool_mask, concat_batches, from_numpy, values
 from ..core.node import STR_ENUM, STR_UNKNOWN
 from .accumulator import ProfilerOptions, StringAcc, TableAccumulator
 
@@ -198,45 +207,68 @@ class TableProfile:
 # ---------------------------------------------------------------------------
 
 
-# NULL key values fold under this key (a pandas groupby would drop them;
-# an unlabeled-source profile is itself a data-quality signal)
+# NULL key values fold under this key (a groupby would drop them; an
+# unlabeled-source profile is itself a data-quality signal)
 NULL_GROUP = "␀null"
 # tree_combine: partials merged per executor-side combine task, and the
 # row count at or below which the partials go to the driver instead
 TREE_FANIN = 64
 COLLECT_THRESHOLD = 256
+_ACC_ARROW = pa.schema([("key", pa.string()), ("acc", pa.binary())])
 
 
-def _rebuffered(batches: Iterable[pd.DataFrame]) -> Iterable[pd.DataFrame]:
+def _rebuffered(batches: Iterable[pa.RecordBatch]) -> Iterable[pa.RecordBatch]:
     """Re-buffer Arrow batches to ~8k rows, unless rows are wide (the
     first batch probes the bytes/row), in which case pass batches on
     as they come.  Small batches (wide-row sessions, partition tails)
     would otherwise make per-batch Python overhead dominate."""
-    buf: list[pd.DataFrame] = []
+    buf: list[pa.RecordBatch] = []
     buffered = 0
     target = None  # rows per update, decided on the first batch
-    for pdf in batches:
+    for batch in batches:
         if target is None:
-            row_b = (
-                int(pdf.memory_usage(deep=True).sum() / max(len(pdf), 1))
-                if len(pdf)
-                else 0
-            )
+            row_b = batch.nbytes // batch.num_rows if batch.num_rows else 0
             target = 1 if row_b > 4096 else 8192
         if target == 1:
-            yield pdf
+            yield batch
             continue
-        buf.append(pdf)
-        buffered += len(pdf)
+        buf.append(batch)
+        buffered += batch.num_rows
         if buffered >= target:
-            yield pd.concat(buf, ignore_index=True)
+            yield concat_batches(buf)
             buf, buffered = [], 0
     if buf:
-        yield pd.concat(buf, ignore_index=True)
+        yield concat_batches(buf)
+
+
+def _key_groups(batch: pa.RecordBatch) -> Iterable[tuple[str, pa.RecordBatch]]:
+    """``(str(key), rows)`` per value of the batch's ``__key`` column,
+    rows in batch order; NULL keys group under :data:`NULL_GROUP`."""
+    enc = pc.dictionary_encode(batch.column("__key"))
+    names = [str(k) for k in enc.dictionary.to_pylist()] + [NULL_GROUP]
+    codes = values(enc.indices, np.int32).copy()
+    if enc.null_count:
+        codes[bool_mask(pc.is_null(enc))] = len(names) - 1
+    order = np.argsort(codes, kind="stable")
+    sizes = np.bincount(codes, minlength=len(names))
+    rows = batch.take(from_numpy(order))
+    start = 0
+    for name, size in zip(names, sizes.tolist()):
+        if size:
+            yield name, rows.slice(start, size)
+            start += size
+
+
+def _acc_batch(accs: dict[str, TableAccumulator]) -> pa.RecordBatch:
+    return pa.RecordBatch.from_arrays(
+        [binary_array([k.encode() for k in accs], pa.string()),
+         binary_array([a.to_bytes() for a in accs.values()])],
+        schema=_ACC_ARROW,
+    )
 
 
 def _fold_partition(keyed: bool, columns: list[tuple[str, str]], opts: ProfilerOptions):
-    def fn(batches: Iterable[pd.DataFrame]):
+    def fn(batches: Iterable[pa.RecordBatch]):
         accs: dict[str, TableAccumulator] = {}
         if not keyed:
             from pyspark import TaskContext
@@ -244,17 +276,16 @@ def _fold_partition(keyed: bool, columns: list[tuple[str, str]], opts: ProfilerO
             ctx = TaskContext.get()
             pid = ctx.partitionId() if ctx is not None else -1
             acc = accs[str(pid)] = TableAccumulator(columns, opts)
-            for pdf in _rebuffered(batches):
-                acc.update(pdf)
+            for batch in _rebuffered(batches):
+                acc.update(batch)
         else:
-            for pdf in batches:
-                keys = pdf["__key"].astype("object").where(pdf["__key"].notna(), NULL_GROUP)
-                for key, sub in pdf.groupby(keys.astype(str), sort=False):
+            for batch in batches:
+                for key, rows in _key_groups(batch):
                     acc = accs.get(key)
                     if acc is None:
                         acc = accs[key] = TableAccumulator(columns, opts)
-                    acc.update(sub)
-        yield pd.DataFrame({"key": list(accs), "acc": [a.to_bytes() for a in accs.values()]})
+                    acc.update(rows)
+        yield _acc_batch(accs)
 
     return fn
 
@@ -269,17 +300,19 @@ def keyed_accumulators(
     pickled :class:`TableAccumulator` per key value per partition.
 
     ``key=None`` folds each partition into ONE accumulator keyed by
-    its partition id (no pandas groupby; batches re-buffered to ~8k
-    rows).  Otherwise ``key`` is evaluated in the same projection as
-    the profiled ``columns`` (all of ``df``'s when None) — before any
-    exchange, so ``input_file_name()`` still resolves — and NULL key
-    values fold under :data:`NULL_GROUP`.  Column pruning reaches the
-    scan because the projection precedes the UDF."""
+    its partition id (batches re-buffered to ~8k rows).  Otherwise
+    ``key`` is evaluated in the same projection as the profiled
+    ``columns`` (all of ``df``'s when None) — before any exchange, so
+    ``input_file_name()`` still resolves — and each batch splits into
+    one slice per key value (``dictionary_encode`` + a stable sort,
+    rows in order within a key); NULL key values fold under
+    :data:`NULL_GROUP`.  Column pruning reaches the scan because the
+    projection precedes the UDF."""
     proj = df.select(*columns) if columns is not None else df
     col_types = [(f.name, f.dataType.simpleString()) for f in proj.schema.fields]
     if key is not None:
         proj = df.select(key.alias("__key"), *proj.columns)
-    return proj.mapInPandas(_fold_partition(key is not None, col_types, opts), _ACC_SCHEMA)
+    return proj.mapInArrow(_fold_partition(key is not None, col_types, opts), _ACC_SCHEMA)
 
 
 def fold_accumulators(blobs: Iterable[bytes]) -> TableAccumulator:
@@ -291,14 +324,32 @@ def fold_accumulators(blobs: Iterable[bytes]) -> TableAccumulator:
     return merged
 
 
-def _merge_group(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-    return pd.DataFrame({"key": [key[0]], "acc": [fold_accumulators(pdf["acc"]).to_bytes()]})
+def fold_keyed(pairs: Iterable[tuple[str, bytes]]) -> dict[str, TableAccumulator]:
+    """Merge pickled ``(key, acc)`` partials into one accumulator per
+    key, in order of first appearance."""
+    merged: dict[str, TableAccumulator] = {}
+    for key, blob in pairs:
+        acc = TableAccumulator.from_bytes(blob)
+        merged[key] = merged[key].merge(acc) if key in merged else acc
+    return merged
+
+
+def _merge_partition(batches: Iterable[pa.RecordBatch]):
+    merged = fold_keyed(
+        (k, b)
+        for batch in batches
+        for k, b in zip(batch.column(0).to_pylist(), batch.column(1).to_pylist())
+    )
+    if merged:
+        yield _acc_batch(merged)
 
 
 def merge_keyed(acc_df: DataFrame) -> DataFrame:
     """The one accumulator merger: one ``(key, acc)`` row per key of a
-    :func:`keyed_accumulators` frame, merged executor-side."""
-    return acc_df.groupBy("key").applyInPandas(_merge_group, _ACC_SCHEMA)
+    :func:`keyed_accumulators` frame, merged executor-side — the rows
+    are hash-partitioned by key and each partition folds its keys with
+    :func:`fold_keyed` in a ``mapInArrow`` task."""
+    return acc_df.repartition("key").mapInArrow(_merge_partition, _ACC_SCHEMA)
 
 
 def tree_combine(
@@ -423,7 +474,9 @@ def profile_json_column(
         max_strings_seen=64, max_chars_seen=1024
     )
 
-    def fn(batches: Iterable[pd.DataFrame]):
+    def fn(batches):
+        import pandas as pd
+
         acc = SchemaNode.initial()
         from ..core.infer import merge as node_merge, _infer_inner
 

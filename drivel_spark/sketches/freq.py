@@ -4,7 +4,8 @@
   Exact when the number of distinct keys ≤ capacity (which makes
   small-scale unit tests byte-exact); at scale it degrades gracefully
   with a tracked error bound.  Batch updates aggregate per batch with
-  pandas ``value_counts`` first, so there is no per-row Python.
+  one Arrow ``value_counts`` first, so there is no per-row Python; an
+  eviction pops a min-heap instead of scanning the map.
 * :class:`BottomK` — deterministic value sample: keeps the K values with
   the smallest stable hash.  Unlike a random reservoir it is mergeable
   AND deterministic (union → keep K smallest), so partition order can
@@ -15,9 +16,13 @@
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
+import heapq
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+
+from ..arrow_np import non_null, values as np_values
 from .hashing import hash64
 
 
@@ -30,23 +35,51 @@ class SpaceSaving:
         self.errors: dict = {}
 
     def update_counts(self, counts: dict) -> None:
+        """Add ``{key: count}`` in order.  A new key past capacity
+        evicts the key ``min(self.counts, key=self.counts.get)`` names
+        (the least count, the earliest inserted among equals) and
+        inherits its count as error.  The minimum comes from a heap of
+        ``(count, insertion seq, key)`` built on the call's first
+        eviction; counts only grow, so an entry that lags its key's
+        count is re-pushed when popped."""
+        sketch, errors = self.counts, self.errors
+        heap = None
         for key, c in counts.items():
-            if key in self.counts:
-                self.counts[key] += c
-            elif len(self.counts) < self.capacity:
-                self.counts[key] = c
-                self.errors[key] = 0
-            else:
-                # evict the current minimum, inherit its count as error
-                mkey = min(self.counts, key=self.counts.get)
-                mcount = self.counts.pop(mkey)
-                self.errors.pop(mkey, None)
-                self.counts[key] = mcount + c
-                self.errors[key] = mcount
+            if key in sketch:
+                sketch[key] += c
+                continue
+            if len(sketch) < self.capacity:  # (never once the heap exists)
+                errors[key] = 0
+                sketch[key] = c
+                continue
+            if heap is None:
+                heap = [(n, i, k) for i, (k, n) in enumerate(sketch.items())]
+                heapq.heapify(heap)
+                seq = len(heap)
+            while True:
+                mcount, i, mkey = heapq.heappop(heap)
+                if sketch[mkey] == mcount:
+                    break
+                heapq.heappush(heap, (sketch[mkey], i, mkey))
+            del sketch[mkey], errors[mkey]
+            errors[key] = mcount
+            sketch[key] = c = mcount + c
+            heapq.heappush(heap, (c, seq, key))
+            seq += 1
 
-    def update(self, values: pd.Series) -> None:
-        vc = values.dropna().value_counts()
-        self.update_counts(vc.to_dict())
+    def update_value_counts(self, keys: list, counts: np.ndarray) -> None:
+        """Add one batch's distinct ``keys`` and their int64 ``counts``,
+        both in first-appearance order (as Arrow's ``value_counts`` and
+        pandas' hash table list them), in pandas' ``value_counts()``
+        order: by count descending, ties where pandas' unstable
+        quicksort leaves them.  Evictions depend on that order."""
+        # pandas' nargsort(ascending=False): reverse, argsort, reverse
+        order = np.arange(len(counts))[::-1][counts[::-1].argsort(kind="quicksort")][::-1]
+        self.update_counts({keys[i]: c for i, c in zip(order.tolist(), counts[order].tolist())})
+
+    def update(self, values: pa.Array) -> None:
+        vc = pc.value_counts(non_null(values))
+        self.update_value_counts(vc.field(0).to_pylist(), np_values(vc.field(1), np.int64))
 
     def merge(self, other: "SpaceSaving") -> "SpaceSaving":
         out = SpaceSaving(self.capacity)
@@ -82,15 +115,16 @@ class BottomK:
         self.hashes = np.empty(0, dtype=np.uint64)
         self.values: list = []
 
-    def update(self, values: pd.Series) -> None:
-        vals = values.dropna()
-        if len(vals) == 0:
+    def update(self, values: pa.Array) -> None:
+        uniq = pc.unique(non_null(values))
+        self.update_hashed(uniq.to_pylist(), hash64(uniq))
+
+    def update_hashed(self, uniq: list, h: np.ndarray) -> None:
+        """Offer distinct values (first-appearance order) with their
+        :func:`hash64` hashes."""
+        if len(uniq) == 0:
             return
-        uniq = vals.unique()
-        h = hash64(uniq)
-        all_h = np.concatenate([self.hashes, h])
-        all_v = self.values + list(uniq)
-        self._shrink(all_h, all_v)
+        self._shrink(np.concatenate([self.hashes, h]), self.values + uniq)
 
     def merge(self, other: "BottomK") -> "BottomK":
         out = BottomK(self.k)

@@ -12,7 +12,7 @@ treeAggregate correct), an incremental profile is just:
   (Spark's file-source log is the dedup ledger);
 * inside ``foreachBatch`` the micro-batch runs the IDENTICAL
   distributed path as the batch engine — ``keyed_accumulators``
-  (vectorized mapInPandas seqOp) + ``tree_combine`` — so per-batch
+  (vectorized mapInArrow seqOp) + ``tree_combine`` — so per-batch
   cost is O(new data) with the same plan shape at any history size;
 * the merged running :class:`TableAccumulator` is persisted per batch
   as ``state_<batch_id>.bin`` (KBs — sketches, not data).  The write

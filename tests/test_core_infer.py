@@ -102,7 +102,7 @@ def test_detect_series_matches_scalar_on_adversarial_datetimes():
     """The vectorized path must agree with the scalar path even on
     shape-valid / parse-invalid datetimes (VERDICT r02 missing #3):
     regex survivors are parse-validated, not just shape-matched."""
-    import pandas as pd
+    import pyarrow as pa
 
     from drivel_spark.core.detect import detect, detect_series
 
@@ -122,7 +122,7 @@ def test_detect_series_matches_scalar_on_adversarial_datetimes():
         "plainword",
         None,
     ]
-    got = detect_series(pd.Series(values, dtype="object"))
+    got = detect_series(pa.array(values, pa.string()))
     want = [detect(v) if v is not None else None for v in values]
     assert list(got) == want
 

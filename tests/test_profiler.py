@@ -5,6 +5,7 @@ import json
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pytest
 
 from drivel_spark.core import EnumInference
@@ -459,8 +460,8 @@ class _RowLevelStrings:
             return
         self.lens += [len(x) for x in v]
         self.hll.update(v.to_numpy())
-        self.freq.update(v)
-        self.sample.update(v)
+        self.freq.update_counts(v.value_counts().to_dict())
+        self.sample.update(pa.array(v.tolist()))
         self.char_hist.update("".join(v.iloc[:CHAR_SAMPLE_PER_BATCH]))
         self._cap_chars()
         self.formats |= {detect(x) for x in v}
@@ -513,11 +514,13 @@ def test_string_accumulator_is_exact():
     batches = _string_batches()
     names = list(batches[0].columns)
 
+    schema = pa.schema([(c, pa.string()) for c in names])
+
     def fold(part):
         acc = TableAccumulator([(c, "string") for c in names], opts)
         refs = {c: _RowLevelStrings(opts) for c in names}
         for b in part:
-            acc.update(b)
+            acc.update(pa.RecordBatch.from_pandas(b, schema=schema, preserve_index=False))
             for c in names:
                 refs[c].update(b[c])
         return acc, refs

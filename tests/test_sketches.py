@@ -1,7 +1,7 @@
 """Sketch accuracy + merge-invariance tests."""
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 import pytest
 
 from drivel_spark.sketches import KLL, BottomK, HyperLogLog, SpaceSaving, hash64
@@ -98,7 +98,7 @@ def test_kll_serde():
 
 def test_spacesaving_exact_when_under_capacity():
     ss = SpaceSaving(capacity=10)
-    s = pd.Series(["a"] * 5 + ["b"] * 3 + ["c"] * 2)
+    s = pa.array(["a"] * 5 + ["b"] * 3 + ["c"] * 2)
     ss.update(s)
     assert ss.counts == {"a": 5, "b": 3, "c": 2}
     assert ss.is_exact
@@ -113,7 +113,7 @@ def test_spacesaving_heavy_hitters_survive():
     rng.shuffle(keys)
     ss = SpaceSaving(capacity=64)
     for chunk in np.array_split(keys, 20):
-        ss.update(pd.Series(chunk))
+        ss.update(pa.array(chunk))
     top = ss.top(1)
     assert top[0][0] == "hot"
     assert top[0][1] >= 50_000  # overestimates only
@@ -121,14 +121,14 @@ def test_spacesaving_heavy_hitters_survive():
 
 def test_spacesaving_merge():
     a, b = SpaceSaving(8), SpaceSaving(8)
-    a.update(pd.Series(["x"] * 10 + ["y"] * 5))
-    b.update(pd.Series(["x"] * 7 + ["z"] * 3))
+    a.update(pa.array(["x"] * 10 + ["y"] * 5))
+    b.update(pa.array(["x"] * 7 + ["z"] * 3))
     m = a.merge(b)
     assert m.counts["x"] == 17
 
 
 def test_bottomk_deterministic_and_merge_invariant():
-    vals = pd.Series([f"v{i}" for i in range(1000)])
+    vals = pa.array([f"v{i}" for i in range(1000)])
     whole = BottomK(16)
     whole.update(vals)
     a, b = BottomK(16), BottomK(16)
@@ -200,3 +200,138 @@ def test_profile_with_tdigest(spark, sf_small_dir):
     kll_med, td_med = acc.kll.quantile(0.5), acc.tdigest.quantile(0.5)
     assert abs(td_med - kll_med) / kll_med < 0.05
     assert "tdigest_quantiles" in acc.summary()
+
+
+# --- hash64 is pandas' hash_array, without pandas --------------------------
+
+from hypothesis import given, seed, settings, strategies as st
+
+_HASH_SETTINGS = settings(max_examples=200, deadline=None, database=None)
+_SCALARS = st.one_of(
+    st.text(max_size=64),  # non-ASCII; 0-64 chars crosses the 8-byte word edges
+    st.binary(max_size=64),
+    st.integers(),
+    st.floats(allow_nan=True),
+    st.none(),
+    st.just(float("nan")),
+)
+
+
+def _pandas_hash(values):
+    import pandas as pd
+
+    return pd.util.hash_array(np.asarray(values, dtype=object), categorize=False)
+
+
+@seed(20261019)
+@_HASH_SETTINGS
+@given(
+    strs=st.lists(st.text(max_size=64), max_size=40),
+    blobs=st.lists(st.binary(max_size=64), max_size=20),
+    mixed=st.lists(_SCALARS, max_size=30),
+    salt=st.integers(min_value=1, max_value=2**64 - 1),
+)
+def test_hash64_equals_pandas_hash_array(strs, blobs, mixed, salt):
+    from drivel_spark.sketches.hashing import mix64
+
+    for values in (strs, blobs, mixed, strs + [None, float("nan")]):
+        try:
+            want = _pandas_hash(values)
+        except UnicodeDecodeError:  # numpy's str() of non-ASCII bytes, both ways
+            with pytest.raises(UnicodeDecodeError):
+                hash64(values)
+            continue
+        assert np.array_equal(hash64(values), want)
+        assert np.array_equal(hash64(values, salt=salt), mix64(want, salt))
+    # Arrow arrays hash from their buffers, sliced or not
+    arr = pa.array(strs, pa.string())
+    assert np.array_equal(hash64(arr), _pandas_hash(strs))
+    assert np.array_equal(hash64(arr.slice(1)), _pandas_hash(strs[1:]))
+    assert np.array_equal(hash64(pa.array(blobs, pa.binary())), _pandas_hash(blobs))
+
+
+@seed(20261019)
+@_HASH_SETTINGS
+@given(
+    ints=st.lists(st.integers(min_value=-(2**63), max_value=2**63 - 1), max_size=40),
+    floats=st.lists(st.floats(allow_nan=True, allow_infinity=True), max_size=40),
+)
+def test_numeric_hashes_equal_pandas(ints, floats):
+    """int64 arrays hash as ``str(v)`` (the fixtures' uniforms); float64
+    arrays hash by their bits (``NumericAcc``'s HLL feed)."""
+    import pandas as pd
+
+    from drivel_spark.sketches.hashing import hash_numeric
+
+    i64 = np.array(ints, dtype=np.int64)
+    assert np.array_equal(hash64(i64), _pandas_hash(i64))
+    f64 = np.array(floats, dtype=np.float64)
+    assert np.array_equal(hash_numeric(f64), pd.util.hash_array(f64))
+
+
+# --- SpaceSaving: heap eviction == min() eviction ---------------------------
+
+
+class _MinScanSpaceSaving:
+    """The eviction rule as a linear scan: the least count, the earliest
+    inserted key among equals."""
+
+    def __init__(self, capacity):
+        self.capacity, self.counts, self.errors = capacity, {}, {}
+
+    def update_counts(self, counts):
+        for key, c in counts.items():
+            if key in self.counts:
+                self.counts[key] += c
+            elif len(self.counts) < self.capacity:
+                self.counts[key], self.errors[key] = c, 0
+            else:
+                mkey = min(self.counts, key=self.counts.get)
+                mcount = self.counts.pop(mkey)
+                self.errors.pop(mkey)
+                self.counts[key], self.errors[key] = mcount + c, mcount
+
+
+def test_spacesaving_heap_evicts_what_min_scan_evicts():
+    import pickle
+
+    rng = np.random.default_rng(7)
+    for trial in range(60):
+        cap = int(rng.integers(1, 24))
+        ref, ss = _MinScanSpaceSaving(cap), SpaceSaving(cap)
+        for step in range(int(rng.integers(1, 12))):
+            keys = rng.zipf(1.4, size=int(rng.integers(0, 400))).astype(str)
+            counts = dict(zip(*np.unique(keys, return_counts=True)))
+            counts = {str(k): int(c) for k, c in rng.permutation(list(counts.items()))}
+            ref.update_counts(counts)
+            ss.update_counts(counts)
+            assert list(ss.counts.items()) == list(ref.counts.items()), (trial, step)
+            assert ss.errors == ref.errors, (trial, step)
+            if step % 3 == 1:  # mid-stream pickle: the heap is rebuilt lazily
+                ss = pickle.loads(pickle.dumps(ss, protocol=4))
+
+
+# SpaceSaving(3) after update_counts({"a": 5, "b": 2, "c": 1, "d": 4}),
+# pickled by the release before the heap (slots capacity/counts/errors)
+_OLD_SPACESAVING_PICKLE = bytes.fromhex(
+    "8004957e000000000000008c1a64726976656c5f737061726b2e736b65746368"
+    "65732e66726571948c0b5370616365536176696e679493942981944e7d94288c"
+    "086361706163697479944b038c06636f756e7473947d94288c0161944b058c01"
+    "62944b028c0164944b05758c066572726f7273947d942868084b0068094b0068"
+    "0a4b0175758694622e"
+)
+
+
+def test_spacesaving_pickles_load_and_merge_across_versions():
+    import pickle
+
+    old = pickle.loads(_OLD_SPACESAVING_PICKLE)
+    assert old.counts == {"a": 5, "b": 2, "d": 5} and old.errors == {"a": 0, "b": 0, "d": 1}
+    old.update_counts({"e": 1, "b": 1})  # evicts b (2), then e (3)
+    assert old.counts == {"a": 5, "d": 5, "b": 4}
+    assert old.errors == {"a": 0, "d": 1, "b": 3}
+    assert old.merge(SpaceSaving(3)).counts == {"a": 5, "d": 5, "b": 4}
+    # the pickled state stays the three slots, so the old release reads it
+    fresh = SpaceSaving(3)
+    fresh.update_counts({"a": 5, "b": 2, "c": 1, "d": 4})
+    assert pickle.dumps(fresh, protocol=4) == _OLD_SPACESAVING_PICKLE
