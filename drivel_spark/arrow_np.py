@@ -3,9 +3,9 @@ their buffers.
 
 pyarrow's own conversions (``Array.to_numpy``, ``np.asarray(arr)``,
 ``pa.array``, ``pa.scalar`` and every ``pyarrow.compute`` call with a
-Python-scalar operand) import pandas.  The profile and audio kernels run
-in Spark's Python workers on Arrow batches and stay off pandas by going
-through these helpers instead.
+Python-scalar operand) import pandas.  The profile, produce and audio
+kernels run in Spark's Python workers on Arrow batches and stay off
+pandas by going through these helpers instead.
 """
 
 from __future__ import annotations
@@ -45,6 +45,13 @@ def from_numpy(a: np.ndarray) -> pa.Array:
     """A numpy int64/float64/... array as an Arrow array without nulls."""
     a = np.ascontiguousarray(a)
     return pa.Array.from_buffers(pa.from_numpy_dtype(a.dtype), len(a), [None, pa.py_buffer(a)])
+
+
+def with_nulls(arr: pa.Array, mask: np.ndarray) -> pa.Array:
+    """``arr`` (offset 0, without nulls) with the slots where ``mask``
+    is True set to NULL, as a validity bitmap over its own buffers."""
+    validity = pa.py_buffer(np.packbits(~mask, bitorder="little"))
+    return pa.Array.from_buffers(arr.type, len(arr), [validity, *arr.buffers()[1:]])
 
 
 def non_null(arr: pa.Array) -> pa.Array:

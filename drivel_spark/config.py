@@ -21,10 +21,11 @@ from pyspark.sql import SparkSession
 # Batch sizing for Python-boundary Arrow streams.  r01–r05 capped
 # maxRecordsPerBatch at 256 rows so ~130KB/clip binary audio rows
 # couldn't blow worker memory — but that row cap applied to EVERY
-# mapInPandas/pandas_udf in the engine, so narrow tables (600k-row
-# lineitem, documents) crossed in thousands of tiny batches whose
-# per-batch JVM framing + Python dispatch dominated (measured r06:
-# grouped_profile 2.0s → 0.7s, schema_diff 3.3s → 2.6s at 8192).
+# Arrow-batch Python UDF (mapInArrow, pandas_udf) in the engine, so
+# narrow tables (600k-row lineitem, documents) crossed in thousands of
+# tiny batches whose per-batch JVM framing + Python dispatch dominated
+# (measured r06: grouped_profile 2.0s → 0.7s, schema_diff 3.3s → 2.6s
+# at 8192).
 # Spark 4's BYTE cap (`spark.sql.execution.arrow.maxBytesPerBatch`,
 # verified live: 8MB cap → ~47×100KB rows per batch) bounds wide-row
 # batches directly, so the row cap can be raised to 8192 while audio

@@ -191,100 +191,6 @@ def write_sorted(
     part.sortWithinPartitions(*cols).write.mode(mode).parquet(path)
 
 
-def write_zorder(
-    df,
-    path: str,
-    cols: list[str],
-    bits: int = 8,
-    n_files: int = None,
-    mode: str = "overwrite",
-    rel_err: float = 0.01,
-) -> None:
-    """Z-order (Morton-curve) clustered parquet layout over 2+ numeric
-    columns: the multi-column sibling of :func:`write_sorted`.  A
-    linear sort clusters only its leading column — a range predicate on
-    the second key still touches every file.  Bit-interleaving the
-    columns' quantile-bucket ranks instead gives every listed column
-    locality in the SAME layout, so parquet footer min/max stats prune
-    files (and row groups) for predicates on ANY of them — the layout
-    Delta/Iceberg expose as OPTIMIZE ZORDER BY, built here from
-    primitives so it works on plain parquet.
-
-    Mechanics (one pass + one shuffle, same cost shape as
-    :func:`write_sorted`):
-
-    1. Per column, ``approxQuantile`` computes ``2^bits - 1`` boundary
-       values (one driver-side O(KB) sketch pass; no shuffle).
-    2. Each row's column value maps to its quantile bucket via a
-       literal-array binary-search-free rank — ``size(filter(bounds,
-       b -> b <= v))`` — pure whole-stage codegen.  Quantile (not
-       equi-width) buckets make the curve skew-immune: each bucket
-       holds ~1/2^bits of the rows regardless of value distribution.
-    3. Bucket ranks interleave bit-by-bit into the Morton key
-       (``bits × len(cols)`` shift/or terms, still codegen).
-    4. ``repartitionByRange`` on the key (reservoir-sampled balanced
-       ranges) + ``sortWithinPartitions`` + write.
-
-    NULLs rank into bucket 0 (filter over the bounds array yields 0
-    matches), i.e. they cluster together at the curve origin.  Columns
-    must be numeric/date/timestamp (dates and timestamps are ranked
-    through a long cast).
-    """
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    if len(cols) < 2:
-        raise ValueError("z-order needs >= 2 columns; use write_sorted for 1")
-    if not 1 <= bits <= 16:
-        raise ValueError(f"bits must be in [1, 16]: {bits}")
-    n_buckets = 1 << bits
-    probs = [i / n_buckets for i in range(1, n_buckets)]
-
-    work = df
-    rank_cols = []
-    for c in cols:
-        dt = df.schema[c].dataType
-        num_c = f"__zn_{c}"
-        if isinstance(dt, (T.DateType, T.TimestampType, T.TimestampNTZType)):
-            work = work.withColumn(num_c, F.col(c).cast("long").cast("double"))
-        elif isinstance(dt, T.NumericType):
-            work = work.withColumn(num_c, F.col(c).cast("double"))
-        else:
-            raise ValueError(f"z-order column {c!r} has non-orderable-numeric type {dt}")
-        rank_cols.append(num_c)
-
-    # one approxQuantile call sketches every column together
-    bounds = dict(zip(rank_cols, work.approxQuantile(rank_cols, probs, rel_err)))
-    for num_c in rank_cols:
-        arr = F.array(*[F.lit(float(b)) for b in bounds[num_c]])
-        work = work.withColumn(
-            num_c,
-            F.size(F.filter(arr, lambda b: b <= F.col(num_c))).cast("long"),
-        )
-
-    z = F.lit(0).cast("long")
-    for bit in range(bits):
-        for j, num_c in enumerate(rank_cols):
-            z = z.bitwiseOR(
-                F.shiftleft(
-                    F.shiftright(F.col(num_c), bit).bitwiseAND(F.lit(1)),
-                    bit * len(rank_cols) + j,
-                )
-            )
-    keyed = work.withColumn("__zkey", z)
-    part = (
-        keyed.repartitionByRange(n_files, "__zkey")
-        if n_files
-        else keyed.repartitionByRange("__zkey")
-    )
-    (
-        part.sortWithinPartitions("__zkey")
-        .drop("__zkey", *rank_cols)
-        .write.mode(mode)
-        .parquet(path)
-    )
-
-
 def local_df(spark: SparkSession, rows, schema) -> DataFrame:
     """Tiny driver-side row list → DataFrame as an ARROW LOCAL RELATION
     (via pandas), instead of ``createDataFrame(list)``'s parallelized

@@ -10,14 +10,20 @@ string formats.  Only unknown strings and nested fields (arrays/objects
 below the first level) fall back to the scalar interpreter
 (:mod:`drivel_spark.core.produce`), with a per-row seeded Generator
 inside the Arrow batch.
+
+The generator is a ``mapInArrow`` kernel: it reads the row ids from the
+batch's buffers and builds every output column as an Arrow array from
+numpy buffers (:mod:`drivel_spark.arrow_np`), so the Python workers that
+run it never import pandas.
 """
 
 from __future__ import annotations
 
+import json
 from typing import Optional
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 
 from ..core.node import (
@@ -45,7 +51,8 @@ from ..core.produce import (
     _WORDS,
     produce_value,
 )
-from ..sketches.hashing import mix64
+from ..arrow_np import binary_array, from_numpy, values, with_nulls
+from ..sketches.hashing import hash_numeric, mix64
 
 _WORD_POOL = np.array(_WORDS, dtype=object)
 _TLD_POOL = np.array(_TLDS, dtype=object)
@@ -62,7 +69,7 @@ _HEX_DIGITS = np.array(list("0123456789abcdef"))
 def _row_keys(ids: np.ndarray, seed: int) -> np.ndarray:
     """One 64-bit key per row id and seed; every stream of a column is
     a salted mix of it, so a value depends on (seed, id) alone."""
-    return mix64(pd.util.hash_array(np.asarray(ids, dtype=np.int64)), seed)
+    return mix64(hash_numeric(np.asarray(ids, dtype=np.int64)), seed)
 
 
 def _u(h: np.ndarray) -> np.ndarray:
@@ -122,13 +129,16 @@ _VECTOR_FORMATS = frozenset(
 )
 
 
-def _gen_column(node: SchemaNode, ids: np.ndarray, salt: int, seed: int) -> pd.Series:
+def _gen_column(
+    node: SchemaNode, ids: np.ndarray, salt: int, seed: int
+) -> tuple[np.ndarray, Optional[np.ndarray]]:
     """Vectorized generator for one field (a numpy function of row id
     and seed); unknown strings and nested fields use the scalar
-    interpreter per row (seeded by id)."""
+    interpreter per row (seeded by id).  Returns the values and the
+    NULL mask (None when no row is NULL); NULL rows keep a value."""
     n = len(ids)
     if node.is_null_only or node.kind in (INITIAL, INDEFINITE):
-        return pd.Series([None] * n, dtype=object)
+        return np.full(n, "", dtype=object), np.ones(n, dtype=bool)
 
     keys = _row_keys(ids, seed)
 
@@ -140,11 +150,11 @@ def _gen_column(node: SchemaNode, ids: np.ndarray, salt: int, seed: int) -> pd.S
         null_mask = _u(stream(1)) < 0.5  # reference 50% coin-flip
 
     if node.kind == BOOLEAN:
-        out = pd.Series(_u(stream(2)) < 0.5)
+        out = _u(stream(2)) < 0.5
     elif node.kind == NUMBER and not node.is_float:
         lo = int(node.min_n) if node.min_n is not None else 0
         hi = int(node.max_n) if node.max_n is not None else 1000
-        out = pd.Series((lo + np.floor(_u(stream(3)) * (hi - lo + 1))).astype(np.int64))
+        out = (lo + np.floor(_u(stream(3)) * (hi - lo + 1))).astype(np.int64)
     elif node.kind == NUMBER:
         lo = float(node.min_n) if node.min_n is not None else 0.0
         hi = float(node.max_n) if node.max_n is not None else 1000.0
@@ -152,25 +162,35 @@ def _gen_column(node: SchemaNode, ids: np.ndarray, salt: int, seed: int) -> pd.S
         hi = min(hi, _FLOAT_INF_CLAMP)
         if hi - lo > _FLOAT_RANGE_FALLBACK:
             lo, hi = 0.0, 1000.0
-        out = pd.Series(lo + _u(stream(4)) * (hi - lo))
+        out = lo + _u(stream(4)) * (hi - lo)
     elif node.kind == STRING and node.str_type == STR_ENUM:
-        out = pd.Series(_pick(np.array(sorted(node.variants), dtype=object), stream(5)))
+        out = _pick(np.array(sorted(node.variants), dtype=object), stream(5))
     elif node.kind == STRING and node.str_type in _VECTOR_FORMATS:
-        out = pd.Series(_format_column(node.str_type, stream))
+        out = _format_column(node.str_type, stream)
     else:
         # unknown strings / nested: scalar interpreter, seeded per row
         # id so output is partition-invariant
         bare = node.with_nullable(False)
-        vals = np.empty(n, dtype=object)
+        out = np.empty(n, dtype=object)
         for k in range(n):
             rng = np.random.default_rng((seed << 20) ^ (int(ids[k]) * 2654435761 % 2**63) ^ salt)
-            vals[k] = produce_value(bare, rng)
-        out = pd.Series(vals)
+            out[k] = produce_value(bare, rng)
+    return out, null_mask
 
-    if null_mask is not None:
-        out = out.astype(object)
-        out[null_mask] = None
-    return out
+
+def _arrow_column(node: SchemaNode, vals: np.ndarray, null_mask: Optional[np.ndarray]) -> pa.Array:
+    """One generated column as the Arrow array of
+    :func:`_field_spark_type`; nested values serialise as JSON text."""
+    if node.kind == BOOLEAN:
+        bits = pa.py_buffer(np.packbits(vals, bitorder="little"))
+        arr = pa.Array.from_buffers(pa.bool_(), len(vals), [None, bits])
+    elif node.kind == NUMBER:
+        arr = from_numpy(vals)
+    else:
+        if node.kind in (ARRAY, OBJECT):
+            vals = map(json.dumps, vals)
+        arr = binary_array([v.encode() for v in vals], pa.string())
+    return arr if null_mask is None else with_nulls(arr, null_mask)
 
 
 def _field_spark_type(node: SchemaNode) -> str:
@@ -178,11 +198,21 @@ def _field_spark_type(node: SchemaNode) -> str:
         return "boolean"
     if node.kind == NUMBER:
         return "double" if node.is_float else "long"
-    if node.kind == STRING:
-        return "string"
-    if node.kind == ARRAY or node.kind == OBJECT:
-        return "string"  # nested values serialized as JSON text
-    return "string"
+    return "string"  # strings; nested values serialised as JSON text
+
+
+def _produce_batches(fields: dict[str, SchemaNode], seed: int):
+    """The produce kernel: each batch of row ids (Arrow, one ``id``
+    column) becomes one batch of generated ``fields`` columns."""
+
+    def gen(batches):
+        for batch in batches:
+            ids = values(batch.column(0), np.int64)
+            cols = [_arrow_column(f, *_gen_column(f, ids, salt, seed))
+                    for salt, f in enumerate(fields.values(), 1)]
+            yield pa.RecordBatch.from_arrays(cols, names=list(fields))
+
+    return gen
 
 
 def produce_df(
@@ -203,25 +233,12 @@ def produce_df(
     if n_partitions is None:
         n_partitions = max(spark.sparkContext.defaultParallelism, 1)
 
-    fields = dict(sorted({**node.required, **node.optional}.items()))
-    optional = set(node.optional)
+    fields = {name: f.with_nullable(f.nullable or name in node.optional)
+              for name, f in sorted({**node.required, **node.optional}.items())}
     schema = ", ".join(f"`{name}` {_field_spark_type(f)}" for name, f in fields.items())
-
-    def gen(batches):
-        import json as _json
-
-        for pdf in batches:
-            ids = pdf["id"].to_numpy()
-            out = {}
-            for salt_i, (name, fnode) in enumerate(fields.items()):
-                eff = fnode.with_nullable(fnode.nullable or name in optional)
-                col = _gen_column(eff, ids, salt_i + 1, seed)
-                if fnode.kind in (ARRAY, OBJECT):
-                    col = col.map(lambda v: None if v is None else _json.dumps(v))
-                out[name] = col
-            yield pd.DataFrame(out)
-
-    return spark.range(0, n, numPartitions=n_partitions).mapInPandas(gen, schema)
+    return spark.range(0, n, numPartitions=n_partitions).mapInArrow(
+        _produce_batches(fields, seed), schema
+    )
 
 
 def produce_from_profile(

@@ -21,6 +21,7 @@ from __future__ import annotations
 import pickle
 from collections import Counter
 from dataclasses import dataclass, field
+from datetime import datetime, timedelta
 from typing import Any, Optional
 
 import numpy as np
@@ -346,6 +347,17 @@ class ArrayAcc(ColumnAcc):
         return d
 
 
+_EPOCH = datetime(1970, 1, 1)
+_TICKS_PER_S = {"s": 1, "ms": 10**3, "us": 10**6, "ns": 10**9}
+
+
+def _wall_time(ticks: int, unit: str) -> datetime:
+    """``ticks`` of ``unit`` since the epoch as a naive datetime
+    (nanoseconds floor to microseconds; Spark's timestamps are
+    microseconds)."""
+    return _EPOCH + timedelta(microseconds=ticks * 10**6 // _TICKS_PER_S[unit])
+
+
 class TimestampAcc(ColumnAcc):
     kind = "timestamp"
 
@@ -359,15 +371,13 @@ class TimestampAcc(ColumnAcc):
         if len(v) == 0:
             return
         if pa.types.is_timestamp(v.type):
-            # pandas Timestamps of the session-local wall time, as
-            # Spark's pandas conversion gives them (only this kind of
-            # column loads pandas)
-            import pandas as pd
-
+            # naive datetimes of the session-local wall time; they print
+            # and compare like the pandas Timestamps older pickles hold
+            # (a timestamp scalar's ``as_py`` would import pandas)
             if v.type.tz is not None:
                 v = pc.local_timestamp(v)
             mm = pc.min_max(pc.cast(v, pa.int64()))
-            lo, hi = (pd.Timestamp(mm[k].as_py(), unit=v.type.unit) for k in ("min", "max"))
+            lo, hi = (_wall_time(mm[k].as_py(), v.type.unit) for k in ("min", "max"))
         else:
             mm = pc.min_max(v)
             lo, hi = mm["min"].as_py(), mm["max"].as_py()

@@ -475,16 +475,15 @@ def profile_json_column(
     )
 
     def fn(batches):
-        import pandas as pd
-
         acc = SchemaNode.initial()
         from ..core.infer import merge as node_merge, _infer_inner
 
         n_docs = n_null = n_corrupt = 0
-        for pdf in batches:
-            col = pdf[column]
-            n_null += int(col.isna().sum())
-            for doc_s in col.dropna():
+        for batch in batches:
+            for doc_s in batch.column(0).to_pylist():
+                if doc_s is None:
+                    n_null += 1
+                    continue
                 try:
                     doc = json.loads(doc_s)
                 except (ValueError, TypeError):
@@ -492,16 +491,13 @@ def profile_json_column(
                     continue
                 n_docs += 1
                 acc = node_merge(acc, _infer_inner(doc, opts), opts)
-        yield pd.DataFrame(
-            {
-                "node": [pickle.dumps(acc)],
-                "n_docs": [n_docs],
-                "n_null": [n_null],
-                "n_corrupt": [n_corrupt],
-            }
+        counts = [from_numpy(np.array([c], np.int64)) for c in (n_docs, n_null, n_corrupt)]
+        yield pa.RecordBatch.from_arrays(
+            [binary_array([pickle.dumps(acc)]), *counts],
+            names=["node", "n_docs", "n_null", "n_corrupt"],
         )
 
-    parts = df.select(column).mapInPandas(
+    parts = df.select(column).mapInArrow(
         fn, "node binary, n_docs long, n_null long, n_corrupt long"
     ).collect()
     from ..core.infer import apply_enum, merge as node_merge

@@ -195,7 +195,9 @@ def test_write_partitioned_prunes_directories(spark, tmp_path):
 def test_write_sorted_layout_and_pruning(spark, tmp_path):
     """write_sorted files own disjoint sort-key ranges (footer min/max
     don't overlap) and a range predicate skips non-matching files'
-    row groups entirely."""
+    row groups entirely.  Only the sort key clusters: in rank space
+    (the column's empirical CDF) each file spans ~1/8 of the sort key
+    and nearly all of an independent column."""
     import pandas as pd
     import pyarrow.parquet as pq
     import pytest as _pytest
@@ -226,6 +228,19 @@ def test_write_sorted_layout_and_pruning(spark, tmp_path):
     ranges.sort()
     for (lo1, hi1), (lo2, hi2) in zip(ranges, ranges[1:]):
         assert hi1 < lo2  # disjoint slices of the key space
+
+    def mean_rank_span(col_idx, col_name):
+        sv, spans = np.sort(pdf[col_name].to_numpy()), []
+        for f in files:
+            md = pq.ParquetFile(f).metadata
+            stats = [md.row_group(rg).column(col_idx).statistics for rg in range(md.num_row_groups)]
+            assert md.row_group(0).column(col_idx).path_in_schema == col_name
+            lo, hi = min(st.min for st in stats), max(st.max for st in stats)
+            spans.append((np.searchsorted(sv, hi, "right") - np.searchsorted(sv, lo, "left")) / len(sv))
+        return float(np.mean(spans))
+
+    assert mean_rank_span(0, "score") < 0.15
+    assert mean_rank_span(1, "payload") > 0.8
     # rows survive intact
     back = spark.read.parquet(out)
     assert back.count() == 100_000
@@ -233,82 +248,6 @@ def test_write_sorted_layout_and_pruning(spark, tmp_path):
     assert got == 10
     with _pytest.raises(ValueError, match="non-empty"):
         write_sorted(back, out, [])
-
-
-def test_write_zorder_clusters_both_columns(spark, tmp_path):
-    """Z-order layout gives BOTH interleaved columns per-file locality:
-    the average normalized footer min/max span per file must shrink far
-    below 1.0 for both keys, where a linear sort on the first key
-    leaves the second key's spans at ~full range."""
-    import glob
-
-    import numpy as np
-    import pandas as pd
-    import pyarrow.parquet as pq
-    import pytest as _pytest
-
-    from drivel_spark.io import write_sorted, write_zorder
-
-    rng = np.random.default_rng(7)
-    n = 200_000
-    # independent keys, one heavily skewed (zipf-ish) to exercise the
-    # quantile (not equi-width) bucketing
-    pdf = pd.DataFrame({
-        "x": rng.permutation(n).astype("int64"),
-        "y": np.floor(rng.pareto(1.5, n) * 1000).astype("int64"),
-        "payload": np.arange(n),
-    })
-    df = spark.createDataFrame(pdf, schema="x long, y long, payload long")
-
-    # clustering measured in RANK space (empirical CDF of the column):
-    # heavy-tailed values make value-space normalization meaningless —
-    # one pareto outlier stretches the global range so even an
-    # unclustered file shows a tiny normalized span
-    sorted_vals = {c: np.sort(pdf[c].to_numpy()) for c in ("x", "y")}
-
-    def spans(path, col_idx, col_name):
-        sv, out = sorted_vals[col_name], []
-        for f in sorted(glob.glob(f"{path}/*.parquet")):
-            md = pq.ParquetFile(f).metadata
-            fmin, fmax = None, None
-            for rg in range(md.num_row_groups):
-                c = md.row_group(rg).column(col_idx)
-                assert c.path_in_schema == col_name
-                st = c.statistics
-                fmin = st.min if fmin is None else min(fmin, st.min)
-                fmax = st.max if fmax is None else max(fmax, st.max)
-            r_lo = np.searchsorted(sv, fmin, "left") / len(sv)
-            r_hi = np.searchsorted(sv, fmax, "right") / len(sv)
-            out.append(r_hi - r_lo)
-        return float(np.mean(out))
-
-    zpath, spath = str(tmp_path / "z"), str(tmp_path / "lin")
-    write_zorder(df, zpath, ["x", "y"], bits=8, n_files=16)
-    write_sorted(df, spath, ["x"], n_files=16)
-
-    zx = spans(zpath, 0, "x")
-    zy = spans(zpath, 1, "y")
-    lx = spans(spath, 0, "x")
-    ly = spans(spath, 1, "y")
-
-    # linear sort: x perfectly clustered, y not clustered at all
-    assert lx < 0.15
-    assert ly > 0.8
-    # z-order: BOTH columns clustered well below full rank range
-    assert zx < 0.5, (zx, zy, lx, ly)
-    assert zy < 0.5, (zx, zy, lx, ly)
-
-    # rows survive intact, helper columns dropped
-    back = spark.read.parquet(zpath)
-    assert back.count() == n
-    assert sorted(back.columns) == ["payload", "x", "y"]
-
-    with _pytest.raises(ValueError, match=">= 2 columns"):
-        write_zorder(df, zpath, ["x"])
-    with _pytest.raises(ValueError, match="non-orderable-numeric"):
-        write_zorder(
-            df.withColumn("s", df.x.cast("string")), zpath, ["x", "s"]
-        )
 
 
 def test_local_df_rejects_wrong_arity_rows(spark):

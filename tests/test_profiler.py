@@ -553,3 +553,108 @@ def test_string_accumulator_is_exact():
                    "all_null": STR_UNKNOWN}
     # demoted in the third batch: the fourth batch's emails were never detected
     assert one.cols["email_then_text"].formats_seen == {"email", STR_UNKNOWN}
+
+
+# --- TimestampAcc: datetimes that print as the pandas Timestamps did --------
+
+
+def _pandas_ts_minmax(arr):
+    """The min/max strings an earlier release's ``TimestampAcc`` gave:
+    ``pd.Timestamp(ticks, unit=...)`` of the session-local wall time."""
+    import pyarrow.compute as pc
+
+    if arr.type.tz is not None:
+        arr = pc.local_timestamp(arr)
+    mm = pc.min_max(pc.cast(arr, pa.int64()))
+    return tuple(str(pd.Timestamp(mm[k].as_py(), unit=arr.type.unit)) for k in ("min", "max"))
+
+
+@pytest.mark.parametrize("tz", [None, "America/Los_Angeles"])
+@pytest.mark.parametrize("unit", ["s", "ms", "us"])
+def test_timestamp_acc_summary_matches_pandas_timestamp(unit, tz):
+    """Values before 1970, after 2262 (pandas' nanosecond limit) and
+    with sub-second parts, in two batches and as two merged halves."""
+    from drivel_spark.profiling.accumulator import TimestampAcc
+
+    per_s = {"s": 1, "ms": 10**3, "us": 10**6}[unit]
+    ticks = [[-2 * 10**9 * per_s - 3, None, 1_234_567], [10**11 * per_s + 7, -1, None]]
+    batches = [pa.array(t, pa.timestamp(unit, tz=tz)) for t in ticks]
+    whole = pa.concat_arrays(batches)
+    one, halves = (TimestampAcc("t", "timestamp", ProfilerOptions()) for _ in range(2))
+    for b in batches:
+        one.update(b)
+    halves.update(batches[0])
+    other = TimestampAcc("t", "timestamp", ProfilerOptions())
+    other.update(batches[1])
+    halves.merge(other)
+    want = _pandas_ts_minmax(whole)
+    assert (want[0][:5], want[1][:11]) == ("1906-", "5138-11-16 ")
+    for acc in (one, halves):
+        s = acc.summary()
+        assert (s["min"], s["max"]) == want
+        assert (s["n"], s["n_null"]) == (6, 2)
+
+
+def test_timestamp_profile_under_session_time_zone(spark):
+    """A tz-aware column under a non-UTC session time zone profiles to
+    the session's wall times, as the literals read."""
+    old = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "Asia/Kolkata")
+    try:
+        df = spark.sql(
+            "select timestamp'1969-07-20 20:17:40' as t union all "
+            "select timestamp'5138-11-16 09:46:40.123456' union all "
+            "select cast(null as timestamp) union all "
+            "select timestamp'2001-09-09 01:46:40.5'"
+        )
+        s = profile(df).column("t").summary()
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", old)
+    assert (s["min"], s["max"]) == ("1969-07-20 20:17:40", "5138-11-16 09:46:40.123456")
+    assert s["n_null"] == 1
+
+
+# TimestampAcc("ts", "timestamp", ProfilerOptions()) after one update with
+# [86_400_000_001, None, -10**12, 10**15] us in America/Los_Angeles,
+# pickled by the release that kept pd.Timestamp state
+_OLD_TIMESTAMP_ACC_PICKLE = bytes.fromhex(
+    "800495b3010000000000008c2264726976656c5f737061726b2e70726f66696c"
+    "696e672e616363756d756c61746f72948c0c54696d657374616d704163639493"
+    "942981947d94288c046e616d65948c027473948c056474797065948c0974696d"
+    "657374616d70948c046f7074739468008c0f50726f66696c65724f7074696f6e"
+    "739493942981947d94288c05686c6c5f70944b0c8c056b6c6c5f6b944bc88c0d"
+    "667265715f6361706163697479944b408c0873616d706c655f6b944b408c096d"
+    "61785f6368617273944d00048c0e6465746563745f666f726d61747394888c0a"
+    "696e6665725f656e756d94888c15656e756d5f6d61785f756e697175655f7261"
+    "74696f94473fb999999999999a8c14656e756d5f6d696e5f73616d706c655f73"
+    "697a65944b018c0d746469676573745f64656c7461944b0075628c016e944b04"
+    "8c066e5f6e756c6c944b018c066d696e5f7473948c1e70616e6461732e5f6c69"
+    "62732e74736c6962732e74696d657374616d7073948c135f756e7069636b6c65"
+    "5f74696d657374616d70949394288a0600d0bd7610ff4e4e4b09749452948c06"
+    "6d61785f747394681d288a070004bdc6788d034e4e4b097494529475622e"
+)
+
+
+def test_timestamp_acc_pickles_load_and_merge_across_versions():
+    import pickle
+
+    from drivel_spark.profiling.accumulator import TimestampAcc
+
+    arr = pa.array([86_400_000_001, None, -10**12, 10**15],
+                   pa.timestamp("us", tz="America/Los_Angeles"))
+    fresh = TimestampAcc("ts", "timestamp", ProfilerOptions())
+    fresh.update(arr)
+    old = pickle.loads(_OLD_TIMESTAMP_ACC_PICKLE)
+    assert isinstance(old.min_ts, pd.Timestamp)
+    assert old.summary() == fresh.summary()
+    assert (fresh.summary()["min"], fresh.summary()["max"]) == (
+        "1969-12-20 02:13:20", "2001-09-08 18:46:40")
+    # both ways round, and with an update that moves the max
+    assert old.merge(fresh).summary() == {**fresh.summary(), "n": 8, "n_null": 2, "null_ratio": 0.25}
+    later = pa.array([2 * 10**15], pa.timestamp("us", tz="America/Los_Angeles"))
+    old.update(later)
+    fresh.update(later)
+    assert old.summary()["max"] == fresh.summary()["max"] == "2033-05-17 20:33:20"
+    fresh.merge(pickle.loads(_OLD_TIMESTAMP_ACC_PICKLE))
+    assert (fresh.summary()["min"], fresh.summary()["max"]) == (
+        "1969-12-20 02:13:20", "2033-05-17 20:33:20")

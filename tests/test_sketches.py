@@ -257,14 +257,16 @@ def test_hash64_equals_pandas_hash_array(strs, blobs, mixed, salt):
     floats=st.lists(st.floats(allow_nan=True, allow_infinity=True), max_size=40),
 )
 def test_numeric_hashes_equal_pandas(ints, floats):
-    """int64 arrays hash as ``str(v)`` (the fixtures' uniforms); float64
-    arrays hash by their bits (``NumericAcc``'s HLL feed)."""
+    """int64 arrays hash as ``str(v)`` (the fixtures' uniforms) and by
+    their bits (the produce row key); float64 arrays hash by their bits
+    (``NumericAcc``'s HLL feed)."""
     import pandas as pd
 
     from drivel_spark.sketches.hashing import hash_numeric
 
     i64 = np.array(ints, dtype=np.int64)
     assert np.array_equal(hash64(i64), _pandas_hash(i64))
+    assert np.array_equal(hash_numeric(i64), pd.util.hash_array(i64))
     f64 = np.array(floats, dtype=np.float64)
     assert np.array_equal(hash_numeric(f64), pd.util.hash_array(f64))
 
