@@ -9,12 +9,24 @@ scheduling is Spark's default FIFO: concurrent jobs come from driver
 threads, and FIFO backfills the cores the head job leaves idle.  On
 ``local[...]`` masters the Python workers run from
 ``drivel_spark.pydaemon`` (see there), on the pyspark the driver runs.
+A local JVM this call launches maps Spark's classes from an AppCDS
+archive in a per-user cache, and records that archive when there is
+none yet (``_cds_launch``).
 """
 
 from __future__ import annotations
 
+import atexit
+import hashlib
 import os
 import re
+import shlex
+import shutil
+import subprocess
+import sys
+import time
+import uuid
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -54,6 +66,152 @@ DEFAULT_MAX_PARTITION_BYTES = "33554432"
 PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
+# A new JVM spends most of its start loading and verifying the same
+# ~15,000 classes from Spark's jars; JDK 17 maps them from a dynamic
+# AppCDS archive instead (perfbench on a 4-core host: session 5.2-6.5 s
+# -> 2.6-3.2 s).  The archive lives under CDS_DIR (relative to $HOME),
+# one per java binary and jars dir, 160-200 MB each.
+CDS_DIR = os.path.join(".cache", "drivel-spark", "jvm")
+# a recording JVM writes its tmp file only at exit, in seconds, so an
+# older one was left by a killed run
+CDS_STALE_TMP_S = 600
+# how long the exit hook waits for a recording JVM to write its archive
+CDS_EXIT_WAIT_S = 120
+# a caller flag that already decides class sharing turns the archive off
+_CDS_FLAGS = ("-Xshare", "SharedArchiveFile", "ArchiveClassesAtExit")
+# the launcher puts these on the JVM classpath, maybe as non-empty
+# directories: recording then aborts VM start, and using is refused
+_CLASSPATH_ENV = ("HADOOP_CONF_DIR", "YARN_CONF_DIR", "SPARK_DIST_CLASSPATH",
+                  "SPARK_PREPEND_CLASSES")
+# the JVM logs warnings to stdout, whose last line is a verb's JSON
+# result: the cds tags go to stderr, and a recording run drops its
+# per-class "Skipping ...: Signed JAR" warnings (tag set exactly "cds")
+_CDS_LOG = "-Xlog:cds*=off -Xlog:cds*=warning:stderr"
+_CDS_RECORD_LOG = _CDS_LOG + " -Xlog:cds=error:stderr"
+
+
+def _is_local(master: str | None) -> bool:
+    return bool(master) and re.fullmatch(r"local(\[.+\])?", master) is not None
+
+
+def _java_binary() -> str | None:
+    """The ``java`` Spark's launcher runs: ``$JAVA_HOME/bin/java``, else
+    ``java`` on ``PATH``."""
+    home = os.environ.get("JAVA_HOME")
+    return os.path.join(home, "bin", "java") if home else shutil.which("java")
+
+
+def _cds_key(java: str, jars_dir: str) -> str:
+    """Archive key: the java binary's realpath, size and mtime and every
+    jar's name, size and mtime.  The JVM validates an archive itself; the
+    key keeps two installs from replacing each other's archive."""
+    h = hashlib.sha256()
+    st = os.stat(java)
+    h.update(f"{os.path.realpath(java)}\0{st.st_size}\0{st.st_mtime_ns}\n".encode())
+    for e in sorted(os.scandir(jars_dir), key=lambda e: e.name):
+        st = e.stat()
+        h.update(f"{e.name}\0{st.st_size}\0{st.st_mtime_ns}\n".encode())
+    return h.hexdigest()[:16]
+
+
+def _remove_stale_tmp(cache: str) -> None:
+    """Delete ``*.tmp`` archives killed recorders left behind."""
+    cutoff = time.time() - CDS_STALE_TMP_S
+    for e in os.scandir(cache):
+        try:
+            if e.name.endswith(".tmp") and e.stat().st_mtime < cutoff:
+                os.remove(e.path)
+        except FileNotFoundError:  # another recorder removed it
+            pass
+
+
+def _cds_launch(master: str | None, conf: dict) -> tuple[str, dict, tuple | None] | None:
+    """How to launch the JVM with the class archive: (the driver's java
+    options, the caller's with the archive's appended; env for the
+    launch; (tmp path, archive path) when this JVM records the archive),
+    or None to launch as without it.
+
+    Only a local JVM this call launches gets the archive, and only when
+    the launcher's classpath holds no non-empty directory (see
+    ``_CLASSPATH_ENV``).  The conf dir comes first on that classpath; a
+    dir of ``*.template`` files only, which Spark never reads, is swapped
+    for an empty one."""
+    from pyspark import SparkContext
+    from pyspark.find_spark_home import _find_spark_home
+
+    if (not _is_local(master) or SparkContext._gateway is not None
+            or "PYSPARK_GATEWAY_PORT" in os.environ or "PYSPARK_SUBMIT_ARGS" in os.environ
+            or conf.get("spark.driver.extraClassPath")
+            or any(os.environ.get(k) for k in _CLASSPATH_ENV)
+            or any(f in opts for f in _CDS_FLAGS for opts in (
+                conf.get("spark.driver.extraJavaOptions", ""), os.environ.get("SPARK_SUBMIT_OPTS", "")))):
+        return None
+    spark_home = _find_spark_home()
+    conf_dir = os.environ.get("SPARK_CONF_DIR") or os.path.join(spark_home, "conf")
+    try:
+        conf_files = os.listdir(conf_dir)
+    except OSError:  # no conf dir: nothing on the classpath
+        conf_files = []
+    if any(not f.endswith(".template") for f in conf_files):
+        return None
+    java = _java_binary()
+    if java is None:
+        return None
+    cache = os.path.join(os.path.expanduser("~"), CDS_DIR)
+    empty_conf = os.path.join(cache, "empty-conf")
+    try:
+        os.makedirs(empty_conf, exist_ok=True)
+        if os.listdir(empty_conf):
+            return None
+        archive = os.path.join(cache, f"spark-{_cds_key(java, os.path.join(spark_home, 'jars'))}.jsa")
+        if os.path.exists(archive):
+            opts, record = f"-XX:SharedArchiveFile={shlex.quote(archive)} {_CDS_LOG}", None
+        else:
+            _remove_stale_tmp(cache)
+            # concurrent recorders write their own tmp files; the last rename wins
+            record = (f"{archive}.{os.getpid()}-{uuid.uuid4().hex[:8]}.tmp", archive)
+            opts = f"-XX:ArchiveClassesAtExit={shlex.quote(record[0])} {_CDS_RECORD_LOG}"
+    except OSError as e:
+        print(f"drivel-spark: starting the JVM without a class archive: {e}", file=sys.stderr)
+        return None
+    opts = " ".join(filter(None, (conf.get("spark.driver.extraJavaOptions"), opts)))
+    return opts, ({"SPARK_CONF_DIR": empty_conf} if conf_files else {}), record
+
+
+@contextmanager
+def _environ(env: dict):
+    """``os.environ`` updated with ``env`` inside the block only."""
+    saved = {k: os.environ.get(k) for k in env}
+    os.environ.update(env)
+    try:
+        yield
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                os.environ.pop(k, None)
+            else:
+                os.environ[k] = v
+
+
+def _publish_at_exit(proc: subprocess.Popen, tmp: str, archive: str) -> None:
+    """At interpreter exit, end the recording JVM (it exits when its
+    stdin closes) and wait while it writes ``tmp``; then rename that onto
+    ``archive`` if the JVM exited cleanly, so a reader only ever sees a
+    whole file.  ``proc`` is kept here because callers may drop the
+    gateway that holds it."""
+    def publish():
+        if proc.stdin:
+            proc.stdin.close()
+        try:
+            code = proc.wait(timeout=CDS_EXIT_WAIT_S)
+        except subprocess.TimeoutExpired:
+            return
+        if code == 0 and os.path.exists(tmp):
+            os.replace(tmp, archive)
+
+    atexit.register(publish)
+
+
 def _submitted_conf() -> dict:
     """The conf of the JVM spark-submit already started, or {} when no
     JVM is up yet (``PYSPARK_SUBMIT_ARGS`` launches it later)."""
@@ -71,7 +229,7 @@ def _daemon_conf(conf: dict) -> dict:
     in front of any executor PYTHONPATH ``conf`` already sets.
     Executors elsewhere may not have this package before a task ships
     it, so any other master keeps Spark's stock daemon."""
-    if not re.fullmatch(r"local(\[.+\])?", conf.get("spark.master", "")):
+    if not _is_local(conf.get("spark.master")):
         return {}
     pythonpath = [PACKAGE_ROOT, conf.get("spark.executorEnv.PYTHONPATH", "")]
     return {
@@ -126,4 +284,15 @@ def build_session(
         builder = builder.config(k, v)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    cds = _cds_launch(master, extra_conf or {})
+    if cds is None:
+        return builder.getOrCreate()
+    opts, env, record = cds
+    builder = builder.config("spark.driver.extraJavaOptions", opts)
+    with _environ(env):
+        spark = builder.getOrCreate()
+    if record is not None:
+        from pyspark import SparkContext
+
+        _publish_at_exit(SparkContext._gateway.proc, *record)
+    return spark

@@ -21,7 +21,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..produce.audio import wav_decode, wav_encode
-from ..sketches.hashing import hash64
 
 AUDIO_FEATURES_SCHEMA = (
     "n_samples long, sr_hz int, duration_ms double, rms double, peak double, "
@@ -2164,7 +2163,7 @@ def _fake_embedding_batch(payload: pd.Series, dim: int) -> list:
         if b is None:
             out.append(None)
             continue
-        h = int(hash64(np.array([bytes(b)], dtype=object))[0])
+        h = int(pd.util.hash_array(np.array([bytes(b)], dtype=object), categorize=False)[0])
         rng = np.random.default_rng(h % 2**63)
         out.append(rng.random(dim).astype(np.float32).tolist())
     return out
@@ -2297,7 +2296,7 @@ def extract_image_features(
                     for k, v in zip(("mean_r", "mean_g", "mean_b"), means):
                         cols[k].append(float(v))
                 else:
-                    h = int(hash64(np.array([bytes(b)], dtype=object))[0])
+                    h = int(pd.util.hash_array(np.array([bytes(b)], dtype=object), categorize=False)[0])
                     rng = np.random.default_rng(h % 2**63)
                     cols["width"].append(int(rng.integers(16, 257)))
                     cols["height"].append(int(rng.integers(16, 257)))
@@ -2511,7 +2510,7 @@ def audio_window_hash_series(
                     poss.append(p * 1000 // sr)
                     wins.append(sr_prefix + pcm[p : p + win].tobytes())
                     p += hop
-            h = hash64(np.array(wins, dtype=object)) & np.uint64(
+            h = pd.util.hash_array(np.array(wins, dtype=object), categorize=False) & np.uint64(
                 0x7FFFFFFFFFFFFFFF
             ) if wins else np.empty(0, dtype=np.uint64)
             yield pd.DataFrame(

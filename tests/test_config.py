@@ -5,6 +5,7 @@ import os
 import shutil
 import subprocess
 import sys
+import time
 import zipfile
 
 import pytest
@@ -159,3 +160,141 @@ def test_spark_submit_py_files_from_another_directory(tmp_path):
     assert got["pkg"].startswith(str(bundle) + os.sep)
     assert os.path.isfile(got["pyspark"]), got["pyspark"]
     assert got["extra"] == "from libs"
+
+
+# --- the JVM class archive (AppCDS) ----------------------------------------
+
+_CDS_SCRIPT = """
+import json, sys
+from pyspark import SparkContext
+from drivel_spark.config import build_session
+spark = build_session("cds-test", cores=2, extra_conf={"spark.ui.showConsoleProgress": "false"})
+spark.sparkContext.setLogLevel("ERROR")
+assert spark.range(1000).count() == 1000
+with open(f"/proc/{SparkContext._gateway.proc.pid}/maps") as fh:
+    mapped = sorted({line.split()[-1] for line in fh if line.rstrip().endswith(".jsa")})
+conf = spark.sparkContext.getConf()
+opts = conf.get("spark.driver.extraJavaOptions") or ""
+print(json.dumps({"mapped": mapped, "marker": conf.get("spark.drivel.marker"),
+                  "cds": [o for o in opts.split() if "Archive" in o or o.startswith(("-Xshare", "-Xlog"))]}))
+spark.stop()
+"""
+
+
+def _cds_session(home, conf_dir):
+    """One session in a fresh interpreter whose ``~`` is ``home``: the
+    user's own archive cache is never touched."""
+    from drivel_spark.config import _CLASSPATH_ENV, PACKAGE_ROOT
+
+    env = {k: v for k, v in os.environ.items()
+           if k not in _CLASSPATH_ENV + ("PYSPARK_GATEWAY_PORT", "PYSPARK_SUBMIT_ARGS")}
+    env.update(HOME=str(home), SPARK_CONF_DIR=str(conf_dir), PYTHONPATH=PACKAGE_ROOT)
+    proc = subprocess.run([sys.executable, "-c", _CDS_SCRIPT], env=env, cwd=home,
+                          capture_output=True, text=True, timeout=300)
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    return proc
+
+
+def _conf_dir(path, files):
+    path.mkdir()
+    for name, text in files.items():
+        (path / name).write_text(text)
+    return path
+
+
+def _cache(home):
+    return home / ".cache" / "drivel-spark" / "jvm"
+
+
+def test_class_archive_recorded_once_then_mapped(tmp_path):
+    """The first session records the archive at exit and publishes one
+    ``spark-<key>.jsa``; the next session maps it.  The conf dir holds
+    only a template, so both launch with an empty one instead."""
+    conf_dir = _conf_dir(tmp_path / "conf", {"spark-defaults.conf.template": "spark.x y\n"})
+    first = json.loads(_cds_session(tmp_path, conf_dir).stdout.strip().splitlines()[-1])
+    assert any(o.startswith("-XX:ArchiveClassesAtExit=") for o in first["cds"]), first
+    files = sorted(os.listdir(_cache(tmp_path)))
+    jsa = [f for f in files if f.endswith(".jsa")]
+    assert len(jsa) == 1 and jsa[0].startswith("spark-"), files
+    assert not [f for f in files if f.endswith(".tmp")], files
+    second = json.loads(_cds_session(tmp_path, conf_dir).stdout.strip().splitlines()[-1])
+    archive = str(_cache(tmp_path) / jsa[0])
+    assert f"-XX:SharedArchiveFile={archive}" in second["cds"], second
+    assert archive in second["mapped"], second
+    os.remove(archive)  # 160+ MB
+
+
+def test_class_archive_never_hides_a_real_conf_dir(tmp_path):
+    """A conf dir holding a real ``spark-defaults.conf``: no archive flag
+    and no cache, and the session sees the conf's marker."""
+    conf_dir = _conf_dir(tmp_path / "conf", {"spark-defaults.conf": "spark.drivel.marker seen\n"})
+    got = json.loads(_cds_session(tmp_path, conf_dir).stdout.strip().splitlines()[-1])
+    assert got["cds"] == [] and got["marker"] == "seen", got
+    assert not _cache(tmp_path).exists()
+
+
+def test_refused_class_archive_warns_on_stderr_only(tmp_path):
+    """An archive the JVM cannot use (recorded for another classpath)
+    sits at the archive path: the JVM's warning goes to stderr, and
+    stdout holds only the script's own line."""
+    import glob
+
+    from pyspark.find_spark_home import _find_spark_home
+
+    from drivel_spark.config import _cds_key, _java_binary
+
+    jars = os.path.join(_find_spark_home(), "jars")
+    archive = _cache(tmp_path) / f"spark-{_cds_key(_java_binary(), jars)}.jsa"
+    archive.parent.mkdir(parents=True)
+    subprocess.run([_java_binary(), f"-XX:ArchiveClassesAtExit={archive}", "-Xlog:cds=off",
+                    "-cp", glob.glob(os.path.join(jars, "spark-launcher*.jar"))[0],
+                    "org.apache.spark.launcher.Main"], capture_output=True, timeout=120)
+    assert archive.exists()
+    proc = _cds_session(tmp_path, _conf_dir(tmp_path / "conf", {}))
+    lines = proc.stdout.strip().splitlines()
+    assert len(lines) == 1, proc.stdout
+    got = json.loads(lines[0])
+    assert any(o.startswith("-XX:SharedArchiveFile=") for o in got["cds"]), got
+    assert str(archive) not in got["mapped"], got
+    assert "[warning][cds" in proc.stderr, proc.stderr[-4000:]
+
+
+def test_class_archive_key_and_stale_tmp_cleanup(tmp_path, monkeypatch):
+    """The key follows every jar's size and mtime; a recording session
+    removes ``.tmp`` archives past the cut-off and keeps fresh ones."""
+    from pyspark import SparkContext
+
+    from drivel_spark.config import CDS_STALE_TMP_S, _CLASSPATH_ENV, _cds_key, _cds_launch, _java_binary
+
+    jars = tmp_path / "jars"
+    jars.mkdir()
+    for name in ("a.jar", "b.jar"):
+        (jars / name).write_bytes(b"x" * 10)
+    java = _java_binary()
+    key = _cds_key(java, str(jars))
+    assert _cds_key(java, str(jars)) == key
+    (jars / "b.jar").write_bytes(b"x" * 11)
+    sized = _cds_key(java, str(jars))
+    os.utime(jars / "b.jar", (1e9, 1e9))
+    assert len({key, sized, _cds_key(java, str(jars))}) == 3
+
+    home = tmp_path / "home"
+    cache = _cache(home)
+    cache.mkdir(parents=True)
+    now = time.time()
+    for name, age in (("old.jsa.1.tmp", CDS_STALE_TMP_S + 60), ("fresh.jsa.2.tmp", 60)):
+        (cache / name).write_bytes(b"")
+        os.utime(cache / name, (now - age, now - age))
+    monkeypatch.setenv("HOME", str(home))
+    monkeypatch.setenv("SPARK_CONF_DIR", str(_conf_dir(tmp_path / "conf", {})))
+    for k in _CLASSPATH_ENV + ("PYSPARK_GATEWAY_PORT", "PYSPARK_SUBMIT_ARGS", "SPARK_SUBMIT_OPTS"):
+        monkeypatch.delenv(k, raising=False)
+    monkeypatch.setattr(SparkContext, "_gateway", None)
+    opts, env, (tmp, archive) = _cds_launch("local[2]", {})
+    assert f"-XX:ArchiveClassesAtExit={tmp}" in opts.split()
+    assert env == {} and tmp.endswith(".tmp") and not os.path.exists(archive)
+    assert sorted(os.listdir(cache)) == ["empty-conf", "fresh.jsa.2.tmp"]
+    opts, _, _ = _cds_launch("local[2]", {"spark.driver.extraJavaOptions": "-Dcaller=1"})
+    assert opts.startswith("-Dcaller=1 -XX:ArchiveClassesAtExit=")
+    assert _cds_launch("yarn", {}) is None
+    assert _cds_launch("local[2]", {"spark.driver.extraJavaOptions": "-Xshare:off"}) is None

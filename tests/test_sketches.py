@@ -1,5 +1,7 @@
 """Sketch accuracy + merge-invariance tests."""
 
+import functools
+
 import numpy as np
 import pyarrow as pa
 import pytest
@@ -223,6 +225,17 @@ def _pandas_hash(values):
     return pd.util.hash_array(np.asarray(values, dtype=object), categorize=False)
 
 
+@functools.cache
+def _long_values_hash_equal():
+    """An 8 KB and a 100 KB value and 200 8-KB windows: the payload and
+    audio-window hashes in ops/multimodal.py call pandas, which must stay
+    bit-identical to hash64.  Fixed values, so checked once."""
+    rng = np.random.default_rng(20261019)
+    windows = [rng.bytes(8192) for _ in range(200)]
+    return all(np.array_equal(hash64(v), _pandas_hash(v))
+               for v in ([rng.bytes(8192)], [rng.bytes(100_000)], windows))
+
+
 @seed(20261019)
 @_HASH_SETTINGS
 @given(
@@ -248,6 +261,7 @@ def test_hash64_equals_pandas_hash_array(strs, blobs, mixed, salt):
     assert np.array_equal(hash64(arr), _pandas_hash(strs))
     assert np.array_equal(hash64(arr.slice(1)), _pandas_hash(strs[1:]))
     assert np.array_equal(hash64(pa.array(blobs, pa.binary())), _pandas_hash(blobs))
+    assert _long_values_hash_equal()
 
 
 @seed(20261019)
