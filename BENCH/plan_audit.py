@@ -33,6 +33,17 @@ def fmt(df) -> str:
     return buf.getvalue()
 
 
+def row_agg(df, constraints, scope, keep=None):
+    """validate()'s per-scope aggregate over the row flags (without the
+    flags cache), run once so AQE finalizes (isFinalPlan=true)."""
+    from drivel_spark.constraints.validate import flag_rows, row_violation_aggs
+
+    flagged = flag_rows(df, constraints, scope, keep or df.columns)
+    agg = flagged.groupBy("__scope").agg(*row_violation_aggs(constraints))
+    agg.collect()
+    return agg
+
+
 CHECKS = {
     "column pruning (ReadSchema only needs profiled cols)": lambda p, want: all(
         w in p for w in want
@@ -70,16 +81,13 @@ def main() -> None:
     )
 
     # 2. one-scan constraint pass: predicates as JVM columns, single agg
-    from drivel_spark.constraints import Enum, Range, validate
+    from drivel_spark.constraints import Enum, Range
 
-    res = validate(
+    p = fmt(row_agg(
         li,
         [Range("qty", "l_quantity", 1, 50), Enum("rf", "l_returnflag", ("A", "N", "R"))],
-        scope=F.pmod(F.xxhash64("l_orderkey"), F.lit(16)).cast("long"),
-        cache_flags=False,
-    )
-    res.agg.collect()  # run once so AQE finalizes (isFinalPlan=true)
-    p = fmt(res.agg)
+        F.pmod(F.xxhash64("l_orderkey"), F.lit(16)).cast("long"),
+    ))
     sections.append(
         (
             "Pass-2 one-scan constraint aggregation (pass/fail rows)",
@@ -828,7 +836,7 @@ def main() -> None:
     # projection — still zero Python, partial+final agg
     from drivel_spark.constraints import Conditional
 
-    res = validate(
+    p = fmt(row_agg(
         li,
         [
             Conditional(
@@ -838,10 +846,8 @@ def main() -> None:
                 inner=Range("_", "l_quantity", None, 40),
             )
         ],
-        scope=F.pmod(F.xxhash64("l_orderkey"), F.lit(16)).cast("long"),
-        cache_flags=False,
-    )
-    p = fmt(res.agg)
+        F.pmod(F.xxhash64("l_orderkey"), F.lit(16)).cast("long"),
+    ))
     sections.append(
         (
             "Conditional constraint pass (implication as one boolean)",
@@ -1497,15 +1503,15 @@ def main() -> None:
 
     # 49. delta validation row pass: the dirty-scope filter must apply
     # BEFORE the Arrow decode stage, so Python cost scales with churn
-    from drivel_spark.constraints import RowPredicate, validate
+    from drivel_spark.constraints import RowPredicate
     from drivel_spark.constraints.delta import scope_of
 
     import pandas as _pd
 
     def _fake_decode(it):
-        # must return EXACTLY the declared schema columns: validate()
-        # now executes the per-scope aggregation eagerly (r06), so a
-        # sloppy fixture frame fails at runtime, not just in the plan
+        # must return EXACTLY the declared schema columns: row_agg
+        # executes the per-scope aggregation, so a sloppy fixture frame
+        # fails at runtime, not just in the plan
         for pdf in it:
             yield _pd.DataFrame(
                 {
@@ -1519,14 +1525,12 @@ def main() -> None:
     slice_df = orders.filter(s.isin([1, 2, 3])).mapInPandas(
         _fake_decode, "o_orderkey long, o_totalprice double, ok boolean"
     )
-    res = validate(
+    p = fmt(row_agg(
         slice_df,
         [RowPredicate("ok", "ok", F.col("ok"))],
-        scope=F.pmod(F.col("o_orderkey"), F.lit(16)).cast("long"),
-        cache_flags=False,
-        keep_columns=["o_orderkey"],
-    )
-    p = fmt(res.agg)
+        F.pmod(F.col("o_orderkey"), F.lit(16)).cast("long"),
+        keep=["o_orderkey"],
+    ))
     m_filter = re.search(r"\((\d+)\) Filter", p)
     m_py = re.search(r"\((\d+)\) MapInPandas", p)
     ordered = bool(m_filter and m_py and int(m_filter.group(1)) < int(m_py.group(1)))

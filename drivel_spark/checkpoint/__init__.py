@@ -1,6 +1,6 @@
 """Resumable runs: per-file lineage commit table + resumable profiling."""
 
-from .runner import resumable_profile, resumable_row_validation, resumable_screen
+from .runner import resumable_profile, resumable_screen
 from .store import CheckpointStore, make_commit_row
 
-__all__ = ["CheckpointStore", "make_commit_row", "resumable_profile", "resumable_row_validation", "resumable_screen"]
+__all__ = ["CheckpointStore", "make_commit_row", "resumable_profile", "resumable_screen"]

@@ -1,9 +1,9 @@
 """Resumable runs: per-file units + a commit table, one protocol.
 
-The three runners — :func:`resumable_profile`,
-:func:`resumable_row_validation` and :func:`resumable_screen` — share
-one resume protocol, :func:`_resume` (north_rule: "resumable from
-checkpoint with per-partition lineage + metrics"):
+The two runners — :func:`resumable_profile` and
+:func:`resumable_screen` — share one resume protocol, :func:`_resume`
+(north_rule: "resumable from checkpoint with per-partition lineage +
+metrics"):
 
 1. enumerate the table's input files (the lineage units) and derive
    the snapshot id from them;
@@ -25,9 +25,6 @@ several files into one partition or splits one file across
 partitions; the driver folds them into one accumulator per file
 (``fold_keyed``): there are about as many partials as input splits,
 too few to pay for a shuffle and a merge task.
-The row-validation runner folds its per-file counts through the batch
-engine's report builder (constraints/validate.py), so it returns the
-batch engine's report frame.
 """
 
 from __future__ import annotations
@@ -59,7 +56,6 @@ def _resume(
     table_path: str,
     store: CheckpointStore,
     run: str,
-    input_snapshot: Optional[str],
     compute: Callable[[DataFrame], tuple[dict, tuple[bytes, dict]]],
 ) -> tuple[dict[str, bytes], dict]:
     """The resume protocol of the module docstring.  ``compute`` gets
@@ -69,13 +65,21 @@ def _resume(
     blob}`` in unit order and the resume stats."""
     full = spark.read.parquet(table_path)
     units = sorted(full.inputFiles())
-    snapshot = input_snapshot or _snapshot_id(units)
+    snapshot = _snapshot_id(units)
 
     done = store.committed(run, snapshot)
     done_units = set(done["unit"]) if not done.empty else set()
     todo = [u for u in units if u not in done_units]
     if todo:
-        results, empty = compute(spark.read.schema(full.schema).parquet(*todo))
+        reader = spark.read.schema(full.schema)
+        sc = spark.sparkContext
+        root = sc._jvm.org.apache.hadoop.fs.Path(table_path)
+        if root.getFileSystem(sc._jsc.hadoopConfiguration()).isDirectory(root):
+            # a partitioned table's Hive columns come from the paths
+            # below the table root; without it they read as NULL (a
+            # file or a glob is no directory, and reads as before)
+            reader = reader.option("basePath", table_path)
+        results, empty = compute(reader.parquet(*todo))
         store.append(
             [make_commit_row(run, u, snapshot, *results.get(u, empty)) for u in todo]
         )
@@ -102,7 +106,6 @@ def resumable_profile(
     table_path: str,
     store: CheckpointStore,
     run_id: str,
-    input_snapshot: Optional[str] = None,
     columns: Optional[list[str]] = None,
     opts: ProfilerOptions = ProfilerOptions(),
 ) -> tuple[TableProfile, dict]:
@@ -128,78 +131,8 @@ def resumable_profile(
         metrics = {"n_rows": 0, "n_null": {c: 0 for c in empty.cols}}
         return results, (empty.to_bytes(), metrics)
 
-    blobs, stats = _resume(spark, table_path, store, run_id, input_snapshot, compute)
+    blobs, stats = _resume(spark, table_path, store, run_id, compute)
     return TableProfile(fold_accumulators(blobs.values()), opts), stats
-
-
-def resumable_row_validation(
-    spark: SparkSession,
-    table_path: str,
-    store: CheckpointStore,
-    run_id: str,
-    constraints: list,
-    scope,
-    input_snapshot: Optional[str] = None,
-) -> tuple[pd.DataFrame, dict]:
-    """Pass-2 row constraints, resumable with the same per-file unit
-    model as :func:`resumable_profile` (north_rule: "each partition's
-    result commits with lineage + metrics ... so interrupted runs
-    resume without recomputation").
-
-    Per uncommitted file: evaluate every row-level predicate once and
-    reduce to a per-(file, scope) count table — (n_rows, one violation
-    counter per constraint, rows failing ≥1) — committed to the store
-    as that file's blob.  Per-scope pass/fail totals are sums over
-    file partials, so the merged report is IDENTICAL to the one-pass
-    batch engine's row-level rows (pinned by tests), and a restart
-    reads only the files the commit table hasn't seen — skipped files
-    are pruned at plan time, no wasted IO.
-
-    ``scope`` must be a layout-stable Column (e.g. pmod(xxhash64(id),
-    n_scopes)); physical partition ids would not survive the per-file
-    re-scan.  The file partials fold through the batch engine's own
-    report builder (constraints/validate.py ``flag_rows``,
-    ``row_violation_aggs``, ``passfail_frame``), so the returned
-    (report frame, stats dict) holds exactly ``validate(...)
-    .passfail_pdf()`` of the same row constraints: same rows, order
-    and dtypes.
-    """
-    from ..constraints.validate import flag_rows, passfail_frame, row_violation_aggs
-
-    row_cs = [c for c in constraints if c.is_row_level]
-    if not row_cs:
-        raise ValueError("need at least one row-level constraint")
-
-    def compute(df):
-        agg = (
-            flag_rows(df, row_cs, scope, [F.input_file_name().alias("__unit")])
-            .groupBy("__unit", "__scope")
-            .agg(*row_violation_aggs(row_cs))
-            .toPandas()
-        )
-        results = {}
-        for unit, grp in agg.groupby("__unit", sort=False):
-            blob = pickle.dumps(
-                grp.drop(columns="__unit").reset_index(drop=True), protocol=4
-            )
-            metrics = {
-                "n_rows": int(grp["n_rows"].sum()),
-                "n_any_violation": int(grp["__v_any"].sum()),
-            }
-            results[unit] = (blob, metrics)
-        empty = pickle.dumps(
-            agg.drop(columns="__unit").iloc[0:0].reset_index(drop=True), protocol=4
-        )
-        return results, (empty, {"n_rows": 0, "n_any_violation": 0})
-
-    blobs, stats = _resume(
-        spark, table_path, store, f"{run_id}:rowpf", input_snapshot, compute
-    )
-    merged = pd.concat([pickle.loads(b) for b in blobs.values()], ignore_index=True)
-    # dropna=False keeps a NULL scope's group, so passfail_frame refuses
-    # it instead of groupby silently dropping (undercounting) its rows
-    wide = merged.groupby("__scope", as_index=False, dropna=False).sum()
-    return passfail_frame(wide, [c.name for c in row_cs], scope), stats
 
 
 def resumable_screen(
@@ -208,7 +141,6 @@ def resumable_screen(
     store: CheckpointStore,
     run_id: str,
     kinds: Optional[list[str]] = None,
-    input_snapshot: Optional[str] = None,
 ) -> tuple[pd.DataFrame, dict]:
     """Fused audio-QA screening (ops/multimodal.py screen_report),
     resumable with the same per-file unit model as
@@ -260,7 +192,7 @@ def resumable_screen(
         return results, empty
 
     run = f"{run_id}:screen[{','.join(sorted(kinds))}]"
-    blobs, stats = _resume(spark, table_path, store, run, input_snapshot, compute)
+    blobs, stats = _resume(spark, table_path, store, run, compute)
     parts = [pickle.loads(b) for b in blobs.values()]
     totals = pd.DataFrame(
         [

@@ -22,6 +22,7 @@ import os
 import re
 import shlex
 import shutil
+import struct
 import subprocess
 import sys
 import time
@@ -88,6 +89,10 @@ _CLASSPATH_ENV = ("HADOOP_CONF_DIR", "YARN_CONF_DIR", "SPARK_DIST_CLASSPATH",
 # per-class "Skipping ...: Signed JAR" warnings (tag set exactly "cds")
 _CDS_LOG = "-Xlog:cds*=off -Xlog:cds*=warning:stderr"
 _CDS_RECORD_LOG = _CDS_LOG + " -Xlog:cds=error:stderr"
+# JDK 17's dynamic archive header: magic (offset 0) and version (8),
+# then 7 region records of 72 bytes from offset 40, each starting with
+# the region's file offset, a u64 and its used size (little-endian u64)
+_CDS_MAGIC, _CDS_VERSION, _CDS_REGIONS = 0xF00BABA8, 11, 7
 
 
 def _is_local(master: str | None) -> bool:
@@ -112,6 +117,21 @@ def _cds_key(java: str, jars_dir: str) -> str:
         st = e.stat()
         h.update(f"{e.name}\0{st.st_size}\0{st.st_mtime_ns}\n".encode())
     return h.hexdigest()[:16]
+
+
+def _archive_truncated(path: str) -> bool:
+    """Whether the JDK 17 dynamic archive at ``path`` is shorter than its
+    header's regions; JDK 17.0.20 dies with SIGBUS mapping one.  Another
+    magic or version is left to the JVM to judge."""
+    with open(path, "rb") as fh:
+        head = fh.read(4096)
+        size = os.fstat(fh.fileno()).st_size
+    if len(head) < 12 or struct.unpack_from("<I4xI", head) != (_CDS_MAGIC, _CDS_VERSION):
+        return False
+    if len(head) < 40 + 72 * _CDS_REGIONS:  # the header itself is cut
+        return True
+    regions = (struct.unpack_from("<3Q", head, 40 + 72 * i) for i in range(_CDS_REGIONS))
+    return size < max(offset + used for offset, _, used in regions)
 
 
 def _remove_stale_tmp(cache: str) -> None:
@@ -164,6 +184,9 @@ def _cds_launch(master: str | None, conf: dict) -> tuple[str, dict, tuple | None
         if os.listdir(empty_conf):
             return None
         archive = os.path.join(cache, f"spark-{_cds_key(java, os.path.join(spark_home, 'jars'))}.jsa")
+        if os.path.exists(archive) and _archive_truncated(archive):
+            print(f"drivel-spark: removing a truncated class archive: {archive}", file=sys.stderr)
+            os.remove(archive)
         if os.path.exists(archive):
             opts, record = f"-XX:SharedArchiveFile={shlex.quote(archive)} {_CDS_LOG}", None
         else:

@@ -19,54 +19,11 @@ from urllib.parse import quote, unquote
 import numpy as np
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    BooleanType,
-    DoubleType,
-    IntegerType,
-    LongType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import DoubleType, StructField, StructType
 
 from ..arrow_np import from_numpy, values
 from ..produce.audio import snr_vs_synth, wav_decode
 from .spec import Constraint
-
-_DECODE_SCHEMA = StructType(
-    [
-        StructField("wav_ok", BooleanType()),
-        StructField("wav_sr", IntegerType()),
-        StructField("wav_n_samples", LongType()),
-    ]
-)
-
-
-def _decode_meta_udf():
-    import pandas as pd
-
-    @F.pandas_udf(_DECODE_SCHEMA)
-    def decode_meta(payload: pd.Series) -> pd.DataFrame:
-        ok, srs, ns = [], [], []
-        for b in payload:
-            if b is None:
-                ok.append(False), srs.append(None), ns.append(None)
-                continue
-            try:
-                pcm, sr = wav_decode(bytes(b))
-                ok.append(True), srs.append(sr), ns.append(len(pcm))
-            except ValueError:
-                ok.append(False), srs.append(None), ns.append(None)
-        return pd.DataFrame({"wav_ok": ok, "wav_sr": srs, "wav_n_samples": ns})
-
-    return decode_meta
-
-
-def with_decoded_meta(df: DataFrame, bytes_col: str = "bytes") -> DataFrame:
-    """Adds wav_ok / wav_sr / wav_n_samples columns (batch-vectorized)."""
-    return df.withColumn("__wav", _decode_meta_udf()(F.col(bytes_col))).select(
-        "*", "__wav.wav_ok", "__wav.wav_sr", "__wav.wav_n_samples"
-    ).drop("__wav")
-
 
 def make_snr_udf(seed: int = 42, audio_cap_ms: int = 2000,
                  sr_range: tuple[int, int] = (4000, 48000)):

@@ -70,15 +70,12 @@ class ValidationResult:
     returns: ``passfail_pdf()`` is that pandas frame (PASSFAIL_COLS,
     sorted by constraint, partition_id) and ``passfail`` is the same
     rows as an Arrow local relation, so reading or writing it never
-    re-runs the aggregation.  ``agg`` is the per-scope aggregate plan
-    behind the row-level rows (None without row constraints), kept for
-    plan audits."""
+    re-runs the aggregation."""
 
     passfail: DataFrame
     violations: DataFrame  # input rows + failed: array<string>
     dataset: list[dict[str, Any]] = dc_field(default_factory=list)
     violation_tables: dict[str, DataFrame] = dc_field(default_factory=dict)
-    agg: Optional[DataFrame] = None
     _pdf: Any = None  # the report frame passfail_pdf() returns
 
     def all_passed(self) -> bool:
@@ -174,7 +171,7 @@ def passfail_digest(pdf) -> str:
 def flag_rows(df: DataFrame, row_cs: list, scope: Column, keep=()) -> DataFrame:
     """``keep``, the scope as ``__scope`` and one boolean flag column per
     row constraint (``__p_i``, true = passed): the projection every
-    row-level engine (batch, stream, resumable) aggregates."""
+    row-level engine (batch and stream) aggregates."""
     return df.select(
         *keep,
         scope.alias("__scope"),
@@ -249,12 +246,13 @@ def validate(
     scope_col = scope if scope is not None else F.spark_partition_id()
 
     # ---- one-scan row-level evaluation ----------------------------------
-    # Every predicate (including expensive pandas-UDF ones like the
-    # audio-SNR check) is evaluated EXACTLY ONCE: the narrow flagged
-    # projection (kept columns + scope + one boolean per constraint) is
-    # persisted, and both the pass/fail aggregation and the violations
-    # filter read it.  At cluster scale this intermediate would be a
-    # written table; MEMORY_AND_DISK is the local analog.
+    # Every predicate is evaluated EXACTLY ONCE (the audio-SNR check
+    # reads a score that audio_row_source's mapInArrow decode computed
+    # upstream): the narrow flagged projection (kept columns + scope +
+    # one boolean per constraint) is persisted, and both the pass/fail
+    # aggregation and the violations filter read it.  At cluster scale
+    # this intermediate would be a written table; MEMORY_AND_DISK is
+    # the local analog.
     if row_cs:
         keep = keep_columns or df.columns
         flagged = flag_rows(df, row_cs, scope_col, keep)
@@ -311,7 +309,6 @@ def validate(
         violations,
         [res for res, _ in checked],
         {c.name: vtab for c, (_, vtab) in zip(ds_cs, checked) if vtab is not None},
-        agg=agg,
         _pdf=pdf,
     )
 

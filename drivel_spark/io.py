@@ -12,14 +12,14 @@ code change.
 
 Iceberg-specific scale features the engine relies on when present:
 
-* snapshot ids — the checkpoint store keys resume lineage on an input
-  snapshot fingerprint; with Iceberg this is the table's
-  ``snapshot_id()`` instead of the file-listing digest used for
-  parquet (drivel_spark/checkpoint/store.py);
 * partition pruning + column pruning via DSv2 pushdown (identical to
   the parquet path — Catalyst handles both);
 * time travel (``VERSION AS OF``) for drift baselines pinned to a
   snapshot.
+
+Resumable runs (drivel_spark/checkpoint/runner.py) take parquet paths
+only.  They key their commits on a digest of the table's sorted input
+file names, not on a catalog snapshot id.
 """
 
 from __future__ import annotations
@@ -126,34 +126,6 @@ def write_partitioned(
         df.write.mode(mode).partitionBy(*partition_cols).saveAsTable(ref)
         return
     df.write.mode(mode).partitionBy(*partition_cols).parquet(ref)
-
-
-def snapshot_fingerprint(spark: SparkSession, ref: str) -> str:
-    """Stable input-lineage fingerprint for checkpoint/resume.
-
-    Iceberg: the current snapshot id (exact, transaction-consistent).
-    Parquet path: a digest of the sorted (file, size, mtime) listing —
-    same contract, weaker guarantee (documented in checkpoint/store).
-    """
-    import hashlib
-
-    if is_table_ref(ref):
-        tbl = ref[len("iceberg:"):] if ref.startswith("iceberg:") else ref
-        row = spark.sql(
-            f"SELECT snapshot_id FROM {tbl}.snapshots ORDER BY committed_at DESC LIMIT 1"
-        ).collect()
-        return str(row[0][0]) if row else "empty"
-    sc = spark.sparkContext
-    conf = sc._jsc.hadoopConfiguration()
-    path = sc._jvm.org.apache.hadoop.fs.Path(ref)
-    fs = path.getFileSystem(conf)
-    entries = []
-    it = fs.listFiles(path, True)
-    while it.hasNext():
-        st = it.next()
-        entries.append(f"{st.getPath()}|{st.getLen()}|{st.getModificationTime()}")
-    h = hashlib.sha256("\n".join(sorted(entries)).encode()).hexdigest()
-    return h[:16]
 
 
 def write_sorted(

@@ -78,6 +78,7 @@ from drivel_spark.fixtures import (
 )
 from drivel_spark.profiling import ProfilerOptions, profile
 from drivel_spark.checkpoint import CheckpointStore, resumable_profile
+from drivel_spark.io import is_table_ref
 
 PROFILE_COLUMNS = ["clip_id", "sr_hz", "dur_ms", "codec", "transcript"]
 
@@ -214,6 +215,12 @@ def cmd_screen(args) -> dict:
     }
 
 
+def _refuse_catalog_checkpoint(ref: str) -> None:
+    if is_table_ref(ref):
+        raise SystemExit("--checkpoint needs a parquet path for --clips: a resumable run commits "
+                         "one unit per file, which a catalog table ref does not expose")
+
+
 def _screen_resumable(args, kinds: list[str]) -> dict:
     """--checkpoint arm of cmd_screen: per-file lineage commits via
     checkpoint/runner.py resumable_screen, so an interrupted corpus
@@ -234,8 +241,9 @@ def _screen_resumable(args, kinds: list[str]) -> dict:
             f"not fused-capable: {bad_kinds}; --checkpoint screening "
             f"supports {sorted(FUSED_SCREEN_FIELDS)}"
         )
-    spark = build_session("drivel-screen")
     ref = args.clips or f"{args.data}/clips"
+    _refuse_catalog_checkpoint(ref)
+    spark = build_session("drivel-screen")
     t0 = time.time()
     totals, stats = resumable_screen(
         spark, ref, CheckpointStore(args.checkpoint),
@@ -875,15 +883,11 @@ def cmd_validate(args) -> dict:
 
     t0 = time.time()
     phases: dict[str, float] = {}
-    from drivel_spark.io import is_table_ref, read_table
+    from drivel_spark.io import read_table
 
     clips_ref = getattr(args, "clips", None) or f"{args.data}/clips"
-    if args.checkpoint and is_table_ref(clips_ref):
-        raise SystemExit(
-            "--checkpoint needs a parquet path for --clips: the resumable "
-            "profile commits one unit per file, which a catalog table "
-            "ref does not expose"
-        )
+    if args.checkpoint:
+        _refuse_catalog_checkpoint(clips_ref)
     transcripts_ref = getattr(args, "transcripts", None) or f"{args.data}/transcripts"
     clips = read_table(spark, clips_ref)
     transcripts = read_table(spark, transcripts_ref)

@@ -43,7 +43,7 @@ from typing import Any, Iterable, Optional
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..core import (
@@ -108,10 +108,6 @@ class TableProfile:
 
     def summary(self) -> list[dict[str, Any]]:
         return [acc.summary() for acc in self.acc.cols.values()]
-
-    def summary_df(self, spark: SparkSession) -> DataFrame:
-        rows = [json.dumps(s, default=str) for s in self.summary()]
-        return spark.read.json(spark.sparkContext.parallelize(rows, 1))
 
     # ------------------------------------------------------------------
     def to_schema_node(self) -> SchemaNode:
@@ -182,24 +178,6 @@ class TableProfile:
 
     def to_json_schema(self, extended: bool = False):
         return core_to_json_schema(self.to_schema_node(), extended)
-
-    # ------------------------------------------------------------------
-    def to_bytes(self) -> bytes:
-        return pickle.dumps({"acc": self.acc, "opts": self.opts}, protocol=4)
-
-    @staticmethod
-    def from_bytes(b: bytes) -> "TableProfile":
-        d = pickle.loads(b)
-        return TableProfile(d["acc"], d["opts"])
-
-    def save(self, path: str) -> None:
-        with open(path, "wb") as f:
-            f.write(self.to_bytes())
-
-    @staticmethod
-    def load(path: str) -> "TableProfile":
-        with open(path, "rb") as f:
-            return TableProfile.from_bytes(f.read())
 
 
 # ---------------------------------------------------------------------------

@@ -27,20 +27,12 @@ def test_resume_skips_committed_units(spark, clip_table, tmp_path):
     n_units = len(units)
     assert n_units >= 4
 
-    # simulate a run killed after k units: profile only k files, commit
-    k = n_units // 2
-    import hashlib
-
-    snapshot = hashlib.sha256("\n".join(units).encode()).hexdigest()[:16]
-    sub_path_profile, stats1 = resumable_profile(
-        spark, clip_table, store, run_id="r1", input_snapshot=snapshot
-    )
+    sub_path_profile, stats1 = resumable_profile(spark, clip_table, store, run_id="r1")
     assert stats1["n_recomputed"] == n_units  # fresh run computes all
+    assert stats1["snapshot"] == _snapshot(spark, clip_table)
 
     # restart: nothing to recompute, identical profile restored from blobs
-    prof2, stats2 = resumable_profile(
-        spark, clip_table, store, run_id="r1", input_snapshot=snapshot
-    )
+    prof2, stats2 = resumable_profile(spark, clip_table, store, run_id="r1")
     assert stats2["n_recomputed"] == 0
     assert stats2["n_restored"] == n_units
     a, b = sub_path_profile.column("dur_ms"), prof2.column("dur_ms")
@@ -119,20 +111,14 @@ def table_with_empty_file(spark, tmp_path):
 
 
 def test_runners_commit_zero_row_units(spark, table_with_empty_file, tmp_path):
-    """All three resumable runners commit a zero-row file, so a rerun
-    on the same store restores every unit and recomputes none."""
-    from drivel_spark.checkpoint import resumable_row_validation, resumable_screen
-    from drivel_spark.constraints import NotNull, Range
+    """Both resumable runners commit a zero-row file, so a rerun on the
+    same store restores every unit and recomputes none."""
+    from drivel_spark.checkpoint import resumable_screen
 
     path = table_with_empty_file
-    cs = [Range("dur_range", "dur_ms", 200, 30000), NotNull("tx", "transcript")]
-    scope = F.pmod(F.xxhash64(F.col("clip_id")), F.lit(4))
     runs = {
         "profile": lambda store: resumable_profile(
             spark, path, store, "z", columns=["sr_hz", "dur_ms", "codec"]
-        ),
-        "rowpf": lambda store: resumable_row_validation(
-            spark, path, store, "z", cs, scope
         ),
         "screen": lambda store: resumable_screen(
             spark, path, store, "z", kinds=["quality", "dropout"]
@@ -149,14 +135,63 @@ def test_runners_commit_zero_row_units(spark, table_with_empty_file, tmp_path):
             assert first.n_partitions == again.n_partitions == 2
         else:
             assert first.equals(again), name
-            assert int(first["n_clips" if name == "screen" else "n_rows"].max()) > 0
+            assert int(first["n_clips"].max()) > 0
 
 
 def test_snapshot_mismatch_recomputes(spark, clip_table, tmp_path):
+    """The snapshot is the whole file set: one added file recomputes
+    every unit, the unchanged files included."""
+    import glob
+    import shutil
+
+    path = str(tmp_path / "clips_copy")
+    shutil.copytree(clip_table, path)
     store = CheckpointStore(str(tmp_path / "ckpt"))
-    resumable_profile(spark, clip_table, store, run_id="r1", input_snapshot="snapA")
-    _, stats = resumable_profile(spark, clip_table, store, run_id="r1", input_snapshot="snapB")
-    assert stats["n_recomputed"] == stats["n_units"]  # new snapshot → full recompute
+    _, before = resumable_profile(spark, path, store, run_id="r1")
+    first = sorted(glob.glob(f"{path}/part-*.parquet"))[0]
+    shutil.copy(first, f"{path}/part-added.parquet")
+    _, after = resumable_profile(spark, path, store, run_id="r1")
+    assert after["snapshot"] != before["snapshot"]
+    assert after["n_units"] == before["n_units"] + 1
+    assert after["n_recomputed"] == after["n_units"]
+    assert after["n_restored"] == 0
+
+
+@pytest.mark.parametrize("layout", ["partitioned", "single_file", "glob"])
+def test_resumable_profile_matches_profile(spark, tmp_path, layout):
+    """Resuming reads a Hive-partitioned table's partition columns from
+    the paths, as ``profile()`` does, and a one-file table or a glob of
+    files as is."""
+    import glob
+
+    from drivel_spark.io import read_table, write_partitioned
+
+    df = build_clips(spark, 400, 4, ClipFixtureSpec(with_audio=False))
+    if layout == "partitioned":
+        path = str(tmp_path / "clips_by_codec")
+        write_partitioned(df, path, ["codec"])
+    elif layout == "single_file":
+        df.coalesce(1).write.parquet(str(tmp_path / "one"))
+        (path,) = glob.glob(str(tmp_path / "one" / "part-*.parquet"))
+    else:
+        df.write.parquet(str(tmp_path / "files"))
+        path = str(tmp_path / "files" / "part-*.parquet")
+    want = profile(read_table(spark, path))
+    got, stats = resumable_profile(spark, path, CheckpointStore(str(tmp_path / "ck")), "r1")
+    assert stats["n_recomputed"] == stats["n_units"]
+
+    def summaries(prof):
+        out = {}
+        for s in prof.summary():
+            if not getattr(getattr(prof.column(s["column"]), "freq", None), "is_exact", True):
+                # past its capacity a SpaceSaving top list depends on
+                # the merge order, which differs between the two paths
+                s = {k: v for k, v in s.items() if k != "top"}
+            out[s["column"]] = json.dumps(s, default=str)
+        return out
+
+    assert summaries(got) == summaries(want)
+    assert want.column("codec").n_null == 0 and want.n_rows == 400
 
 
 # ---------------------------------------------------------------------------
@@ -285,49 +320,6 @@ def test_produce_roundtrip_from_profile(spark):
     assert node2.required["ts"].str_type == "datetime-iso8601"
     assert node2.required["uid"].str_type == "uuid"
     assert prof2.to_json_schema() == prof.to_json_schema()
-
-
-def test_resumable_row_validation_matches_batch(spark, clip_table, tmp_path):
-    """Pass-2 resume protocol: per-file pass/fail partials commit with
-    lineage; the merged report is identical to the one-pass batch
-    engine; a restart recomputes nothing; a kill-after-k resume
-    recomputes exactly the missing files and still matches."""
-    from drivel_spark.checkpoint import resumable_row_validation
-    from drivel_spark.constraints import NotNull, Range, validate
-
-    cs = [
-        Range("dur_range", "dur_ms", 200, 30000),
-        NotNull("transcript_not_null", "transcript"),
-    ]
-    scope = F.pmod(F.xxhash64(F.col("clip_id")), F.lit(8))
-
-    store = CheckpointStore(str(tmp_path / "pfck"))
-    pf, stats = resumable_row_validation(
-        spark, clip_table, store, "r1", cs, scope
-    )
-    assert stats["n_recomputed"] == stats["n_units"] >= 4
-
-    batch = validate(spark.read.parquet(clip_table), cs, scope=scope).passfail_pdf()
-    assert pf.equals(batch)
-
-    # restart: zero recompute, identical report
-    pf2, stats2 = resumable_row_validation(
-        spark, clip_table, store, "r1", cs, scope
-    )
-    assert stats2["n_recomputed"] == 0 and pf2.equals(pf)
-
-    # kill-after-k: seed a fresh store with only k commits, resume
-    snap = _snapshot(spark, clip_table)
-    committed = store.committed("r1:rowpf", snap)
-    k = len(committed) // 2
-    store2 = CheckpointStore(str(tmp_path / "pfck2"))
-    partial = committed.head(k).copy()
-    store2.append(partial.to_dict("records"))
-    pf3, stats3 = resumable_row_validation(
-        spark, clip_table, store2, "r1", cs, scope
-    )
-    assert stats3["n_recomputed"] == stats3["n_units"] - k
-    assert pf3.equals(pf)
 
 
 @pytest.fixture()

@@ -259,12 +259,61 @@ def test_refused_class_archive_warns_on_stderr_only(tmp_path):
     assert "[warning][cds" in proc.stderr, proc.stderr[-4000:]
 
 
+def _launch_here(tmp_path, monkeypatch):
+    """Make ``_cds_launch`` see a local JVM launch with ``~`` under
+    ``tmp_path`` and an empty conf dir; returns the (created) cache."""
+    from pyspark import SparkContext
+
+    from drivel_spark.config import _CLASSPATH_ENV
+
+    home = tmp_path / "home"
+    _cache(home).mkdir(parents=True)
+    monkeypatch.setenv("HOME", str(home))
+    monkeypatch.setenv("SPARK_CONF_DIR", str(_conf_dir(tmp_path / "conf", {})))
+    for k in _CLASSPATH_ENV + ("PYSPARK_GATEWAY_PORT", "PYSPARK_SUBMIT_ARGS", "SPARK_SUBMIT_OPTS"):
+        monkeypatch.delenv(k, raising=False)
+    monkeypatch.setattr(SparkContext, "_gateway", None)
+    return _cache(home)
+
+
+@pytest.mark.parametrize("version, size, kept", [
+    (11, 9000, True),  # whole: the last region ends at 8192 + 800
+    (11, 8991, False),  # one byte short
+    (11, 100, False),  # not even the region table
+    (12, 100, True),  # an unknown version is the JVM's to judge
+])
+def test_truncated_class_archive_is_recorded_again(tmp_path, monkeypatch, capsys,
+                                                   version, size, kept):
+    """A JDK 17 archive shorter than its header's regions is removed and
+    recorded again; a whole one, or another version, goes to the JVM."""
+    import struct
+
+    from pyspark.find_spark_home import _find_spark_home
+
+    from drivel_spark.config import _cds_key, _cds_launch, _java_binary
+
+    cache = _launch_here(tmp_path, monkeypatch)
+    jars = os.path.join(_find_spark_home(), "jars")
+    archive = cache / f"spark-{_cds_key(_java_binary(), jars)}.jsa"
+    head = bytearray(max(size, 4096))
+    struct.pack_into("<I4xI", head, 0, 0xF00BABA8, version)
+    for i, (offset, used) in enumerate([(4096, 3000), (0, 0), (8192, 800)]):
+        struct.pack_into("<QQQ", head, 40 + 72 * i, offset, 7, used)
+    archive.write_bytes(bytes(head[:size]))
+    opts, _, record = _cds_launch("local[2]", {})
+    if kept:
+        assert f"-XX:SharedArchiveFile={archive}" in opts.split() and record is None
+        assert archive.stat().st_size == size
+    else:
+        assert record[1] == str(archive) and not archive.exists()
+        assert f"-XX:ArchiveClassesAtExit={record[0]}" in opts.split()
+        assert "truncated class archive" in capsys.readouterr().err
+
+
 def test_class_archive_key_and_stale_tmp_cleanup(tmp_path, monkeypatch):
     """The key follows every jar's size and mtime; a recording session
     removes ``.tmp`` archives past the cut-off and keeps fresh ones."""
-    from pyspark import SparkContext
-
-    from drivel_spark.config import CDS_STALE_TMP_S, _CLASSPATH_ENV, _cds_key, _cds_launch, _java_binary
+    from drivel_spark.config import CDS_STALE_TMP_S, _cds_key, _cds_launch, _java_binary
 
     jars = tmp_path / "jars"
     jars.mkdir()
@@ -278,18 +327,11 @@ def test_class_archive_key_and_stale_tmp_cleanup(tmp_path, monkeypatch):
     os.utime(jars / "b.jar", (1e9, 1e9))
     assert len({key, sized, _cds_key(java, str(jars))}) == 3
 
-    home = tmp_path / "home"
-    cache = _cache(home)
-    cache.mkdir(parents=True)
+    cache = _launch_here(tmp_path, monkeypatch)
     now = time.time()
     for name, age in (("old.jsa.1.tmp", CDS_STALE_TMP_S + 60), ("fresh.jsa.2.tmp", 60)):
         (cache / name).write_bytes(b"")
         os.utime(cache / name, (now - age, now - age))
-    monkeypatch.setenv("HOME", str(home))
-    monkeypatch.setenv("SPARK_CONF_DIR", str(_conf_dir(tmp_path / "conf", {})))
-    for k in _CLASSPATH_ENV + ("PYSPARK_GATEWAY_PORT", "PYSPARK_SUBMIT_ARGS", "SPARK_SUBMIT_OPTS"):
-        monkeypatch.delenv(k, raising=False)
-    monkeypatch.setattr(SparkContext, "_gateway", None)
     opts, env, (tmp, archive) = _cds_launch("local[2]", {})
     assert f"-XX:ArchiveClassesAtExit={tmp}" in opts.split()
     assert env == {} and tmp.endswith(".tmp") and not os.path.exists(archive)

@@ -1,10 +1,10 @@
-"""Table-access abstraction: ref dispatch + lineage fingerprints."""
+"""Table-access abstraction: ref dispatch and catalog routing."""
 
 import os
 
 from pyspark.sql import functions as F
 
-from drivel_spark.io import is_table_ref, read_table, snapshot_fingerprint
+from drivel_spark.io import is_table_ref, read_table
 
 
 def test_ref_dispatch():
@@ -18,16 +18,6 @@ def test_ref_dispatch():
 def test_read_parquet_path(spark, sf_small_dir):
     df = read_table(spark, os.path.join(sf_small_dir, "nation.parquet"))
     assert df.count() == 25
-
-
-def test_snapshot_fingerprint_stable_and_sensitive(spark, sf_small_dir, tmp_path):
-    p = os.path.join(sf_small_dir, "nation.parquet")
-    a = snapshot_fingerprint(spark, p)
-    b = snapshot_fingerprint(spark, p)
-    assert a == b and len(a) == 16
-    # different content → different fingerprint
-    other = snapshot_fingerprint(spark, os.path.join(sf_small_dir, "region.parquet"))
-    assert other != a
 
 
 def test_read_table_catalog_routing():

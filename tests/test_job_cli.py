@@ -419,9 +419,21 @@ def test_validate_clips_ref_checkpoint_profiles_that_table(spark, tmp_path):
         clips=copy, checkpoint=str(tmp_path / "ck"), **base))
     assert out["resume"]["n_units"] == n_files
 
-    with _pytest.raises(SystemExit):
+    with _pytest.raises(SystemExit, match="needs a parquet path"):
         cmd_validate(argparse.Namespace(
             clips="db.clips", checkpoint=str(tmp_path / "ck2"), **base))
+
+
+@pytest.mark.parametrize("ref", ["db.clips", "iceberg:db.clips"])
+def test_screen_checkpoint_refuses_catalog_ref(tmp_path, ref):
+    """screen --checkpoint refuses a catalog table ref as validate does,
+    before any Spark read."""
+    from drivel_spark.job import cmd_screen
+
+    with pytest.raises(SystemExit, match="needs a parquet path"):
+        cmd_screen(argparse.Namespace(
+            data=None, clips=ref, kind="quality,dropout", flag=None, where=None,
+            out=None, run_id=None, checkpoint=str(tmp_path / "ck")))
 
 
 def test_validate_where_on_partitioned_layout_prunes_files(spark, tmp_path):
