@@ -707,66 +707,6 @@ def main() -> None:
         )
     )
 
-    # 19. bloom referential: build is pure Catalyst (bit_or partial+final
-    # agg), the split scan probes via exactly one Arrow UDF per branch,
-    # and the exact confirm join broadcasts the dim keys
-    from drivel_spark.constraints.bloom import build_bloom, referential_bloom
-
-    dim = orders.filter(F.col("o_totalprice") < 400000)
-    p = fmt(
-        dim.select(F.col("o_orderkey").alias("__k"))
-        .where(F.col("__k").isNotNull())
-        .select(
-            F.explode(
-                F.array(
-                    *[
-                        F.pmod(F.xxhash64("__k", F.lit(i)), F.lit(4096)).cast("long")
-                        for i in range(3)
-                    ]
-                ).alias("pos")
-            ).alias("pos")
-        )
-        .select(
-            F.expr("shiftright(pos, 6)").alias("chunk"),
-            F.expr("shiftleft(1L, cast(pos % 64 AS INT))").alias("bits"),
-        )
-        .groupBy("chunk")
-        .agg(F.bit_or("bits").alias("word"))
-    )
-    sections.append(
-        (
-            "Bloom bitmap build (relational bit_or fold)",
-            p,
-            [
-                "partial+final hash agg (map-side combine bounds shuffle at m/64 words): "
-                + ("PASS" if p.count("HashAggregate") >= 2 else "FAIL"),
-                "all-JVM build (no Python): "
-                + ("PASS" if "EvalPython" not in p else "FAIL"),
-            ],
-        )
-    )
-
-    p = fmt(referential_bloom(li, "l_orderkey", dim, "o_orderkey", fpp=0.01))
-    sections.append(
-        (
-            "Bloom referential split (miss short-circuit + exact confirm)",
-            p,
-            [
-                # small bitmap -> constant-folded array-literal probe:
-                # the WHOLE plan is Python-free (the Arrow path is
-                # audited separately below with the literal path forced
-                # off)
-                "probe is whole-stage codegen (no Python anywhere): "
-                + ("PASS" if "EvalPython" not in p else "FAIL"),
-                "exact confirm join broadcasts the dim keys: "
-                + ("PASS" if "BroadcastHashJoin" in p else
-                   "NOTE: SMJ chosen (AQE may still convert at runtime)"),
-                "no cartesian product: "
-                + ("PASS" if "CartesianProduct" not in p else "FAIL"),
-            ],
-        )
-    )
-
     # 20. mixture sample: the kept-set filter is a pure codegen
     # expression over the scan — no Exchange, no Python, no RNG
     from drivel_spark.ops import mix_corpora
@@ -928,26 +868,30 @@ def main() -> None:
         )
     )
 
-    # 27. ingest dedup with bloom: the definite-new branch must carry no
-    # join at all (pure filter over the probe), and the confirm branch
-    # anti-joins only bloom hits
+    # 27. ingest dedup vs corpus: the corpus tier is one exact
+    # anti-join against the corpus key set, the in-batch min-id tier
+    # one window over its survivors, and the whole plan stays in the
+    # JVM (normalize + md5 are Catalyst expressions)
     from drivel_spark.ops import dedup_against_corpus
 
     corpus = docs.filter(F.col("doc_id") % 3 != 0)
     newb = docs.filter(F.col("doc_id") % 3 == 0)
-    p = fmt(dedup_against_corpus(newb, corpus, use_bloom=True))
+    p = fmt(dedup_against_corpus(newb, corpus))
+    join_nodes = re.findall(
+        r"\) (BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin)", p
+    )
     sections.append(
         (
-            "Ingest dedup vs corpus (bloom-prefiltered exact tier)",
+            "Ingest dedup vs corpus (exact anti-join tier + in-batch window)",
             p,
             [
-                # corpus bloom fits the literal tier here: probe is
-                # constant-folded codegen, so the plan carries NO Python
-                "probe never row-at-a-time (codegen literal tier or "
-                "ArrowEval, no BatchEvalPython): "
-                + ("PASS" if "BatchEvalPython" not in p else "FAIL"),
-                "confirm anti-join present for hits only (LeftAnti): "
-                + ("PASS" if "LeftAnti" in p else "FAIL"),
+                "corpus tier is the plan's one join, a LeftAnti: "
+                + ("PASS" if len(join_nodes) == 1 and "LeftAnti" in p
+                   else f"FAIL ({len(join_nodes)} join nodes)"),
+                "in-batch min-id tier is a window over the survivors: "
+                + ("PASS" if "Window (" in p else "FAIL"),
+                "all-JVM (no Python): "
+                + ("PASS" if "EvalPython" not in p else "FAIL"),
                 "no cartesian product: "
                 + ("PASS" if "CartesianProduct" not in p else "FAIL"),
             ],
@@ -1575,51 +1519,6 @@ def main() -> None:
                     "lang" not in rs and "n_chars" not in rs
                     for rs in read_schemas
                 ) else "FAIL"),
-            ],
-        )
-    )
-
-    # 51. bloom referential pre-filter, BOTH probe tiers: the
-    # cluster-scale tier (bitmap too big for a plan constant) probes
-    # with ONE Arrow-vectorized stage over the broadcast bitmap; the
-    # small tier embeds the bitmap as a constant-folded array literal
-    # and keeps the whole plan Python-free.  In both, misses are
-    # orphans with ZERO shuffle — the only join in the plan is the
-    # exact confirm of the hit set
-    from drivel_spark.constraints import bloom as _bloom_mod
-    from drivel_spark.constraints.bloom import referential_bloom
-
-    _words_max = _bloom_mod.LITERAL_WORDS_MAX
-    try:
-        _bloom_mod.LITERAL_WORDS_MAX = 0  # force the Arrow tier
-        rb = referential_bloom(li, "l_orderkey", orders, "o_orderkey")
-        p = fmt(rb)
-    finally:
-        _bloom_mod.LITERAL_WORDS_MAX = _words_max
-    join_nodes = re.findall(
-        r"\) (BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin)", p
-    )
-    p_lit = fmt(referential_bloom(li, "l_orderkey", orders, "o_orderkey"))
-    join_nodes_lit = re.findall(
-        r"\) (BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin)", p_lit
-    )
-    sections.append(
-        (
-            "Bloom referential pre-filter (broadcast bitmap probe + exact confirm)",
-            p + "\n\n=== literal-probe tier ===\n\n" + p_lit,
-            [
-                "Arrow tier: probe is Arrow-vectorized (ArrowEvalPython, "
-                "never row-at-a-time BatchEvalPython): "
-                + ("PASS" if "ArrowEvalPython" in p
-                   and "BatchEvalPython" not in p else "FAIL"),
-                "literal tier: whole plan Python-free (constant-folded "
-                "bitmap literal, codegen getbit probe): "
-                + ("PASS" if "EvalPython" not in p_lit else "FAIL"),
-                "miss path is join-free — the plan's only join is the "
-                "hit-set exact confirm (left_anti), both tiers: "
-                + ("PASS" if len(join_nodes) == 1 and "LeftAnti" in p
-                   and len(join_nodes_lit) == 1 and "LeftAnti" in p_lit
-                   else f"FAIL ({len(join_nodes)}/{len(join_nodes_lit)} join nodes)"),
             ],
         )
     )

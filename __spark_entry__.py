@@ -1697,12 +1697,12 @@ def q_key_skew_orders(spark, sf_dir):
 
 
 def q_ingest_dedup_documents(spark, sf_dir):
-    """Incremental ingest dedup (ops/dedup.py dedup_against_corpus,
-    bloom-prefiltered): corpus = docs with id%3!=0; the NEW batch =
+    """Incremental ingest dedup (ops/dedup.py dedup_against_corpus):
+    corpus = docs with id%3!=0; the NEW batch =
     the id%3==0 docs + injected exact copies of corpus docs (id%5==1,
     re-id'd +100000) + injected in-batch dups (+200000 copies of the
     id%21==0 new docs).  Every injected copy must die — corpus copies
-    to the bloom-hit anti-join, in-batch dups to the min-id rule —
+    to the corpus anti-join, in-batch dups to the min-id rule —
     leaving exactly the original id%3==0 set.  The oracle re-derives
     the injection and both dedup tiers in SQL."""
     from drivel_spark.ops import dedup_against_corpus
@@ -1722,7 +1722,7 @@ def q_ingest_dedup_documents(spark, sf_dir):
             )
         )
     )
-    surv = dedup_against_corpus(new_batch, corpus, use_bloom=True)
+    surv = dedup_against_corpus(new_batch, corpus)
     return (
         surv.groupBy("lang")
         .agg(
@@ -1794,30 +1794,22 @@ def q_top_fraction_documents(spark, sf_dir):
     )
 
 
-def q_referential_bloom_lineitem(spark, sf_dir):
-    """Referential completeness through the bloom pre-filter
-    (constraints/bloom.py referential_bloom): lineitem rows whose
-    l_orderkey is absent from the cheap-orders dim (o_totalprice <
-    400k).  Bloom misses are decided in the scan with zero shuffle;
-    only hits enter the exact anti-join, so the orphan set equals the
-    plain anti-join's bit-for-bit — which is exactly what the oracle
-    checks (the bitmap split itself is engine-internal).  Returns
-    per-returnflag orphan counts + distinct orphan keys."""
-    from drivel_spark.constraints.bloom import referential_bloom
+def q_referential_lineitem(spark, sf_dir):
+    """Referential completeness through validate()'s Referential check
+    (one exact left_anti join): lineitem rows whose l_orderkey is
+    absent from the cheap-orders dim (o_totalprice < 400k), read from
+    the check's violation table.  The oracle is DuckDB's NOT EXISTS.
+    Returns per-returnflag orphan counts + distinct orphan keys."""
+    from drivel_spark.constraints import Referential, validate
 
     li = _t(spark, sf_dir, "lineitem")
-    orders = _t(spark, sf_dir, "orders")
-    dim = orders.where(F.col("o_totalprice") < 400000)
-    # size the bloom from the parquet row-count metadata (an upper
-    # bound on the filtered dim's distinct keys) instead of a separate
-    # approx_count_distinct sizing scan (VERDICT r05 #5): the orphan
-    # set — and thus the query result — is exact for ANY m, only the
-    # bitmap is ~30% roomier.  count() on the unfiltered parquet is a
-    # footer-metadata job, not a data scan.
-    orphans = referential_bloom(
-        li, "l_orderkey", dim, "o_orderkey", fpp=0.01,
-        expected_n=max(int(orders.count()), 1),
+    dim = _t(spark, sf_dir, "orders").where(F.col("o_totalprice") < 400000)
+    res = validate(
+        li,
+        [Referential("orphans", "l_orderkey", "orders", "o_orderkey")],
+        ref_tables={"orders": dim},
     )
+    orphans = res.violation_tables["orphans"]
     return (
         orphans.groupBy(F.col("l_returnflag").alias("returnflag"))
         .agg(
@@ -5909,7 +5901,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "salted_distinct_users": q_salted_distinct_users,
         "salted_freq_map_orders": q_salted_freq_map_orders,
         # r05 constraint + drift + mixing additions
-        "referential_bloom_lineitem": q_referential_bloom_lineitem,
+        "referential_bloom_lineitem": q_referential_lineitem,
         "top_fraction_documents": q_top_fraction_documents,
         "weighted_sample_documents": q_weighted_sample_documents,
         "ingest_dedup_documents": q_ingest_dedup_documents,

@@ -225,12 +225,3 @@ def wasserstein_exact(df_a, df_b, col: str, n_buckets: int = 64) -> dict[str, An
         .first()[0]
     )
     return {"w1": float(inner or 0.0) + tail, "n_a": int(n_a), "n_b": int(n_b)}
-
-
-def drift_report(baseline_profile, batch_profile, columns=None) -> list[dict[str, Any]]:
-    cols = columns or [
-        c for c in baseline_profile.columns() if c in set(batch_profile.columns())
-    ]
-    return [
-        drift_column(baseline_profile.column(c), batch_profile.column(c)) for c in cols
-    ]

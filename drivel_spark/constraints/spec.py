@@ -217,22 +217,13 @@ class Unique(Constraint):
 @dataclass(frozen=True)
 class Referential(Constraint):
     """Dataset-level: orphans of ``column`` against
-    ``ref_table``.``ref_column``.  ``strategy`` picks the plan:
-    ``"anti_join"`` (default) is the plain exact anti-join;
-    ``"bloom"`` pre-filters with a broadcast Bloom bitmap so definite
-    orphans are decided in the scan with zero shuffle and only bloom
-    hits enter the exact confirm join (bloom.py — result identical,
-    orphan-heavy regimes skip most of the shuffle).  ``bloom_fpp``
-    sizes the bitmap (~9.6 bits/key at 0.01)."""
+    ``ref_table``.``ref_column``, found by one exact ``left_anti``
+    join in validate.py.  A NULL key matches no ref key, so its row is
+    reported as an orphan (``NOT EXISTS`` semantics, as the DuckDB
+    contract oracle of the lineitem referential query encodes)."""
 
     ref_table: str = ""
     ref_column: str = ""
-    strategy: str = "anti_join"
-    bloom_fpp: float = 0.01
-
-    def __post_init__(self):
-        if self.strategy not in ("anti_join", "bloom"):
-            raise ValueError(f"strategy must be anti_join|bloom: {self.strategy!r}")
 
     @property
     def is_row_level(self) -> bool:

@@ -20,8 +20,7 @@ entry has ``type`` and ``column`` plus type-specific fields::
        "then": {"type": "enum", "column": "sr_hz", "values": [16000, 44100]}},
       {"type": "unique",      "column": "clip_id"},
       {"type": "referential", "column": "clip_id",
-       "ref_table": "transcripts", "ref_column": "clip_id",
-       "strategy": "bloom"},
+       "ref_table": "transcripts", "ref_column": "clip_id"},
       {"type": "group_bound", "column": "dur_ms", "group_col": "codec",
        "agg": "avg", "lo": 500, "hi": 12000},
       {"type": "quantile_bound", "column": "dur_ms", "q": 0.99,
@@ -102,12 +101,7 @@ _TYPES: dict[str, tuple] = {
     "unique": (Unique, {}, ()),
     "referential": (
         Referential,
-        {
-            "ref_table": "ref_table",
-            "ref_column": "ref_column",
-            "strategy": "strategy",
-            "bloom_fpp": "bloom_fpp",
-        },
+        {"ref_table": "ref_table", "ref_column": "ref_column"},
         ("ref_table", "ref_column"),
     ),
     "group_bound": (

@@ -401,18 +401,11 @@ def _unique(c: Unique, ctx: _Context):
 
 def _referential(c: Referential, ctx: _Context):
     ref = ctx.ref_tables[c.ref_table]
-    if c.strategy == "bloom":
-        from .bloom import referential_bloom
-
-        orphans = referential_bloom(
-            ctx.ds, c.column, ref, c.ref_column, fpp=c.bloom_fpp
-        ).drop("bloom_definite")
-    else:
-        orphans = ctx.ds.join(
-            ref.select(F.col(c.ref_column).alias(c.column)).dropDuplicates([c.column]),
-            on=c.column,
-            how="left_anti",
-        )
+    orphans = ctx.ds.join(
+        ref.select(F.col(c.ref_column).alias(c.column)).dropDuplicates([c.column]),
+        on=c.column,
+        how="left_anti",
+    )
     n_orphans = orphans.count()
     return (
         {

@@ -86,18 +86,6 @@ def _grams_from_tokens(toks: Column, n: int) -> Column:
     )
 
 
-def word_shingles(col: Column, n: int = 3) -> Column:
-    """Distinct word n-grams of the normalized text as ONE expression.
-
-    ⚠ Perf: Catalyst inlines the tokenization into the per-gram lambda
-    (higher-order functions are interpreted, no subexpression
-    elimination), so the text re-splits once per gram — measured 40s
-    for 5k docs vs 1.2s via :func:`shingle_table`.  Use this only for
-    one-off expressions on short text; pipelines should go through
-    shingle_table's materialization barrier."""
-    return _grams_from_tokens(tokens(normalize_text(col)), n)
-
-
 def shingle_table(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id", n: int = 3
 ) -> DataFrame:
@@ -1140,8 +1128,6 @@ def dedup_against_corpus(
     text_col: str = "text",
     id_col: str = "doc_id",
     in_batch: bool = True,
-    use_bloom: bool = False,
-    bloom_fpp: float = 0.01,
 ) -> DataFrame:
     """Survivors of a NEW ingest batch against an existing corpus: drop
     rows whose normalized text already exists corpus-side, plus (by
@@ -1150,46 +1136,23 @@ def dedup_against_corpus(
     NOT re-deduplicated; only its key column is scanned.
 
     Plan: both sides reduce to md5(normalized-text) keys; the corpus
-    key set feeds an anti-join (one shuffle, AQE-sized).  With
-    ``use_bloom=True`` the corpus keys fold into a broadcast bitmap
-    first (bloom.py): new rows whose key MISSES are definitely novel
-    and keep with ZERO shuffle — since almost all ingest rows are
-    novel, the confirm anti-join sees only the tiny hit set.  Result
-    identical either way (false positives are exact-confirmed).
+    key set feeds an anti-join (one shuffle, AQE-sized).  A NULL-text
+    row matches nothing corpus-side, so the anti-join keeps it.
 
     The in-batch min-id survivor pass runs AFTER the corpus tier: the
     two tiers commute (a key present in the corpus loses every batch
     row either way; a novel key keeps exactly its min-id row either
-    way), and this order runs the per-key window ONCE over the
-    corpus-tier survivors instead of once under each bloom arm — one
-    exchange instead of a groupBy+semi-join pair upstream of both
-    arms.  The bloom is sized from the corpus ROW count (a narrow
-    count, no normalize/md5 pass) — an upper bound on its distinct
-    keys, so fpp only improves; results are exact for any sizing."""
+    way), and this order runs the per-key window over the corpus-tier
+    survivors only."""
     key = F.md5(normalize_text(F.col(text_col)))
-    keyed = new_df.withColumn("__dkey", key)
     corpus_keys = (
         corpus_df.select(key.alias("__dkey"))
         .where(F.col("__dkey").isNotNull())
         .dropDuplicates(["__dkey"])
     )
-    if use_bloom:
-        from ..constraints.bloom import bloom_contains, build_bloom
-
-        expected = max(1, corpus_df.count())
-        bloom = build_bloom(
-            corpus_keys, "__dkey", expected_n=expected, fpp=bloom_fpp
-        )
-        # a NULL key probes to NULL; count it as a miss so it survives
-        # like it does in the anti-join arm (NULL never equi-joins)
-        hit = F.coalesce(bloom_contains(keyed, "__dkey", bloom), F.lit(False))
-        definite_new = keyed.where(~hit)
-        confirmed_new = keyed.where(hit).join(
-            corpus_keys, on="__dkey", how="left_anti"
-        )
-        out = definite_new.unionByName(confirmed_new)
-    else:
-        out = keyed.join(corpus_keys, on="__dkey", how="left_anti")
+    out = new_df.withColumn("__dkey", key).join(
+        corpus_keys, on="__dkey", how="left_anti"
+    )
     if in_batch:
         from pyspark.sql import Window
 

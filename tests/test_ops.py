@@ -2602,54 +2602,14 @@ def test_dedup_against_corpus_exact(spark):
             }
         )
     )
-    for use_bloom in (False, True):
-        got = sorted(
-            r["doc_id"]
-            for r in dedup_against_corpus(new, corpus, use_bloom=use_bloom).collect()
-        )
-        assert got == [12, 14], use_bloom
+    got = sorted(r["doc_id"] for r in dedup_against_corpus(new, corpus).collect())
+    assert got == [12, 14]
     # in_batch=False keeps both zetas and the NULL-text row (plain
     # anti-join: a NULL key matches nothing corpus-side)
     got = sorted(
         r["doc_id"] for r in dedup_against_corpus(new, corpus, in_batch=False).collect()
     )
     assert got == [12, 13, 14, 15]
-
-
-@pytest.mark.parametrize("literal_words_max", [1 << 14, 0])
-def test_dedup_against_corpus_bloom_keeps_null_text(spark, monkeypatch, literal_words_max):
-    """The bloom arm returns the anti-join arm's rows when the batch
-    holds NULL text: a NULL key is a bloom miss, so the row survives
-    instead of falling out of both the hit and the miss branch.  Both
-    probe paths (array literal, Arrow UDF) are covered."""
-    import pandas as pd
-
-    from drivel_spark.constraints import bloom
-    from drivel_spark.ops import dedup_against_corpus
-
-    monkeypatch.setattr(bloom, "LITERAL_WORDS_MAX", literal_words_max)
-    corpus = spark.createDataFrame(
-        pd.DataFrame({"doc_id": [1, 2], "text": ["alpha beta", None]})
-    )
-    new = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "doc_id": [10, 11, 12, 13],
-                "text": ["alpha  BETA", None, "zeta", None],
-            }
-        )
-    )
-
-    def kept(use_bloom):
-        return sorted(
-            r["doc_id"]
-            for r in dedup_against_corpus(
-                new, corpus, in_batch=False, use_bloom=use_bloom
-            ).collect()
-        )
-
-    assert kept(use_bloom=False) == [11, 12, 13]
-    assert kept(use_bloom=True) == kept(use_bloom=False)
 
 
 def test_near_dup_against_corpus(spark):

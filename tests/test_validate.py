@@ -160,6 +160,33 @@ def test_referential_both_directions(spark, clips):
     assert res2.dataset[0]["n_violations"] == len(ids[ids % 500 == 29])
 
 
+def test_referential_null_key_is_orphan(spark):
+    """A NULL key matches no ref key, so its row is an orphan: the
+    violation rows equal DuckDB's NOT EXISTS on the same rows."""
+    import duckdb
+
+    fact = pd.DataFrame(
+        {"id": range(6), "fk": pd.Series(["x", "y", "z", None, None, "q"], dtype=object)}
+    )
+    ref = pd.DataFrame({"k": ["x", "y", "z"]})
+    res = validate(
+        spark.createDataFrame(fact),
+        [Referential("fk_ref", "fk", "ref", "k")],
+        ref_tables={"ref": spark.createDataFrame(ref)},
+    )
+    assert res.dataset[0]["n_violations"] == 3
+    got = sorted((r["id"], r["fk"]) for r in res.violation_tables["fk_ref"].collect())
+    con = duckdb.connect()
+    con.register("f", fact)
+    con.register("ref", ref)
+    want = sorted(
+        con.execute(
+            "SELECT id, fk FROM f WHERE NOT EXISTS (SELECT 1 FROM ref WHERE ref.k = f.fk)"
+        ).fetchall()
+    )
+    assert got == want == [(3, None), (4, None), (5, "q")]
+
+
 @pytest.mark.parametrize(
     "kinds", [("row",), ("dataset",), ("row", "dataset"), ()],
     ids=["row_only", "dataset_only", "mixed", "empty"],
@@ -561,97 +588,6 @@ def test_group_bound_count_agg(spark):
     assert tab["b"]["value"] == 2.0
 
 
-# ---------------------------------------------------------------------------
-# bloom-filter referential pre-filter (r05)
-# ---------------------------------------------------------------------------
-
-
-def test_bloom_params():
-    from drivel_spark.constraints.bloom import bloom_params
-
-    m, k = bloom_params(10_000, 0.01)
-    assert m % 64 == 0
-    assert 9 * 10_000 < m < 11 * 10_000  # ~9.6 bits/key at 1%
-    assert k == 7
-    with pytest.raises(ValueError):
-        bloom_params(0)
-    with pytest.raises(ValueError):
-        bloom_params(100, 1.5)
-
-
-def test_bloom_membership_no_false_negatives(spark):
-    from drivel_spark.constraints.bloom import bloom_contains, build_bloom
-
-    keys = [f"k{i}" for i in range(2000)]
-    dim = spark.createDataFrame(pd.DataFrame({"id": keys}))
-    bloom = build_bloom(dim, "id", expected_n=2000, fpp=0.01)
-    probe = spark.createDataFrame(
-        pd.DataFrame({"id": keys + [f"absent{i}" for i in range(2000)]})
-    )
-    got = probe.withColumn("hit", bloom_contains(probe, "id", bloom)).toPandas()
-    members = got[got.id.str.startswith("k")]
-    assert members.hit.all()  # zero false negatives, ever
-    fp_rate = got[got.id.str.startswith("absent")].hit.mean()
-    assert fp_rate < 0.05  # ~1% target with slack
-
-
-def test_bloom_null_key_is_null(spark):
-    from drivel_spark.constraints.bloom import bloom_contains, build_bloom
-
-    dim = spark.createDataFrame(pd.DataFrame({"id": ["a", "b"]}))
-    bloom = build_bloom(dim, "id", expected_n=2)
-    probe = spark.createDataFrame(
-        pd.DataFrame({"id": pd.Series(["a", None], dtype=object)})
-    )
-    rows = probe.withColumn("hit", bloom_contains(probe, "id", bloom)).collect()
-    by = {r["id"]: r["hit"] for r in rows}
-    assert by["a"] is True and by[None] is None
-
-
-def test_referential_bloom_equals_anti_join(spark):
-    from drivel_spark.constraints.bloom import referential_bloom
-
-    rng = np.random.default_rng(5)
-    dim_keys = [int(x) for x in rng.choice(100_000, 3000, replace=False)]
-    fact_keys = [int(x) for x in rng.choice(100_000, 5000)]
-    dim = spark.createDataFrame(pd.DataFrame({"k": dim_keys}))
-    fact = spark.createDataFrame(
-        pd.DataFrame({"k": fact_keys, "payload": range(5000)})
-    )
-    got = referential_bloom(fact, "k", dim, "k", fpp=0.05)
-    want = fact.join(dim.dropDuplicates(["k"]), "k", "left_anti")
-    got_rows = sorted((r["k"], r["payload"]) for r in got.collect())
-    want_rows = sorted((r["k"], r["payload"]) for r in want.collect())
-    assert got_rows == want_rows  # exact, despite the lossy pre-filter
-    # the caught-false-positive fraction is near fpp
-    pdf = got.toPandas()
-    n_fp = (~pdf.bloom_definite).sum()
-    assert n_fp < 0.15 * len(pdf)
-
-
-def test_referential_bloom_strategy_matches_anti_join(spark, clips):
-    """Referential(strategy='bloom') through validate() produces the
-    same orphan count and rows as the default anti-join strategy."""
-    transcripts = build_transcripts(spark, N, n_partitions=4)
-    kwargs = dict(ref_tables={"transcripts": transcripts})
-    base = validate(
-        clips,
-        [Referential("c2t", "clip_id", "transcripts", "clip_id")],
-        **kwargs,
-    )
-    bloomed = validate(
-        clips,
-        [Referential("c2t", "clip_id", "transcripts", "clip_id", strategy="bloom")],
-        **kwargs,
-    )
-    assert base.dataset[0]["n_violations"] == bloomed.dataset[0]["n_violations"]
-    a = sorted(r["clip_id"] for r in base.violation_tables["c2t"].collect())
-    b = sorted(r["clip_id"] for r in bloomed.violation_tables["c2t"].collect())
-    assert a == b
-    with pytest.raises(ValueError, match="strategy"):
-        Referential("bad", "x", "t", "y", strategy="hashjoin")
-
-
 def test_pcm_size_consistency(spark):
     """PcmSizeConsistency flags exactly the rows whose payload was
     synthesized with CLAMPED (sr, dur) while the metadata kept the
@@ -732,7 +668,6 @@ def test_spec_file_all_types():
                 "column": "clip_id",
                 "ref_table": "transcripts",
                 "ref_column": "clip_id",
-                "strategy": "bloom",
             },
             {
                 "type": "group_bound",
@@ -750,7 +685,6 @@ def test_spec_file_all_types():
     assert isinstance(by_name["sr_hz_conditional"], Conditional)
     assert isinstance(by_name["sr_hz_conditional"].inner, EnumC)
     assert by_name["codec_enum"].variants == ("pcm_s16le", "flac")
-    assert by_name["clip_id_referential"].strategy == "bloom"
     assert isinstance(by_name["dur_ms_group_bound"], GroupBound)
     assert isinstance(by_name["bytes_pcm_size"], PcmSizeConsistency)
     assert by_name["bytes_pcm_size"].tolerance_bytes == 2
@@ -769,6 +703,18 @@ def test_spec_file_errors():
         from_spec_json([{"type": "not_null"}])
     with pytest.raises(ValueError, match="unknown fields"):
         from_spec_json([{"type": "range", "column": "x", "low": 1}])
+    with pytest.raises(ValueError, match="unknown fields"):
+        from_spec_json(
+            [
+                {
+                    "type": "referential",
+                    "column": "x",
+                    "ref_table": "t",
+                    "ref_column": "y",
+                    "strategy": "anti_join",
+                }
+            ]
+        )
     with pytest.raises(ValueError, match="needs 'values'"):
         from_spec_json([{"type": "enum", "column": "x"}])
     with pytest.raises(ValueError, match="needs 'when'"):
@@ -1333,34 +1279,6 @@ def test_from_profile_with_distribution(spark):
         c for c in from_profile(prof2, with_distribution=True)
         if isinstance(c, EntropyBound)
     ]
-
-
-def test_bloom_literal_and_arrow_paths_agree(spark, monkeypatch):
-    """The codegen array-literal probe and the broadcast+Arrow probe are
-    bit-identical on the same bitmap: every key (member, absent, NULL)
-    gets the same three-valued answer from both paths."""
-    from drivel_spark.constraints import bloom as B
-
-    keys = [f"k{i}" for i in range(1500)]
-    dim = spark.createDataFrame(pd.DataFrame({"id": keys}))
-    bloom = B.build_bloom(dim, "id", expected_n=1500, fpp=0.01)
-    assert len(bloom.words) <= B.LITERAL_WORDS_MAX  # default = literal path
-    probe = spark.createDataFrame(
-        pd.DataFrame(
-            {"id": pd.Series(keys + [f"x{i}" for i in range(1500)] + [None], dtype=object)}
-        )
-    )
-    lit_rows = {
-        r["id"]: r["hit"]
-        for r in probe.withColumn("hit", B.bloom_contains(probe, "id", bloom)).collect()
-    }
-    monkeypatch.setattr(B, "LITERAL_WORDS_MAX", 0)  # force the Arrow path
-    udf_rows = {
-        r["id"]: r["hit"]
-        for r in probe.withColumn("hit", B.bloom_contains(probe, "id", bloom)).collect()
-    }
-    assert lit_rows == udf_rows
-    assert lit_rows[None] is None
 
 
 # ---------------------------------------------------------------------------
