@@ -5,15 +5,17 @@ The two runners — :func:`resumable_profile` and
 (north_rule: "resumable from checkpoint with per-partition lineage +
 metrics"):
 
-1. enumerate the table's input files (the lineage units) and derive
-   the snapshot id from them;
-2. anti-set against the commit table → only *uncommitted* files are
-   ever scheduled for scan (skipped files are pruned at plan time by
-   reading only the remaining paths — no wasted IO on restart);
-3. the runner's ``compute`` scans the remaining files once and returns
-   one blob + metrics per file; every remaining file commits, a
-   zero-row file with the runner's empty blob (else every restart
-   would rescan it);
+1. enumerate the table's input files (the lineage units) and take
+   each one's identity, ``(path, size, mtime)``, from one Hadoop
+   ``listStatus`` per parent directory;
+2. restore a unit only when its latest commit carries the same
+   identity → only new or changed files are ever scheduled for scan
+   (skipped files are pruned at plan time by reading only the
+   remaining paths — no wasted IO on restart);
+3. the runner's ``compute`` scans the remaining files (all at once,
+   or ``max_files`` at a time) and returns one blob + metrics per
+   file; every scanned file commits, a zero-row file with the
+   runner's empty blob (else every restart would rescan it);
 4. re-read the commit table, verify every blob's ``sha256`` against
    its ``accumulator_digest``, and hand the runner ``{unit: blob}``
    for ALL units (previous runs' blobs + this run's) to finalize.
@@ -32,44 +34,73 @@ from __future__ import annotations
 import hashlib
 import pickle
 from typing import Callable, Optional
+from urllib.parse import unquote
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..profiling.accumulator import ProfilerOptions, TableAccumulator
-from ..profiling.profiler import (
-    TableProfile,
-    fold_accumulators,
-    fold_keyed,
-    keyed_accumulators,
-)
+from ..profiling.profiler import TableProfile, fold_keyed, keyed_accumulators
 from .store import CheckpointStore, make_commit_row
 
 
-def _snapshot_id(units: list[str]) -> str:
-    return hashlib.sha256("\n".join(units).encode()).hexdigest()[:16]
+def _identities(spark: SparkSession, units: list[str]) -> dict[str, str]:
+    """``{unit: "size=<bytes>,mtime=<ms>"}`` from one ``listStatus``
+    per parent directory: driver-side Hadoop calls, no Spark job.  The
+    units are grouped in Python and the classes resolved once, since
+    every py4j call is a round trip."""
+    sc = spark.sparkContext
+    jvm, conf = sc._jvm, sc._jsc.hadoopConfiguration()
+    Path, URI = jvm.org.apache.hadoop.fs.Path, jvm.java.net.URI
+    by_dir: dict[str, list[str]] = {}
+    for u in units:
+        by_dir.setdefault(u.rsplit("/", 1)[0], []).append(u)
+    out = {}
+    for parent, members in by_dir.items():
+        path = Path(URI(parent))
+        listed = {st.getPath().getName(): st for st in path.getFileSystem(conf).listStatus(path)}
+        for u in members:  # unit URIs are percent-encoded, names are not
+            st = listed[unquote(u.rsplit("/", 1)[1])]
+            out[u] = f"size={st.getLen()},mtime={st.getModificationTime()}"
+    return out
 
 
 def _resume(
     spark: SparkSession,
+    full: DataFrame,
     table_path: str,
     store: CheckpointStore,
     run: str,
-    compute: Callable[[DataFrame], tuple[dict, tuple[bytes, dict]]],
+    compute: Callable[[DataFrame], dict[str, tuple[bytes, dict]]],
+    empty: tuple[bytes, dict],
+    max_files: Optional[int] = None,
 ) -> tuple[dict[str, bytes], dict]:
-    """The resume protocol of the module docstring.  ``compute`` gets
-    the uncommitted files as one DataFrame (the full table's schema)
-    and returns ``{unit: (blob, metrics)}`` plus the ``(blob,
-    metrics)`` to commit for a unit with no rows.  Returns ``{unit:
-    blob}`` in unit order and the resume stats."""
-    full = spark.read.parquet(table_path)
-    units = sorted(full.inputFiles())
-    snapshot = _snapshot_id(units)
+    """The resume protocol of the module docstring over ``full``, the
+    table read from ``table_path``.  ``compute`` gets uncommitted
+    files as one DataFrame (the full table's schema) and returns
+    ``{unit: (blob, metrics)}``; a unit it leaves out has no rows and
+    commits ``empty``.  ``max_files`` splits the remaining files into
+    chunks that are computed and committed one after another.
+    Returns ``{unit: blob}`` in unit order and the resume stats.
 
-    done = store.committed(run, snapshot)
-    done_units = set(done["unit"]) if not done.empty else set()
-    todo = [u for u in units if u not in done_units]
+    A file rewritten in place that keeps both its size and its mtime
+    tick is not detected, and restores its old blob."""
+    units = sorted(full.inputFiles())
+    ident = _identities(spark, units)
+    snapshot = hashlib.sha256(
+        "\n".join(f"{u}\t{ident[u]}" for u in units).encode()
+    ).hexdigest()[:16]
+
+    def current() -> dict:  # each unit's latest commit, if its identity still holds
+        return {
+            r.unit: r
+            for r in store.committed(run).itertuples()
+            if ident.get(r.unit) == r.input_snapshot
+        }
+
+    rows = current()
+    todo = [u for u in units if u not in rows]
     if todo:
         reader = spark.read.schema(full.schema)
         sc = spark.sparkContext
@@ -79,13 +110,15 @@ def _resume(
             # below the table root; without it they read as NULL (a
             # file or a glob is no directory, and reads as before)
             reader = reader.option("basePath", table_path)
-        results, empty = compute(reader.parquet(*todo))
-        store.append(
-            [make_commit_row(run, u, snapshot, *results.get(u, empty)) for u in todo]
-        )
+        step = max_files or len(todo)
+        for i in range(0, len(todo), step):
+            chunk = todo[i : i + step]
+            results = compute(reader.parquet(*chunk))
+            store.append(
+                [make_commit_row(run, u, ident[u], *results.get(u, empty)) for u in chunk]
+            )
+        rows = current()
 
-    committed = store.committed(run, snapshot)
-    rows = {r.unit: r for r in committed.itertuples()}
     missing = [u for u in units if u not in rows]
     if missing:
         raise RuntimeError(f"units missing after commit: {missing}")
@@ -108,11 +141,21 @@ def resumable_profile(
     run_id: str,
     columns: Optional[list[str]] = None,
     opts: ProfilerOptions = ProfilerOptions(),
+    max_files: Optional[int] = None,
 ) -> tuple[TableProfile, dict]:
     """Profile a parquet table resumably.  Returns (profile, stats) where
     stats reports how many units were recomputed vs restored.  Each
     file commits one accumulator (an empty one for a zero-row file),
-    so the profile's ``n_partitions`` is the unit count."""
+    so the profile's ``n_partitions`` is the unit count.  A restored
+    accumulator profiled over other columns than ``columns`` (names
+    or types) raises ``ValueError``: its run id belongs to another
+    projection."""
+    full = spark.read.parquet(table_path)
+    proj = full.select(*columns) if columns is not None else full
+    empty = TableAccumulator(
+        [(f.name, f.dataType.simpleString()) for f in proj.schema.fields], opts
+    )
+    want = {c: a.dtype for c, a in empty.cols.items()}
 
     def compute(df):
         partials = keyed_accumulators(df, F.input_file_name(), columns, opts).collect()
@@ -124,15 +167,24 @@ def resumable_profile(
                 "n_null": {c: a.n_null for c, a in acc.cols.items()},
             }
             results[unit] = (acc.to_bytes(), metrics)
-        proj = df.select(*columns) if columns is not None else df
-        empty = TableAccumulator(
-            [(f.name, f.dataType.simpleString()) for f in proj.schema.fields], opts
-        )
-        metrics = {"n_rows": 0, "n_null": {c: 0 for c in empty.cols}}
-        return results, (empty.to_bytes(), metrics)
+        return results
 
-    blobs, stats = _resume(spark, table_path, store, run_id, compute)
-    return TableProfile(fold_accumulators(blobs.values()), opts), stats
+    empty_metrics = {"n_rows": 0, "n_null": {c: 0 for c in empty.cols}}
+    blobs, stats = _resume(
+        spark, full, table_path, store, run_id, compute,
+        (empty.to_bytes(), empty_metrics), max_files,
+    )
+    merged = None
+    for unit, blob in blobs.items():
+        acc = TableAccumulator.from_bytes(blob)
+        got = {c: a.dtype for c, a in acc.cols.items()}
+        if got != want:
+            raise ValueError(
+                f"checkpoint unit {unit} of run {run_id!r} was profiled over "
+                f"columns {got}, not the requested {want}; use a new run id or store"
+            )
+        merged = acc if merged is None else merged.merge(acc)
+    return TableProfile(merged, opts), stats
 
 
 def resumable_screen(
@@ -156,8 +208,8 @@ def resumable_screen(
     n_undecodable under FUSED_SCREEN_BAD semantics), committed to the
     store as that file's blob.  Corpus totals are sums over file
     partials, identical to a one-shot fused run (pinned by tests); a
-    restart reads only the files the commit table hasn't seen —
-    skipped files are pruned at plan time, no wasted decode.
+    restart reads only the files with no commit for their current
+    identity — skipped files are pruned at plan time, no wasted decode.
 
     The kind SET is part of the run key (sorted, so caller order does
     not matter — per-kind counts in each blob are order-independent);
@@ -188,11 +240,12 @@ def resumable_screen(
             }
             results[rec["__unit"]] = (pickle.dumps(counts, protocol=4), metrics)
             n_decoded += counts["n_clips"]
-        empty = (pickle.dumps(zero, protocol=4), {"n_clips": 0, "n_flagged_total": 0})
-        return results, empty
+        return results
 
     run = f"{run_id}:screen[{','.join(sorted(kinds))}]"
-    blobs, stats = _resume(spark, table_path, store, run, compute)
+    empty = (pickle.dumps(zero, protocol=4), {"n_clips": 0, "n_flagged_total": 0})
+    full = spark.read.parquet(table_path)
+    blobs, stats = _resume(spark, full, table_path, store, run, compute, empty)
     parts = [pickle.loads(b) for b in blobs.values()]
     totals = pd.DataFrame(
         [

@@ -2,10 +2,13 @@
 
 The work unit is an *input file* (the stable unit of a table scan —
 partition ids are layout-dependent, file paths are lineage).  Each
-committed unit stores its pickled accumulator + metrics + digest, so a
-restarted run (a) skips committed files entirely — they are never
-re-read, not merely filtered — and (b) reconstructs their contribution
-from the stored accumulator blobs.  Commits are atomic per batch
+committed unit stores its pickled accumulator + metrics + digest, and
+in ``input_snapshot`` the file's identity when it was read
+(``size=<bytes>,mtime=<ms>``; ``unit`` holds the path).  A restarted
+run (a) skips files whose latest commit carries their current
+identity — they are never re-read, not merely filtered — and (b)
+reconstructs their contribution from the stored accumulator blobs; a
+new or changed file recomputes alone.  Commits are atomic per batch
 (parquet append of a new file); re-commits of the same unit are
 idempotent (latest wins by committed_at).
 
@@ -28,7 +31,7 @@ import pandas as pd
 COMMIT_COLUMNS = [
     "run_id",
     "unit",  # input file path (lineage)
-    "input_snapshot",
+    "input_snapshot",  # the unit's identity: size=<bytes>,mtime=<ms>
     "status",
     "metrics_json",
     "accumulator_digest",
@@ -61,15 +64,12 @@ class CheckpointStore:
             return pd.DataFrame(columns=COMMIT_COLUMNS)
         return pd.concat([pd.read_parquet(f) for f in files], ignore_index=True)
 
-    def committed(self, run_id: str, input_snapshot: str) -> pd.DataFrame:
+    def committed(self, run_id: str) -> pd.DataFrame:
+        """The latest commit of each of ``run_id``'s units."""
         pdf = self._read_all()
         if pdf.empty:
             return pdf
-        pdf = pdf[
-            (pdf.run_id == run_id)
-            & (pdf.input_snapshot == input_snapshot)
-            & (pdf.status == "committed")
-        ]
+        pdf = pdf[(pdf.run_id == run_id) & (pdf.status == "committed")]
         # idempotent re-commits: latest wins
         return pdf.sort_values("committed_at").groupby("unit", as_index=False).last()
 

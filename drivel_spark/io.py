@@ -128,41 +128,6 @@ def write_partitioned(
     df.write.mode(mode).partitionBy(*partition_cols).parquet(ref)
 
 
-def write_sorted(
-    df,
-    path: str,
-    sort_cols: list[str],
-    n_files: int = None,
-    mode: str = "overwrite",
-) -> None:
-    """Range-sorted parquet layout: repartitionByRange on ``sort_cols``
-    then sortWithinPartitions before writing, so every output file owns
-    a disjoint slice of the sort-key space and rows inside it are
-    ordered.  Parquet then stores tight per-row-group min/max for the
-    sort columns, and any later range/point predicate on them prunes at
-    BOTH levels — whole files via the footer stats, row groups via the
-    page index — without a shuffle at read time.  This is
-    write_bucketed's sibling: bucket on what you JOIN, range-sort on
-    what you RANGE-FILTER (timestamps, scores, ids).
-
-    The write itself costs the one range shuffle — paid once, like the
-    bucketed layout.  ``n_files`` overrides the partition count (file
-    sizing); range boundaries come from Spark's reservoir sampling, so
-    file sizes stay balanced even on skewed keys.
-    """
-    from pyspark.sql import functions as F
-
-    if not sort_cols:
-        raise ValueError("sort_cols must be non-empty")
-    cols = [F.col(c) for c in sort_cols]
-    part = (
-        df.repartitionByRange(n_files, *cols)
-        if n_files
-        else df.repartitionByRange(*cols)
-    )
-    part.sortWithinPartitions(*cols).write.mode(mode).parquet(path)
-
-
 def local_df(spark: SparkSession, rows, schema) -> DataFrame:
     """Tiny driver-side row list → DataFrame as an ARROW LOCAL RELATION
     (via pandas), instead of ``createDataFrame(list)``'s parallelized

@@ -19,13 +19,17 @@ validate  The timed job: pass 1 (schema + stats profile, optionally
           per-row invariant).  Prints ONE JSON line with wall seconds,
           clips/sec and the pass/fail summary.
 
-validate-stream / profile-stream / screen-stream
+validate-stream / screen-stream
           The Structured-Streaming front-ends (streaming/): each
           invocation processes only files the checkpoint hasn't seen
           (availableNow) — incremental validation deltas / incremental
-          profile state / incremental audio-QA screen deltas — and
-          prints cumulative totals that match the batch engine on the
-          same input.
+          audio-QA screen deltas — and prints cumulative totals that
+          match the batch engine on the same input.
+profile-stream
+          Incremental profile on the per-file commit store that
+          ``validate --checkpoint`` uses (checkpoint/): each invocation
+          profiles only new or changed files, commits one accumulator
+          per file and prints the profile of every committed file.
 
 Scaling protocol (BASELINE.md): `prepare` once, then run `validate` on
 the SAME input at --master local[8] and local[32]; efficiency =
@@ -1531,26 +1535,27 @@ def cmd_reconcile(args) -> dict:
 
 
 def cmd_profile_stream(args) -> dict:
-    """Incremental profile via Structured Streaming: folds only NEW
-    files into the persisted accumulator state; prints the cumulative
-    profile summary (equal to the batch profile of everything seen,
-    pinned by tests/test_streaming.py)."""
-    from drivel_spark.fixtures import CLIPS_SCHEMA
-    from drivel_spark.streaming import load_stream_profile, profile_stream
-
+    """Incremental profile on the per-file commit store
+    (checkpoint/runner.py resumable_profile, the store ``validate
+    --checkpoint`` uses): profiles only the files with no commit for
+    their current (path, size, mtime), ``--max-files-per-trigger`` files
+    per commit, and prints the profile of everything committed (equal
+    to the batch profile on the exact fields, pinned by
+    tests/test_streaming.py)."""
+    if os.path.isfile(os.path.join(args.checkpoint, "metadata")) and os.path.isdir(
+        os.path.join(args.checkpoint, "offsets")
+    ):
+        raise SystemExit(
+            f"{args.checkpoint} holds a Structured Streaming checkpoint; profile-stream "
+            "now keeps a per-file commit store there: pass a new --checkpoint dir"
+        )
     spark = build_session("drivel-profile-stream")
     t0 = time.time()
     cols = args.columns.split(",") if args.columns else PROFILE_COLUMNS
-    profile_stream(
-        spark,
-        args.source,
-        CLIPS_SCHEMA,
-        args.state,
-        args.checkpoint,
-        columns=cols,
-        max_files_per_trigger=args.max_files_per_trigger,
+    prof, stats = resumable_profile(
+        spark, args.source, CheckpointStore(args.checkpoint), run_id="profile-stream",
+        columns=cols, max_files=args.max_files_per_trigger,
     )
-    prof = load_stream_profile(args.state)
     sys.stderr.write(prof.describe() + "\n")
     wall = time.time() - t0
     return {
@@ -1560,8 +1565,9 @@ def cmd_profile_stream(args) -> dict:
         "wall_s": round(wall, 3),
         "columns": prof.columns(),
         "n_state_commits": len(
-            [f for f in os.listdir(args.state) if f.endswith(".bin")]
+            [f for f in os.listdir(args.checkpoint) if f.endswith(".parquet")]
         ),
+        "resume": stats,
     }
 
 
@@ -1969,10 +1975,10 @@ def main(argv=None) -> None:
 
     sps = sub.add_parser("profile-stream")
     sps.add_argument("--source", required=True, help="growing clips parquet dir")
-    sps.add_argument("--state", required=True, help="profile state dir")
-    sps.add_argument("--checkpoint", required=True)
+    sps.add_argument("--checkpoint", required=True, help="per-file commit store dir")
     sps.add_argument("--columns", default=None, help="comma-separated subset")
-    sps.add_argument("--max-files-per-trigger", type=int, default=None)
+    sps.add_argument("--max-files-per-trigger", type=int, default=None,
+                     help="files profiled and committed per chunk (default: all)")
 
     args = p.parse_args(argv)
     out = {

@@ -1,8 +1,8 @@
 """Distributed partition-parallel profiling.
 
-Every profile path — :func:`profile`, per-group (grouped.py),
-per-file resumable (checkpoint/runner.py) and streaming
-(streaming/profile_stream.py) — runs the same three steps:
+Every profile path — :func:`profile`, per-group (grouped.py) and
+per-file resumable (checkpoint/runner.py, which the incremental
+``profile-stream`` verb also runs on) — runs the same three steps:
 
 1. :func:`keyed_accumulators` — ONE ``mapInArrow`` kernel folding
    each partition's Arrow batches into one :class:`TableAccumulator`

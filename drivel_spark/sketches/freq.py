@@ -82,16 +82,22 @@ class SpaceSaving:
         self.update_value_counts(vc.field(0).to_pylist(), np_values(vc.field(1), np.int64))
 
     def merge(self, other: "SpaceSaving") -> "SpaceSaving":
+        """Mergeable-summaries rule (Agarwal et al., PODS 2012): a key
+        missing from a side that has evicted may have been counted
+        there up to that side's minimum, so it gets that minimum added
+        to its count and its error; an exact side adds nothing.  Past
+        capacity the top counts stay and every kept error grows by
+        the largest dropped count."""
         out = SpaceSaving(self.capacity)
-        out.counts = dict(self.counts)
-        out.errors = dict(self.errors)
-        for key, c in other.counts.items():
-            if key in out.counts:
-                out.counts[key] += c
-                out.errors[key] = out.errors.get(key, 0) + other.errors.get(key, 0)
-            else:
-                out.counts[key] = c
-                out.errors[key] = other.errors.get(key, 0)
+        sides = [(s, 0 if s.is_exact else min(s.counts.values())) for s in (self, other)]
+        for key in [*self.counts, *(k for k in other.counts if k not in self.counts)]:
+            for side, floor in sides:
+                if key in side.counts:
+                    c, e = side.counts[key], side.errors.get(key, 0)
+                else:
+                    c = e = floor
+                out.counts[key] = out.counts.get(key, 0) + c
+                out.errors[key] = out.errors.get(key, 0) + e
         if len(out.counts) > out.capacity:
             top = sorted(out.counts.items(), key=lambda kv: (-kv[1], str(kv[0])))
             dropped_max = max(c for _, c in top[out.capacity:])

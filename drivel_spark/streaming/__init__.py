@@ -1,9 +1,10 @@
 """Structured-Streaming front-end: incremental row-constraint
-validation and incremental profile (schema/stats) inference, both
-with exactly-once file tracking (checkpointLocation)."""
+validation and audio-QA screening with exactly-once file tracking
+(checkpointLocation), plus the stateful streams (running, windowed
+and CUSUM stats, dedup).  The incremental profile runs on the per-file
+commit store instead (checkpoint/runner.py resumable_profile)."""
 
 from .cusum_stream import CUSUM_STATE_FIELDS, streaming_cusum
-from .profile_stream import load_stream_profile, profile_stream
 from .screen_stream import SCREEN_REPORT_SCHEMA, cumulative_screen, screen_stream
 from .stateful import latest_stats, running_stats, running_stats_stream
 from .validate_stream import cumulative_passfail, validate_stream
@@ -18,8 +19,6 @@ from .windows import (
 __all__ = [
     "validate_stream",
     "cumulative_passfail",
-    "profile_stream",
-    "load_stream_profile",
     "running_stats",
     "streaming_cusum",
     "CUSUM_STATE_FIELDS",

@@ -10,7 +10,7 @@ runs the SAME screen ops over a stream of clip files:
 
 * ``readStream`` file source — each micro-batch sees only NEW files
   (exactly-once via ``checkpointLocation``, same discipline as
-  validate_stream / profile_stream);
+  validate_stream);
 * per micro-batch, the selected screens run as ONE fused narrow-scan →
   Arrow-map pass (ops/multimodal.py screen_report: one decode + one
   shared rFFT per clip) whenever every kind is fused-capable, falling

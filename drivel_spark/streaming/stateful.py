@@ -1,6 +1,6 @@
 """Custom keyed stateful streaming via ``applyInPandasWithState``.
 
-The foreachBatch modules (validate_stream / profile_stream) keep the
+The foreachBatch modules (validate_stream / screen_stream) keep the
 streaming state store EMPTY by design: their cumulative answer is a sum
 over committed per-batch deltas, which scales to 10^12 rows with zero
 state growth.  What that pattern cannot do is *per-key online

@@ -29,12 +29,12 @@ def test_resume_skips_committed_units(spark, clip_table, tmp_path):
 
     sub_path_profile, stats1 = resumable_profile(spark, clip_table, store, run_id="r1")
     assert stats1["n_recomputed"] == n_units  # fresh run computes all
-    assert stats1["snapshot"] == _snapshot(spark, clip_table)
 
     # restart: nothing to recompute, identical profile restored from blobs
     prof2, stats2 = resumable_profile(spark, clip_table, store, run_id="r1")
     assert stats2["n_recomputed"] == 0
     assert stats2["n_restored"] == n_units
+    assert stats2["snapshot"] == stats1["snapshot"]  # the same listing
     a, b = sub_path_profile.column("dur_ms"), prof2.column("dur_ms")
     assert (a.n, a.n_null, a.min_v, a.max_v, a.sum_v) == (b.n, b.n_null, b.min_v, b.max_v, b.sum_v)
     # one accumulator per file, and the same exact fields as profile()
@@ -58,7 +58,7 @@ def test_partial_commit_then_resume(spark, clip_table, tmp_path):
     prof_full, _ = resumable_profile(spark, clip_table, store_full, run_id="full")
 
     store = CheckpointStore(str(tmp_path / "ckpt_partial"))
-    committed_all = store_full.committed("full", _snapshot(spark, clip_table))
+    committed_all = store_full.committed("full")
     k = len(committed_all) // 2
     partial = committed_all.head(k).copy()
     partial["run_id"] = "resumed"
@@ -73,13 +73,6 @@ def test_partial_commit_then_resume(spark, clip_table, tmp_path):
         assert np.array_equal(a.hll.registers, b.hll.registers)
 
 
-def _snapshot(spark, path):
-    import hashlib
-
-    units = sorted(spark.read.parquet(path).inputFiles())
-    return hashlib.sha256("\n".join(units).encode()).hexdigest()[:16]
-
-
 def test_restore_rejects_blob_that_fails_its_digest(spark, clip_table, tmp_path):
     """A committed blob whose bytes changed after its digest was taken
     is refused on restore, naming the unit, before anything merges."""
@@ -87,7 +80,7 @@ def test_restore_rejects_blob_that_fails_its_digest(spark, clip_table, tmp_path)
 
     store = CheckpointStore(str(tmp_path / "ckpt"))
     resumable_profile(spark, clip_table, store, run_id="r1")
-    rows = store.committed("r1", _snapshot(spark, clip_table))
+    rows = store.committed("r1")
     unit, blob = rows.iloc[0]["unit"], rows.iloc[0]["acc"]
     rows.at[rows.index[0], "acc"] = blob[:-2] + bytes([blob[-2] ^ 1]) + blob[-1:]
     tampered = CheckpointStore(str(tmp_path / "tampered"))
@@ -138,23 +131,89 @@ def test_runners_commit_zero_row_units(spark, table_with_empty_file, tmp_path):
             assert int(first["n_clips"].max()) > 0
 
 
-def test_snapshot_mismatch_recomputes(spark, clip_table, tmp_path):
-    """The snapshot is the whole file set: one added file recomputes
-    every unit, the unchanged files included."""
+@pytest.fixture()
+def small_audio_table(spark, tmp_path):
+    """48 audio clips in 4 parquet files, a planted defect every 5th."""
+    path = str(tmp_path / "clips_small_audio")
+    build_clips(
+        spark, 48, 4, ClipFixtureSpec(with_audio=True, distort_every=5)
+    ).write.parquet(path)
+    return path
+
+
+def _both_runners(spark, path):
+    """Each resumable runner as ``store -> (comparable result, stats)``."""
+    from drivel_spark.checkpoint import resumable_screen
+
+    def prof(store):
+        p, stats = resumable_profile(spark, path, store, "r1", columns=["sr_hz", "dur_ms", "codec"])
+        return (p.n_rows, p.n_partitions, json.dumps(p.summary(), default=str)), stats
+
+    def screen(store):
+        totals, stats = resumable_screen(spark, path, store, "r1", kinds=["quality", "dropout"])
+        return totals.to_dict("records"), stats
+
+    return {"profile": prof, "screen": screen}
+
+
+def test_snapshot_mismatch_recomputes(spark, small_audio_table, tmp_path):
+    """A unit is keyed by its own (path, size, mtime), not by the whole
+    listing: a file appended to a checkpointed table computes alone,
+    every other unit restores, and the result equals a fresh run's."""
     import glob
     import shutil
 
-    path = str(tmp_path / "clips_copy")
-    shutil.copytree(clip_table, path)
-    store = CheckpointStore(str(tmp_path / "ckpt"))
-    _, before = resumable_profile(spark, path, store, run_id="r1")
+    path = small_audio_table
+    runners = _both_runners(spark, path)
+    before = {name: run(CheckpointStore(str(tmp_path / name)))[1] for name, run in runners.items()}
     first = sorted(glob.glob(f"{path}/part-*.parquet"))[0]
     shutil.copy(first, f"{path}/part-added.parquet")
-    _, after = resumable_profile(spark, path, store, run_id="r1")
-    assert after["snapshot"] != before["snapshot"]
-    assert after["n_units"] == before["n_units"] + 1
-    assert after["n_recomputed"] == after["n_units"]
-    assert after["n_restored"] == 0
+    for name, run in runners.items():
+        got, after = run(CheckpointStore(str(tmp_path / name)))
+        n = before[name]["n_units"]
+        assert after["n_units"] == n + 1, name
+        assert (after["n_recomputed"], after["n_restored"]) == (1, n), name
+        assert after["snapshot"] != before[name]["snapshot"], name
+        assert got == run(CheckpointStore(str(tmp_path / f"{name}_fresh")))[0], name
+
+
+def test_rewritten_file_recomputes_only_itself(spark, small_audio_table, tmp_path):
+    """A file rewritten in place under its own name with fewer rows
+    recomputes that unit and only that unit; the result equals a fresh
+    run's instead of restoring the stale blob."""
+    import glob
+    import os
+
+    import pyarrow.parquet as pq
+
+    path = small_audio_table
+    runners = _both_runners(spark, path)
+    first = {name: run(CheckpointStore(str(tmp_path / name))) for name, run in runners.items()}
+    target = sorted(glob.glob(f"{path}/part-*.parquet"))[1]
+    table = pq.read_table(target)
+    pq.write_table(table.slice(0, table.num_rows // 2), target)
+    crc = os.path.join(path, f".{os.path.basename(target)}.crc")
+    if os.path.exists(crc):  # the Spark writer's checksum of the old bytes
+        os.remove(crc)
+    for name, run in runners.items():
+        got, stats = run(CheckpointStore(str(tmp_path / name)))
+        n = first[name][1]["n_units"]
+        assert (stats["n_units"], stats["n_recomputed"], stats["n_restored"]) == (n, 1, n - 1), name
+        assert got != first[name][0], name
+        assert got == run(CheckpointStore(str(tmp_path / f"{name}_fresh")))[0], name
+
+
+def test_resume_refuses_blobs_of_other_columns(spark, clip_table, tmp_path):
+    """Resuming a run id under a different column projection raises a
+    ValueError that names the unit, whether the stored blobs have more
+    or fewer columns than the request, instead of folding them."""
+    store = CheckpointStore(str(tmp_path / "ckpt"))
+    resumable_profile(spark, clip_table, store, "r1", columns=["sr_hz", "dur_ms"])
+    unit = sorted(spark.read.parquet(clip_table).inputFiles())[0]
+    for cols in (["sr_hz"], ["sr_hz", "dur_ms", "codec"]):
+        with pytest.raises(ValueError, match="new run id or store") as err:
+            resumable_profile(spark, clip_table, store, "r1", columns=cols)
+        assert unit in str(err.value)
 
 
 @pytest.mark.parametrize("layout", ["partitioned", "single_file", "glob"])

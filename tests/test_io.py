@@ -182,64 +182,6 @@ def test_write_partitioned_prunes_directories(spark, tmp_path):
         write_partitioned(mock_df, "iceberg:db.clips", ["codec"], mode="replace")
 
 
-def test_write_sorted_layout_and_pruning(spark, tmp_path):
-    """write_sorted files own disjoint sort-key ranges (footer min/max
-    don't overlap) and a range predicate skips non-matching files'
-    row groups entirely.  Only the sort key clusters: in rank space
-    (the column's empirical CDF) each file spans ~1/8 of the sort key
-    and nearly all of an independent column."""
-    import pandas as pd
-    import pyarrow.parquet as pq
-    import pytest as _pytest
-
-    from drivel_spark.io import write_sorted
-
-    import numpy as np
-
-    rng = np.random.default_rng(3)
-    pdf = pd.DataFrame({"score": rng.permutation(100_000).astype("int64"),
-                        "payload": np.arange(100_000)})
-    out = str(tmp_path / "sorted")
-    write_sorted(spark.createDataFrame(pdf, schema="score long, payload long"), out, ["score"], n_files=8)
-
-    import glob
-    files = sorted(glob.glob(f"{out}/*.parquet"))
-    assert len(files) == 8
-    ranges = []
-    for f in files:
-        md = pq.ParquetFile(f).metadata
-        mins, maxs = [], []
-        for rg in range(md.num_row_groups):
-            col = md.row_group(rg).column(0)
-            assert col.path_in_schema == "score"
-            mins.append(col.statistics.min)
-            maxs.append(col.statistics.max)
-        ranges.append((min(mins), max(maxs)))
-    ranges.sort()
-    for (lo1, hi1), (lo2, hi2) in zip(ranges, ranges[1:]):
-        assert hi1 < lo2  # disjoint slices of the key space
-
-    def mean_rank_span(col_idx, col_name):
-        sv, spans = np.sort(pdf[col_name].to_numpy()), []
-        for f in files:
-            md = pq.ParquetFile(f).metadata
-            stats = [md.row_group(rg).column(col_idx).statistics for rg in range(md.num_row_groups)]
-            assert md.row_group(0).column(col_idx).path_in_schema == col_name
-            lo, hi = min(st.min for st in stats), max(st.max for st in stats)
-            spans.append((np.searchsorted(sv, hi, "right") - np.searchsorted(sv, lo, "left")) / len(sv))
-        return float(np.mean(spans))
-
-    assert mean_rank_span(0, "score") < 0.15
-    assert mean_rank_span(1, "payload") > 0.8
-    # rows survive intact
-    back = spark.read.parquet(out)
-    assert back.count() == 100_000
-    got = back.filter("score >= 99990").count()
-    assert got == 10
-    with _pytest.raises(ValueError, match="non-empty"):
-        write_sorted(back, out, [])
-
-
 def test_local_df_rejects_wrong_arity_rows(spark):
     """A malformed row raises instead of being silently truncated or
     re-tried on the classic path; well-formed rows (None, a 2^62 long,

@@ -148,17 +148,26 @@ def test_stream_subcommands(spark, tmp_path):
     assert out2["n_rows_total"] == 400
 
     ps = argparse.Namespace(
-        source=source, state=str(tmp_path / "pstate"),
-        checkpoint=str(tmp_path / "pck"), columns=None, max_files_per_trigger=None,
+        source=source, checkpoint=str(tmp_path / "pck"), columns=None,
+        max_files_per_trigger=None,
     )
     pout = cmd_profile_stream(ps)
     assert pout["n_rows_total"] == 400
-    # growing source: second invocation folds only the new files
+    assert pout["n_state_commits"] == 1  # every file in one commit
+    # growing source: second invocation profiles only the new file
     spark.createDataFrame(clips_pdf(range(400, 700), spec), CLIPS_SCHEMA).coalesce(
         1
     ).write.mode("append").parquet(source)
     pout2 = cmd_profile_stream(ps)
     assert pout2["n_rows_total"] == 700
+    assert (pout2["resume"]["n_recomputed"], pout2["resume"]["n_restored"]) == (1, 2)
+    assert pout2["n_state_commits"] == 2
+    # the old --state dir has no meaning on the store: argparse refuses it
+    from drivel_spark.job import main
+
+    with pytest.raises(SystemExit):
+        main(["profile-stream", "--source", source, "--state", str(tmp_path / "st"),
+              "--checkpoint", str(tmp_path / "pck")])
 
 
 def test_screen_stream_subcommand(spark, tmp_path):

@@ -129,6 +129,28 @@ def test_spacesaving_merge():
     assert m.counts["x"] == 17
 
 
+def test_spacesaving_merge_keeps_keys_above_n_over_k():
+    """A key missing from a side that has evicted gets that side's
+    minimum as count and error (mergeable summaries), so a key whose
+    true count exceeds N/k survives the merge; an exact side adds
+    nothing."""
+    a, b = SpaceSaving(2), SpaceSaving(2)
+    a.update_counts({"z": 3, "b": 3})
+    a.update_counts({"c": 1})  # evicts z: {b: 3, c: 4 (error 3)}
+    b.update_counts({"z": 3})
+    for m in (a.merge(b), b.merge(a)):
+        assert "z" in m.counts  # true count 6 > N/k = 10/2
+        for key, true in {"z": 6, "b": 3, "c": 1}.items():
+            if key in m.counts:
+                assert m.counts[key] - m.errors[key] <= true <= m.counts[key]
+        assert not m.is_exact
+    x, y = SpaceSaving(4), SpaceSaving(4)
+    x.update_counts({"p": 2, "q": 1})
+    y.update_counts({"q": 1, "r": 5})
+    m = x.merge(y)  # both exact: plain sums, still exact
+    assert (m.counts, m.is_exact) == ({"p": 2, "q": 2, "r": 5}, True)
+
+
 def test_bottomk_deterministic_and_merge_invariant():
     vals = pa.array([f"v{i}" for i in range(1000)])
     whole = BottomK(16)

@@ -256,100 +256,57 @@ def _assert_profiles_equal(a, b):
 
 
 def test_profile_stream_matches_batch_and_resumes(spark, tmp_path):
-    import os
+    """profile-stream runs on the per-file commit store: with one file
+    per commit, each wave profiles only its new files, the totals equal
+    ``profile()`` on the exact fields, and a rerun with no new data adds
+    no commit file.  The verb's store is resumable_profile's own."""
+    import argparse
 
+    from drivel_spark.checkpoint import CheckpointStore, resumable_profile
+    from drivel_spark.job import cmd_profile_stream
     from drivel_spark.profiling import profile
-    from drivel_spark.streaming import load_stream_profile, profile_stream
 
     source = str(tmp_path / "clips_psrc")
-    state = str(tmp_path / "pstate")
     ckpt = str(tmp_path / "pckpt")
     cols = ["clip_id", "sr_hz", "dur_ms", "codec", "transcript"]
+    args = argparse.Namespace(
+        source=source, checkpoint=ckpt, columns=",".join(cols), max_files_per_trigger=1
+    )
 
-    # wave 1 (2 files) → 2 micro-batches via maxFilesPerTrigger=1:
-    # exercises the running-state ⊔ new-batch fold, not just one fold
+    def n_files():
+        return len(spark.read.parquet(source).inputFiles())
+
     _write_wave(spark, source, 0, 400)
-    profile_stream(
-        spark, source, CLIPS_SCHEMA, state, ckpt,
-        columns=cols, max_files_per_trigger=1,
-    )
-    states = sorted(f for f in os.listdir(state) if f.endswith(".bin"))
-    assert len(states) >= 2  # one committed state per micro-batch
-    got = load_stream_profile(state)
-    want = profile(spark.read.parquet(source).select(*cols))
-    _assert_profiles_equal(got, want)
+    n1 = n_files()
+    out = cmd_profile_stream(args)
+    assert (out["resume"]["n_units"], out["resume"]["n_recomputed"]) == (n1, n1)
+    assert out["n_state_commits"] == n1  # one commit per file
+    assert out["n_rows_total"] == 400 and out["columns"] == cols
+    got, st = resumable_profile(spark, source, CheckpointStore(ckpt), "profile-stream", cols)
+    assert st["n_recomputed"] == 0
+    _assert_profiles_equal(got, profile(spark.read.parquet(source).select(*cols)))
 
-    # wave 2: resumed stream folds ONLY the new files onto the state
+    # wave 2: only the new files are profiled and committed
     _write_wave(spark, source, 400, 900)
-    profile_stream(
-        spark, source, CLIPS_SCHEMA, state, ckpt,
-        columns=cols, max_files_per_trigger=1,
-    )
-    got2 = load_stream_profile(state)
-    want2 = profile(spark.read.parquet(source).select(*cols))
-    _assert_profiles_equal(got2, want2)
-    assert got2.n_rows == 900
+    n2 = n_files()
+    out2 = cmd_profile_stream(args)
+    assert (out2["resume"]["n_recomputed"], out2["resume"]["n_restored"]) == (n2 - n1, n1)
+    assert out2["n_state_commits"] == n2
+    assert out2["n_rows_total"] == 900
+    got2, _ = resumable_profile(spark, source, CheckpointStore(ckpt), "profile-stream", cols)
+    _assert_profiles_equal(got2, profile(spark.read.parquet(source).select(*cols)))
 
-    # restart with no new data: no new state commits (exactly-once)
-    n_states = len(os.listdir(state))
-    profile_stream(
-        spark, source, CLIPS_SCHEMA, state, ckpt,
-        columns=cols, max_files_per_trigger=1,
-    )
-    assert len(os.listdir(state)) == n_states
+    # rerun with no new data: everything restores, no commit file added
+    out3 = cmd_profile_stream(args)
+    assert (out3["resume"]["n_recomputed"], out3["n_state_commits"]) == (0, n2)
+    assert out3["n_rows_total"] == 900
 
-    # replay idempotency: re-folding an already-committed batch id is
-    # a no-op (the state file for that id wins)
-    newest = max(
-        int(f.split("_")[1].split(".")[0])
-        for f in os.listdir(state)
-        if f.endswith(".bin")
-    )
-    before = open(os.path.join(state, f"state_{newest}.bin"), "rb").read()
-    # simulate the at-least-once replay path directly
-    from drivel_spark.streaming.profile_stream import _latest_state
-
-    assert _latest_state(state)[0] == newest
-    profile_stream(  # stream restart — file-source log skips everything
-        spark, source, CLIPS_SCHEMA, state, ckpt,
-        columns=cols, max_files_per_trigger=1,
-    )
-    after = open(os.path.join(state, f"state_{newest}.bin"), "rb").read()
-    assert before == after
-
-
-def test_profile_stream_guards_checkpoint_state_divergence(spark, tmp_path):
-    """state_dir and checkpoint_dir must live and die together (ADVICE
-    r02): a mismatched pairing fails fast instead of silently skipping
-    or dropping batches."""
-    import os
-    import shutil
-
-    import pytest
-
-    from drivel_spark.streaming import profile_stream
-
-    source = str(tmp_path / "gsrc")
-    state = str(tmp_path / "gstate")
-    ckpt = str(tmp_path / "gckpt")
-    cols = ["clip_id", "sr_hz", "dur_ms", "codec", "transcript"]
-    _write_wave(spark, source, 0, 200)
-    profile_stream(spark, source, CLIPS_SCHEMA, state, ckpt, columns=cols)
-    assert os.path.exists(os.path.join(state, "checkpoint_identity"))
-
-    # kept state + reset (different) checkpoint → stale state_N would
-    # silently win; must raise instead
-    with pytest.raises(RuntimeError, match="different checkpoint|reset"):
-        profile_stream(
-            spark, source, CLIPS_SCHEMA, state, str(tmp_path / "gckpt2"),
-            columns=cols,
-        )
-
-    # wiped state + kept checkpoint → prev=None would fold only new
-    # batches, dropping history; must raise instead
-    shutil.rmtree(state)
-    with pytest.raises(RuntimeError, match="state dir .* is empty"):
-        profile_stream(spark, source, CLIPS_SCHEMA, state, ckpt, columns=cols)
+    # a Structured Streaming checkpoint from the old verb is refused
+    old = tmp_path / "old_ckpt"
+    (old / "offsets").mkdir(parents=True)
+    (old / "metadata").write_text('{"id": "q"}')
+    with pytest.raises(SystemExit, match="new --checkpoint dir"):
+        cmd_profile_stream(argparse.Namespace(**{**vars(args), "checkpoint": str(old)}))
 
 
 def test_stateful_running_stats_resumes(spark, tmp_path):
