@@ -33,6 +33,7 @@ from __future__ import annotations
 
 import hashlib
 import pickle
+import re
 from typing import Callable, Optional
 from urllib.parse import unquote
 
@@ -40,9 +41,13 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..io import GLOB_CHARS, read_table
 from ..profiling.accumulator import ProfilerOptions, TableAccumulator
 from ..profiling.profiler import TableProfile, fold_keyed, keyed_accumulators
 from .store import CheckpointStore, make_commit_row
+
+# a glob character, which a literal path escapes with a backslash
+_GLOB_CHAR = re.compile(f"([{re.escape(GLOB_CHARS)}])")
 
 
 def _identities(spark: SparkSession, units: list[str]) -> dict[str, str]:
@@ -64,6 +69,15 @@ def _identities(spark: SparkSession, units: list[str]) -> dict[str, str]:
             st = listed[unquote(u.rsplit("/", 1)[1])]
             out[u] = f"size={st.getLen()},mtime={st.getModificationTime()}"
     return out
+
+
+def _literal_path(unit: str) -> str:
+    """The path a reader globs to exactly the file ``unit`` (a
+    percent-encoded ``inputFiles()`` URI) names: decoded, with Hadoop's
+    glob characters escaped.  (Spark's internal ``__globPaths__=false``
+    is no way out: for several paths it reads the others again once
+    per path that has a glob character.)"""
+    return _GLOB_CHAR.sub(r"\\\1", unquote(unit))
 
 
 def _resume(
@@ -113,7 +127,7 @@ def _resume(
         step = max_files or len(todo)
         for i in range(0, len(todo), step):
             chunk = todo[i : i + step]
-            results = compute(reader.parquet(*chunk))
+            results = compute(reader.parquet(*map(_literal_path, chunk)))
             store.append(
                 [make_commit_row(run, u, ident[u], *results.get(u, empty)) for u in chunk]
             )
@@ -150,7 +164,7 @@ def resumable_profile(
     accumulator profiled over other columns than ``columns`` (names
     or types) raises ``ValueError``: its run id belongs to another
     projection."""
-    full = spark.read.parquet(table_path)
+    full = read_table(spark, table_path)
     proj = full.select(*columns) if columns is not None else full
     empty = TableAccumulator(
         [(f.name, f.dataType.simpleString()) for f in proj.schema.fields], opts
@@ -244,7 +258,7 @@ def resumable_screen(
 
     run = f"{run_id}:screen[{','.join(sorted(kinds))}]"
     empty = (pickle.dumps(zero, protocol=4), {"n_clips": 0, "n_flagged_total": 0})
-    full = spark.read.parquet(table_path)
+    full = read_table(spark, table_path)
     blobs, stats = _resume(spark, full, table_path, store, run, compute, empty)
     parts = [pickle.loads(b) for b in blobs.values()]
     totals = pd.DataFrame(

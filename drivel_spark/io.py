@@ -18,13 +18,25 @@ Iceberg-specific scale features the engine relies on when present:
   snapshot.
 
 Resumable runs (drivel_spark/checkpoint/runner.py) take parquet paths
-only.  They key their commits on a digest of the table's sorted input
-file names, not on a catalog snapshot id.
+only.  They key each input file's commit on that file's own
+``(path, size, mtime)``, not on a catalog snapshot id.
 """
 
 from __future__ import annotations
 
+import json
+from typing import Optional
+from urllib.parse import unquote
+
+from py4j.java_gateway import JavaClass
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+# Hadoop's glob metacharacters (Spark's SparkHadoopUtil.isGlobPath)
+GLOB_CHARS = "{}[]*?\\"
+# parquet summary files, whose footer Spark's inference reads first
+_SUMMARIES = ("_common_metadata", "_metadata")
 
 
 def is_table_ref(ref: str) -> bool:
@@ -36,12 +48,123 @@ def is_table_ref(ref: str) -> bool:
 
 def read_table(spark: SparkSession, ref: str) -> DataFrame:
     """``iceberg:db.tbl`` / ``catalog.db.tbl`` → catalog read (Iceberg
-    when configured); anything else → parquet path."""
+    when configured); anything else → parquet path.
+
+    A parquet path is read with the schema Spark's own inference would
+    give it, taken from one footer on the driver (:func:`footer_schema`)
+    instead of the 1-task job inference submits.  Three cases keep
+    Spark's inference: a glob, ``spark.sql.parquet.mergeSchema=true``,
+    and a path with no footer to read (so the error stays Spark's);
+    so does a table whose files also store a partition column, whose
+    position only inference keeps."""
     if ref.startswith("iceberg:"):
         return spark.read.table(ref[len("iceberg:"):])
     if is_table_ref(ref):
         return spark.read.table(ref)
-    return spark.read.parquet(ref)
+    schema = footer_schema(spark, ref)
+    if schema is None:
+        return spark.read.parquet(ref)
+    return spark.read.schema(schema).parquet(ref)
+
+
+def _skipped(name: str) -> bool:
+    """The file and directory names a parquet read skips (Spark's
+    ``HadoopFSUtils.shouldFilterOutPathName``)."""
+    exclude = (
+        (name.startswith("_") and "=" not in name)
+        or name.startswith(".")
+        or name.endswith("._COPYING_")
+    )
+    return exclude and not name.startswith(_SUMMARIES)
+
+
+def footer_schema(spark: SparkSession, path: str) -> Optional[StructType]:
+    """The schema ``spark.read.parquet(path)`` infers, from driver-side
+    Hadoop and parquet calls: no Spark job.
+
+    Spark's inference reads one footer: the first ``_common_metadata``
+    in the sort order of the full leaf paths, else the first
+    ``_metadata``, else the first data file; names :func:`_skipped`
+    are not leaves.  This reads the same footer and converts it with
+    Spark's own ``ParquetFileFormat.readSchema``, which builds the
+    converter inference uses, so Spark's row metadata, INT96, the
+    NTZ/LTZ split and unsigned ints come out as inference gives them.
+    The listing is one ``listLeafStatuses`` call, and the leaf paths
+    cross py4j as one string, so the py4j round trips do not grow with
+    the file count.
+
+    None for a glob, under ``spark.sql.parquet.mergeSchema=true``, when
+    there is no footer to read, and when a footer field is also a
+    partition column (a ``name=value`` directory below ``path``): its
+    type and position come from the paths, which a given schema would
+    override."""
+    if any(c in GLOB_CHARS for c in path):
+        return None
+    if spark.conf.get("spark.sql.parquet.mergeSchema", "false").lower() == "true":
+        return None
+    client = spark.sparkContext._gateway._gateway_client
+
+    def cls(name: str) -> JavaClass:  # no lookup round trip per package
+        return JavaClass(name, client)
+
+    jspark = spark._jsparkSession
+    conf = jspark.sessionState().newHadoopConf()
+    try:
+        root = cls("org.apache.hadoop.fs.Path")(path)
+        fs = root.getFileSystem(conf)
+        prefix = fs.makeQualified(root).toString()
+        leaves = cls("org.apache.spark.deploy.SparkHadoopUtil").get().listLeafStatuses(fs, root)
+        status = cls("org.apache.hadoop.fs.FileStatus")._java_lang_class
+        statuses = leaves.toArray(cls("scala.reflect.ClassTag").apply(status))
+        n = len(statuses)
+        paths = (
+            cls("scala.collection.immutable.ArraySeq")
+            .unsafeWrapArray(cls("org.apache.hadoop.fs.FileUtil").stat2Paths(statuses))
+            .mkString("\n")
+            .split("\n")
+        )
+    except Py4JJavaError:  # no such path, say: inference raises Spark's own error
+        return None
+    if n == 0 or len(paths) != n:  # no files, or a newline in a name
+        return None
+    rel = []  # each leaf's components below ``path``
+    for p in paths:
+        if p == prefix:  # ``path`` is the file itself
+            rel.append([p.rsplit("/", 1)[-1]])
+        elif p.startswith(prefix.rstrip("/") + "/"):
+            rel.append(p[len(prefix):].strip("/").split("/"))
+        else:
+            return None
+    # the first leaf of each kind in Spark's order, String's (UTF-16's)
+    first: dict[str, int] = {}
+    for i in sorted(range(n), key=lambda i: paths[i].encode("utf-16-be")):
+        if not any(map(_skipped, rel[i])):
+            name = rel[i][-1]
+            first.setdefault(name if name in _SUMMARIES else "data", i)
+    pick = first.get("_common_metadata", first.get("_metadata", first.get("data")))
+    if pick is None:
+        return None
+    try:
+        st = statuses[pick]
+        footer = cls("org.apache.parquet.hadoop.Footer")(
+            st.getPath(),
+            cls("org.apache.spark.sql.execution.datasources.parquet.ParquetFooterReader").readFooter(
+                cls("org.apache.parquet.hadoop.util.HadoopInputFile").fromStatus(st, conf),
+                cls("org.apache.parquet.format.converter.ParquetMetadataConverter").SKIP_ROW_GROUPS,
+            ),
+        )
+        fmt = getattr(cls("org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat$"), "MODULE$")
+        jschema = fmt.readSchema(cls("scala.Option").apply(footer).toList(), jspark).get()
+        schema = StructType.fromJson(json.loads(jschema.json()))
+    except Py4JJavaError:  # a corrupt footer: let inference raise its error
+        return None
+    part_cols = {
+        unquote(c.split("=", 1)[0]).lower()
+        for parts in rel for c in parts[:-1] if "=" in c
+    }
+    if any(f.name.lower() in part_cols for f in schema.fields):
+        return None
+    return schema
 
 
 def write_table(df: DataFrame, ref: str, mode: str = "overwrite") -> None:

@@ -397,8 +397,10 @@ def _profile_columns(df, columns_arg) -> list:
 
 
 def cmd_baseline(args) -> dict:
+    from drivel_spark.io import read_table
+
     spark = build_session("drivel-baseline")
-    df = spark.read.parquet(f"{args.data}/clips")
+    df = read_table(spark, f"{args.data}/clips")
     cols = _profile_columns(df, getattr(args, "columns", None))
     by = getattr(args, "by", None)
     if by:

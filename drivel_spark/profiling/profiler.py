@@ -342,7 +342,14 @@ def tree_combine(
     so the partition count (known from the plan, no job) bounds the row
     count — sizing the combine tree without running the profiler scan
     an extra time for a ``count()``."""
-    n = acc_df.rdd.getNumPartitions()
+    return _combine_levels(acc_df, acc_df.rdd.getNumPartitions(), fanin, collect_threshold)
+
+
+def _combine_levels(
+    acc_df: DataFrame, n: int, fanin: int = TREE_FANIN, collect_threshold: int = COLLECT_THRESHOLD
+) -> DataFrame:
+    """:func:`tree_combine` over ``n`` partials, a count the caller
+    already has."""
     while n > collect_threshold:
         buckets = max(1, math.ceil(n / fanin))
         bucket = F.pmod(F.col("key").cast("long"), F.lit(buckets)).cast("string")
@@ -376,22 +383,30 @@ def profile(
 
     A single-row-group parquet file is UNSPLITTABLE, so the pruned
     input is round-robin repartitioned up to the core count when the
-    scan gives fewer partitions (guide §2.5).  The profile's exact
+    scan gives fewer partitions (guide §2.5).  The pass is planned once:
+    its partition count comes from its own executed plan, which the
+    ``collect`` then reuses; only a pass below the core count is
+    rebuilt over the repartitioned input, and the
+    :func:`tree_combine` levels above :data:`COLLECT_THRESHOLD`
+    partials are sized from that count.  The profile's exact
     fields (counts, min/max, sums, HLL registers) are
     partitioning-independent mergeable monoids (pinned by
     test_profiler); the BOUNDED sketches (SpaceSaving freq, KLL) are
     merge-order-sensitive above capacity by design and only promise
     their error contracts."""
-    from ..io import ensure_map_parallelism
-
     spark = df.sparkSession
     key = "spark.sql.execution.arrow.maxRecordsPerBatch"
     proj = df.select(*columns) if columns is not None else df
 
     def _run():
-        return tree_combine(
-            keyed_accumulators(ensure_map_parallelism(proj), opts=opts)
-        ).collect()
+        acc_df = keyed_accumulators(proj, opts=opts)
+        # one partial per partition; an AQE plan runs its shuffle stages
+        # here, and the collect below reuses them with the plan
+        n = acc_df._jdf.queryExecution().executedPlan().execute().getNumPartitions()
+        target = spark.sparkContext.defaultParallelism
+        if n < target:  # the ensure_map_parallelism rule, planned once
+            acc_df, n = keyed_accumulators(proj.repartition(target), opts=opts), target
+        return _combine_levels(acc_df, n).collect()
 
     # the conf is session-global at planning time: serialize overriders
     # so two concurrent profile() calls can't interleave set/restore

@@ -106,7 +106,19 @@ class SpaceSaving:
         return out
 
     def top(self, n: int = 10) -> list[tuple]:
-        return sorted(self.counts.items(), key=lambda kv: (-kv[1], str(kv[0])))[:n]
+        """Up to ``n`` ``(key, count, error)`` by count, where ``count -
+        error <= true count <= count``.  Past capacity, a key is listed
+        only when ``count - error`` reaches the (n+1)-th largest count,
+        which bounds every key outside the list (one never counted
+        included), so each listed key is in the true top ``n``: the
+        guaranteed top-n of Metwally et al. 2005."""
+        ranked = sorted(self.counts.items(), key=lambda kv: (-kv[1], str(kv[0])))
+        floor = 0 if self.is_exact else ranked[min(n, len(ranked) - 1)][1]
+        return [
+            (k, c, self.errors.get(k, 0))
+            for k, c in ranked[:n]
+            if c - self.errors.get(k, 0) >= floor
+        ]
 
     @property
     def is_exact(self) -> bool:

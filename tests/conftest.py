@@ -1,4 +1,5 @@
 import os
+import uuid
 
 import pytest
 
@@ -28,3 +29,22 @@ def sf_small_dir():
 @pytest.fixture(scope="session")
 def sf_med_dir():
     return SF_MED
+
+
+@pytest.fixture()
+def n_jobs(spark):
+    """``n_jobs(fn)``: the Spark jobs ``fn()`` submits, read from the
+    status tracker under a job group of their own."""
+    sc = spark.sparkContext
+
+    def count(fn) -> int:
+        group = f"n_jobs_{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count

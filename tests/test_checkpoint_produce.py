@@ -1,6 +1,7 @@
 """Resume-from-checkpoint protocol + distributed producer round-trips."""
 
 import json
+import os
 
 import numpy as np
 import pytest
@@ -156,6 +157,28 @@ def _both_runners(spark, path):
     return {"profile": prof, "screen": screen}
 
 
+def test_runners_read_paths_with_escapes(spark, small_audio_table, tmp_path):
+    """A table under a directory whose name has a space and a ``%41``,
+    one of whose files has a ``[`` in its name: both runners read each
+    file as the literal path its percent-encoded unit names, give what
+    they give on a plain copy, and restore every unit on a rerun."""
+    import glob
+    import shutil
+
+    path = str(tmp_path / "esc dir %41 x")
+    shutil.copytree(small_audio_table, path)
+    first = sorted(glob.glob(f"{path}/part-*.parquet"))[0]
+    os.rename(first, first.replace("part-", "part-[1]-"))
+    plain = _both_runners(spark, small_audio_table)
+    for name, run in _both_runners(spark, path).items():
+        store = CheckpointStore(str(tmp_path / f"{name}_ck"))
+        got, stats = run(store)
+        assert stats["n_recomputed"] == stats["n_units"] == 4, name
+        assert got == plain[name](CheckpointStore(str(tmp_path / f"{name}_plain")))[0], name
+        again, stats2 = run(store)
+        assert (again, stats2["n_restored"], stats2["n_recomputed"]) == (got, 4, 0), name
+
+
 def test_snapshot_mismatch_recomputes(spark, small_audio_table, tmp_path):
     """A unit is keyed by its own (path, size, mtime), not by the whole
     listing: a file appended to a checkpointed table computes alone,
@@ -235,7 +258,8 @@ def test_resumable_profile_matches_profile(spark, tmp_path, layout):
     else:
         df.write.parquet(str(tmp_path / "files"))
         path = str(tmp_path / "files" / "part-*.parquet")
-    want = profile(read_table(spark, path))
+    table = read_table(spark, path)
+    want = profile(table)
     got, stats = resumable_profile(spark, path, CheckpointStore(str(tmp_path / "ck")), "r1")
     assert stats["n_recomputed"] == stats["n_units"]
 
@@ -243,14 +267,24 @@ def test_resumable_profile_matches_profile(spark, tmp_path, layout):
         out = {}
         for s in prof.summary():
             if not getattr(getattr(prof.column(s["column"]), "freq", None), "is_exact", True):
-                # past its capacity a SpaceSaving top list depends on
-                # the merge order, which differs between the two paths
-                s = {k: v for k, v in s.items() if k != "top"}
+                # past its capacity a SpaceSaving count and error depend
+                # on the merge order, which differs between the two paths
+                s = {**s, "top": [key for key, _, _ in s["top"]]}
             out[s["column"]] = json.dumps(s, default=str)
         return out
 
     assert summaries(got) == summaries(want)
     assert want.column("codec").n_null == 0 and want.n_rows == 400
+    rows = table.toPandas()
+    for prof in (want, got):
+        for s in prof.summary():
+            if "top" not in s:
+                continue
+            true = rows[s["column"]].value_counts()
+            nth = true.iloc[min(9, len(true) - 1)]  # the 10th largest true count
+            for key, count, error in s["top"]:
+                assert count - error <= true[key] <= count, (s["column"], key)
+                assert true[key] >= nth, (s["column"], key)
 
 
 # ---------------------------------------------------------------------------

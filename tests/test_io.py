@@ -1,7 +1,13 @@
-"""Table-access abstraction: ref dispatch and catalog routing."""
+"""Table-access abstraction: ref dispatch, catalog routing, and the
+parquet schema read from a footer."""
 
+import datetime
 import os
 
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
 from drivel_spark.io import is_table_ref, read_table
@@ -20,10 +26,14 @@ def test_read_parquet_path(spark, sf_small_dir):
     assert df.count() == 25
 
 
-def test_read_table_catalog_routing():
+def test_read_table_catalog_routing(monkeypatch):
     """Ref-routing into the Spark catalog (the Iceberg path when the
     runtime jar + catalog conf are present) — exercised with a fake
-    session so the branch runs without an Iceberg deployment."""
+    session so the branch runs without an Iceberg deployment (and with
+    no footer to read for the path)."""
+    import drivel_spark.io as dio
+
+    monkeypatch.setattr(dio, "footer_schema", lambda spark, ref: None)
     log = []
 
     class FakeReader:
@@ -199,3 +209,105 @@ def test_local_df_rejects_wrong_arity_rows(spark):
     for bad in ([(1, "x")], [(1, "x", [], 4)]):
         with _pytest.raises(ValueError, match="values for columns"):
             local_df(spark, [(2, "y", [0.5]), *bad], schema)
+
+
+def _parquet_layouts(spark, root):
+    """``{name: path}`` of the layouts whose read schema must match
+    Spark's inference."""
+    out = {}
+    pa_dir = os.path.join(root, "pyarrow")
+    os.makedirs(pa_dir)
+    ts = datetime.datetime(2024, 5, 1, 12, 30)
+    pq.write_table(pa.table({
+        "ts_us": pa.array([ts], pa.timestamp("us")),
+        "ts_ms_utc": pa.array([ts], pa.timestamp("ms", tz="UTC")),
+        "u32": pa.array([7], pa.uint32()),
+    }), os.path.join(pa_dir, "part-0.parquet"))
+    out["pyarrow"] = pa_dir
+    typed = spark.sql(
+        "SELECT CAST(1.25 AS DECIMAL(12, 3)) AS d, array(1, 2) AS a,"
+        " named_struct('x', 1, 'y', 'b') AS st, map('k', 1.5D) AS m,"
+        " TIMESTAMP'2024-05-01 12:30:00' AS ltz,"
+        " TIMESTAMP_NTZ'2024-05-01 12:30:00' AS ntz, id AS k"
+        " FROM range(4)"
+    )
+    out["spark"] = os.path.join(root, "spark")
+    typed.write.parquet(out["spark"])
+    out["int96"] = os.path.join(root, "int96")
+    spark.conf.set("spark.sql.parquet.outputTimestampType", "INT96")
+    try:
+        typed.write.parquet(out["int96"])
+    finally:
+        spark.conf.unset("spark.sql.parquet.outputTimestampType")
+    out["hive"] = os.path.join(root, "hive")
+    typed.write.partitionBy("k").parquet(out["hive"])
+    # the partition column also stored in the files (as a string)
+    stored = os.path.join(root, "stored")
+    for k in (1, 2):
+        os.makedirs(os.path.join(stored, f"k={k}"))
+        pq.write_table(pa.table({"k": [str(k)], "x": [k]}),
+                       os.path.join(stored, f"k={k}", "part-0.parquet"))
+    out["hive_stored"] = stored
+    out["single_file"] = sorted(
+        os.path.join(out["spark"], f) for f in os.listdir(out["spark"]) if f.endswith(".parquet")
+    )[0]
+    out["glob"] = os.path.join(out["spark"], "part-*.parquet")
+    # a skipped directory and a skipped file whose footers sort first,
+    # and files in name order: the first data file is a.parquet
+    skips = os.path.join(root, "skips")
+    os.makedirs(os.path.join(skips, "_temporary"))
+    pq.write_table(pa.table({"tmp": [1]}), os.path.join(skips, "_temporary", "0.parquet"))
+    pq.write_table(pa.table({"dot": [1]}), os.path.join(skips, ".0.parquet"))
+    pq.write_table(pa.table({"b": [1]}), os.path.join(skips, "b.parquet"))
+    pq.write_table(pa.table({"a": [1.0]}), os.path.join(skips, "a.parquet"))
+    out["skips"] = skips
+    # a summary file is read before any data file
+    summary = os.path.join(root, "summary")
+    os.makedirs(summary)
+    pq.write_table(pa.table({"x": [1]}), os.path.join(summary, "part-0.parquet"))
+    pq.write_metadata(pa.schema([("x", pa.int64()), ("y", pa.string())]),
+                      os.path.join(summary, "_common_metadata"))
+    out["summary"] = summary
+    return out
+
+
+def test_read_table_schema_equals_inference(spark, tmp_path):
+    """``read_table`` gives the schema ``spark.read.parquet`` infers, on
+    every layout, and the same rows."""
+    from drivel_spark.io import footer_schema
+
+    layouts = _parquet_layouts(spark, str(tmp_path))
+    for name, path in layouts.items():
+        want = spark.read.parquet(path)
+        got = read_table(spark, path)
+        assert got.schema == want.schema, name
+        assert sorted(map(str, got.collect())) == sorted(map(str, want.collect())), name
+    # the layouts that keep Spark's inference
+    assert footer_schema(spark, layouts["glob"]) is None
+    assert footer_schema(spark, layouts["hive_stored"]) is None
+    assert footer_schema(spark, layouts["hive"]) is not None
+    assert [f.name for f in footer_schema(spark, layouts["summary"]).fields] == ["x", "y"]
+    spark.conf.set("spark.sql.parquet.mergeSchema", "true")
+    try:
+        assert footer_schema(spark, layouts["spark"]) is None
+    finally:
+        spark.conf.unset("spark.sql.parquet.mergeSchema")
+
+
+def test_read_table_empty_dir_raises_sparks_error(spark, tmp_path):
+    empty = str(tmp_path / "empty")
+    os.makedirs(empty)
+    errors = []
+    for read in (lambda: read_table(spark, empty), lambda: spark.read.parquet(empty)):
+        with pytest.raises(AnalysisException) as err:
+            read()
+        errors.append((err.value.getCondition(), str(err.value)))
+    assert errors[0] == errors[1]
+    assert errors[0][0] == "UNABLE_TO_INFER_SCHEMA"
+
+
+def test_read_table_of_a_parquet_dir_runs_no_job(spark, tmp_path, n_jobs):
+    path = str(tmp_path / "t")
+    spark.range(100).selectExpr("id", "cast(id AS string) AS s").repartition(4).write.parquet(path)
+    assert n_jobs(lambda: read_table(spark, path)) == 0
+    assert n_jobs(lambda: spark.read.parquet(path)) == 1  # the inference job

@@ -93,6 +93,21 @@ def test_partitioning_invariance(lineitem):
                 assert sorted(map(str, a.sample.sample())) == sorted(map(str, b.sample.sample()))
 
 
+def test_profile_plans_its_pass_once(spark, tmp_path, n_jobs):
+    """A plain parquet read profiles in one job; a shuffled input runs
+    its shuffle once (planning the pass a second time for its
+    partition count ran it again); 300 partitions go through the
+    executor-side combine levels and fold the same partials."""
+    path = str(tmp_path / "t")
+    spark.range(2000).selectExpr("id", "cast(id % 7 AS string) AS s").repartition(4).write.parquet(path)
+    table = spark.read.parquet(path)
+    assert table.rdd.getNumPartitions() == 4
+    assert n_jobs(lambda: profile(table)) == 1
+    assert n_jobs(lambda: profile(spark.range(200000).repartition(8))) == 2
+    prof = profile(spark.range(600).repartition(300))
+    assert (prof.n_rows, prof.n_partitions, prof.column("id").max_v) == (600, 300, 599)
+
+
 def test_tree_combine_levels_match_flat_fold(lineitem):
     """9 partitions, fan-in 2, collect threshold 2: three executor-side
     combine levels (9 → 5 → 3 → 2 rows) give the same exact fields

@@ -151,6 +151,36 @@ def test_spacesaving_merge_keeps_keys_above_n_over_k():
     assert (m.counts, m.is_exact) == ({"p": 2, "q": 2, "r": 5}, True)
 
 
+def test_spacesaving_top_lists_only_guaranteed_keys():
+    """Past capacity, ``top(n)`` lists ``(key, count, error)`` with the
+    true count inside ``[count - error, count]``, and only keys that are
+    in the true top n, whether the sketch was fed or merged; an exact
+    sketch lists its n largest counts with error 0."""
+    rng = np.random.default_rng(11)
+    keys = rng.zipf(1.3, size=20_000).astype(str)
+    values, counts = np.unique(keys, return_counts=True)
+    true = dict(zip(values.tolist(), counts.tolist()))
+    nth = sorted(true.values(), reverse=True)[9]  # the 10th largest true count
+    fed = SpaceSaving(32)
+    parts = []
+    for chunk in np.array_split(keys, 8):
+        fed.update(pa.array(chunk))
+        part = SpaceSaving(32)
+        part.update(pa.array(chunk))
+        parts.append(part)
+    merged = functools.reduce(lambda a, b: a.merge(b), parts)
+    for sketch in (fed, merged):
+        assert not sketch.is_exact
+        top = sketch.top(10)
+        assert 0 < len(top) < 10  # the 10 largest counts hold keys seen once
+        for key, count, error in top:
+            assert count - error <= true[key] <= count
+            assert true[key] >= nth
+    exact = SpaceSaving(8)
+    exact.update_counts({"a": 5, "b": 3, "c": 3, "d": 1})
+    assert exact.top(2) == [("a", 5, 0), ("b", 3, 0)]
+
+
 def test_bottomk_deterministic_and_merge_invariant():
     vals = pa.array([f"v{i}" for i in range(1000)])
     whole = BottomK(16)
