@@ -641,25 +641,25 @@ def q_dedup_stream_events(spark, sf_dir):
 
 
 def q_screen_stream_clips(spark, sf_dir):
-    """Incremental audio-QA screening (streaming/screen_stream.py),
-    driven as a REAL two-wave availableNow stream: wave 1 writes half
-    the clips (every 5th hard-clipped + DC-shifted by the fixture
-    distortion hook) and streams it through the 'quality' screen; wave
-    2 appends the rest and re-invokes on the SAME checkpoint, so only
-    the new files are decoded (maxFilesPerTrigger=1 forces multiple
-    micro-batches per wave).  The engine result is the lifetime
-    per-kind totals folded from the per-batch delta commits
-    (cumulative_screen) — if any file were reprocessed or skipped,
-    n_clips could not equal n.  The oracle re-derives the same totals
-    in SQL from an INDEPENDENT stdlib-wave decode of the identical
-    seeded clips under the screen's published flag policy
-    (clipping_ratio > 0.01 OR |dc_offset| > 0.02)."""
+    """Incremental audio-QA screening (checkpoint/runner.py
+    resumable_screen, the runner of ``screen-stream``), driven as two
+    waves on one per-file commit store: wave 1 writes half the clips
+    (every 5th hard-clipped + DC-shifted by the fixture distortion
+    hook) and screens it with the 'quality' screen; wave 2 appends the
+    rest and re-invokes on the SAME store, so only the new files are
+    decoded (max_files=1 commits one file at a time).  The engine
+    result is the per-kind totals over every committed file — if any
+    file were reprocessed or skipped, n_clips could not equal n.  The
+    oracle re-derives the same totals in SQL from an INDEPENDENT
+    stdlib-wave decode of the identical seeded clips under the screen's
+    published flag policy (clipping_ratio > 0.01 OR |dc_offset| >
+    0.02)."""
     import os
     import shutil
     import tempfile
 
+    from drivel_spark.checkpoint import CheckpointStore, resumable_screen
     from drivel_spark.fixtures import CLIPS_SCHEMA, ClipFixtureSpec, clips_pdf
-    from drivel_spark.streaming import cumulative_screen, screen_stream
 
     n = 400 if "0.01" in sf_dir else 200
     spec = ClipFixtureSpec(with_audio=True, distort_every=5)
@@ -672,26 +672,21 @@ def q_screen_stream_clips(spark, sf_dir):
     base = os.path.join(tempfile.gettempdir(), f"drivel_screen_stream_{tag}")
     shutil.rmtree(base, ignore_errors=True)
     src = os.path.join(base, "src")
-    rep = os.path.join(base, "rep")
-    ckpt = os.path.join(base, "ckpt")
+    store = CheckpointStore(os.path.join(base, "ckpt"))
 
-    def wave(lo: int, hi: int) -> None:
+    def wave(lo: int, hi: int):
         spark.createDataFrame(clips_pdf(range(lo, hi), spec), CLIPS_SCHEMA).coalesce(
             1
         ).write.mode("append").parquet(src)
-        screen_stream(
-            spark,
-            src,
-            CLIPS_SCHEMA,
-            ["quality"],
-            rep,
-            ckpt,
-            max_files_per_trigger=1,
-        )
+        totals, _ = resumable_screen(spark, src, store, "screen-stream", ["quality"], max_files=1)
+        return totals
 
     wave(0, n // 2)
-    wave(n // 2, n)
-    return cumulative_screen(spark, rep).orderBy("kind")
+    totals = wave(n // 2, n)
+    return _local_df(
+        spark, totals.itertuples(index=False),
+        "kind string, n_clips long, n_flagged long, n_undecodable long",
+    )
 
 
 # ---------------------------------------------------------------------------

@@ -5,7 +5,8 @@ The two runners — :func:`resumable_profile` and
 (north_rule: "resumable from checkpoint with per-partition lineage +
 metrics"):
 
-1. enumerate the table's input files (the lineage units) and take
+1. enumerate the table's data files (the lineage units: its input
+   files less the parquet summary files, which hold no rows) and take
    each one's identity, ``(path, size, mtime)``, from one Hadoop
    ``listStatus`` per parent directory;
 2. restore a unit only when its latest commit carries the same
@@ -32,7 +33,7 @@ too few to pay for a shuffle and a merge task.
 from __future__ import annotations
 
 import hashlib
-import pickle
+import json
 import re
 from typing import Callable, Optional
 from urllib.parse import unquote
@@ -41,7 +42,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..io import GLOB_CHARS, read_table
+from ..io import _SUMMARIES, GLOB_CHARS, read_table
 from ..profiling.accumulator import ProfilerOptions, TableAccumulator
 from ..profiling.profiler import TableProfile, fold_keyed, keyed_accumulators
 from .store import CheckpointStore, make_commit_row
@@ -100,7 +101,8 @@ def _resume(
 
     A file rewritten in place that keeps both its size and its mtime
     tick is not detected, and restores its old blob."""
-    units = sorted(full.inputFiles())
+    # parquet summary files are listed but hold no rows of their own
+    units = sorted(u for u in full.inputFiles() if u.rsplit("/", 1)[1] not in _SUMMARIES)
     ident = _identities(spark, units)
     snapshot = hashlib.sha256(
         "\n".join(f"{u}\t{ident[u]}" for u in units).encode()
@@ -201,85 +203,152 @@ def resumable_profile(
     return TableProfile(merged, opts), stats
 
 
+def _screen_passes(df: DataFrame, kinds: list[str]) -> list[tuple[list[str], DataFrame, list]]:
+    """``(kinds, report, aggregations)`` per decode pass over ``df``
+    (which carries the unit as ``__unit``): one fused ``screen_report``
+    for the fused-capable kinds, one op pass for each other kind.
+    Every aggregation list gives ``n_clips`` and per kind ``f_{kind}``
+    (flagged), ``b_{kind}`` (undecodable) and ``q_{kind}`` (the flagged
+    ``clip_id``s, sorted); the fused one adds ``n_undec``."""
+    from ..ops.multimodal import (
+        AUDIO_SCREENS, FUSED_SCREEN_FIELDS, screen_count_aggs, screen_report,
+        screen_undecodable_col,
+    )
+
+    def flagged_ids(kind):
+        flag = F.expr(AUDIO_SCREENS[kind][1])
+        return F.sort_array(F.collect_list(F.when(flag, F.col("clip_id")))).alias(f"q_{kind}")
+
+    ids = ["__unit", "clip_id"]
+    fused = [k for k in kinds if k in FUSED_SCREEN_FIELDS]
+    passes = []
+    if fused:
+        aggs = screen_count_aggs(fused) + [flagged_ids(k) for k in fused]
+        passes.append((fused, screen_report(df, fused, id_cols=ids), aggs))
+    for kind in (k for k in kinds if k not in FUSED_SCREEN_FIELDS):
+        op, flag = AUDIO_SCREENS[kind]
+        rep = op(df, id_cols=ids)
+        aggs = [
+            F.count(F.lit(1)).alias("n_clips"),
+            F.count(F.when(F.expr(flag), 1)).alias(f"f_{kind}"),
+            F.count(F.when(F.col(screen_undecodable_col(rep)).isNull(), 1)).alias(f"b_{kind}"),
+            flagged_ids(kind),
+        ]
+        passes.append(([kind], rep, aggs))
+    return passes
+
+
 def resumable_screen(
     spark: SparkSession,
     table_path: str,
     store: CheckpointStore,
     run_id: str,
     kinds: Optional[list[str]] = None,
+    quarantine_dir: Optional[str] = None,
+    max_files: Optional[int] = None,
 ) -> tuple[pd.DataFrame, dict]:
-    """Fused audio-QA screening (ops/multimodal.py screen_report),
-    resumable with the same per-file unit model as
-    :func:`resumable_profile` — the operational mode for content-level
-    QA at 10^12 clips, where a decode pass over the corpus takes long
-    enough that interruption is the norm, not the exception
-    (north_rule: "each partition's result commits with lineage +
-    metrics ... so interrupted runs resume without recomputation").
+    """Audio-QA screening (ops/multimodal.py ``AUDIO_SCREENS``,
+    default: every fused-capable kind), resumable with the same
+    per-file unit model as :func:`resumable_profile` — the operational
+    mode for content-level QA at 10^12 clips, where a decode pass over
+    the corpus takes long enough that interruption is the norm, not
+    the exception (north_rule: "each partition's result commits with
+    lineage + metrics ... so interrupted runs resume without
+    recomputation").  ``screen --checkpoint`` and ``screen-stream``
+    both run it.
 
-    Per uncommitted file: ONE fused decode pass keyed by
-    ``input_file_name()`` reduces to per-(file, kind) counts
-    (n_clips, n_flagged under the kind's published policy,
-    n_undecodable under FUSED_SCREEN_BAD semantics), committed to the
-    store as that file's blob.  Corpus totals are sums over file
-    partials, identical to a one-shot fused run (pinned by tests); a
-    restart reads only the files with no commit for their current
-    identity — skipped files are pruned at plan time, no wasted decode.
+    Per chunk of uncommitted files (``max_files`` at a time): the
+    fused-capable kinds run in ONE ``screen_report`` decode pass, every
+    other kind in one pass of its own op, each grouped by
+    ``input_file_name()`` into per-(file, kind) counts (n_clips,
+    n_flagged under the kind's published policy, n_undecodable) plus
+    the file's flagged ``clip_id``s.  They commit as that file's JSON
+    blob.  Corpus totals are sums over file partials, identical to the
+    one-shot screens (pinned by tests); a restart reads only the files
+    with no commit for their current identity — skipped files are
+    pruned at plan time, no wasted decode.
 
     The kind SET is part of the run key (sorted, so caller order does
-    not matter — per-kind counts in each blob are order-independent);
-    resuming with a DIFFERENT set recomputes from scratch instead of
-    mixing incompatible blobs.  Returns (per-kind totals frame in the
-    screen-stream report shape, stats dict).
+    not matter); resuming with a DIFFERENT set recomputes from scratch
+    instead of mixing incompatible blobs.  With ``quarantine_dir``,
+    every unit's flagged ``(clip_id, kind)`` pairs are written there
+    (overwrite), so it holds exactly the current table's flags.
+    Returns (per-kind totals frame: kind, n_clips, n_flagged,
+    n_undecodable, in ``kinds`` order; stats dict).
     """
-    from ..ops.multimodal import FUSED_SCREEN_FIELDS, screen_count_aggs, screen_report
+    from ..io import local_df
+    from ..ops.multimodal import AUDIO_SCREENS, FUSED_SCREEN_FIELDS
 
-    kinds = list(kinds or FUSED_SCREEN_FIELDS)
-    zero = {"n_clips": 0, "n_undec": 0}
+    kinds = list(FUSED_SCREEN_FIELDS) if kinds is None else list(kinds)
     for kind in kinds:
-        zero[f"f_{kind}"] = zero[f"b_{kind}"] = 0
+        if kind not in AUDIO_SCREENS:
+            raise ValueError(f"unknown screen {kind!r}; one of {sorted(AUDIO_SCREENS)}")
+    if not kinds:
+        raise ValueError("need at least one screen kind")
+    has_fused = any(k in FUSED_SCREEN_FIELDS for k in kinds)
+
+    def empty_blob() -> dict:
+        return {
+            "n_undec": 0 if has_fused else None,  # clips the fused pass could not decode
+            "counts": {k: [0, 0, 0] for k in kinds},  # n_clips, n_flagged, n_undecodable
+            "flagged": {k: [] for k in kinds},  # flagged clip ids
+        }
+
+    def encode(blob: dict) -> bytes:
+        return json.dumps(blob, sort_keys=True).encode()
+
     n_decoded = 0
 
     def compute(df):
         nonlocal n_decoded
-        rep = screen_report(
-            df.withColumn("__unit", F.input_file_name()), kinds, id_cols=["__unit"]
-        )
-        agg = rep.groupBy("__unit").agg(*screen_count_aggs(kinds)).toPandas()
+        blobs: dict[str, dict] = {}
+        for pass_kinds, rep, aggs in _screen_passes(df.withColumn("__unit", F.input_file_name()), kinds):
+            for r in rep.groupBy("__unit").agg(*aggs).collect():
+                fields = r.asDict()
+                blob = blobs.setdefault(r["__unit"], empty_blob())
+                if "n_undec" in fields:  # the fused pass
+                    blob["n_undec"] = fields["n_undec"]
+                for k in pass_kinds:
+                    blob["counts"][k] = [r["n_clips"], r[f"f_{k}"], r[f"b_{k}"]]
+                    blob["flagged"][k] = r[f"q_{k}"]
         results = {}
-        for _, rec in agg.iterrows():
-            counts = {k: int(rec[k]) for k in zero}
+        for unit, blob in blobs.items():
+            n_clips = max(c[0] for c in blob["counts"].values())
+            n_decoded += n_clips
             metrics = {
-                "n_clips": counts["n_clips"],
-                "n_flagged_total": sum(counts[f"f_{k}"] for k in kinds),
+                "n_clips": n_clips,
+                "n_flagged_total": sum(c[1] for c in blob["counts"].values()),
             }
-            results[rec["__unit"]] = (pickle.dumps(counts, protocol=4), metrics)
-            n_decoded += counts["n_clips"]
+            results[unit] = (encode(blob), metrics)
         return results
 
     run = f"{run_id}:screen[{','.join(sorted(kinds))}]"
-    empty = (pickle.dumps(zero, protocol=4), {"n_clips": 0, "n_flagged_total": 0})
+    empty = (encode(empty_blob()), {"n_clips": 0, "n_flagged_total": 0})
     full = read_table(spark, table_path)
-    blobs, stats = _resume(spark, full, table_path, store, run, compute, empty)
-    parts = [pickle.loads(b) for b in blobs.values()]
+    raw, stats = _resume(spark, full, table_path, store, run, compute, empty, max_files)
+    parts = []
+    for unit, b in raw.items():
+        try:
+            parts.append(json.loads(b))
+        except ValueError:
+            raise ValueError(
+                f"checkpoint unit {unit} of run {run!r} holds no JSON screen counts "
+                "(a store written before screens committed JSON); pass a new checkpoint store"
+            ) from None
     totals = pd.DataFrame(
-        [
-            (
-                kind,
-                sum(p["n_clips"] for p in parts),
-                sum(p[f"f_{kind}"] for p in parts),
-                sum(p[f"b_{kind}"] for p in parts),
-            )
-            for kind in kinds
-        ],
+        [(k, *(sum(p["counts"][k][i] for p in parts) for i in range(3))) for k in kinds],
         columns=["kind", "n_clips", "n_flagged", "n_undecodable"],
     )
-    undecs = [p.get("n_undec") for p in parts]
+    if quarantine_dir is not None:
+        pairs = [(cid, k) for p in parts for k in kinds for cid in p["flagged"][k]]
+        id_type = full.schema["clip_id"].dataType.simpleString()
+        local_df(spark, pairs, f"clip_id {id_type}, kind string").write.mode(
+            "overwrite"
+        ).parquet(quarantine_dir)
     # clips actually decoded THIS call (restored blobs cost no decode)
     # — the honest base for a throughput rate on resume
     stats["n_clips_recomputed"] = n_decoded
-    # corpus-wide undecodable count (fused-run output parity); None
-    # when a pre-upgrade store blob lacks the field
-    stats["n_undecodable"] = (
-        int(sum(undecs)) if all(u is not None for u in undecs) else None
-    )
+    # corpus-wide undecodable count of the fused pass; None when no
+    # fused-capable kind ran (each kind's own count is in the totals)
+    stats["n_undecodable"] = sum(p["n_undec"] for p in parts) if has_fused else None
     return totals, stats

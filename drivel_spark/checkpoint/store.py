@@ -2,7 +2,8 @@
 
 The work unit is an *input file* (the stable unit of a table scan —
 partition ids are layout-dependent, file paths are lineage).  Each
-committed unit stores its pickled accumulator + metrics + digest, and
+committed unit stores its blob (a pickled accumulator for a profile,
+JSON counts for a screen) + metrics + digest, and
 in ``input_snapshot`` the file's identity when it was read
 (``size=<bytes>,mtime=<ms>``; ``unit`` holds the path).  A restarted
 run (a) skips files whose latest commit carries their current
@@ -35,7 +36,7 @@ COMMIT_COLUMNS = [
     "status",
     "metrics_json",
     "accumulator_digest",
-    "acc",  # pickled TableAccumulator for resume-without-recompute
+    "acc",  # the unit's blob for resume-without-recompute
     "committed_at",
 ]
 

@@ -19,17 +19,18 @@ validate  The timed job: pass 1 (schema + stats profile, optionally
           per-row invariant).  Prints ONE JSON line with wall seconds,
           clips/sec and the pass/fail summary.
 
-validate-stream / screen-stream
-          The Structured-Streaming front-ends (streaming/): each
+validate-stream
+          The Structured-Streaming front-end (streaming/): each
           invocation processes only files the checkpoint hasn't seen
-          (availableNow) — incremental validation deltas / incremental
-          audio-QA screen deltas — and prints cumulative totals that
-          match the batch engine on the same input.
-profile-stream
-          Incremental profile on the per-file commit store that
-          ``validate --checkpoint`` uses (checkpoint/): each invocation
-          profiles only new or changed files, commits one accumulator
-          per file and prints the profile of every committed file.
+          (availableNow), appends incremental validation deltas and
+          prints cumulative totals that match the batch engine on the
+          same input.
+profile-stream / screen-stream
+          Incremental profile / audio-QA screen on the per-file commit
+          store that ``validate --checkpoint`` and ``screen
+          --checkpoint`` use (checkpoint/): each invocation processes
+          only new or changed files, commits one blob per file and
+          prints the result over every committed file.
 
 Scaling protocol (BASELINE.md): `prepare` once, then run `validate` on
 the SAME input at --master local[8] and local[32]; efficiency =
@@ -81,7 +82,7 @@ from drivel_spark.fixtures import (
     build_transcripts,
 )
 from drivel_spark.profiling import ProfilerOptions, profile
-from drivel_spark.checkpoint import CheckpointStore, resumable_profile
+from drivel_spark.checkpoint import CheckpointStore, resumable_profile, resumable_screen
 from drivel_spark.io import is_table_ref
 
 PROFILE_COLUMNS = ["clip_id", "sr_hz", "dur_ms", "codec", "transcript"]
@@ -228,23 +229,14 @@ def _refuse_catalog_checkpoint(ref: str) -> None:
 def _screen_resumable(args, kinds: list[str]) -> dict:
     """--checkpoint arm of cmd_screen: per-file lineage commits via
     checkpoint/runner.py resumable_screen, so an interrupted corpus
-    screen restarts without re-decoding committed files.  Fused-capable
-    kinds only (the decode pass is what resume exists to protect);
-    --where/--flag/--out don't compose with file-level lineage and are
-    rejected loudly, same discipline as validate --where."""
-    from drivel_spark.checkpoint import CheckpointStore, resumable_screen
-    from drivel_spark.ops.multimodal import FUSED_SCREEN_FIELDS
-
+    screen restarts without re-decoding committed files.  Any
+    AUDIO_SCREENS kinds; --where/--flag/--out don't compose with
+    file-level lineage and are rejected loudly, same discipline as
+    validate --where."""
     for opt in ("where", "flag", "out"):
         if getattr(args, opt, None):
             raise SystemExit(f"--{opt} does not compose with --checkpoint "
                              "(per-file lineage covers the whole table)")
-    bad_kinds = [k for k in kinds if k not in FUSED_SCREEN_FIELDS]
-    if bad_kinds:
-        raise SystemExit(
-            f"not fused-capable: {bad_kinds}; --checkpoint screening "
-            f"supports {sorted(FUSED_SCREEN_FIELDS)}"
-        )
     ref = args.clips or f"{args.data}/clips"
     _refuse_catalog_checkpoint(ref)
     spark = build_session("drivel-screen")
@@ -254,7 +246,7 @@ def _screen_resumable(args, kinds: list[str]) -> dict:
         getattr(args, "run_id", None) or "screen", kinds=kinds,
     )
     wall = time.time() - t0
-    n = int(totals["n_clips"].max()) if len(totals) else 0
+    n = int(totals["n_clips"].max())
     # rate over clips actually decoded this call — a mostly-resumed
     # run must not report restored files as throughput (ADVICE r05)
     n_rec = stats.get("n_clips_recomputed")
@@ -1439,18 +1431,21 @@ def cmd_validate_stream(args) -> dict:
 
 
 def cmd_screen_stream(args) -> dict:
-    """Incremental audio-QA screening via Structured Streaming: each
-    invocation decodes ONLY the clip files not yet seen by the
-    checkpoint (availableNow) through the selected AUDIO_SCREENS,
-    appends per-batch (kind, n_clips, n_flagged, n_undecodable) delta
-    rows, and prints the CUMULATIVE per-kind totals — which must equal
-    the batch ``screen`` verb's counts over the same files (pinned by
-    tests/test_streaming.py).  Decode being the dominant cost of every
-    screen, this is the verb that keeps content-level QA O(new data)
-    on a continuously-growing corpus."""
-    from drivel_spark.fixtures import CLIPS_SCHEMA
-    from drivel_spark.streaming import cumulative_screen, screen_stream
+    """Incremental audio-QA screening on the per-file commit store
+    (checkpoint/runner.py resumable_screen, the store ``screen
+    --checkpoint`` uses): each invocation decodes only the clip files
+    with no commit for their current (path, size, mtime),
+    ``--max-files-per-trigger`` files per commit, writes the per-kind
+    (kind, n_clips, n_flagged, n_undecodable) totals of every committed
+    file to ``--report`` and their flagged (clip_id, kind) pairs to
+    ``--quarantine-out`` (both overwritten), and prints the totals —
+    which equal the batch ``screen`` verb's counts over the same files
+    (pinned by tests/test_streaming.py).  Decode being the dominant
+    cost of every screen, this is the verb that keeps content-level QA
+    O(new data) on a continuously-growing corpus."""
+    from drivel_spark.io import local_df
 
+    _refuse_stream_checkpoint(args.checkpoint, "screen-stream")
     kinds = (
         sorted(AUDIO_SCREENS)
         if args.kinds == "all"
@@ -1458,35 +1453,29 @@ def cmd_screen_stream(args) -> dict:
     )
     spark = build_session("drivel-screen-stream")
     t0 = time.time()
-    screen_stream(
-        spark,
-        args.source,
-        CLIPS_SCHEMA,
-        kinds,
-        args.report,
-        args.checkpoint,
-        max_files_per_trigger=args.max_files_per_trigger,
+    totals, stats = resumable_screen(
+        spark, args.source, CheckpointStore(args.checkpoint), "screen-stream", kinds,
         quarantine_dir=getattr(args, "quarantine_out", None),
+        max_files=args.max_files_per_trigger,
     )
-    totals = (
-        cumulative_screen(spark, args.report)
-        .toPandas()
-        .sort_values("kind")
-        .reset_index(drop=True)
-    )
-    digest = passfail_digest(totals)
+    local_df(
+        spark, totals.itertuples(index=False),
+        "kind string, n_clips long, n_flagged long, n_undecodable long",
+    ).write.mode("overwrite").parquet(args.report)
+    totals = totals.sort_values("kind").reset_index(drop=True)
     wall = time.time() - t0
     return {
         "job": "screen-stream",
         "master": spark.sparkContext.master,
         "kinds": kinds,
-        "n_clips_total": int(totals["n_clips"].max()) if len(totals) else 0,
-        "n_flagged_total": int(totals["n_flagged"].sum()) if len(totals) else 0,
+        "n_clips_total": int(totals["n_clips"].max()),
+        "n_flagged_total": int(totals["n_flagged"].sum()),
         "wall_s": round(wall, 3),
-        "cumulative_digest": digest,
+        "cumulative_digest": passfail_digest(totals),
         "per_kind": {
             r["kind"]: int(r["n_flagged"]) for _, r in totals.iterrows()
         },
+        "resume": stats,
     }
 
 
@@ -1536,6 +1525,19 @@ def cmd_reconcile(args) -> dict:
     }
 
 
+def _refuse_stream_checkpoint(checkpoint: str, verb: str) -> None:
+    """Refuse a Structured Streaming checkpoint dir (``metadata`` +
+    ``offsets/``) written by an earlier ``verb``, before anything is
+    written: the verb keeps a per-file commit store there now."""
+    if os.path.isfile(os.path.join(checkpoint, "metadata")) and os.path.isdir(
+        os.path.join(checkpoint, "offsets")
+    ):
+        raise SystemExit(
+            f"{checkpoint} holds a Structured Streaming checkpoint; {verb} now keeps "
+            "a per-file commit store there: pass a new --checkpoint dir"
+        )
+
+
 def cmd_profile_stream(args) -> dict:
     """Incremental profile on the per-file commit store
     (checkpoint/runner.py resumable_profile, the store ``validate
@@ -1544,13 +1546,7 @@ def cmd_profile_stream(args) -> dict:
     per commit, and prints the profile of everything committed (equal
     to the batch profile on the exact fields, pinned by
     tests/test_streaming.py)."""
-    if os.path.isfile(os.path.join(args.checkpoint, "metadata")) and os.path.isdir(
-        os.path.join(args.checkpoint, "offsets")
-    ):
-        raise SystemExit(
-            f"{args.checkpoint} holds a Structured Streaming checkpoint; profile-stream "
-            "now keeps a per-file commit store there: pass a new --checkpoint dir"
-        )
+    _refuse_stream_checkpoint(args.checkpoint, "profile-stream")
     spark = build_session("drivel-profile-stream")
     t0 = time.time()
     cols = args.columns.split(",") if args.columns else PROFILE_COLUMNS
@@ -1931,15 +1927,16 @@ def main(argv=None) -> None:
 
     sss = sub.add_parser("screen-stream")
     sss.add_argument("--source", required=True, help="growing clips parquet dir")
-    sss.add_argument("--report", required=True)
-    sss.add_argument("--checkpoint", required=True)
+    sss.add_argument("--report", required=True,
+                     help="per-kind totals of every committed file (overwritten)")
+    sss.add_argument("--checkpoint", required=True, help="per-file commit store dir")
     sss.add_argument("--kinds", default="quality,dropout,hum",
                      help="comma list from AUDIO_SCREENS, or 'all'")
-    sss.add_argument("--max-files-per-trigger", type=int, default=None)
+    sss.add_argument("--max-files-per-trigger", type=int, default=None,
+                     help="files screened and committed per chunk (default: all)")
     sss.add_argument("--quarantine-out", default=None,
-                     help="write each micro-batch's flagged clip ids (+ the "
-                          "flagging screen kind) to this dir, partitioned by "
-                          "batch_id (idempotent on replay)")
+                     help="write the flagged clip ids (+ the flagging screen "
+                          "kind) of every committed file to this dir (overwritten)")
 
     sr = sub.add_parser("reconcile")
     sr.add_argument("--source", required=True, help="the streamed clips parquet dir")

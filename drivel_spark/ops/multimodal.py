@@ -2714,8 +2714,8 @@ def audio_feature_drift(
 
 # One registry row per per-clip audio-QA screen: (report op, default
 # flag policy).  The policy is a SQL expression over the report's OWN
-# columns so callers (job `screen`, streaming `screen_stream`) can swap
-# thresholds without touching engine code.
+# columns so callers (job `screen`, checkpoint `resumable_screen`) can
+# swap thresholds without touching engine code.
 AUDIO_SCREENS: dict = {
     "quality": (audio_quality,
                 "clipping_ratio > 0.01 OR abs(dc_offset) > 0.02"),
@@ -2762,9 +2762,10 @@ def screen_undecodable_col(rep: DataFrame) -> str:
     report: every screen reports decode-level ``n_samples`` except
     ``snr_estimate``, whose report is frame-level (``n_frames`` — NULL
     on undecodable, 0 on shorter-than-one-frame).  The screen CLI verb
-    and the streaming fallback count undecodables through this, so a
-    frame-level screen doesn't break them (found the hard way:
-    `screen-stream --kinds all` crashed on snr's missing n_samples)."""
+    and resumable_screen's per-op passes count undecodables through
+    this, so a frame-level screen doesn't break them (found the hard
+    way: `screen-stream --kinds all` crashed on snr's missing
+    n_samples)."""
     return "n_samples" if "n_samples" in rep.columns else "n_frames"
 
 
@@ -2778,18 +2779,17 @@ FUSED_SCREEN_BAD: dict = {
 }
 
 
-def screen_count_aggs(kinds: list[str], flags: Optional[dict] = None) -> list:
+def screen_count_aggs(kinds: list[str]) -> list:
     """The counts of a fused ``screen_report``, as one aggregation list:
     ``n_clips``, ``n_undec`` (undecodable clips), and per kind
-    ``f_{kind}`` (flagged under ``flags[kind]``, else the published
-    policy) and ``b_{kind}`` (undecodable under FUSED_SCREEN_BAD)."""
-    flags = flags or {}
+    ``f_{kind}`` (flagged under the published policy) and ``b_{kind}``
+    (undecodable under FUSED_SCREEN_BAD)."""
     aggs = [
         F.count(F.lit(1)).alias("n_clips"),
         F.count(F.when(F.expr("n_samples IS NULL"), 1)).alias("n_undec"),
     ]
     for kind in kinds:
-        flag = flags.get(kind) or AUDIO_SCREENS[kind][1]
+        flag = AUDIO_SCREENS[kind][1]
         bad = FUSED_SCREEN_BAD.get(kind, "n_samples IS NULL")
         aggs.append(F.count(F.when(F.expr(flag), 1)).alias(f"f_{kind}"))
         aggs.append(F.count(F.when(F.expr(bad), 1)).alias(f"b_{kind}"))

@@ -1,11 +1,11 @@
 """Structured-Streaming front-end: incremental row-constraint
-validation and audio-QA screening with exactly-once file tracking
-(checkpointLocation), plus the stateful streams (running, windowed
-and CUSUM stats, dedup).  The incremental profile runs on the per-file
-commit store instead (checkpoint/runner.py resumable_profile)."""
+validation with exactly-once file tracking (checkpointLocation), plus
+the stateful streams (running, windowed and CUSUM stats, dedup).  The
+incremental profile and audio-QA screen run on the per-file commit
+store instead (checkpoint/runner.py resumable_profile,
+resumable_screen)."""
 
 from .cusum_stream import CUSUM_STATE_FIELDS, streaming_cusum
-from .screen_stream import SCREEN_REPORT_SCHEMA, cumulative_screen, screen_stream
 from .stateful import latest_stats, running_stats, running_stats_stream
 from .validate_stream import cumulative_passfail, validate_stream
 from .windows import (
@@ -29,7 +29,4 @@ __all__ = [
     "load_windowed_stats",
     "session_stats",
     "dedup_stream",
-    "screen_stream",
-    "cumulative_screen",
-    "SCREEN_REPORT_SCHEMA",
 ]

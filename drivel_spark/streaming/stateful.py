@@ -1,8 +1,8 @@
 """Custom keyed stateful streaming via ``applyInPandasWithState``.
 
-The foreachBatch modules (validate_stream / screen_stream) keep the
-streaming state store EMPTY by design: their cumulative answer is a sum
-over committed per-batch deltas, which scales to 10^12 rows with zero
+The foreachBatch module (validate_stream) keeps the streaming state
+store EMPTY by design: its cumulative answer is a sum over committed
+per-batch deltas, which scales to 10^12 rows with zero
 state growth.  What that pattern cannot do is *per-key online
 tracking* — "what is codec X's running null ratio / value envelope
 RIGHT NOW, updated the moment a micro-batch touches that key" — without

@@ -90,6 +90,23 @@ def test_restore_rejects_blob_that_fails_its_digest(spark, clip_table, tmp_path)
         resumable_profile(spark, clip_table, tampered, run_id="r1")
 
 
+def test_resume_units_skip_summary_files(spark, tmp_path):
+    """A parquet summary file next to the data files (listed by
+    ``inputFiles()``, holding no rows) is no unit: a 4-file table with
+    a ``_common_metadata`` profiles as 4 units, 4 partitions, 100 rows."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "with_summary")
+    spark.range(100).repartition(4).write.parquet(path)
+    pq.write_metadata(pq.read_schema(glob.glob(f"{path}/part-*.parquet")[0]),
+                      f"{path}/_common_metadata")
+    prof, stats = resumable_profile(spark, path, CheckpointStore(str(tmp_path / "ck")), "r")
+    assert stats["n_units"] == stats["n_recomputed"] == 4
+    assert (prof.n_partitions, prof.n_rows) == (4, 100)
+
+
 @pytest.fixture()
 def table_with_empty_file(spark, tmp_path):
     """24 audio clips in one parquet file plus a zero-row file."""

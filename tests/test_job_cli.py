@@ -218,6 +218,25 @@ def test_screen_stream_subcommand(spark, tmp_path):
     assert out3["per_kind"]["quality"] == batch2["n_flagged"]
 
 
+def test_screen_stream_refuses_streaming_checkpoint(tmp_path):
+    """A Structured Streaming checkpoint dir from the old screen-stream
+    is refused before anything is written."""
+    from drivel_spark.job import cmd_screen_stream
+
+    old = tmp_path / "old_ckpt"
+    (old / "offsets").mkdir(parents=True)
+    (old / "metadata").write_text('{"id": "q"}')
+    before = sorted(p.name for p in old.iterdir())
+    args = argparse.Namespace(
+        source=str(tmp_path / "src"), report=str(tmp_path / "rep"), checkpoint=str(old),
+        kinds="quality", max_files_per_trigger=None, quarantine_out=str(tmp_path / "q"),
+    )
+    with pytest.raises(SystemExit, match="pass a new --checkpoint dir"):
+        cmd_screen_stream(args)
+    assert sorted(p.name for p in old.iterdir()) == before
+    assert not (tmp_path / "rep").exists() and not (tmp_path / "q").exists()
+
+
 def test_diff_verb_baseline_roundtrip(spark, tmp_path):
     """baseline → diff on the same data reports zero changes; diff
     against a mutated copy (dropped column, added column, injected
@@ -1043,6 +1062,28 @@ def test_screen_verb_checkpoint_resume(spark, tmp_path):
                                flag=None, where="sr_hz = 8000", out=None,
                                run_id=None, checkpoint=ck)
         )
+
+
+def test_screen_verb_checkpoint_nonfused_kind(spark, tmp_path):
+    """screen --checkpoint runs a kind outside the fused set in its own
+    op pass: the counts equal the plain single-kind screen, and a
+    second call restores every unit."""
+    from drivel_spark.job import cmd_screen
+
+    data = str(tmp_path / "clips_loud")
+    build_clips(spark, 40, 4, ClipFixtureSpec(with_audio=True)).write.parquet(data)
+    base = dict(data=None, clips=data, flag=None, where=None, out=None,
+                run_id=None, kind="loudness")
+    ck = str(tmp_path / "lck")
+    plain = cmd_screen(argparse.Namespace(**base, checkpoint=None))
+    out1 = cmd_screen(argparse.Namespace(**base, checkpoint=ck))
+    assert out1["n_clips"] == plain["n_clips"] == 40
+    assert out1["per_kind"] == {"loudness": {"n_flagged": plain["n_flagged"],
+                                             "n_undecodable": plain["n_undecodable"]}}
+    assert out1["resume"]["n_recomputed"] == out1["resume"]["n_units"]
+    out2 = cmd_screen(argparse.Namespace(**base, checkpoint=ck))
+    assert out2["resume"]["n_recomputed"] == 0
+    assert out2["per_kind"] == out1["per_kind"]
 
 
 def test_validate_slice_dims_attribution(spark, tmp_path):

@@ -2,6 +2,7 @@
 reports must fold to exactly the batch engine's pass/fail table, and
 the checkpoint must make restarts exactly-once (no reprocessing)."""
 
+import glob
 import os
 
 import pytest
@@ -708,7 +709,8 @@ SCREEN_KINDS = ["quality", "dropout", "hum"]
 
 def _screen_batch_counts(spark, source, kinds):
     """Batch-side truth: each screen run over the full source snapshot
-    (same ops, same published flag policies the stream uses)."""
+    (same ops, same published flag policies the incremental screen
+    uses)."""
     from drivel_spark.ops.multimodal import AUDIO_SCREENS, screen_undecodable_col
 
     df = spark.read.parquet(source)
@@ -727,221 +729,209 @@ def _screen_batch_counts(spark, source, kinds):
     return out
 
 
-def _screen_stream_totals(spark, report):
-    from drivel_spark.streaming import cumulative_screen
-
-    return {
-        r["kind"]: (int(r["n_clips"]), int(r["n_flagged"]), int(r["n_undecodable"]))
-        for r in cumulative_screen(spark, report).collect()
-    }
-
-
-def test_screen_stream_matches_batch_and_resumes(spark, tmp_path):
-    from drivel_spark.streaming import screen_stream
-
-    source = str(tmp_path / "clips_scr")
-    report = str(tmp_path / "scr_report")
-    ckpt = str(tmp_path / "scr_ckpt")
-    quar = str(tmp_path / "scr_quar")
-
-    # wave 1: 140 clips with planted clipping / dropout / hum defects,
-    # maxFilesPerTrigger=1 forces multiple micro-batches
-    pdf = clips_pdf(range(0, 140), SCREEN_SPEC)
-    spark.createDataFrame(pdf, CLIPS_SCHEMA).coalesce(2).write.mode(
-        "append"
-    ).parquet(source)
-    screen_stream(
-        spark,
-        source,
-        CLIPS_SCHEMA,
-        SCREEN_KINDS,
-        report,
-        ckpt,
-        max_files_per_trigger=1,
-        quarantine_dir=quar,
-    )
-    batch1 = _screen_batch_counts(spark, source, SCREEN_KINDS)
-    assert _screen_stream_totals(spark, report) == batch1
-    # non-vacuous: every planted defect family flags at least one clip
-    for kind in SCREEN_KINDS:
-        assert batch1[kind][1] >= 1, f"{kind} planted defects not flagged"
-
-    # wave 2 appends; the checkpoint must process ONLY the new files —
-    # if old files were redecoded, per-kind n_clips would exceed 220
-    pdf2 = clips_pdf(range(140, 220), SCREEN_SPEC)
-    spark.createDataFrame(pdf2, CLIPS_SCHEMA).coalesce(2).write.mode(
-        "append"
-    ).parquet(source)
-    screen_stream(
-        spark,
-        source,
-        CLIPS_SCHEMA,
-        SCREEN_KINDS,
-        report,
-        ckpt,
-        max_files_per_trigger=1,
-        quarantine_dir=quar,
-    )
-    batch2 = _screen_batch_counts(spark, source, SCREEN_KINDS)
-    totals2 = _screen_stream_totals(spark, report)
-    assert totals2 == batch2
-    assert all(v[0] == 220 for v in totals2.values())
-
-    # quarantine rows = exactly the batch-flagged (clip_id, kind) pairs
+def _screen_batch_flagged(spark, source, kinds):
+    """The batch-flagged ``(clip_id, kind)`` pairs of ``kinds``."""
     from drivel_spark.ops.multimodal import AUDIO_SCREENS
 
-    got = {
-        (r["clip_id"], r["kind"])
-        for r in spark.read.option("basePath", quar)
-        .parquet(f"{quar}/batch_id=*")
-        .collect()
-    }
-    want = set()
-    full = spark.read.parquet(source)
-    for kind in SCREEN_KINDS:
-        op, flag = AUDIO_SCREENS[kind]
-        for r in op(full).filter(F.expr(flag)).select("clip_id").collect():
-            want.add((r["clip_id"], kind))
-    assert got == want
-
-
-def test_screen_stream_rejects_unknown_kind(spark, tmp_path):
-    from drivel_spark.streaming import screen_stream
-
-    with pytest.raises(ValueError, match="unknown screen"):
-        screen_stream(
-            spark,
-            str(tmp_path / "nosrc"),
-            CLIPS_SCHEMA,
-            ["quality", "nope"],
-            str(tmp_path / "r"),
-            str(tmp_path / "c"),
-        )
-    with pytest.raises(ValueError, match="at least one"):
-        screen_stream(
-            spark,
-            str(tmp_path / "nosrc"),
-            CLIPS_SCHEMA,
-            [],
-            str(tmp_path / "r"),
-            str(tmp_path / "c"),
-        )
-
-
-def test_cumulative_screen_empty_report_dir(spark, tmp_path):
-    from drivel_spark.streaming import cumulative_screen
-
-    empty = tmp_path / "empty_report"
-    empty.mkdir()
-    out = cumulative_screen(spark, str(empty))
-    assert out.count() == 0
-    assert set(out.columns) == {"kind", "n_clips", "n_flagged", "n_undecodable"}
-
-
-def test_screen_stream_nonfused_fallback_matches_batch(spark, tmp_path):
-    """A kind outside FUSED_SCREEN_FIELDS ('loudness') forces the
-    per-screen fallback path; totals and quarantine must still equal
-    the batch ops."""
-    from drivel_spark.ops.multimodal import AUDIO_SCREENS, FUSED_SCREEN_FIELDS
-    from drivel_spark.streaming import screen_stream
-
-    kinds = ["quality", "loudness"]
-    assert "loudness" not in FUSED_SCREEN_FIELDS
-    source = str(tmp_path / "clips_nf")
-    report = str(tmp_path / "nf_report")
-    quar = str(tmp_path / "nf_quar")
-    pdf = clips_pdf(range(0, 100), SCREEN_SPEC)
-    spark.createDataFrame(pdf, CLIPS_SCHEMA).coalesce(2).write.mode(
-        "append"
-    ).parquet(source)
-    screen_stream(
-        spark,
-        source,
-        CLIPS_SCHEMA,
-        kinds,
-        report,
-        str(tmp_path / "nf_ckpt"),
-        quarantine_dir=quar,
-    )
-    assert _screen_stream_totals(spark, report) == _screen_batch_counts(
-        spark, source, kinds
-    )
-    got = {
-        (r["clip_id"], r["kind"])
-        for r in spark.read.option("basePath", quar)
-        .parquet(f"{quar}/batch_id=*")
-        .collect()
-    }
     want = set()
     full = spark.read.parquet(source)
     for kind in kinds:
         op, flag = AUDIO_SCREENS[kind]
         for r in op(full).filter(F.expr(flag)).select("clip_id").collect():
             want.add((r["clip_id"], kind))
-    assert got == want
+    return want
+
+
+def _screen_totals(totals):
+    return {
+        r.kind: (int(r.n_clips), int(r.n_flagged), int(r.n_undecodable))
+        for r in totals.itertuples()
+    }
+
+
+def _quarantined(spark, quar):
+    return {(r["clip_id"], r["kind"]) for r in spark.read.parquet(quar).collect()}
+
+
+def _screen(spark, source, ckpt, kinds, quar, max_files=None):
+    """One incremental screen call (``screen-stream``'s runner)."""
+    from drivel_spark.checkpoint import CheckpointStore, resumable_screen
+
+    return resumable_screen(
+        spark, source, CheckpointStore(ckpt), "screen-stream", kinds,
+        quarantine_dir=quar, max_files=max_files,
+    )
+
+
+def _write_screen_clips(spark, source, lo, hi):
+    spark.createDataFrame(clips_pdf(range(lo, hi), SCREEN_SPEC), CLIPS_SCHEMA).coalesce(
+        2
+    ).write.mode("append").parquet(source)
+
+
+def test_screen_stream_matches_batch_and_resumes(spark, tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    source = str(tmp_path / "clips_scr")
+    ckpt = str(tmp_path / "scr_ckpt")
+    quar = str(tmp_path / "scr_quar")
+
+    def n_files():
+        return len(spark.read.parquet(source).inputFiles())
+
+    # wave 1: 140 clips with planted clipping / dropout / hum defects,
+    # max_files=1 commits one file at a time
+    _write_screen_clips(spark, source, 0, 140)
+    n1 = n_files()
+    totals, _ = _screen(spark, source, ckpt, SCREEN_KINDS, quar, max_files=1)
+    batch1 = _screen_batch_counts(spark, source, SCREEN_KINDS)
+    assert _screen_totals(totals) == batch1
+    # non-vacuous: every planted defect family flags at least one clip
+    for kind in SCREEN_KINDS:
+        assert batch1[kind][1] >= 1, f"{kind} planted defects not flagged"
+
+    # wave 2 appends; the store must process ONLY the new files —
+    # if old files were redecoded, n_recomputed would exceed them
+    _write_screen_clips(spark, source, 140, 220)
+    totals2, stats2 = _screen(spark, source, ckpt, SCREEN_KINDS, quar, max_files=1)
+    assert stats2["n_recomputed"] == n_files() - n1
+    batch2 = _screen_batch_counts(spark, source, SCREEN_KINDS)
+    assert _screen_totals(totals2) == batch2
+    assert all(v[0] == 220 for v in _screen_totals(totals2).values())
+
+    # quarantine rows = exactly the batch-flagged (clip_id, kind) pairs
+    assert _quarantined(spark, quar) == _screen_batch_flagged(spark, source, SCREEN_KINDS)
+
+    # a file rewritten in place with clean clips is a changed unit:
+    # only it recomputes, and totals and quarantine follow the table
+    path = sorted(glob.glob(f"{source}/part-*.parquet"))[0]
+    clean = clips_pdf(range(1000, 1060), ClipFixtureSpec(with_audio=True))
+    pq.write_table(
+        pa.Table.from_pandas(clean, schema=pq.read_schema(path), preserve_index=False), path
+    )
+    # the rewrite is a foreign writer's: drop the local FS's stale checksum
+    os.remove(os.path.join(os.path.dirname(path), f".{os.path.basename(path)}.crc"))
+    totals3, stats3 = _screen(spark, source, ckpt, SCREEN_KINDS, quar, max_files=1)
+    assert stats3["n_recomputed"] == 1
+    batch3 = _screen_batch_counts(spark, source, SCREEN_KINDS)
+    assert batch3 != batch2
+    assert _screen_totals(totals3) == batch3
+    assert _quarantined(spark, quar) == _screen_batch_flagged(spark, source, SCREEN_KINDS)
+
+
+def test_screen_stream_rejects_unknown_kind(spark, tmp_path):
+    for kinds, msg in ((["quality", "nope"], "unknown screen"), ([], "at least one")):
+        with pytest.raises(ValueError, match=msg):
+            _screen(spark, str(tmp_path / "nosrc"), str(tmp_path / "c"), kinds, None)
+
+
+def test_screen_stream_nonfused_fallback_matches_batch(spark, tmp_path):
+    """A kind outside FUSED_SCREEN_FIELDS ('loudness') runs in a pass
+    of its own op; totals and quarantine must still equal the batch
+    ops."""
+    from drivel_spark.ops.multimodal import FUSED_SCREEN_FIELDS
+
+    kinds = ["quality", "loudness"]
+    assert "loudness" not in FUSED_SCREEN_FIELDS
+    source = str(tmp_path / "clips_nf")
+    quar = str(tmp_path / "nf_quar")
+    _write_screen_clips(spark, source, 0, 100)
+    totals, _ = _screen(spark, source, str(tmp_path / "nf_ckpt"), kinds, quar)
+    assert _screen_totals(totals) == _screen_batch_counts(spark, source, kinds)
+    assert _quarantined(spark, quar) == _screen_batch_flagged(spark, source, kinds)
 
 
 def test_screen_stream_mixed_kinds_matches_batch(spark, tmp_path):
-    """A mix of fused-capable and non-fused kinds splits the micro-batch
-    work (one fused pass + one per non-fused op); totals and quarantine
-    must still equal the batch ops, in the requested kind order."""
-    from drivel_spark.ops.multimodal import AUDIO_SCREENS, FUSED_SCREEN_FIELDS
-    from drivel_spark.streaming import screen_stream
+    """A mix of fused-capable and non-fused kinds splits the work (one
+    fused pass + one per non-fused op); totals and quarantine must
+    still equal the batch ops, in the requested kind order."""
+    from drivel_spark.ops.multimodal import FUSED_SCREEN_FIELDS
 
     kinds = ["quality", "loudness", "dropout", "snr"]
     assert [k for k in kinds if k in FUSED_SCREEN_FIELDS] == [
         "quality", "dropout"
     ]
     source = str(tmp_path / "clips_mx")
-    report = str(tmp_path / "mx_report")
     quar = str(tmp_path / "mx_quar")
-    pdf = clips_pdf(range(0, 100), SCREEN_SPEC)
-    spark.createDataFrame(pdf, CLIPS_SCHEMA).coalesce(2).write.mode(
-        "append"
-    ).parquet(source)
-    screen_stream(
-        spark,
-        source,
-        CLIPS_SCHEMA,
-        kinds,
-        report,
-        str(tmp_path / "mx_ckpt"),
-        quarantine_dir=quar,
+    _write_screen_clips(spark, source, 0, 100)
+    totals, _ = _screen(spark, source, str(tmp_path / "mx_ckpt"), kinds, quar)
+    assert list(totals["kind"]) == kinds
+    assert _screen_totals(totals) == _screen_batch_counts(spark, source, kinds)
+    assert _quarantined(spark, quar) == _screen_batch_flagged(spark, source, kinds)
+
+
+def test_screen_stream_resumes_after_sigkill(spark, tmp_path):
+    """A ``screen-stream`` process killed (SIGKILL, with its whole
+    process group) after its first commit leaves a store the next call
+    resumes: the committed files restore, the rest recompute, and the
+    totals equal the batch ``screen``."""
+    import argparse
+    import signal
+    import subprocess
+    import sys
+    import time
+
+    from drivel_spark.job import cmd_screen, cmd_screen_stream
+
+    source = str(tmp_path / "clips_kill")
+    spark.createDataFrame(clips_pdf(range(0, 240), SCREEN_SPEC), CLIPS_SCHEMA).repartition(
+        8
+    ).write.parquet(source)
+    args = argparse.Namespace(
+        source=source, report=str(tmp_path / "rep"), checkpoint=str(tmp_path / "ck"),
+        kinds=",".join(SCREEN_KINDS), max_files_per_trigger=1, quarantine_out=None,
     )
-    assert _screen_stream_totals(spark, report) == _screen_batch_counts(
-        spark, source, kinds
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {**os.environ, "SPARK_GRAFT_CPUS": "2", "SPARK_DRIVER_MEMORY": "1g",
+           "PYTHONPATH": os.pathsep.join([repo, os.environ.get("PYTHONPATH", "")])}
+    proc = subprocess.Popen(
+        [sys.executable, "-m", "drivel_spark.job", "screen-stream",
+         "--source", args.source, "--report", args.report, "--checkpoint", args.checkpoint,
+         "--kinds", args.kinds, "--max-files-per-trigger", "1"],
+        cwd=repo, env=env, start_new_session=True,
+        stdout=subprocess.DEVNULL, stderr=subprocess.DEVNULL,
     )
-    got = {
-        (r["clip_id"], r["kind"])
-        for r in spark.read.option("basePath", quar)
-        .parquet(f"{quar}/batch_id=*")
-        .collect()
-    }
-    want = set()
-    full = spark.read.parquet(source)
-    for kind in kinds:
-        op, flag = AUDIO_SCREENS[kind]
-        for r in op(full).filter(F.expr(flag)).select("clip_id").collect():
-            want.add((r["clip_id"], kind))
-    assert got == want
+    deadline = time.time() + 60
+    try:
+        while not glob.glob(f"{args.checkpoint}/commit-*.parquet"):
+            assert proc.poll() is None, "screen-stream exited before its first commit"
+            assert time.time() < deadline, "no commit within 60 s"
+            time.sleep(0.05)
+    finally:
+        os.killpg(proc.pid, signal.SIGKILL)
+        proc.wait()
+    while True:  # the group's other processes (the JVM) are reaped by init
+        try:
+            os.killpg(proc.pid, 0)
+        except ProcessLookupError:
+            break
+        assert time.time() < deadline, "a process of the killed group is still alive"
+        time.sleep(0.1)
+
+    out = cmd_screen_stream(args)
+    resume = out["resume"]
+    assert resume["n_restored"] >= 1
+    assert resume["n_recomputed"] == resume["n_units"] - resume["n_restored"]
+    batch = cmd_screen(argparse.Namespace(
+        kind=args.kinds, data=None, clips=source, where=None, flag=None, out=None,
+        checkpoint=None,
+    ))
+    assert out["per_kind"] == {k: v["n_flagged"] for k, v in batch["per_kind"].items()}
+    assert out["n_clips_total"] == batch["n_clips"] == 240
 
 
 def _batch_dir_case(name):
     """(reader, per-batch commit schema, {batch_id: rows}) of one of the
-    three readers of ``batch_id=N`` report dirs."""
+    two readers of ``batch_id=N`` report dirs."""
     from datetime import datetime
 
     from drivel_spark.constraints.validate import PASSFAIL_SCHEMA
-    from drivel_spark.streaming import SCREEN_REPORT_SCHEMA, cumulative_screen, load_windowed_stats
+    from drivel_spark.streaming import load_windowed_stats
     from drivel_spark.streaming.windows import WINDOWED_STATS_FIELDS
 
     t0, t1, t2 = (datetime(2024, 1, 1, 0, m) for m in (0, 10, 20))
     return {
-        "screen": (
-            cumulative_screen,
-            SCREEN_REPORT_SCHEMA,
-            {0: [("hum", 10, 2, 0), ("quality", 10, 0, 1)], 1: [("hum", 5, 1, 0)]},
-        ),
         "passfail": (
             cumulative_passfail,
             PASSFAIL_SCHEMA,
@@ -966,10 +956,9 @@ def _commit(spark, out, schema, batches):
         local_df(spark, rows, schema).write.parquet(f"{out}/batch_id={b}")
 
 
-@pytest.mark.parametrize("name", ["screen", "passfail", "windows"])
+@pytest.mark.parametrize("name", ["passfail", "windows"])
 def test_batch_dir_readers_read_uri_dirs(spark, tmp_path, name):
-    """A ``file://`` report dir reads the same rows as the plain path
-    (the screen reader used to see no commits behind a URI)."""
+    """A ``file://`` report dir reads the same rows as the plain path."""
     read, schema, batches = _batch_dir_case(name)
     out = tmp_path / "report"
     _commit(spark, out, schema, batches)
@@ -978,7 +967,7 @@ def test_batch_dir_readers_read_uri_dirs(spark, tmp_path, name):
     assert sorted(read(spark, f"file://{out}").collect()) == plain
 
 
-@pytest.mark.parametrize("name", ["screen", "passfail", "windows"])
+@pytest.mark.parametrize("name", ["passfail", "windows"])
 def test_batch_dir_readers_missing_and_empty_dirs(spark, tmp_path, name):
     """No commits yet (a missing or a pre-created dir) gives zero rows
     with the same columns and types as a dir with commits."""
