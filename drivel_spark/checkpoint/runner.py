@@ -1,7 +1,8 @@
 """Resumable runs: per-file units + a commit table, one protocol.
 
-The two runners — :func:`resumable_profile` and
-:func:`resumable_screen` — share one resume protocol, :func:`_resume`
+The three runners — :func:`resumable_profile`,
+:func:`resumable_screen` and :func:`resumable_rows` — share one resume
+protocol, :func:`_resume`
 (north_rule: "resumable from checkpoint with per-partition lineage +
 metrics"):
 
@@ -39,7 +40,7 @@ from typing import Callable, Optional
 from urllib.parse import unquote
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..io import _SUMMARIES, GLOB_CHARS, read_table
@@ -70,6 +71,11 @@ def _identities(spark: SparkSession, units: list[str]) -> dict[str, str]:
             st = listed[unquote(u.rsplit("/", 1)[1])]
             out[u] = f"size={st.getLen()},mtime={st.getModificationTime()}"
     return out
+
+
+def _json_blob(blob: dict) -> bytes:
+    """A unit's JSON blob, keys sorted: equal results, equal digests."""
+    return json.dumps(blob, sort_keys=True).encode()
 
 
 def _literal_path(unit: str) -> str:
@@ -294,9 +300,6 @@ def resumable_screen(
             "flagged": {k: [] for k in kinds},  # flagged clip ids
         }
 
-    def encode(blob: dict) -> bytes:
-        return json.dumps(blob, sort_keys=True).encode()
-
     n_decoded = 0
 
     def compute(df):
@@ -319,11 +322,11 @@ def resumable_screen(
                 "n_clips": n_clips,
                 "n_flagged_total": sum(c[1] for c in blob["counts"].values()),
             }
-            results[unit] = (encode(blob), metrics)
+            results[unit] = (_json_blob(blob), metrics)
         return results
 
     run = f"{run_id}:screen[{','.join(sorted(kinds))}]"
-    empty = (encode(empty_blob()), {"n_clips": 0, "n_flagged_total": 0})
+    empty = (_json_blob(empty_blob()), {"n_clips": 0, "n_flagged_total": 0})
     full = read_table(spark, table_path)
     raw, stats = _resume(spark, full, table_path, store, run, compute, empty, max_files)
     parts = []
@@ -352,3 +355,97 @@ def resumable_screen(
     # fused-capable kind ran (each kind's own count is in the totals)
     stats["n_undecodable"] = sum(p["n_undec"] for p in parts) if has_fused else None
     return totals, stats
+
+
+def resumable_rows(
+    spark: SparkSession,
+    table_path: str,
+    store: CheckpointStore,
+    run_id: str,
+    constraints: list,
+    scope: Column,
+    keep: list[str],
+    quarantine_dir: Optional[str] = None,
+    max_files: Optional[int] = None,
+) -> tuple[pd.DataFrame, dict]:
+    """Row-level validation, resumable with the same per-file unit model
+    as :func:`resumable_profile`; ``validate-stream`` runs it.
+
+    One pass over the uncommitted files (``max_files`` at a time), with
+    nothing persisted: the batch engine's ``flag_rows`` and
+    ``row_violation_aggs`` (constraints/validate.py), grouped by
+    (``input_file_name()``, scope).  The same aggregation gathers each
+    file's violating rows (``keep`` plus ``failed``) as Spark JSON
+    strings, so keep those columns narrow.  Each file commits one JSON
+    blob (its per-scope counts and violating rows); its metrics are
+    ``n_rows`` and ``viol.<constraint>``, which ``history
+    --stream-checkpoint`` scores.  A NULL scope raises the batch
+    engine's ``ValueError`` before anything commits.
+
+    The run key covers the constraints, the scope expression and
+    ``keep``, so a resume with other ones recomputes instead of mixing
+    blobs.  Only row-level constraints: a dataset-level one needs the
+    whole table (the ``reconcile`` verb runs uniqueness and referential
+    checks) and raises ``ValueError``.  Returns the whole table's
+    row-level report, equal to ``validate(...).passfail_pdf()`` with the
+    same constraints and scope, and the resume stats.  With
+    ``quarantine_dir``, every unit's violating rows are written there
+    (overwrite), so it holds exactly the current table's violations.
+    """
+    from pyspark.sql.types import ArrayType, StringType
+
+    from ..constraints.validate import failed_names, flag_rows, passfail_frame, row_violation_aggs
+    from ..io import local_df
+
+    row_cs = [c for c in constraints if c.is_row_level]
+    if len(row_cs) != len(constraints):
+        raise ValueError(
+            "resumable_rows handles row-level constraints only; run dataset-level "
+            "checks (unique/referential/drift) with the batch engine (the reconcile verb)"
+        )
+    if not row_cs:
+        raise ValueError("need at least one row-level constraint")
+    names = [c.name for c in row_cs]
+    cols = ["__scope", "n_rows", *(f"__v_{i}" for i in range(len(row_cs))), "__v_any"]
+    row_json = F.to_json(F.struct(*keep, "failed"))
+    aggs = row_violation_aggs(row_cs) + [
+        F.sort_array(F.collect_list(F.when(F.size("failed") > 0, row_json))).alias("__rows")
+    ]
+
+    def metrics(scopes: list) -> dict:
+        tot = [sum(s[i] for s in scopes) for i in range(1, len(cols))]
+        return {"n_rows": tot[0], "viol": dict(zip([*names, "_rows_any_violation"], tot[1:]))}
+
+    def compute(df):
+        flagged = flag_rows(
+            df.withColumn("__unit", F.input_file_name()), row_cs, scope, ["__unit", *keep]
+        ).withColumn("failed", failed_names(row_cs))
+        got = flagged.groupBy("__unit", "__scope").agg(*aggs).collect()
+        # the batch engine's NULL-scope check, before anything commits
+        wide = pd.DataFrame([[r[c] for c in cols] for r in got], columns=cols)
+        passfail_frame(wide, names, scope)
+        blobs: dict[str, dict] = {}
+        for r in got:
+            blob = blobs.setdefault(r["__unit"], {"scopes": [], "rows": []})
+            blob["scopes"].append([r[c] for c in cols])
+            blob["rows"] += r["__rows"]
+        for blob in blobs.values():
+            blob["scopes"].sort()
+            blob["rows"].sort()
+        return {u: (_json_blob(b), metrics(b["scopes"])) for u, b in blobs.items()}
+
+    key = json.dumps([[c.name, str(c.predicate())] for c in row_cs] + [str(scope), list(keep)])
+    run = f"{run_id}:rows[{hashlib.sha256(key.encode()).hexdigest()[:16]}]"
+    empty = (_json_blob({"scopes": [], "rows": []}), metrics([]))
+    full = read_table(spark, table_path)
+    raw, stats = _resume(spark, full, table_path, store, run, compute, empty, max_files)
+    parts = [json.loads(b) for b in raw.values()]
+    wide = pd.DataFrame([s for p in parts for s in p["scopes"]], columns=cols)
+    report = passfail_frame(wide.groupby("__scope", as_index=False).sum(), names, scope)
+    if quarantine_dir is not None:
+        schema = full.select(*keep).schema.add("failed", ArrayType(StringType()))
+        rows = local_df(spark, [(j,) for p in parts for j in p["rows"]], "j string")
+        rows.select(F.from_json("j", schema).alias("r")).select("r.*").write.mode(
+            "overwrite"
+        ).parquet(quarantine_dir)
+    return report, stats

@@ -3,7 +3,8 @@
 The work unit is an *input file* (the stable unit of a table scan —
 partition ids are layout-dependent, file paths are lineage).  Each
 committed unit stores its blob (a pickled accumulator for a profile,
-JSON counts for a screen) + metrics + digest, and
+JSON counts for a screen, JSON per-scope violation counts and
+violating rows for a row-level validation) + metrics + digest, and
 in ``input_snapshot`` the file's identity when it was read
 (``size=<bytes>,mtime=<ms>``; ``unit`` holds the path).  A restarted
 run (a) skips files whose latest commit carries their current
@@ -11,7 +12,9 @@ identity — they are never re-read, not merely filtered — and (b)
 reconstructs their contribution from the stored accumulator blobs; a
 new or changed file recomputes alone.  Commits are atomic per batch
 (parquet append of a new file); re-commits of the same unit are
-idempotent (latest wins by committed_at).
+idempotent (latest wins by committed_at).  Every resumable verb keeps
+this one store: ``validate`` / ``screen --checkpoint`` and
+``profile-stream``, ``screen-stream``, ``validate-stream``.
 
 On a cluster this table would be an Iceberg table (ACID appends); the
 sandbox uses a parquet directory with the identical schema — the engine

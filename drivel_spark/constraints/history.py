@@ -178,21 +178,17 @@ def metric_anomalies(report: DataFrame) -> DataFrame:
     )
 
 
-def load_metrics_history(
+def _unit_metrics(
     spark: SparkSession,
     checkpoint_path: str,
     run_ids: Optional[Sequence[str]] = None,
 ) -> DataFrame:
-    """Flatten the checkpoint commit table's per-unit ``metrics_json``
-    (checkpoint/store.py COMMIT_COLUMNS) into a run-level metric
-    history: one row per (run_id, metric) with the metric summed over
-    the run's committed units and ``run_seq`` = the run's first commit
-    time (runs are sequenced by when they happened, not by id).
-
-    Nested per-column counters flatten to dotted names
-    (``n_null.codec``); idempotent unit re-commits are deduplicated
-    latest-wins exactly as ``CheckpointStore.committed`` does.  The
-    result feeds :func:`metric_anomaly_report` directly.
+    """The commit table's per-unit ``metrics_json`` (checkpoint/store.py
+    COMMIT_COLUMNS), flattened: one row per (run_id, unit, metric) with
+    the unit's ``committed_at``.  Nested per-column counters flatten to
+    dotted names (``n_null.codec``); idempotent unit re-commits are
+    deduplicated latest-wins exactly as ``CheckpointStore.committed``
+    does.
 
     Driver-light by construction: the commit table holds one row per
     (run, input file) — metadata-scale — and the heavy ``acc`` blob
@@ -236,65 +232,55 @@ def load_metrics_history(
                     continue
                 for name, val in _flatten(metrics).items():
                     rows.append(
-                        (r.run_id, float(r.committed_at), name, val)
+                        (r.run_id, r.unit, float(r.committed_at), name, val)
                     )
             yield pd.DataFrame(
-                rows, columns=["run_id", "committed_at", "metric", "value"]
+                rows, columns=["run_id", "unit", "committed_at", "metric", "value"]
             )
 
-    exploded = latest.mapInPandas(
+    return latest.mapInPandas(
         _explode,
-        "run_id string, committed_at double, metric string, value double",
+        "run_id string, unit string, committed_at double, metric string, value double",
     )
-    return exploded.groupBy("run_id", "metric").agg(
+
+
+def load_metrics_history(
+    spark: SparkSession,
+    checkpoint_path: str,
+    run_ids: Optional[Sequence[str]] = None,
+) -> DataFrame:
+    """A run-level metric history from the checkpoint commit table: one
+    row per (run_id, metric) with the metric summed over the run's
+    committed units (:func:`_unit_metrics`) and ``run_seq`` = the run's
+    first commit time (runs are sequenced by when they happened, not
+    by id).  The result feeds :func:`metric_anomaly_report` directly.
+    """
+    return _unit_metrics(spark, checkpoint_path, run_ids).groupBy("run_id", "metric").agg(
         F.min("committed_at").alias("run_seq"),
         F.sum("value").alias("value"),
     )
 
 
-def load_stream_batch_history(
-    spark: SparkSession, report_dir: str
-) -> DataFrame:
-    """Per-micro-batch metric history from a ``validate-stream`` report
-    directory (``batch_id=N`` partitions of (partition_id, constraint,
-    n_rows, n_violations) delta rows — streaming/validate_stream.py):
-    one row per (batch, metric), where each constraint becomes a
-    ``viol.<name>`` metric (violations summed over the batch's scope
-    partitions) and the ``_rows_any_violation`` counter also yields the
-    batch's ``n_rows``.  ``run_seq`` is the batch id, so the result
+def load_stream_batch_history(spark: SparkSession, checkpoint_path: str) -> DataFrame:
+    """Per-file metric history from a ``validate-stream`` commit store
+    (checkpoint/runner.py ``resumable_rows``): each committed file is
+    one run, its ``run_id`` the file and its ``run_seq`` its
+    ``committed_at``, with the file's metrics — ``n_rows`` and one
+    ``viol.<constraint>`` per row constraint (violations summed over
+    the file's scopes, ``_rows_any_violation`` included).  The result
     feeds :func:`metric_anomaly_report` directly — the streaming
-    canary: "did batch 17 suddenly violate 100x more than the trailing
-    batches?"  The reserved ``batch_id=-1`` reconciliation snapshot
-    (cmd_reconcile) is excluded: it is a point-in-time table audit,
-    not a batch in the sequence.
+    canary: "did this file suddenly violate 100x more than the files
+    before it?"  A rewritten file scores its latest commit.
 
-    Scale shape: reads only the report table (O(batches × scopes ×
-    constraints) metadata rows, never the data), one partial+final
-    aggregation.
+    Scale shape: reads only the commit table's metadata columns, one
+    row per file, never the data.
     """
-    rep = (
-        spark.read.option("basePath", report_dir)
-        .parquet(f"{report_dir}/batch_id=*")
-        .where(F.col("batch_id") >= 0)
+    return _unit_metrics(spark, checkpoint_path).select(
+        F.col("unit").alias("run_id"),
+        F.col("committed_at").alias("run_seq"),
+        "metric",
+        "value",
     )
-    per = rep.groupBy("batch_id", "constraint").agg(
-        F.sum("n_violations").cast("double").alias("n_viol"),
-        F.sum("n_rows").cast("double").alias("n_rows"),
-    )
-    run_id = F.concat(F.lit("batch="), F.col("batch_id").cast("string"))
-    viol = per.select(
-        run_id.alias("run_id"),
-        F.col("batch_id").cast("long").alias("run_seq"),
-        F.concat(F.lit("viol."), F.col("constraint")).alias("metric"),
-        F.col("n_viol").alias("value"),
-    )
-    rows = per.where(F.col("constraint") == "_rows_any_violation").select(
-        run_id.alias("run_id"),
-        F.col("batch_id").cast("long").alias("run_seq"),
-        F.lit("n_rows").alias("metric"),
-        F.col("n_rows").alias("value"),
-    )
-    return viol.unionByName(rows)
 
 
 def dead_constraints(history: DataFrame, min_runs: int = 3) -> DataFrame:

@@ -196,12 +196,18 @@ def row_violation_aggs(row_cs: list) -> list[Column]:
     ]
 
 
+def failed_names(row_cs: list) -> Column:
+    """Over the flag columns: the names of the row constraints a row
+    fails (an empty array when it passes them all)."""
+    return F.array_compact(
+        F.array(*[F.when(~F.col(f"__p_{i}"), F.lit(c.name)) for i, c in enumerate(row_cs)])
+    )
+
+
 def violation_rows(flagged: DataFrame, row_cs: list, keep: list[str]) -> DataFrame:
     """The flagged rows failing ≥1 row constraint: ``keep`` plus
     ``failed``, the names of the constraints each row fails."""
-    failed = F.array_compact(
-        F.array(*[F.when(~F.col(f"__p_{i}"), F.lit(c.name)) for i, c in enumerate(row_cs)])
-    ).alias("failed")
+    failed = failed_names(row_cs).alias("failed")
     return flagged.select(*keep, failed).filter(F.size("failed") > 0)
 
 

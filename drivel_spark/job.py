@@ -69,6 +69,9 @@ from drivel_spark.constraints import (
 )
 from drivel_spark.constraints.audio import audio_check, audio_row_source
 from drivel_spark.constraints.validate import (
+    GLOBAL_SCOPE,
+    PASSFAIL_COLS,
+    PASSFAIL_SCHEMA,
     n_violation_rows,
     normalize_passfail,
     passfail_df,
@@ -648,7 +651,7 @@ def cmd_leakage(args) -> dict:
     triage.  Zero leakage = exit evidence the train/eval boundary is
     clean before an export ships."""
     from drivel_spark.io import read_table
-    from drivel_spark.ops import split_leakage, split_leakage_near
+    from drivel_spark.ops import release_shingles, split_leakage, split_leakage_near
 
     spark = build_session("drivel-leakage")
     df = read_table(spark, args.data)
@@ -687,10 +690,12 @@ def cmd_leakage(args) -> dict:
             df, args.id_col, args.text_col, weights,
             seed=args.seed, threshold=args.threshold,
         )
-        if args.out:
-            pairs = pairs.persist()
-            pairs.write.mode("overwrite").parquet(f"{args.out}/near")
-        result["n_near_leak_pairs"] = int(pairs.count())
+        try:
+            if args.out:
+                pairs.write.mode("overwrite").parquet(f"{args.out}/near")
+            result["n_near_leak_pairs"] = int(pairs.count())
+        finally:
+            release_shingles(pairs)  # the persisted MinHash pair table
         result["near_threshold"] = args.threshold
     result["wall_s"] = round(time.time() - t0, 3)
     return result
@@ -1148,9 +1153,11 @@ def cmd_history(args) -> dict:
     counts), and score EVERY run's metrics against the trailing window
     of its own history — robust median/MAD fences plus an optional
     relative-change guard.  Answers the question thresholds can't:
-    "is tonight's run normal for this pipeline?"  One window shuffle
-    over a metadata-scale table; the pickled accumulator blobs are
-    pruned out of the scan."""
+    "is tonight's run normal for this pipeline?"  With
+    ``--stream-checkpoint`` each file a ``validate-stream`` store
+    committed is one run instead.  One window shuffle over a
+    metadata-scale table; the accumulator blobs are pruned out of the
+    scan."""
     from drivel_spark.constraints import (
         dead_constraints,
         load_metrics_history,
@@ -1161,20 +1168,20 @@ def cmd_history(args) -> dict:
 
     spark = build_session("drivel-history")
     t0 = time.time()
-    stream_report = getattr(args, "stream_report", None)
-    if stream_report and args.checkpoint:
+    stream = getattr(args, "stream_checkpoint", None)
+    if stream and args.checkpoint:
         raise SystemExit(
             "history: pass --checkpoint (batch commit table) OR "
-            "--stream-report (validate-stream report dir), not both"
+            "--stream-checkpoint (validate-stream commit store), not both"
         )
-    if stream_report:
-        # per-micro-batch canary: each batch's viol.<constraint> /
-        # n_rows scored against the trailing batches
-        hist = load_stream_batch_history(spark, stream_report)
+    if stream:
+        # per-file canary: each committed file's viol.<constraint> /
+        # n_rows scored against the files committed before it
+        hist = load_stream_batch_history(spark, stream)
     elif args.checkpoint:
         hist = load_metrics_history(spark, args.checkpoint)
     else:
-        raise SystemExit("history: --checkpoint or --stream-report required")
+        raise SystemExit("history: --checkpoint or --stream-checkpoint required")
     if args.metrics:
         wanted = [m.strip() for m in args.metrics.split(",") if m.strip()]
         hist = hist.where(F.col("metric").isin(wanted))
@@ -1187,34 +1194,36 @@ def cmd_history(args) -> dict:
         abs_tolerance=getattr(args, "abs_tol", 0.0) or 0.0,
         seq_col="run_seq",
     ).persist()
-    n_scored = rep.count()
-    if n_scored == 0:
-        raise SystemExit(
-            "history: no committed metrics under "
-            f"{stream_report or args.checkpoint}"
+    try:
+        n_scored = rep.count()
+        if n_scored == 0:
+            raise SystemExit(
+                f"history: no committed metrics under {stream or args.checkpoint}"
+            )
+        n_runs = rep.select("run_id").distinct().count()
+        n_metrics = rep.select("metric").distinct().count()
+        flagged = (
+            metric_anomalies(rep)
+            .orderBy(F.desc_nulls_last("robust_z"), "metric", "run_seq")
+            .limit(50)
+            .collect()
         )
-    n_runs = rep.select("run_id").distinct().count()
-    n_metrics = rep.select("metric").distinct().count()
-    flagged = (
-        metric_anomalies(rep)
-        .orderBy(F.desc_nulls_last("robust_z"), "metric", "run_seq")
-        .limit(50)
-        .collect()
-    )
-    if args.out:
-        rep.coalesce(1).write.mode("overwrite").parquet(args.out)
+        if args.out:
+            rep.coalesce(1).write.mode("overwrite").parquet(args.out)
+    finally:
+        rep.unpersist()
     dead = None
-    if stream_report:
+    if stream:
         # coverage complement: checks that never fired across the
-        # observed batches are either redundant or mis-specified
+        # observed files are either redundant or mis-specified
         dead = sorted(
             {r["constraint"]: r["n_runs"] for r in
              dead_constraints(hist).collect()}.items()
         )
     return {
         "job": "history",
-        "source": stream_report or args.checkpoint,
-        "mode": "stream-batches" if stream_report else "checkpoint-runs",
+        "source": stream or args.checkpoint,
+        "mode": "stream-files" if stream else "checkpoint-runs",
         "dead_constraints": dead,
         "n_runs": n_runs,
         "n_metrics": n_metrics,
@@ -1371,19 +1380,24 @@ def cmd_validate_delta(args) -> dict:
 
 
 def cmd_validate_stream(args) -> dict:
-    """Incremental validation via Structured Streaming: each invocation
-    processes only files not yet seen by the checkpoint (availableNow),
-    appends per-batch delta report rows, and prints the CUMULATIVE
-    pass/fail digest — which must equal the batch engine's digest on
-    the same input (pinned by tests/test_streaming.py)."""
-    from drivel_spark.fixtures import CLIPS_SCHEMA
-    from drivel_spark.streaming import cumulative_passfail, validate_stream
+    """Incremental row-level validation on the per-file commit store
+    (checkpoint/runner.py resumable_rows): each invocation validates
+    only the clip files with no commit for their current (path, size,
+    mtime), ``--max-files-per-trigger`` files per commit, overwrites
+    ``--report`` with the whole table's row-level pass/fail rows (the
+    GLOBAL_SCOPE rows ``reconcile`` wrote stay) and ``--quarantine-out``
+    with every committed file's violating rows, and prints the digest
+    of the report — which equals the batch engine's digest on the same
+    input (pinned by tests/test_streaming.py)."""
+    from drivel_spark.checkpoint import resumable_rows
 
+    _refuse_stream_checkpoint(args.checkpoint, "validate-stream")
     spark = build_session("drivel-validate-stream")
     t0 = time.time()
+    old = _flat_report(spark, args.report, "validate-stream")
     if getattr(args, "constraints", None):
         # same contract-file front-end as batch validate; the stream
-        # path accepts ROW-LEVEL specs only (validate_stream raises on
+        # accepts ROW-LEVEL specs only (resumable_rows raises on
         # dataset-level entries — uniqueness/referential belong to the
         # reconcile verb)
         from drivel_spark.constraints.specfile import load_spec_file
@@ -1394,40 +1408,60 @@ def cmd_validate_stream(args) -> dict:
         # belong to the reconcile verb
         row_cs = [c for c in _constraints(None) if c.is_row_level]
     scope = F.pmod(F.xxhash64(F.col("clip_id")), F.lit(args.n_scopes)).cast("long")
-    validate_stream(
-        spark,
-        args.source,
-        CLIPS_SCHEMA,
-        row_cs,
-        scope,
-        args.report,
-        args.checkpoint,
-        max_files_per_trigger=args.max_files_per_trigger,
-        quarantine_dir=getattr(args, "quarantine_out", None),
+    rows, stats = resumable_rows(
+        spark, args.source, CheckpointStore(args.checkpoint), "validate-stream",
+        row_cs, scope,
         # quarantine the narrow triage columns, not the audio bytes —
-        # the violating clip is re-fetchable by id; at stream scale
-        # rewriting payloads into quarantine doubles the write amp
-        keep_columns=(
-            ["clip_id", "sr_hz", "dur_ms", "codec"]
-            if getattr(args, "quarantine_out", None)
-            else None
-        ),
+        # the violating clip is re-fetchable by id
+        keep=["clip_id", "sr_hz", "dur_ms", "codec"],
+        quarantine_dir=getattr(args, "quarantine_out", None),
+        max_files=args.max_files_per_trigger,
     )
-    totals = normalize_passfail(cumulative_passfail(spark, args.report).toPandas())
-    digest = passfail_digest(totals)
-    n_rows = int(
-        totals.loc[totals.constraint == totals.constraint.iloc[0], "n_rows"].sum()
-    ) if len(totals) else 0
+    totals = _write_flat_report(
+        spark, args.report, rows, old[old.partition_id == GLOBAL_SCOPE]
+    )
     wall = time.time() - t0
     return {
         "job": "validate-stream",
         "master": spark.sparkContext.master,
-        "n_rows_total": n_rows,
+        "n_rows_total": int(rows.loc[rows.constraint == "_rows_any_violation", "n_rows"].sum()),
         "wall_s": round(wall, 3),
         "n_report_rows": int(len(totals)),
-        "cumulative_digest": digest,
+        "cumulative_digest": passfail_digest(totals),
         "n_violation_rows_total": n_violation_rows(totals),
+        "resume": stats,
     }
+
+
+def _flat_report(spark, report: str, verb: str):
+    """The pass/fail rows of the flat ``--report`` dir that
+    ``validate-stream`` and ``reconcile`` share (none when it does not
+    exist yet).  A dir of ``batch_id=N`` partitions (the layout of the
+    Structured Streaming ``validate-stream``) is refused before
+    anything is computed."""
+    import pandas as pd
+
+    sc = spark.sparkContext
+    Path = sc._jvm.org.apache.hadoop.fs.Path
+    fs = Path(report).getFileSystem(sc._jsc.hadoopConfiguration())
+    if fs.globStatus(Path(f"{report}/batch_id=*")):
+        raise SystemExit(
+            f"{report} holds batch_id=N report partitions; {verb} now keeps one "
+            "flat pass/fail report there: pass a new --report dir"
+        )
+    if not fs.exists(Path(report)):
+        return pd.DataFrame(columns=PASSFAIL_COLS)
+    return spark.read.schema(PASSFAIL_SCHEMA).parquet(report).toPandas()
+
+
+def _write_flat_report(spark, report: str, fresh, kept):
+    """Overwrite ``report`` with a verb's ``fresh`` rows plus the
+    ``kept`` rows the other verb wrote; returns the report frame."""
+    import pandas as pd
+
+    totals = normalize_passfail(pd.concat([fresh, kept], ignore_index=True))
+    passfail_df(spark, totals).coalesce(1).write.mode("overwrite").parquet(report)
+    return totals
 
 
 def cmd_screen_stream(args) -> dict:
@@ -1480,24 +1514,21 @@ def cmd_screen_stream(args) -> dict:
 
 
 def cmd_reconcile(args) -> dict:
-    """Dataset-level reconciliation for a validated stream — the other
-    half of the documented pattern (streaming/validate_stream.py:23-27):
-    row checks stream incrementally; exact global uniqueness (and
-    clip↔transcript referential completeness, when a transcripts table
-    is given) run HERE as a periodic batch over the same source table.
-    The GLOBAL_SCOPE result rows are committed to the stream's report
-    dir under the reserved partition ``batch_id=-1`` (overwritten each
-    run — a reconciliation is a snapshot of the current table, and
-    stream micro-batch ids are always >= 0), so the cumulative report
-    after stream + reconcile equals the full batch engine's pass/fail
-    table on the same data (pinned by tests/test_streaming.py)."""
-    from drivel_spark.fixtures import CLIPS_SCHEMA
+    """Dataset-level reconciliation for a validated stream: row checks
+    run incrementally (``validate-stream``); exact global uniqueness
+    (and clip↔transcript referential completeness, when a transcripts
+    table is given) run HERE as a periodic batch over the same source
+    table.  The GLOBAL_SCOPE result rows replace those of the shared
+    flat ``--report`` (a reconciliation is a snapshot of the current
+    table) and its row-level rows stay, so the report after stream +
+    reconcile equals the full batch engine's pass/fail table on the
+    same data (pinned by tests/test_streaming.py)."""
     from drivel_spark.io import read_table
-    from drivel_spark.streaming import cumulative_passfail
 
     spark = build_session("drivel-reconcile")
     t0 = time.time()
-    clips = spark.read.schema(CLIPS_SCHEMA).parquet(args.source)
+    old = _flat_report(spark, args.report, "reconcile")
+    clips = read_table(spark, args.source)
     cs: list = [Unique("clip_id_unique", "clip_id")]
     ref_tables = {}
     if args.transcripts:
@@ -1506,11 +1537,9 @@ def cmd_reconcile(args) -> dict:
             Referential("clip_has_transcript", "clip_id", "transcripts", "clip_id")
         )
     res = validate(clips, cs, ref_tables=ref_tables)
-    res.passfail.coalesce(1).write.mode("overwrite").parquet(
-        f"{args.report}/batch_id=-1"
+    totals = _write_flat_report(
+        spark, args.report, res.passfail_pdf(), old[old.partition_id != GLOBAL_SCOPE]
     )
-    totals = normalize_passfail(cumulative_passfail(spark, args.report).toPandas())
-    digest = passfail_digest(totals)
     wall = time.time() - t0
     return {
         "job": "reconcile",
@@ -1521,7 +1550,7 @@ def cmd_reconcile(args) -> dict:
             for d in res.dataset
         ],
         "n_report_rows": int(len(totals)),
-        "cumulative_digest": digest,
+        "cumulative_digest": passfail_digest(totals),
     }
 
 
@@ -1841,10 +1870,10 @@ def main(argv=None) -> None:
     shy.add_argument("--checkpoint", default=None,
                      help="commit-table dir accumulated by validate/profile "
                           "--checkpoint runs")
-    shy.add_argument("--stream-report", default=None,
-                     help="validate-stream report dir (batch_id=N passfail "
-                          "partitions): score each micro-batch's violation "
-                          "counts + row count against the trailing batches")
+    shy.add_argument("--stream-checkpoint", default=None,
+                     help="validate-stream commit store: score each committed "
+                          "file's violation counts + row count against the "
+                          "files committed before it")
     shy.add_argument("--window", type=int, default=10,
                      help="trailing runs in the reference window")
     shy.add_argument("--k", type=float, default=3.0,
@@ -1914,16 +1943,19 @@ def main(argv=None) -> None:
 
     svs = sub.add_parser("validate-stream")
     svs.add_argument("--source", required=True, help="growing clips parquet dir")
-    svs.add_argument("--report", required=True)
-    svs.add_argument("--checkpoint", required=True)
+    svs.add_argument("--report", required=True,
+                     help="flat pass/fail report dir shared with reconcile "
+                          "(row-level rows overwritten)")
+    svs.add_argument("--checkpoint", required=True, help="per-file commit store dir")
     svs.add_argument("--n-scopes", type=int, default=64)
-    svs.add_argument("--max-files-per-trigger", type=int, default=None)
+    svs.add_argument("--max-files-per-trigger", type=int, default=None,
+                     help="files validated and committed per chunk (default: all)")
     svs.add_argument("--constraints",
                      help="JSON constraint-spec file (row-level types only)")
     svs.add_argument("--quarantine-out", default=None,
-                     help="streaming gate: write each micro-batch's violating "
-                          "rows (triage columns + failed list) to this dir, "
-                          "partitioned by batch_id (idempotent on replay)")
+                     help="streaming gate: write the violating rows (triage "
+                          "columns + failed list) of every committed file to "
+                          "this dir (overwritten)")
 
     sss = sub.add_parser("screen-stream")
     sss.add_argument("--source", required=True, help="growing clips parquet dir")
@@ -1941,7 +1973,8 @@ def main(argv=None) -> None:
     sr = sub.add_parser("reconcile")
     sr.add_argument("--source", required=True, help="the streamed clips parquet dir")
     sr.add_argument("--report", required=True,
-                    help="the validate-stream report dir to append to")
+                    help="the validate-stream report dir (its GLOBAL_SCOPE "
+                         "rows are overwritten)")
     sr.add_argument("--transcripts", default=None,
                     help="transcripts table (path or iceberg:db.tbl) for the "
                          "referential check; omitted = uniqueness only")

@@ -112,8 +112,9 @@ def shingle_table(
 
 
 def release_shingles(sh: DataFrame) -> None:
-    """Unpersist the token cache behind a :func:`shingle_table` result
-    (no-op for plain DataFrames) — call after downstream results are
+    """Unpersist the cache behind a :func:`shingle_table` result (its
+    token table) or a ``split_leakage_near`` one (its pair table); a
+    no-op for plain DataFrames — call after downstream results are
     materialized, or the cache outlives the op (ADVICE r01)."""
     cache = getattr(sh, "_drivel_cache", None)
     if cache is not None:

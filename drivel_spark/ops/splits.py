@@ -351,6 +351,8 @@ def split_leakage_near(
 
     Scale: inherits minhash_dedup_pairs' banded sub-quadratic contract;
     everything after the pair table is codegen over O(pairs) rows.
+    The persisted pair table is attached as ``_drivel_cache``: the
+    caller drops it with ``release_shingles`` (ops/dedup.py).
     """
     from .dedup import minhash_dedup_pairs
 
@@ -360,8 +362,10 @@ def split_leakage_near(
     )
     sa = split_expr(F.col("id_a"), weights, seed)
     sb = split_expr(F.col("id_b"), weights, seed)
-    return (
+    out = (
         pairs.withColumn("split_a", sa)
         .withColumn("split_b", sb)
         .filter(F.col("split_a") != F.col("split_b"))
     )
+    out._drivel_cache = pairs
+    return out

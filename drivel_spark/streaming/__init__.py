@@ -1,13 +1,11 @@
-"""Structured-Streaming front-end: incremental row-constraint
-validation with exactly-once file tracking (checkpointLocation), plus
-the stateful streams (running, windowed and CUSUM stats, dedup).  The
-incremental profile and audio-QA screen run on the per-file commit
-store instead (checkpoint/runner.py resumable_profile,
-resumable_screen)."""
+"""Structured-Streaming front-end: the stateful streams (running,
+windowed and CUSUM stats, dedup), which need Spark's state store.  The
+incremental profile, audio-QA screen and row-level validation run on
+the per-file commit store instead (checkpoint/runner.py
+resumable_profile, resumable_screen, resumable_rows)."""
 
 from .cusum_stream import CUSUM_STATE_FIELDS, streaming_cusum
 from .stateful import latest_stats, running_stats, running_stats_stream
-from .validate_stream import cumulative_passfail, validate_stream
 from .windows import (
     dedup_stream,
     load_windowed_stats,
@@ -17,8 +15,6 @@ from .windows import (
 )
 
 __all__ = [
-    "validate_stream",
-    "cumulative_passfail",
     "running_stats",
     "streaming_cusum",
     "CUSUM_STATE_FIELDS",

@@ -1,15 +1,15 @@
 """Custom keyed stateful streaming via ``applyInPandasWithState``.
 
-The foreachBatch module (validate_stream) keeps the streaming state
-store EMPTY by design: its cumulative answer is a sum over committed
-per-batch deltas, which scales to 10^12 rows with zero
-state growth.  What that pattern cannot do is *per-key online
-tracking* — "what is codec X's running null ratio / value envelope
-RIGHT NOW, updated the moment a micro-batch touches that key" — without
-re-reading the report table every batch.  That is exactly the shape
-Spark's ``applyInPandasWithState`` exists for: bounded keyed state (a
-few counters per key) maintained by the state store, updated per
-micro-batch per key, emitted on change.
+The incremental validation (``validate-stream``, checkpoint/runner.py
+``resumable_rows``) keeps no streaming state at all: its cumulative
+answer is a sum over per-file partials in the commit store, which
+scales to 10^12 rows with zero state growth.  What that pattern cannot
+do is *per-key online tracking* — "what is codec X's running null
+ratio / value envelope RIGHT NOW, updated the moment a micro-batch
+touches that key" — without re-reading the store every batch.  That
+is exactly the shape Spark's ``applyInPandasWithState`` exists for:
+bounded keyed state (a few counters per key) maintained by the state
+store, updated per micro-batch per key, emitted on change.
 
 This module tracks per-key running column statistics (count, nulls,
 min / max, sum → mean) with O(1) state per key:
@@ -22,8 +22,8 @@ min / max, sum → mean) with O(1) state per key:
 * state size is five scalars per key — at 10^12 rows with bounded key
   cardinality (codecs, sample rates, sources) the store stays KB-sized,
   the one regime where keyed streaming state is safe.  Unbounded keys
-  (clip_id) belong to the foreachBatch + reconcile pattern instead —
-  see validate_stream.py's module docstring.
+  (clip_id) belong to the per-file partials + ``reconcile`` pattern
+  instead — see ``resumable_rows``.
 """
 
 from __future__ import annotations
@@ -123,8 +123,7 @@ def running_stats_stream(
     """Run :func:`running_stats` over a growing parquet directory with
     an ``availableNow`` trigger, committing each micro-batch's update
     rows to ``out_dir/batch_id=N`` (overwrite per batch — idempotent
-    under foreachBatch replay, same contract as validate_stream's
-    report).  The newest batch_id row per key IS that key's current
+    under foreachBatch replay, streaming/sink.py).  The newest batch_id row per key IS that key's current
     state; a later invocation with the same checkpoint resumes the
     state store and keeps counting."""
     reader = spark.readStream.schema(schema)

@@ -146,6 +146,7 @@ def test_stream_subcommands(spark, tmp_path):
     out2 = cmd_validate_stream(vs)
     assert out2["cumulative_digest"] == out1["cumulative_digest"]
     assert out2["n_rows_total"] == 400
+    assert out2["resume"]["n_recomputed"] == 0
 
     ps = argparse.Namespace(
         source=source, checkpoint=str(tmp_path / "pck"), columns=None,
@@ -789,10 +790,10 @@ def test_suggest_verb_roundtrip(spark, tmp_path):
 
 
 def test_validate_stream_quarantine(spark, tmp_path):
-    """Streaming gate: each micro-batch's violating rows land in
-    quarantine (triage columns + failed list), idempotent on a
-    no-new-data re-run, and growing the source quarantines only the
-    new batch's violations."""
+    """Streaming gate: every committed file's violating rows land in
+    the flat quarantine (triage columns + failed list), idempotent on a
+    no-new-data re-run, and growing the source adds exactly the new
+    file's violations."""
     from pyspark.sql import functions as F
 
     from drivel_spark.fixtures import CLIPS_SCHEMA, clips_pdf
@@ -814,19 +815,85 @@ def test_validate_stream_quarantine(spark, tmp_path):
     quar = spark.read.parquet(q)
     # quarantined rows == the report's violation total, with triage cols
     assert quar.count() == out1["n_violation_rows_total"] > 0
-    assert {"clip_id", "failed"} <= set(quar.columns)
+    assert quar.columns == ["clip_id", "sr_hz", "dur_ms", "codec", "failed"]
     assert "bytes" not in quar.columns  # triage columns, not payloads
     # idempotent: re-run with no new files adds nothing
     cmd_validate_stream(vs)
     assert spark.read.parquet(q).count() == out1["n_violation_rows_total"]
-    # growing source: only the delta's violations append (new batch dir)
+    # growing source: only the new file is validated
     spark.createDataFrame(
         clips_pdf(range(400, 700), spec), CLIPS_SCHEMA
     ).coalesce(1).write.mode("append").parquet(source)
     out3 = cmd_validate_stream(vs)
+    assert out3["resume"]["n_recomputed"] == 1
     assert spark.read.parquet(q).count() == out3["n_violation_rows_total"]
     # every quarantined row names >=1 failed constraint
     assert spark.read.parquet(q).filter(F.size("failed") < 1).count() == 0
+
+
+def test_validate_stream_revalidates_rewritten_file(spark, tmp_path):
+    """A file rewritten in place is validated again: its identity
+    (path, size, mtime) changed, so its unit recomputes, and the report
+    equals batch validate() of the rewritten table."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    from drivel_spark.constraints import validate
+    from drivel_spark.constraints.validate import passfail_digest
+    from drivel_spark.fixtures import CLIPS_SCHEMA, clips_pdf
+    from drivel_spark.job import _constraints, cmd_validate_stream
+
+    source = str(tmp_path / "src")
+    spark.createDataFrame(
+        clips_pdf(range(300), ClipFixtureSpec(with_audio=False)), CLIPS_SCHEMA
+    ).coalesce(1).write.parquet(source)
+    vs = argparse.Namespace(
+        source=source, report=str(tmp_path / "rep"), checkpoint=str(tmp_path / "ck"),
+        n_scopes=8, max_files_per_trigger=None,
+    )
+    first = cmd_validate_stream(vs)
+    assert first["n_violation_rows_total"] < 300
+    (name,) = [f for f in os.listdir(source) if f.endswith(".parquet")]
+    path = os.path.join(source, name)
+    os.remove(os.path.join(source, f".{name}.crc"))  # Hadoop's checksum of the old bytes
+    table = pq.read_table(path)
+    i = table.schema.get_field_index("dur_ms")
+    pq.write_table(
+        table.set_column(i, "dur_ms", pa.array([10] * len(table), table.schema.field(i).type)),
+        path,
+    )
+    out = cmd_validate_stream(vs)
+    assert out["n_violation_rows_total"] == 300
+    assert out["resume"]["n_recomputed"] == 1
+    row_cs = [c for c in _constraints(None) if c.is_row_level]
+    scope = F.pmod(F.xxhash64(F.col("clip_id")), F.lit(8)).cast("long")
+    batch = validate(spark.read.parquet(source), row_cs, scope=scope, cache_flags=False)
+    assert out["cumulative_digest"] == passfail_digest(batch.passfail_pdf())
+
+
+def test_stream_verbs_refuse_batch_id_report(spark, tmp_path):
+    """A --report dir still holding batch_id=N partitions (the layout of
+    the Structured Streaming validate-stream) is refused by both verbs
+    before anything commits."""
+    from drivel_spark.fixtures import CLIPS_SCHEMA, clips_pdf
+    from drivel_spark.job import cmd_reconcile, cmd_validate_stream
+
+    source = str(tmp_path / "src")
+    spark.createDataFrame(
+        clips_pdf(range(50), ClipFixtureSpec(with_audio=False)), CLIPS_SCHEMA
+    ).coalesce(1).write.parquet(source)
+    report = tmp_path / "rep"
+    (report / "batch_id=0").mkdir(parents=True)
+    ck = tmp_path / "ck"
+    with pytest.raises(SystemExit, match="pass a new --report dir"):
+        cmd_validate_stream(argparse.Namespace(
+            source=source, report=str(report), checkpoint=str(ck), n_scopes=8,
+            max_files_per_trigger=None,
+        ))
+    assert not list(ck.glob("commit-*"))
+    with pytest.raises(SystemExit, match="pass a new --report dir"):
+        cmd_reconcile(argparse.Namespace(source=source, report=str(report), transcripts=None))
 
 
 def test_leakage_verb(spark, tmp_path):
@@ -863,6 +930,38 @@ def test_leakage_verb(spark, tmp_path):
     with _pytest.raises(SystemExit, match="row-keyed"):
         cmd_leakage(argparse.Namespace(
             **base, group_col="grp", near=True, out=None))
+
+
+def test_verbs_leave_no_cache(spark, tmp_path):
+    """history and leakage --near --out unpersist what they cache: the
+    session holds as many persisted RDDs after each verb as before."""
+    import pickle
+
+    import pandas as pd
+
+    from drivel_spark.checkpoint.store import CheckpointStore, make_commit_row
+    from drivel_spark.job import cmd_leakage, main
+
+    def n_persisted():
+        return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+    store = CheckpointStore(str(tmp_path / "ck"))
+    store.append([
+        make_commit_row(f"run{i}", "f0", "snap", pickle.dumps({}), {"n_rows": 100 + i})
+        for i in range(4)
+    ])
+    before = n_persisted()
+    main(["history", "--checkpoint", str(tmp_path / "ck"), "--out", str(tmp_path / "h")])
+    assert n_persisted() == before
+
+    src = str(tmp_path / "docs")
+    texts = [f"document {i} about {i * 3}" for i in range(20)]
+    spark.createDataFrame(pd.DataFrame({"doc_id": range(20), "text": texts})).write.parquet(src)
+    cmd_leakage(argparse.Namespace(
+        data=src, id_col="doc_id", text_col="text", weights="train=0.5,test=0.5",
+        seed=42, threshold=0.5, group_col=None, near=True, out=str(tmp_path / "leaks"),
+    ))
+    assert n_persisted() == before
 
 
 def test_grouped_baseline_diff(spark, tmp_path):

@@ -172,94 +172,91 @@ def test_load_metrics_history_roundtrip(spark, tmp_path):
     assert by_run["r3"]["rel_anomaly"] is True  # 200 -> 60
 
 
-def _write_stream_report(spark, out, batches):
-    """batches: {batch_id: [(partition_id, constraint, n_rows, n_viol)]}"""
-    schema = ("partition_id long, constraint string, "
-              "n_rows long, n_violations long, passed boolean")
-    for bid, rows in batches.items():
-        spark.createDataFrame(
-            [(p, c, n, v, v == 0) for p, c, n, v in rows], schema
-        ).write.mode("overwrite").parquet(f"{out}/batch_id={bid}")
+def _commit_stream_files(out, files, t0=1_700_000_000.0):
+    """files: [{constraint: n_viol}] in commit order, one committed
+    validate-stream unit each (100 rows; ``_rows_any_violation`` is
+    the sum), ``f{i}`` committed at ``t0 + i``."""
+    from drivel_spark.checkpoint.store import CheckpointStore, make_commit_row
+
+    rows = []
+    for i, viol in enumerate(files):
+        viol = {**viol, "_rows_any_violation": sum(viol.values())}
+        row = make_commit_row("validate-stream:rows[k]", f"f{i}", "snap", b"{}",
+                              {"n_rows": 100, "viol": viol})
+        row["committed_at"] = t0 + i
+        rows.append(row)
+    CheckpointStore(out).append(rows)
 
 
 def test_load_stream_batch_history(spark, tmp_path):
-    """Stream-report loader: constraints become viol.* metrics summed
-    over scope partitions, _rows_any_violation also yields n_rows, and
-    the reserved batch_id=-1 reconciliation snapshot is excluded."""
+    """Stream-store loader: each committed file is one run (sequenced by
+    its commit time), its constraints become viol.* metrics, and a
+    rewritten file scores its latest commit only."""
+    from drivel_spark.checkpoint.store import CheckpointStore, make_commit_row
     from drivel_spark.constraints import (
         load_stream_batch_history,
         metric_anomaly_report,
         metric_anomalies,
     )
 
-    out = str(tmp_path / "rep")
-    batches = {}
-    for b in range(6):
-        dur_v = 1 if b < 5 else 40  # batch 5: violation burst
-        batches[b] = [
-            (0, "dur_range", 50, dur_v),
-            (1, "dur_range", 50, 0),
-            (0, "_rows_any_violation", 50, dur_v),
-            (1, "_rows_any_violation", 50, 0),
-        ]
-    batches[-1] = [(0, "clip_id_unique", 600, 99)]  # reconcile snapshot
-    _write_stream_report(spark, out, batches)
+    out = str(tmp_path / "ck")
+    t0 = 1_700_000_000.0
+    # file 5: violation burst
+    _commit_stream_files(out, [{"dur_range": 1 if i < 5 else 40} for i in range(6)], t0)
+    # f1 rewritten and validated again: the latest commit wins
+    fix = make_commit_row("validate-stream:rows[k]", "f1", "snap2", b"{}",
+                          {"n_rows": 100, "viol": {"dur_range": 2, "_rows_any_violation": 2}})
+    fix["committed_at"] = t0 + 1.5
+    CheckpointStore(out).append([fix])
 
     hist = load_stream_batch_history(spark, out)
-    got = {(r["metric"], r["run_seq"]): r["value"] for r in hist.collect()}
-    assert got[("viol.dur_range", 0)] == 1.0
-    assert got[("viol.dur_range", 5)] == 40.0
-    assert got[("n_rows", 3)] == 100.0
-    assert all(seq >= 0 for _, seq in got)  # batch -1 excluded
-    assert ("viol.clip_id_unique", -1) not in got
+    got = {(r["metric"], r["run_id"]): (r["run_seq"], r["value"]) for r in hist.collect()}
+    assert got[("viol.dur_range", "f0")] == (t0, 1.0)
+    assert got[("viol.dur_range", "f5")] == (t0 + 5, 40.0)
+    assert got[("viol.dur_range", "f1")] == (t0 + 1.5, 2.0)
+    assert got[("n_rows", "f3")] == (t0 + 3, 100.0)
+    assert hist.count() == 6 * 3
 
     rep = metric_anomaly_report(hist, window=5, min_history=3, k=3.0)
     flagged = metric_anomalies(rep).collect()
-    assert {(r["metric"], r["run_seq"]) for r in flagged} == {
-        ("viol.dur_range", 5),
-        ("viol._rows_any_violation", 5),
+    assert {(r["metric"], r["run_id"]) for r in flagged} == {
+        ("viol.dur_range", "f5"),
+        ("viol._rows_any_violation", "f5"),
     }
 
 
 def test_history_verb_stream_report(spark, tmp_path, capsys):
-    """history --stream-report: the CLI arm surfaces the bursty batch."""
+    """history --stream-checkpoint: the CLI arm surfaces the bursty
+    file; the old --stream-report option is gone, so argparse refuses
+    it instead of reading a batch_id=N dir."""
     from drivel_spark.job import main
 
-    out = str(tmp_path / "rep")
-    batches = {
-        b: [(0, "dur_range", 100, 2 if b < 4 else 60),
-            (0, "_rows_any_violation", 100, 2 if b < 4 else 60)]
-        for b in range(5)
-    }
-    _write_stream_report(spark, out, batches)
-    main(["history", "--stream-report", out,
+    out = str(tmp_path / "ck")
+    _commit_stream_files(out, [{"dur_range": 2 if i < 4 else 60} for i in range(5)])
+    main(["history", "--stream-checkpoint", out,
           "--window", "5", "--min-history", "3"])
     res = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert res["mode"] == "stream-batches"
+    assert res["mode"] == "stream-files"
     assert res["n_runs"] == 5
     flagged = {(a["metric"], a["run_id"]) for a in res["anomalies"]}
-    assert ("viol.dur_range", "batch=4") in flagged
+    assert ("viol.dur_range", "f4") in flagged
+    with pytest.raises(SystemExit):
+        main(["history", "--stream-report", out])
 
 
 def test_dead_constraints(spark, tmp_path):
-    """A constraint with zero violations in every batch is reported
-    dead once min_runs is met; firing once anywhere clears it; the
-    synthetic _rows_any_violation counter is never listed."""
+    """A constraint with zero violations in every committed file is
+    reported dead once min_runs is met; firing once anywhere clears it;
+    the synthetic _rows_any_violation counter is never listed."""
     from drivel_spark.constraints import (
         dead_constraints,
         load_stream_batch_history,
     )
 
-    out = str(tmp_path / "rep")
-    batches = {
-        b: [
-            (0, "never_fires", 100, 0),
-            (0, "fires_once", 100, 1 if b == 2 else 0),
-            (0, "_rows_any_violation", 100, 1 if b == 2 else 0),
-        ]
-        for b in range(4)
-    }
-    _write_stream_report(spark, out, batches)
+    out = str(tmp_path / "ck")
+    _commit_stream_files(
+        out, [{"never_fires": 0, "fires_once": 1 if i == 2 else 0} for i in range(4)]
+    )
     hist = load_stream_batch_history(spark, out)
     dead = {r["constraint"]: r["n_runs"] for r in dead_constraints(hist).collect()}
     assert dead == {"never_fires": 4}

@@ -1,6 +1,6 @@
-"""Incremental (Structured Streaming) validation: per-batch delta
-reports must fold to exactly the batch engine's pass/fail table, and
-the checkpoint must make restarts exactly-once (no reprocessing)."""
+"""Incremental validation on the per-file commit store: the per-file
+row partials must fold to exactly the batch engine's pass/fail table,
+and the store must make restarts exactly-once (no reprocessing)."""
 
 import glob
 import os
@@ -8,10 +8,11 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from drivel_spark.checkpoint import CheckpointStore, resumable_rows
 from drivel_spark.constraints import Enum as EnumC
 from drivel_spark.constraints import NotNull, Range, validate
+from drivel_spark.constraints.validate import normalize_passfail
 from drivel_spark.fixtures import CLIPS_SCHEMA, CODEC_ENUM, ClipFixtureSpec, clips_pdf
-from drivel_spark.streaming import cumulative_passfail, validate_stream
 
 SPEC = ClipFixtureSpec(with_audio=False)
 
@@ -43,72 +44,75 @@ def _batch_passfail_pdf(spark, source):
     return pdf.sort_values(["constraint", "partition_id"]).reset_index(drop=True)
 
 
-def _stream_totals_pdf(spark, report):
-    pdf = (
-        cumulative_passfail(spark, report)
-        .toPandas()
-        .sort_values(["constraint", "partition_id"])
-        .reset_index(drop=True)
+def _stream(spark, source, ckpt, constraints=None, scope=None, keep=(), **kw):
+    """``resumable_rows`` as ``validate-stream`` runs it: (report, stats)."""
+    return resumable_rows(
+        spark, source, CheckpointStore(ckpt), "validate-stream",
+        _constraints() if constraints is None else constraints,
+        _scope() if scope is None else scope, list(keep), **kw,
     )
-    return pdf
+
+
+def _stream_totals_pdf(spark, report):
+    """The flat report dir ``validate-stream`` and ``reconcile`` share."""
+    return normalize_passfail(spark.read.parquet(report).toPandas())
+
+
+def _files(source):
+    return set(glob.glob(os.path.join(source, "*.parquet")))
 
 
 def test_stream_matches_batch_and_resumes_exactly_once(spark, tmp_path):
     source = str(tmp_path / "clips_stream")
-    report = str(tmp_path / "report")
     ckpt = str(tmp_path / "ckpt")
 
-    # wave 1: 500 clips → one availableNow run
+    # wave 1: 500 clips → one run over every file
     _write_wave(spark, source, 0, 500)
-    validate_stream(
-        spark, source, CLIPS_SCHEMA, _constraints(), _scope(), report, ckpt
-    )
-    got = _stream_totals_pdf(spark, report)
+    got, _ = _stream(spark, source, ckpt)
     want = _batch_passfail_pdf(spark, source)
     assert got.to_dict("records") == want.to_dict("records")
 
-    # wave 2 appended: a resumed stream processes ONLY the new files
+    # wave 2 appended: a resumed run processes ONLY the new files
+    wave1 = _files(source)
     _write_wave(spark, source, 500, 1000)
-    validate_stream(
-        spark, source, CLIPS_SCHEMA, _constraints(), _scope(), report, ckpt
-    )
-    rep = spark.read.parquet(report)
-    batch_ids = {r["batch_id"] for r in rep.select("batch_id").distinct().collect()}
-    assert len(batch_ids) == 2  # one micro-batch per wave, no reprocessing
-    got2 = _stream_totals_pdf(spark, report)
+    got2, stats = _stream(spark, source, ckpt)
+    assert stats["n_recomputed"] == len(_files(source) - wave1) > 0
+    assert stats["n_restored"] == len(wave1)
     want2 = _batch_passfail_pdf(spark, source)
     assert got2.to_dict("records") == want2.to_dict("records")
     # violations actually present in the fixture (injected modular rows)
     assert (got2[got2.constraint == "_rows_any_violation"]["n_violations"] > 0).any()
 
     # restart with NO new data: exactly-once ⇒ report unchanged
-    validate_stream(
-        spark, source, CLIPS_SCHEMA, _constraints(), _scope(), report, ckpt
-    )
-    rep2 = spark.read.parquet(report)
-    assert rep2.count() == rep.count()
+    got3, stats3 = _stream(spark, source, ckpt)
+    assert stats3["n_recomputed"] == 0
+    assert got3.to_dict("records") == got2.to_dict("records")
 
 
 def test_stream_plus_reconcile_equals_batch_validate(spark, tmp_path):
     """The documented split — row checks streamed, dataset checks via
-    periodic batch reconciliation (validate_stream.py:23-27) — now has
-    a CLI surface: after `reconcile` commits its batch_id=-1 partition,
-    the cumulative report equals the full batch engine's pass/fail
-    table (row + GLOBAL_SCOPE dataset rows) on the same data
-    (VERDICT r02 next #6)."""
+    periodic batch reconciliation — has a CLI surface: after
+    `reconcile` writes its GLOBAL_SCOPE rows into the shared flat
+    report, the report equals the full batch engine's pass/fail table
+    (row + GLOBAL_SCOPE dataset rows) on the same data (VERDICT r02
+    next #6), and a later `validate-stream` call keeps those rows."""
     import argparse
+    import json
 
-    from drivel_spark.constraints import Referential, Unique
-    from drivel_spark.job import cmd_reconcile
+    from drivel_spark.constraints import Referential, Unique, to_spec_json
+    from drivel_spark.job import cmd_reconcile, cmd_validate_stream
 
     source = str(tmp_path / "rsrc")
     report = str(tmp_path / "rreport")
-    ckpt = str(tmp_path / "rckpt")
+    contract = tmp_path / "contract.json"
+    contract.write_text(json.dumps(to_spec_json(_constraints())))
+    vs = argparse.Namespace(
+        source=source, report=report, checkpoint=str(tmp_path / "rckpt"), n_scopes=8,
+        max_files_per_trigger=None, constraints=str(contract),
+    )
     _write_wave(spark, source, 0, 400)
     _write_wave(spark, source, 400, 900)
-    validate_stream(
-        spark, source, CLIPS_SCHEMA, _constraints(), _scope(), report, ckpt
-    )
+    cmd_validate_stream(vs)
 
     # transcripts for all but 5 clips → referential violations exist
     clips = spark.read.parquet(source)
@@ -145,33 +149,31 @@ def test_stream_plus_reconcile_equals_batch_validate(spark, tmp_path):
         .reset_index(drop=True)
     )
     assert got.to_dict("records") == want.to_dict("records")
-    # re-running reconcile is idempotent (snapshot partition overwrite)
+    # re-running reconcile is idempotent (its rows are overwritten)
     cmd_reconcile(
         argparse.Namespace(source=source, report=report, transcripts=transcripts_path)
     )
     got2 = _stream_totals_pdf(spark, report)
     assert got2.to_dict("records") == want.to_dict("records")
+    # validate-stream after reconcile keeps the reconcile rows
+    again = cmd_validate_stream(vs)
+    assert again["resume"]["n_recomputed"] == 0
+    got3 = _stream_totals_pdf(spark, report)
+    assert got3.to_dict("records") == want.to_dict("records")
 
 
 def test_stream_rejects_dataset_constraints(spark, tmp_path):
     from drivel_spark.constraints import Unique
 
     with pytest.raises(ValueError, match="row-level"):
-        validate_stream(
-            spark,
-            str(tmp_path / "x"),
-            CLIPS_SCHEMA,
-            [Unique("u", "clip_id")],
-            _scope(),
-            str(tmp_path / "r"),
-            str(tmp_path / "c"),
-        )
+        _stream(spark, str(tmp_path / "x"), str(tmp_path / "c"),
+                constraints=[Unique("u", "clip_id")])
 
 
 def test_stream_quarantine_equals_batch_violations(spark, tmp_path):
     """The streaming gate quarantines exactly the batch engine's
     violation rows: the kept columns plus ``failed``, as a multiset
-    over every micro-batch."""
+    over every committed file."""
     from collections import Counter
 
     source = str(tmp_path / "qsrc")
@@ -179,13 +181,10 @@ def test_stream_quarantine_equals_batch_violations(spark, tmp_path):
     keep = ["clip_id", "sr_hz", "codec"]
     _write_wave(spark, source, 0, 300)
     _write_wave(spark, source, 300, 600)
-    validate_stream(
-        spark, source, CLIPS_SCHEMA, _constraints(), _scope(),
-        str(tmp_path / "qrep"), str(tmp_path / "qck"),
-        max_files_per_trigger=1, quarantine_dir=quar, keep_columns=keep,
-    )
-    got = spark.read.option("basePath", quar).parquet(f"{quar}/batch_id=*")
-    assert got.columns == [*keep, "failed", "batch_id"]
+    _stream(spark, source, str(tmp_path / "qck"), keep=keep,
+            max_files=1, quarantine_dir=quar)
+    got = spark.read.parquet(quar)
+    assert got.columns == [*keep, "failed"]
     want = validate(
         spark.read.parquet(source), _constraints(), scope=_scope(),
         keep_columns=keep, cache_flags=False,
@@ -202,18 +201,15 @@ def test_stream_quarantine_equals_batch_violations(spark, tmp_path):
 
 
 def test_stream_null_scope_raises_batch_error(spark, tmp_path):
-    """A scope that yields NULL fails the stream with the batch engine's
-    NULL-scope ValueError, not a pandas cast error."""
-    from pyspark.errors import StreamingQueryException
-
+    """A scope that yields NULL fails with the batch engine's NULL-scope
+    ValueError, not a pandas cast error, before anything commits."""
     source = str(tmp_path / "nsrc")
+    ckpt = str(tmp_path / "nck")
     _write_wave(spark, source, 0, 200)
     scope = F.when(F.col("dur_ms") > 1000, _scope())
-    with pytest.raises(StreamingQueryException, match="ValueError: scope expression"):
-        validate_stream(
-            spark, source, CLIPS_SCHEMA, _constraints(), scope,
-            str(tmp_path / "nrep"), str(tmp_path / "nck"),
-        )
+    with pytest.raises(ValueError, match="scope expression"):
+        _stream(spark, source, ckpt, scope=scope)
+    assert not glob.glob(os.path.join(ckpt, "commit-*"))
 
 
 # ---------------------------------------------------------------------------
@@ -922,25 +918,15 @@ def test_screen_stream_resumes_after_sigkill(spark, tmp_path):
 
 
 def _batch_dir_case(name):
-    """(reader, per-batch commit schema, {batch_id: rows}) of one of the
-    two readers of ``batch_id=N`` report dirs."""
+    """(reader, per-batch commit schema, {batch_id: rows}) of a reader
+    of ``batch_id=N`` output dirs."""
     from datetime import datetime
 
-    from drivel_spark.constraints.validate import PASSFAIL_SCHEMA
     from drivel_spark.streaming import load_windowed_stats
     from drivel_spark.streaming.windows import WINDOWED_STATS_FIELDS
 
     t0, t1, t2 = (datetime(2024, 1, 1, 0, m) for m in (0, 10, 20))
     return {
-        "passfail": (
-            cumulative_passfail,
-            PASSFAIL_SCHEMA,
-            {
-                0: [(0, "c", 10, 1, False), (1, "c", 5, 0, True)],
-                1: [(0, "c", 3, 0, True)],
-                -1: [(-1, "u", 18, 0, True)],
-            },
-        ),
         "windows": (
             load_windowed_stats,
             WINDOWED_STATS_FIELDS,
@@ -956,7 +942,7 @@ def _commit(spark, out, schema, batches):
         local_df(spark, rows, schema).write.parquet(f"{out}/batch_id={b}")
 
 
-@pytest.mark.parametrize("name", ["passfail", "windows"])
+@pytest.mark.parametrize("name", ["windows"])
 def test_batch_dir_readers_read_uri_dirs(spark, tmp_path, name):
     """A ``file://`` report dir reads the same rows as the plain path."""
     read, schema, batches = _batch_dir_case(name)
@@ -967,7 +953,7 @@ def test_batch_dir_readers_read_uri_dirs(spark, tmp_path, name):
     assert sorted(read(spark, f"file://{out}").collect()) == plain
 
 
-@pytest.mark.parametrize("name", ["passfail", "windows"])
+@pytest.mark.parametrize("name", ["windows"])
 def test_batch_dir_readers_missing_and_empty_dirs(spark, tmp_path, name):
     """No commits yet (a missing or a pre-created dir) gives zero rows
     with the same columns and types as a dir with commits."""
