@@ -58,12 +58,16 @@ class CheckpointStore:
         pdf.to_parquet(tmp, index=False)
         os.rename(tmp, fname)  # atomic publish
 
-    def _read_all(self) -> pd.DataFrame:
-        files = [
+    def commit_files(self) -> list[str]:
+        """The store's published commit files, one per ``append``."""
+        return [
             os.path.join(self.path, f)
             for f in os.listdir(self.path)
             if f.endswith(".parquet")
         ]
+
+    def _read_all(self) -> pd.DataFrame:
+        files = self.commit_files()
         if not files:
             return pd.DataFrame(columns=COMMIT_COLUMNS)
         return pd.concat([pd.read_parquet(f) for f in files], ignore_index=True)

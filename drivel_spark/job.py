@@ -1,9 +1,22 @@
-"""spark-submit entrypoint: the end-to-end profile + validate job
-(BASELINE.json north_rule: "run via spark-submit --py-files on a
-multi-executor cluster at two cluster sizes").
+"""spark-submit entrypoint: every verb of the engine behind one CLI.
 
-Subcommands
------------
+``VERBS`` is the table of verbs: ``@verb(name, *arguments)`` enters a
+``cmd_*`` function in it with its argparse arguments, and ``main()``
+builds the parser from the table and dispatches through it.  A
+``cmd_*(args)`` called directly takes the parser's default for every
+argument ``args`` leaves out, so argparse is the one source of
+defaults.  The steps the verbs share are one helper each:
+
+- the session, ``Run.spark``: the caller's active session, else a new
+  one from ``build_session``, got on first use (``describe --schema``
+  starts no JVM);
+- reading a table, ``Run.table`` / ``Run.clips_ref``;
+- writing an output dir, ``_write`` / ``_written``;
+- the checkpoint refusals, ``Run.refuse_checkpoint``;
+- the clock, ``_timed``, which fills ``wall_s`` and ``phases``.
+
+Core verbs
+----------
 prepare   Write the deterministic synthetic clips + transcripts tables
           to parquet once (seeded; every column is f(row index), so the
           bytes are identical at any parallelism).  Takes data
@@ -19,12 +32,13 @@ validate  The timed job: pass 1 (schema + stats profile, optionally
           per-row invariant).  Prints ONE JSON line with wall seconds,
           clips/sec and the pass/fail summary.
 
-validate-stream
-          The Structured-Streaming front-end (streaming/): each
-          invocation processes only files the checkpoint hasn't seen
-          (availableNow), appends incremental validation deltas and
-          prints cumulative totals that match the batch engine on the
-          same input.
+validate-stream / reconcile
+          Row-level validation on the per-file commit store
+          (checkpoint/): each invocation validates only the clip files
+          that are new or changed and overwrites one flat pass/fail
+          report.  Once ``reconcile`` has added the dataset-level rows
+          (uniqueness, referential), the report equals the batch
+          engine's on the same input.
 profile-stream / screen-stream
           Incremental profile / audio-QA screen on the per-file commit
           store that ``validate --checkpoint`` and ``screen
@@ -32,11 +46,9 @@ profile-stream / screen-stream
           only new or changed files, commits one blob per file and
           prints the result over every committed file.
 
-Scaling protocol (BASELINE.md): `prepare` once, then run `validate` on
-the SAME input at --master local[8] and local[32]; efficiency =
-(thr_32 / thr_8) / 4.  Pass/fail rows use a STABLE scope
-(pmod(xxhash64(clip_id), n_scopes)), so the report is byte-identical
-across parallelism levels.
+Pass/fail rows use a STABLE scope (pmod(xxhash64(clip_id), n_scopes)),
+so the report is byte-identical across parallelism levels and file
+layouts.
 
 Example:
     spark-submit --master local[8] --py-files drivel_spark.zip \
@@ -53,9 +65,17 @@ import os
 import pickle
 import sys
 import time
+from concurrent.futures import ThreadPoolExecutor
+from contextlib import contextmanager
+from functools import cache, cached_property
 
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+# read_table is looked up on the module at each call, so a wrapper set on
+# drivel_spark.io (perfbench's trace) sees every read
+from drivel_spark import io as dio
+from drivel_spark.checkpoint import CheckpointStore, resumable_profile, resumable_screen
 from drivel_spark.config import build_session
 from drivel_spark.constraints import (
     Drift,
@@ -65,6 +85,7 @@ from drivel_spark.constraints import (
     Range,
     Referential,
     Unique,
+    scope_of,
     validate,
 )
 from drivel_spark.constraints.audio import audio_check, audio_row_source
@@ -84,25 +105,229 @@ from drivel_spark.fixtures import (
     build_clips,
     build_transcripts,
 )
+from drivel_spark.ops import screen_report
+from drivel_spark.ops.multimodal import (
+    AUDIO_SCREENS,
+    FUSED_SCREEN_FIELDS,
+    screen_count_aggs,
+    screen_undecodable_col,
+)
 from drivel_spark.profiling import ProfilerOptions, profile
-from drivel_spark.checkpoint import CheckpointStore, resumable_profile, resumable_screen
-from drivel_spark.io import is_table_ref
 
 PROFILE_COLUMNS = ["clip_id", "sr_hz", "dur_ms", "codec", "transcript"]
+# the narrow triage columns a violation row keeps (not the audio bytes:
+# the violating clip is re-fetchable by id), then its failed-constraint list
+KEEP_COLUMNS = ["clip_id", "sr_hz", "dur_ms", "codec"]
+VIOLATION_COLUMNS = KEEP_COLUMNS + ["failed"]
+
+# ---- the table of verbs ----------------------------------------------------
+
+VERBS: dict[str, tuple] = {}  # name -> (cmd_* function, its argparse arguments)
 
 
-def cmd_prepare(args) -> dict:
-    spark = build_session("drivel-prepare")
+def _arg(*flags: str, **kw) -> tuple:
+    """One argparse argument of a verb: ``add_argument``'s parameters."""
+    return flags, kw
+
+
+def verb(name: str, *arguments: tuple):
+    """Enter ``fn(args, run)`` in ``VERBS`` as ``name``, with its
+    argparse ``arguments``; the entry, and the name this returns, is
+    ``cmd(args)``, which calls ``fn`` with ``with_defaults(name, args)``
+    and a new ``Run``."""
+
+    def register(fn):
+        def cmd(args) -> dict:
+            return fn(with_defaults(name, args), Run(name))
+
+        cmd.__name__ = cmd.__qualname__ = fn.__name__
+        cmd.__doc__ = fn.__doc__
+        VERBS[name] = (cmd, arguments)
+        return cmd
+
+    return register
+
+
+@cache
+def _verb_parser(name: str) -> argparse.ArgumentParser:
+    p = argparse.ArgumentParser(add_help=False)
+    for flags, kw in VERBS[name][1]:
+        p.add_argument(*flags, **kw)
+    return p
+
+
+def parser() -> argparse.ArgumentParser:
+    """The CLI: one subcommand per entry of ``VERBS``."""
+    p = argparse.ArgumentParser(prog="drivel-spark-job")
+    sub = p.add_subparsers(dest="cmd", required=True)
+    for name in VERBS:
+        sub.add_parser(name, parents=[_verb_parser(name)])
+    return p
+
+
+def with_defaults(name: str, args) -> argparse.Namespace:
+    """A copy of ``args`` (a Namespace, or any object with attributes)
+    in which every argument of verb ``name`` that it lacks holds its
+    parser default."""
+    given = {k: v for k, v in vars(args).items() if not k.startswith("__")}
+    defaults = {a.dest: a.default for a in _verb_parser(name)._actions}
+    return argparse.Namespace(**{**defaults, **given})
+
+
+class Run:
+    """One call of a verb: its name and its Spark session."""
+
+    def __init__(self, name: str):
+        self.name = name
+
+    @cached_property
+    def spark(self) -> SparkSession:
+        """The caller's active session, else a new one, got on first use.
+        ``build_session`` on a live session would re-apply its runtime
+        confs over the caller's (``shuffle.partitions``, ``timeZone``)."""
+        return SparkSession.getActiveSession() or build_session(f"drivel-{self.name}")
+
+    def table(self, ref: str, where: str | None = None):
+        """``ref`` (a path or a catalog ref), with ``where`` pushed to its scan."""
+        df = dio.read_table(self.spark, ref)
+        return df.filter(where) if where else df
+
+    def clips_ref(self, args) -> str:
+        """``--clips``, else ``<--data>/clips``."""
+        if not (args.clips or args.data):
+            raise SystemExit(f"{self.name} needs --data (db dir) or --clips (table ref)")
+        return args.clips or f"{args.data}/clips"
+
+    def refuse_checkpoint(self, checkpoint: str, ref: str | None = None) -> None:
+        """Refuse, before anything runs, a ``--checkpoint`` the per-file
+        commit store cannot use: one for a catalog table ``ref``, or a
+        Structured Streaming checkpoint dir (``metadata`` + ``offsets/``)
+        an earlier version of the verb left there."""
+        if ref is not None and dio.is_table_ref(ref):
+            raise SystemExit("--checkpoint needs a parquet path for --clips: a resumable run commits "
+                             "one unit per file, which a catalog table ref does not expose")
+        if os.path.isfile(os.path.join(checkpoint, "metadata")) and os.path.isdir(
+            os.path.join(checkpoint, "offsets")
+        ):
+            raise SystemExit(
+                f"{checkpoint} holds a Structured Streaming checkpoint; {self.name} now keeps "
+                "a per-file commit store there: pass a new --checkpoint dir"
+            )
+
+
+@contextmanager
+def _timed(into: dict | None = None, key: str = "wall_s"):
+    """Time the block into ``into[key]`` (a new dict by default, which
+    ``as`` binds), in seconds to 3 places: a verb's ``wall_s`` or one of
+    its ``phases``.  The one clock of the verbs."""
+    into = {} if into is None else into
+    t0 = time.time()
+    yield into
+    into[key] = round(time.time() - t0, 3)
+
+
+def _write(df, path: str, by: tuple = ()) -> None:
+    """Overwrite the parquet dir ``path`` with ``df``, hive-partitioned on ``by``."""
+    w = df.write.mode("overwrite")
+    (w.partitionBy(*by) if by else w).parquet(path)
+
+
+def _written(df, path: str, by: tuple = ()):
+    """``_write``, then the table that was written, read back."""
+    _write(df, path, by)
+    return df.sparkSession.read.parquet(path)
+
+
+def _csv(s: str | None) -> list[str]:
+    return [k.strip() for k in (s or "").split(",") if k.strip()]
+
+
+def _weights(spec: str) -> dict[str, float]:
+    """``--weights key=w,key=w``."""
+    weights = {}
+    for part in spec.split(","):
+        k, eq, w = part.partition("=")
+        if not eq or not k:
+            raise SystemExit(f"--weights entry {part!r} is not key=weight")
+        weights[k.strip()] = float(w)
+    return weights
+
+
+def _nan_none(v):
+    """NaN as None: ``json.dumps`` would write a bare NaN, which is not JSON."""
+    return None if isinstance(v, float) and v != v else v
+
+
+def _round(v, ndigits: int):
+    return None if v is None else round(v, ndigits)
+
+
+def _rate(n, wall: float):
+    return round(n / wall, 1) if wall > 0 else None
+
+
+def _unpickle(path: str):
+    with open(path, "rb") as fh:
+        return pickle.load(fh)
+
+
+def _meta(db: str) -> dict:
+    with open(f"{db}/meta.json") as fh:
+        return json.load(fh)
+
+
+def _dataset_checks(res) -> list[dict]:
+    return [{k: d[k] for k in ("constraint", "n_violations", "passed")} for d in res.dataset]
+
+
+def _anomaly(r) -> dict:
+    """One scored row of ``metric_anomaly_report`` for the JSON line."""
+    return {
+        "metric": r["metric"],
+        "value": r["value"],
+        "hist_median": r["hist_median"],
+        "robust_z": _round(r["robust_z"], 4),
+        "rel_change": _round(r["rel_change"], 4),
+    }
+
+
+# arguments several verbs share
+_SEED = _arg("--seed", type=int, default=42)
+_DATA_DB = _arg("--data", default=None, help="db dir containing /clips")
+_CLIPS = _arg("--clips", default=None, help="override clips table (path or iceberg:db.tbl ref)")
+_WHERE = _arg("--where", default=None, help="SQL predicate pushed to the clips scan")
+_COLUMNS = _arg("--columns", default=None, help="comma-separated subset")
+_ID_COL = _arg("--id-col", default="doc_id")
+_SOURCE = _arg("--source", required=True, help="growing clips parquet dir")
+_STORE = _arg("--checkpoint", required=True, help="per-file commit store dir")
+_N_SCOPES = _arg("--n-scopes", type=int, default=64)
+_BASELINE = _arg("--baseline", default=None)
+_CHECK_AUDIO = _arg("--check-audio", action="store_true")
+_CHECK_PCM_SIZE = _arg("--check-pcm-size", action="store_true")
+
+
+# ---- the verbs ---------------------------------------------------------------
+
+
+@verb("prepare",
+      _arg("--n-rows", type=int, default=20000),
+      _arg("--partitions", type=int, default=128),
+      _SEED,
+      _arg("--variant", default="default"),
+      _arg("--no-audio", action="store_true"),
+      _arg("--shared-seg-every", type=int, default=0,
+           help="plant one common 750ms PCM segment into every "
+                "k-th eligible clip (the jingle fixture hook, "
+                "for dup-segments)"),
+      _arg("--out", required=True))
+def cmd_prepare(args, run) -> dict:
     spec = ClipFixtureSpec(
         seed=args.seed, variant=args.variant, with_audio=not args.no_audio,
         shared_seg_every=args.shared_seg_every,
     )
-    t0 = time.time()
-    clips = build_clips(spark, args.n_rows, args.partitions, spec)
-    clips.write.mode("overwrite").parquet(f"{args.out}/clips")
-    build_transcripts(spark, args.n_rows, args.partitions, spec).write.mode(
-        "overwrite"
-    ).parquet(f"{args.out}/transcripts")
+    with _timed() as t:
+        for name, build in (("clips", build_clips), ("transcripts", build_transcripts)):
+            _write(build(run.spark, args.n_rows, args.partitions, spec), f"{args.out}/{name}")
     meta = {
         "n_rows": args.n_rows,
         "partitions": args.partitions,
@@ -110,58 +335,69 @@ def cmd_prepare(args) -> dict:
         "variant": args.variant,
         "with_audio": not args.no_audio,
         "shared_seg_every": args.shared_seg_every,
-        "prepare_wall_s": round(time.time() - t0, 3),
+        "prepare_wall_s": t["wall_s"],
     }
     with open(f"{args.out}/meta.json", "w") as fh:
         json.dump(meta, fh)
     return meta
 
 
-def cmd_segment(args) -> dict:
+@verb("segment",
+      _DATA_DB,
+      _CLIPS,
+      _arg("--out", required=True, help="segments table dir"),
+      _arg("--seg-ms", type=int, default=500),
+      _arg("--min-tail-ms", type=int, default=200),
+      _WHERE)
+def cmd_segment(args, run) -> dict:
     """Table-scale audio chunking: clips → fixed-duration training
     segments (ops/multimodal.py segment_clips), written as a new table.
     Optional --where pushes a predicate to the clips scan so a daily
     run segments one slice without reading the rest — same discipline
     as validate --where.  One narrow scan, re-encode in the producing
     partition, no shuffle."""
-    from drivel_spark.io import read_table
     from drivel_spark.ops import segment_clips
 
-    if not args.clips and not args.data:
-        raise SystemExit("segment needs --data (db dir) or --clips (table ref)")
-    spark = build_session("drivel-segment")
-    ref = args.clips or f"{args.data}/clips"
-    clips = read_table(spark, ref)
-    if args.where:
-        clips = clips.filter(args.where)
-    t0 = time.time()
-    segs = segment_clips(
-        clips, seg_ms=args.seg_ms, min_tail_ms=args.min_tail_ms
-    )
-    segs.write.mode("overwrite").parquet(args.out)
-    wall = time.time() - t0
-    out = spark.read.parquet(args.out)
+    clips = run.table(run.clips_ref(args), args.where)
+    with _timed() as t:
+        out = _written(
+            segment_clips(clips, seg_ms=args.seg_ms, min_tail_ms=args.min_tail_ms), args.out
+        )
     counts = out.agg(
         F.count(F.when(out["seg_idx"].isNotNull(), 1)).alias("segs"),
         F.count(F.when(out["seg_idx"].isNull(), 1)).alias("bad"),
     ).collect()[0]
-    n_segments, n_undecodable = int(counts["segs"]), int(counts["bad"])
+    n_segments = int(counts["segs"])
     return {
-        "job": "segment",
+        "job": run.name,
         "seg_ms": args.seg_ms,
         "min_tail_ms": args.min_tail_ms,
         "n_segments": n_segments,
-        "n_undecodable": n_undecodable,
-        "wall_s": round(wall, 3),
-        "segments_per_sec": round(n_segments / wall, 1) if wall > 0 else None,
+        "n_undecodable": int(counts["bad"]),
+        "wall_s": t["wall_s"],
+        "segments_per_sec": _rate(n_segments, t["wall_s"]),
         "out": args.out,
     }
 
 
-from drivel_spark.ops.multimodal import AUDIO_SCREENS  # noqa: E402
-
-
-def cmd_screen(args) -> dict:
+@verb("screen",
+      _DATA_DB,
+      _CLIPS,
+      _arg("--kind", required=True,
+           help=f"one of {sorted(AUDIO_SCREENS)}, or a comma "
+                "list of fused-capable kinds for a one-decode "
+                "fused run"),
+      _arg("--out", default=None, help="optional per-clip report table dir"),
+      _arg("--flag", default=None,
+           help="SQL predicate over the report columns "
+                "(default: the screen's published policy)"),
+      _WHERE,
+      _arg("--checkpoint", default=None,
+           help="per-file lineage store dir: commit each file's "
+                "screen counts so an interrupted corpus screen "
+                "resumes without re-decoding"),
+      _arg("--run-id", default=None, help="lineage run id (default 'screen')"))
+def cmd_screen(args, run) -> dict:
     """One CLI for the whole audio-QA screen family: run the chosen
     per-clip screen over a clips table, optionally persist the per-clip
     report, and print flagged/undecodable counts.  --where pushes a
@@ -175,61 +411,44 @@ def cmd_screen(args) -> dict:
     clip for the whole set, per-kind counts under ``per_kind`` in the
     JSON line, their published flag policies applied (--flag is
     single-kind only)."""
-    from drivel_spark.io import read_table
-
-    if not args.clips and not args.data:
-        raise SystemExit("screen needs --data (db dir) or --clips (table ref)")
-    kinds = [k.strip() for k in args.kind.split(",") if k.strip()]
-    if getattr(args, "checkpoint", None):
-        return _screen_resumable(args, kinds)
+    ref = run.clips_ref(args)
+    kinds = _csv(args.kind)
+    if args.checkpoint:
+        return _screen_resumable(args, run, ref, kinds)
     if len(kinds) > 1:
-        return _screen_fused(args, kinds)
+        return _screen_fused(args, run, ref, kinds)
     if args.kind not in AUDIO_SCREENS:
         raise SystemExit(
             f"unknown screen {args.kind!r}; one of {sorted(AUDIO_SCREENS)}"
         )
     op, default_flag = AUDIO_SCREENS[args.kind]
-    spark = build_session("drivel-screen")
-    ref = args.clips or f"{args.data}/clips"
-    clips = read_table(spark, ref)
-    if args.where:
-        clips = clips.filter(args.where)
-    t0 = time.time()
-    rep = op(clips)
-    if args.out:
-        rep.write.mode("overwrite").parquet(args.out)
-        rep = spark.read.parquet(args.out)
-    from drivel_spark.ops.multimodal import screen_undecodable_col
-
+    clips = run.table(ref, args.where)
     flag = args.flag or default_flag
-    row = rep.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.count(
-            F.when(F.col(screen_undecodable_col(rep)).isNull(), 1)
-        ).alias("bad"),
-        F.count(F.when(F.expr(flag), 1)).alias("flagged"),
-    ).collect()[0]
-    wall = time.time() - t0
+    with _timed() as t:
+        rep = op(clips)
+        if args.out:
+            rep = _written(rep, args.out)
+        row = rep.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.count(
+                F.when(F.col(screen_undecodable_col(rep)).isNull(), 1)
+            ).alias("bad"),
+            F.count(F.when(F.expr(flag), 1)).alias("flagged"),
+        ).collect()[0]
     return {
-        "job": "screen",
+        "job": run.name,
         "kind": args.kind,
         "flag": flag,
         "n_clips": int(row["n"]),
         "n_flagged": int(row["flagged"]),
         "n_undecodable": int(row["bad"]),
-        "wall_s": round(wall, 3),
-        "clips_per_sec": round(row["n"] / wall, 1) if wall > 0 else None,
+        "wall_s": t["wall_s"],
+        "clips_per_sec": _rate(row["n"], t["wall_s"]),
         "out": args.out,
     }
 
 
-def _refuse_catalog_checkpoint(ref: str) -> None:
-    if is_table_ref(ref):
-        raise SystemExit("--checkpoint needs a parquet path for --clips: a resumable run commits "
-                         "one unit per file, which a catalog table ref does not expose")
-
-
-def _screen_resumable(args, kinds: list[str]) -> dict:
+def _screen_resumable(args, run, ref: str, kinds: list[str]) -> dict:
     """--checkpoint arm of cmd_screen: per-file lineage commits via
     checkpoint/runner.py resumable_screen, so an interrupted corpus
     screen restarts without re-decoding committed files.  Any
@@ -237,26 +456,21 @@ def _screen_resumable(args, kinds: list[str]) -> dict:
     file-level lineage and are rejected loudly, same discipline as
     validate --where."""
     for opt in ("where", "flag", "out"):
-        if getattr(args, opt, None):
+        if vars(args)[opt]:
             raise SystemExit(f"--{opt} does not compose with --checkpoint "
                              "(per-file lineage covers the whole table)")
-    ref = args.clips or f"{args.data}/clips"
-    _refuse_catalog_checkpoint(ref)
-    spark = build_session("drivel-screen")
-    t0 = time.time()
-    totals, stats = resumable_screen(
-        spark, ref, CheckpointStore(args.checkpoint),
-        getattr(args, "run_id", None) or "screen", kinds=kinds,
-    )
-    wall = time.time() - t0
-    n = int(totals["n_clips"].max())
+    run.refuse_checkpoint(args.checkpoint, ref)
+    with _timed() as t:
+        totals, stats = resumable_screen(
+            run.spark, ref, CheckpointStore(args.checkpoint), args.run_id or run.name, kinds=kinds,
+        )
     # rate over clips actually decoded this call — a mostly-resumed
     # run must not report restored files as throughput (ADVICE r05)
     n_rec = stats.get("n_clips_recomputed")
     return {
-        "job": "screen",
+        "job": run.name,
         "kinds": kinds,
-        "n_clips": n,
+        "n_clips": int(totals["n_clips"].max()),
         "n_flagged_total": int(totals["n_flagged"].sum()),
         "n_undecodable": stats.get("n_undecodable"),
         "per_kind": {
@@ -264,21 +478,15 @@ def _screen_resumable(args, kinds: list[str]) -> dict:
                         "n_undecodable": int(r["n_undecodable"])}
             for _, r in totals.iterrows()
         },
-        "wall_s": round(wall, 3),
-        "clips_per_sec": (
-            round(n_rec / wall, 1) if wall > 0 and n_rec else None
-        ),
+        "wall_s": t["wall_s"],
+        "clips_per_sec": _rate(n_rec, t["wall_s"]) if n_rec else None,
         "resume": stats,
     }
 
 
-def _screen_fused(args, kinds: list[str]) -> dict:
+def _screen_fused(args, run, ref: str, kinds: list[str]) -> dict:
     """Multi-kind arm of cmd_screen: the whole set in ONE decode pass
     via the fused kernel, all counts in one aggregation job."""
-    from drivel_spark.io import read_table
-    from drivel_spark.ops.multimodal import FUSED_SCREEN_FIELDS, screen_count_aggs
-    from drivel_spark.ops import screen_report
-
     if args.flag:
         raise SystemExit("--flag overrides a single screen's policy; "
                          "drop it for a fused multi-kind run")
@@ -288,38 +496,39 @@ def _screen_fused(args, kinds: list[str]) -> dict:
             f"not fused-capable: {bad_kinds}; a multi-kind run supports "
             f"{sorted(FUSED_SCREEN_FIELDS)} (run others one --kind at a time)"
         )
-    spark = build_session("drivel-screen")
-    ref = args.clips or f"{args.data}/clips"
-    clips = read_table(spark, ref)
-    if args.where:
-        clips = clips.filter(args.where)
-    t0 = time.time()
-    rep = screen_report(clips, kinds)
-    if args.out:
-        rep.write.mode("overwrite").parquet(args.out)
-        rep = spark.read.parquet(args.out)
-    row = rep.agg(*screen_count_aggs(kinds)).collect()[0]
-    wall = time.time() - t0
+    clips = run.table(ref, args.where)
+    with _timed() as t:
+        rep = screen_report(clips, kinds)
+        if args.out:
+            rep = _written(rep, args.out)
+        row = rep.agg(*screen_count_aggs(kinds)).collect()[0]
     return {
-        "job": "screen",
+        "job": run.name,
         "kinds": kinds,
         "n_clips": int(row["n_clips"]),
-        "n_flagged_total": int(
-            sum(row[f"f_{k}"] for k in kinds)
-        ),
+        "n_flagged_total": int(sum(row[f"f_{k}"] for k in kinds)),
         "n_undecodable": int(row["n_undec"]),
         "per_kind": {
             k: {"n_flagged": int(row[f"f_{k}"]),
                 "n_undecodable": int(row[f"b_{k}"])}
             for k in kinds
         },
-        "wall_s": round(wall, 3),
-        "clips_per_sec": round(row["n_clips"] / wall, 1) if wall > 0 else None,
+        "wall_s": t["wall_s"],
+        "clips_per_sec": _rate(row["n_clips"], t["wall_s"]),
         "out": args.out,
     }
 
 
-def cmd_dup_segments(args) -> dict:
+@verb("dup-segments",
+      _DATA_DB,
+      _CLIPS,
+      _arg("--out", required=True, help="duplicated-span table dir"),
+      _arg("--win-ms", type=int, default=500),
+      _arg("--hop-ms", type=int, default=250),
+      _arg("--within-clip", action="store_true",
+           help="also flag repetition inside a single clip"),
+      _WHERE)
+def cmd_dup_segments(args, run) -> dict:
     """Repeated-audio-segment audit at the CLI: clips -> maximal
     duplicated PCM spans per clip (ops/multimodal.py
     audio_dup_segments -- the jingle/segment-bank detector), spans
@@ -328,40 +537,28 @@ def cmd_dup_segments(args) -> dict:
     validate/segment --where); --within-clip also flags repetition
     inside a single clip (default counts cross-clip duplication
     only)."""
-    from drivel_spark.io import read_table
     from drivel_spark.ops import audio_dup_segments
 
-    if not args.clips and not args.data:
-        raise SystemExit("dup-segments needs --data (db dir) or --clips (table ref)")
-    spark = build_session("drivel-dup-segments")
-    ref = args.clips or f"{args.data}/clips"
-    clips = read_table(spark, ref)
-    if args.where:
-        clips = clips.filter(args.where)
-    t0 = time.time()
-    spans = audio_dup_segments(
-        clips,
-        win_ms=args.win_ms,
-        hop_ms=args.hop_ms,
-        cross_clip_only=not args.within_clip,
-    )
-    spans.write.mode("overwrite").parquet(args.out)
-    wall = time.time() - t0
-    out = spark.read.parquet(args.out)
+    clips = run.table(run.clips_ref(args), args.where)
+    with _timed() as t:
+        spans = audio_dup_segments(
+            clips, win_ms=args.win_ms, hop_ms=args.hop_ms, cross_clip_only=not args.within_clip,
+        )
+        out = _written(spans, args.out)
     agg = out.agg(
         F.count(F.lit(1)).alias("n_spans"),
         F.countDistinct("clip_id").alias("n_clips_with_dups"),
         F.coalesce(F.sum("span_len"), F.lit(0)).alias("dup_ms_total"),
     ).collect()[0]
     return {
-        "job": "dup-segments",
+        "job": run.name,
         "win_ms": args.win_ms,
         "hop_ms": args.hop_ms,
         "cross_clip_only": not args.within_clip,
         "n_spans": int(agg["n_spans"]),
         "n_clips_with_dups": int(agg["n_clips_with_dups"]),
         "dup_ms_total": int(agg["dup_ms_total"]),
-        "wall_s": round(wall, 3),
+        "wall_s": t["wall_s"],
         "out": args.out,
     }
 
@@ -373,7 +570,7 @@ def _profile_columns(df, columns_arg) -> list:
     every other non-binary column (so schema additions are caught
     without paying a byte-payload scan); --columns overrides."""
     if columns_arg:
-        requested = [c for c in columns_arg.split(",") if c]
+        requested = _csv(columns_arg)
         unknown = [c for c in requested if c not in df.columns]
         if unknown:
             # a typo'd/stale name must fail loudly: silently dropping it
@@ -391,25 +588,28 @@ def _profile_columns(df, columns_arg) -> list:
     ]
 
 
-def cmd_baseline(args) -> dict:
-    from drivel_spark.io import read_table
-
-    spark = build_session("drivel-baseline")
-    df = read_table(spark, f"{args.data}/clips")
-    cols = _profile_columns(df, getattr(args, "columns", None))
-    by = getattr(args, "by", None)
-    if by:
+@verb("baseline",
+      _arg("--data", required=True),
+      _arg("--out", required=True),
+      _COLUMNS,
+      _arg("--by", default=None,
+           help="grouped baseline: one profile per value of this "
+                "category column (per-codec drift reference)"))
+def cmd_baseline(args, run) -> dict:
+    df = run.table(f"{args.data}/clips")
+    cols = _profile_columns(df, args.columns)
+    if args.by:
         # grouped baseline: {group: TableProfile} via the one-scan
         # per-group fold (profiling/grouped.py) — the per-codec drift
         # reference the north rule's codec/sr frequency maps imply
         from drivel_spark.profiling import grouped_profile
 
-        gp = grouped_profile(df, by, columns=[c for c in cols if c != by])
+        gp = grouped_profile(df, args.by, columns=[c for c in cols if c != args.by])
         with open(args.out, "wb") as fh:
-            pickle.dump({"by": by, "groups": gp}, fh)
+            pickle.dump({"by": args.by, "groups": gp}, fh)
         return {
             "baseline": args.out,
-            "by": by,
+            "by": args.by,
             "n_groups": len(gp),
             "n_rows": int(sum(p.n_rows for p in gp.values())),
         }
@@ -419,7 +619,17 @@ def cmd_baseline(args) -> dict:
     return {"baseline": args.out, "n_rows": prof.acc.n_rows}
 
 
-def cmd_diff(args) -> dict:
+@verb("diff",
+      _DATA_DB,
+      _CLIPS,
+      _arg("--baseline", required=True,
+           help="baseline profile pickle from the `baseline` verb"),
+      _COLUMNS,
+      _arg("--gate", action="store_true",
+           help="classify each change with a backward-compat "
+                "severity (profiling/compat.py) and emit the "
+                "table-level verdict / gate_passed fields"))
+def cmd_diff(args, run) -> dict:
     """Structural schema diff of the current batch against a stored
     baseline profile (profiling/diff.py): which columns moved —
     added / removed / type changed / nulls appeared / numeric range or
@@ -429,18 +639,14 @@ def cmd_diff(args) -> dict:
     exists at any scale.  Default column set matches the `baseline`
     verb's so a vanilla baseline→diff round-trip reports only real
     changes; --columns overrides for arbitrary tables."""
-    spark = build_session("drivel-diff")
-    from drivel_spark.io import read_table
     from drivel_spark.profiling import diff_profiles
 
-    with open(args.baseline, "rb") as fh:
-        baseline = pickle.load(fh)
-    if not args.clips and not args.data:
-        raise SystemExit("diff needs --data or --clips")
-    ref = args.clips or f"{args.data}/clips"
-    df = read_table(spark, ref)
+    ref = run.clips_ref(args)
+    baseline = _unpickle(args.baseline)
+    df = run.table(ref)
+    out = {"job": run.name, "data": ref, "baseline": args.baseline}
     if isinstance(baseline, dict) and "groups" in baseline:
-        if getattr(args, "gate", False):
+        if args.gate:
             # fail loudly instead of silently ignoring the flag: the
             # compat severity map is defined over table-level diffs
             raise SystemExit(
@@ -456,54 +662,29 @@ def cmd_diff(args) -> dict:
         by = baseline["by"]
         cols = _profile_columns(df, args.columns)
         gp = grouped_profile(df, by, columns=[c for c in cols if c != by])
-        rep = grouped_drift(baseline["groups"], gp)
         rows = [
-            {
-                k: (None if v is None or (isinstance(v, float) and v != v)
-                    else (round(v, 6) if isinstance(v, float) else v))
-                for k, v in r.items()
-            }
-            for r in rep.to_dict("records")
+            {k: _nan_none(round(v, 6) if isinstance(v, float) else v) for k, v in r.items()}
+            for r in grouped_drift(baseline["groups"], gp).to_dict("records")
         ]
         return {
-            "job": "diff",
-            "data": ref,
-            "baseline": args.baseline,
+            **out,
             "by": by,
             "n_groups": len(gp),
             "n_report_rows": len(rows),
-            "groups_changed": sorted(
-                {r["group"] for r in rows if r["status"] != "both"}
-            ),
+            "groups_changed": sorted({r["group"] for r in rows if r["status"] != "both"}),
             "report": rows,
         }
-    cols = _profile_columns(df, args.columns)
-    prof = profile(df, columns=cols)
-    if getattr(args, "gate", False):
-        # compat gate: same diff rows + a severity each, folded to the
-        # table-level verdict — the CI decision "may this batch land"
-        from drivel_spark.profiling import compat_report, compat_verdict
+    prof = profile(df, columns=_profile_columns(df, args.columns))
+    if not args.gate:
+        changes = diff_profiles(prof, baseline)
+        return {**out, "n_rows": prof.acc.n_rows, "n_changes": len(changes), "changes": changes}
+    # compat gate: same diff rows + a severity each, folded to the
+    # table-level verdict — the CI decision "may this batch land"
+    from drivel_spark.profiling import compat_report, compat_verdict
 
-        changes = compat_report(prof, baseline)
-        out = {
-            "job": "diff",
-            "data": ref,
-            "baseline": args.baseline,
-            "n_rows": prof.acc.n_rows,
-            "n_changes": len(changes),
-            "changes": changes,
-        }
-        out.update(compat_verdict(changes))
-        return out
-    changes = diff_profiles(prof, baseline)
-    return {
-        "job": "diff",
-        "data": ref,
-        "baseline": args.baseline,
-        "n_rows": prof.acc.n_rows,
-        "n_changes": len(changes),
-        "changes": changes,
-    }
+    changes = compat_report(prof, baseline)
+    return {**out, "n_rows": prof.acc.n_rows, "n_changes": len(changes), "changes": changes,
+            **compat_verdict(changes)}
 
 
 def _constraints(baseline) -> list:
@@ -526,49 +707,45 @@ def _constraints(baseline) -> list:
     return cs
 
 
-def cmd_mix(args) -> dict:
+@verb("mix",
+      _arg("--data", required=True, help="source table (path or iceberg: ref)"),
+      _arg("--by", required=True, help="source/group column"),
+      _ID_COL,
+      _arg("--weights", required=True, help="key=w,key=w target shares"),
+      _arg("--budget", type=float, default=None,
+           help="total kept rows (or --size-col units); default = largest exact-proportion budget"),
+      _arg("--size-col", default=None, help="token/size column for the budget"),
+      _SEED,
+      _arg("--out", default=None, help="write survivors here (parquet)"))
+def cmd_mix(args, run) -> dict:
     """Data-mixture composition as a job verb (ops/mixing.py): sample a
     source table down to target per-group shares under a row/token
     budget and write the survivors; the achieved-mixture report prints
     in the JSON line.  --weights is ``key=w,key=w``; --size-col switches
     the budget to token units; the sample itself is the deterministic
     md5 filter — reruns write the identical row set."""
-    from drivel_spark.io import read_table
     from drivel_spark.ops import mix_corpora, mixture_plan, mixture_report
 
-    spark = build_session("drivel-mix")
-    df = read_table(spark, args.data)
-    weights = {}
-    for part in args.weights.split(","):
-        k, _, w = part.partition("=")
-        if not _ or not k:
-            raise SystemExit(f"--weights entry {part!r} is not key=weight")
-        weights[k.strip()] = float(w)
-    t0 = time.time()
-    plan = mixture_plan(
-        df, args.by, weights, budget=args.budget, size_col=args.size_col
-    )
-    sampled = mix_corpora(
-        df, args.by, args.id_col, weights, seed=args.seed, plan=plan
-    )
-    if args.out:
-        sampled.write.mode("overwrite").parquet(args.out)
-    report = (
-        mixture_report(
+    weights = _weights(args.weights)
+    df = run.table(args.data)
+    with _timed() as t:
+        plan = mixture_plan(
+            df, args.by, weights, budget=args.budget, size_col=args.size_col
+        )
+        if args.out:
+            _write(mix_corpora(df, args.by, args.id_col, weights, seed=args.seed, plan=plan),
+                   args.out)
+        report = mixture_report(
             df, args.by, args.id_col, weights, budget=args.budget,
             size_col=args.size_col, seed=args.seed,
-        )
-        .orderBy("source")
-        .collect()
-    )
-    wall = time.time() - t0
+        ).orderBy("source").collect()
     return {
-        "job": "mix",
+        "job": run.name,
         "by": args.by,
         "budget": plan.budget,
         "size_col": args.size_col,
         "seed": args.seed,
-        "wall_s": round(wall, 3),
+        "wall_s": t["wall_s"],
         "out": args.out,
         "report": [
             {
@@ -577,16 +754,28 @@ def cmd_mix(args) -> dict:
                 "target_share": round(r["target_share"], 6),
                 "rate": round(r["rate"], 6),
                 "kept": r["kept"],
-                "achieved_share": round(r["achieved_share"], 6)
-                if r["achieved_share"] is not None
-                else None,
+                "achieved_share": _round(r["achieved_share"], 6),
             }
             for r in report
         ],
     }
 
 
-def cmd_suggest(args) -> dict:
+@verb("suggest",
+      _arg("--data", required=True, help="CLEAN table (path or iceberg: ref)"),
+      _COLUMNS,
+      _arg("--margin", type=float, default=0.0,
+           help="widen numeric ranges by this fraction of the span"),
+      _arg("--quantile-range", default=None,
+           help="'p_lo,p_hi' — robust numeric envelopes from the "
+                "KLL sketch instead of exact min/max"),
+      _arg("--with-drift", action="store_true",
+           help="also emit drift gates (validate needs --baseline)"),
+      _arg("--with-distribution", action="store_true",
+           help="also emit entropy gates at each enum column's "
+                "observed Shannon entropy ±25%%"),
+      _arg("--out", required=True, help="spec-file JSON path"))
+def cmd_suggest(args, run) -> dict:
     """Constraint suggestion — the infer-then-check loop as a CLI
     stage (the reference's describe, aimed at validate instead of a
     human): profile a CLEAN table, derive the constraint set the
@@ -596,53 +785,60 @@ def cmd_suggest(args) -> dict:
     that `validate --constraints` re-applies verbatim.  One profile
     scan; the suggestion itself is O(columns) driver work."""
     from drivel_spark.constraints import from_profile
-    from drivel_spark.constraints.specfile import to_spec_json
-    from drivel_spark.io import read_table
+    from drivel_spark.constraints.specfile import from_spec_json, to_spec_json
 
-    spark = build_session("drivel-suggest")
-    df = read_table(spark, args.data)
-    cols = args.columns.split(",") if args.columns else None
     qr = None
     if args.quantile_range:
         parts = args.quantile_range.split(",")
         if len(parts) != 2:
             raise SystemExit("--quantile-range must be 'p_lo,p_hi'")
         qr = (float(parts[0]), float(parts[1]))
-    t0 = time.time()
-    prof = profile(df, columns=cols)
-    constraints = from_profile(
-        prof,
-        columns=cols,
-        numeric_margin=args.margin,
-        with_drift=args.with_drift,
-        quantile_range=qr,
-        with_distribution=getattr(args, "with_distribution", False),
-    )
-    doc = None
-    try:
-        from drivel_spark.constraints.specfile import from_spec_json
-
-        doc = to_spec_json(constraints)
-        from_spec_json(doc)  # self-check: the file must re-parse
-    except ValueError as e:
-        raise SystemExit(f"suggested suite is not spec-representable: {e}")
-    with open(args.out, "w") as fh:
-        json.dump(doc, fh, indent=2)
-        fh.write("\n")
+    df = run.table(args.data)
+    cols = _csv(args.columns) or None
+    with _timed() as t:
+        prof = profile(df, columns=cols)
+        constraints = from_profile(
+            prof,
+            columns=cols,
+            numeric_margin=args.margin,
+            with_drift=args.with_drift,
+            quantile_range=qr,
+            with_distribution=args.with_distribution,
+        )
+        try:
+            doc = to_spec_json(constraints)
+            from_spec_json(doc)  # self-check: the file must re-parse
+        except ValueError as e:
+            raise SystemExit(f"suggested suite is not spec-representable: {e}")
+        with open(args.out, "w") as fh:
+            json.dump(doc, fh, indent=2)
+            fh.write("\n")
     return {
-        "job": "suggest",
+        "job": run.name,
         "n_rows": prof.n_rows,
         "n_constraints": len(constraints),
         "types": sorted({e["type"] for e in doc["constraints"]}),
         "quantile_range": qr,
         "margin": args.margin,
         "with_drift": args.with_drift,
-        "wall_s": round(time.time() - t0, 3),
+        "wall_s": t["wall_s"],
         "out": args.out,
     }
 
 
-def cmd_leakage(args) -> dict:
+@verb("leakage",
+      _arg("--data", required=True, help="corpus table (path or iceberg: ref)"),
+      _ID_COL,
+      _arg("--text-col", default="text"),
+      _arg("--weights", required=True, help="key=w,key=w split shares"),
+      _SEED,
+      _arg("--group-col", default=None,
+           help="key the split on this column (leakage-safe groups)"),
+      _arg("--near", action="store_true",
+           help="also run the MinHash near-dup tier (row-keyed only)"),
+      _arg("--threshold", type=float, default=0.8, help="Jaccard threshold for --near"),
+      _arg("--out", default=None, help="write leak tables here (/exact and /near)"))
+def cmd_leakage(args, run) -> dict:
     """Cross-split contamination audit as a job verb (ops/splits.py):
     exact tier = verbatim duplicates (normalized-text md5) straddling
     a split boundary; ``--near`` adds the MinHash tier (lightly-edited
@@ -650,102 +846,85 @@ def cmd_leakage(args) -> dict:
     carries the leak totals; --out writes the full leak table for
     triage.  Zero leakage = exit evidence the train/eval boundary is
     clean before an export ships."""
-    from drivel_spark.io import read_table
     from drivel_spark.ops import release_shingles, split_leakage, split_leakage_near
 
-    spark = build_session("drivel-leakage")
-    df = read_table(spark, args.data)
-    weights = {}
-    for part in args.weights.split(","):
-        k, _, w = part.partition("=")
-        if not _ or not k:
-            raise SystemExit(f"--weights entry {part!r} is not key=weight")
-        weights[k.strip()] = float(w)
-    t0 = time.time()
-    leaks = split_leakage(
-        df, args.id_col, args.text_col, weights,
-        seed=args.seed, group_col=args.group_col,
-    )
-    agg = leaks.agg(
-        F.count(F.lit(1)).alias("k"),
-        F.coalesce(F.sum("n_docs"), F.lit(0)).alias("d"),
-    ).collect()[0]
-    result = {
-        "job": "leakage",
-        "seed": args.seed,
-        "group_col": args.group_col,
-        "n_leaking_fingerprints": int(agg["k"]),
-        "n_leaking_docs": int(agg["d"]),
-    }
-    if args.out:
-        leaks.write.mode("overwrite").parquet(f"{args.out}/exact")
-        result["out"] = args.out
-    if args.near:
-        if args.group_col:
-            raise SystemExit(
-                "--near is row-keyed (split re-derived from the id); "
-                "for group-keyed splits run the exact tier only"
-            )
-        pairs = split_leakage_near(
-            df, args.id_col, args.text_col, weights,
-            seed=args.seed, threshold=args.threshold,
+    if args.near and args.group_col:
+        raise SystemExit(
+            "--near is row-keyed (split re-derived from the id); "
+            "for group-keyed splits run the exact tier only"
         )
-        try:
-            if args.out:
-                pairs.write.mode("overwrite").parquet(f"{args.out}/near")
-            result["n_near_leak_pairs"] = int(pairs.count())
-        finally:
-            release_shingles(pairs)  # the persisted MinHash pair table
-        result["near_threshold"] = args.threshold
-    result["wall_s"] = round(time.time() - t0, 3)
+    weights = _weights(args.weights)
+    df = run.table(args.data)
+    result = {"job": run.name, "seed": args.seed, "group_col": args.group_col}
+    with _timed(result):
+        leaks = split_leakage(
+            df, args.id_col, args.text_col, weights,
+            seed=args.seed, group_col=args.group_col,
+        )
+        agg = leaks.agg(
+            F.count(F.lit(1)).alias("k"),
+            F.coalesce(F.sum("n_docs"), F.lit(0)).alias("d"),
+        ).collect()[0]
+        result["n_leaking_fingerprints"] = int(agg["k"])
+        result["n_leaking_docs"] = int(agg["d"])
+        if args.out:
+            _write(leaks, f"{args.out}/exact")
+            result["out"] = args.out
+        if args.near:
+            pairs = split_leakage_near(
+                df, args.id_col, args.text_col, weights,
+                seed=args.seed, threshold=args.threshold,
+            )
+            try:
+                if args.out:
+                    _write(pairs, f"{args.out}/near")
+                result["n_near_leak_pairs"] = int(pairs.count())
+            finally:
+                release_shingles(pairs)  # the persisted MinHash pair table
+            result["near_threshold"] = args.threshold
     return result
 
 
-def cmd_shuffle(args) -> dict:
+@verb("shuffle",
+      _arg("--data", required=True, help="source table (path or iceberg: ref)"),
+      _ID_COL,
+      _SEED,
+      _arg("--shards", type=int, default=None,
+           help="round-robin shard count; written hive-partitioned by shard"),
+      _arg("--partitions", type=int, default=None,
+           help="row-id assignment bucket count (defaults to input partitions)"),
+      _arg("--where", default=None, help="SQL predicate pushed to the source scan"),
+      _arg("--out", required=True))
+def cmd_shuffle(args, run) -> dict:
     """Deterministic corpus shuffle as a job verb (ops/splits.py
     deterministic_shuffle): the pre-training export step — assign
     every row a global shuffle position from a pure md5 total order
     (no RNG state, so reruns/resumes write byte-identical shards) and
-    optionally round-robin-shard the permutation for
-    ``write_partitioned(..., ["shard"])``.  The JSON line reports an
+    optionally round-robin-shard the permutation, written
+    hive-partitioned by ``shard``.  The JSON line reports an
     order-independent permutation digest (bit_xor of
     xxhash64(pos, id)) so two runs — or two cluster sizes — can be
     compared without diffing the data."""
-    from drivel_spark.io import read_table, write_partitioned
     from drivel_spark.ops import deterministic_shuffle
 
-    spark = build_session("drivel-shuffle")
-    df = read_table(spark, args.data)
-    if args.where:
-        df = df.filter(args.where)
-    t0 = time.time()
-    shuffled = deterministic_shuffle(
-        df,
-        args.id_col,
-        seed=args.seed,
-        n_shards=args.shards,
-        num_partitions=args.partitions,
-    )
-    if args.shards:
-        write_partitioned(shuffled, args.out, ["shard"])
-    else:
-        shuffled.write.mode("overwrite").parquet(args.out)
-    wall = time.time() - t0
-    out = spark.read.parquet(args.out)
+    df = run.table(args.data, args.where)
+    with _timed() as t:
+        shuffled = deterministic_shuffle(
+            df, args.id_col, seed=args.seed, n_shards=args.shards, num_partitions=args.partitions,
+        )
+        out = _written(shuffled, args.out, ("shard",) if args.shards else ())
     stats = out.agg(
         F.count(F.lit(1)).alias("n"),
-        F.expr(
-            f"bit_xor(xxhash64(shuffle_pos, {args.id_col}))"
-        ).alias("digest"),
+        F.expr(f"bit_xor(xxhash64(shuffle_pos, {args.id_col}))").alias("digest"),
     ).collect()[0]
     result = {
-        "job": "shuffle",
+        "job": run.name,
         "id_col": args.id_col,
         "seed": args.seed,
         "n_rows": int(stats["n"]),
         "permutation_digest": format(int(stats["digest"]) & (2**64 - 1), "016x"),
-        "wall_s": round(wall, 3),
-        "rows_per_sec": round(stats["n"] / wall, 1) if wall > 0 else None,
+        "wall_s": t["wall_s"],
+        "rows_per_sec": _rate(stats["n"], t["wall_s"]),
         "out": args.out,
     }
     if args.shards:
@@ -765,7 +944,22 @@ def cmd_shuffle(args) -> dict:
     return result
 
 
-def cmd_describe(args) -> dict:
+@verb("describe",
+      _arg("--data", default=None, help="path or iceberg:db.tbl"),
+      _arg("--schema", default=None,
+           help="describe a JSON Schema file instead of scanning data "
+                "(the reference's --from-schema, main.rs:30-32)"),
+      _COLUMNS,
+      _arg("--json-schema", action="store_true"),
+      _arg("--extended", action="store_true",
+           help="lossless JSON Schema (keeps bounds the reference drops)"),
+      _arg("--infer-enum", action="store_true",
+           help="enable the enum post-pass (reference main.rs:34-37)"),
+      _arg("--enum-max-uniq", type=float, default=0.1,
+           help="max unique/count ratio for enum (main.rs:38-41)"),
+      _arg("--enum-min-n", type=int, default=1,
+           help="min sample size for enum (main.rs:42-45)"))
+def cmd_describe(args, run) -> dict:
     """The reference's `drivel describe` at table scale: one profile
     scan → human-readable schema (reference schema.rs:535-595) or JSON
     Schema draft 2020-12 (schema.rs:644-754) on stdout (stderr for the
@@ -776,216 +970,227 @@ def cmd_describe(args) -> dict:
     (`--from-schema`), and `--infer-enum` + `--enum-max-uniq` +
     `--enum-min-n` gate the enum post-pass (opt-in, like the
     reference; the library API defaults to on)."""
-    import json as _json
-
-    if getattr(args, "schema", None):
+    if args.schema:
         # fixed-schema path: parse → emit, no Spark scan at all
         from drivel_spark.core import describe as core_describe
         from drivel_spark.core import parse_json_schema, to_json_schema
 
         with open(args.schema) as fh:
-            node = parse_json_schema(_json.load(fh))
+            node = parse_json_schema(json.load(fh))
         if args.json_schema:
-            sys.stderr.write(
-                _json.dumps(to_json_schema(node, extended=args.extended), indent=2) + "\n"
-            )
+            text = json.dumps(to_json_schema(node, extended=args.extended), indent=2)
         else:
-            sys.stderr.write(core_describe(node) + "\n")
+            text = core_describe(node)
+        sys.stderr.write(text + "\n")
         cols = sorted({**node.required, **node.optional}) if node.kind == "object" else []
-        return {"job": "describe", "source": "schema", "columns": cols}
+        return {"job": run.name, "source": "schema", "columns": cols}
 
     if not args.data:
         raise SystemExit("describe: need --data or --schema")
-
-    from drivel_spark.io import read_table
-
-    spark = build_session("drivel-describe")
-    df = read_table(spark, args.data)
-    cols = args.columns.split(",") if args.columns else None
     opts = ProfilerOptions(
-        infer_enum=bool(getattr(args, "infer_enum", False)),
-        enum_max_unique_ratio=float(getattr(args, "enum_max_uniq", 0.1)),
-        enum_min_sample_size=int(getattr(args, "enum_min_n", 1)),
+        infer_enum=args.infer_enum,
+        enum_max_unique_ratio=args.enum_max_uniq,
+        enum_min_sample_size=args.enum_min_n,
     )
-    prof = profile(df, columns=cols, opts=opts)
+    prof = profile(run.table(args.data), columns=_csv(args.columns) or None, opts=opts)
     if args.json_schema:
-        doc = prof.to_json_schema(extended=args.extended)
-        sys.stderr.write(_json.dumps(doc, indent=2) + "\n")
+        text = json.dumps(prof.to_json_schema(extended=args.extended), indent=2)
     else:
-        sys.stderr.write(prof.describe() + "\n")
+        text = prof.describe()
+    sys.stderr.write(text + "\n")
     return {
-        "job": "describe",
+        "job": run.name,
         "n_rows": prof.n_rows,
         "n_partitions": prof.n_partitions,
         "columns": prof.columns(),
     }
 
 
-def cmd_produce(args) -> dict:
+@verb("produce",
+      _arg("--data", default=None, help="infer the schema from this table"),
+      _arg("--schema", default=None, help="or parse this JSON Schema file"),
+      _arg("--n-rows", type=int, default=1000),
+      _SEED,
+      _arg("--out", required=True))
+def cmd_produce(args, run) -> dict:
     """The reference's `drivel produce -n N`, distributed and seeded:
     infer a profile from --data (or parse a JSON Schema from --schema),
     then generate n rows that re-infer to the same schema."""
-    spark = build_session("drivel-produce")
-    if args.schema:
-        import json as _json
+    from drivel_spark.produce.generator import produce_df, produce_from_profile
 
+    if args.schema:
         from drivel_spark.core import parse_json_schema
-        from drivel_spark.produce.generator import produce_df
 
         with open(args.schema) as fh:
-            node = parse_json_schema(_json.load(fh))
-        out_df = produce_df(spark, node, args.n_rows, seed=args.seed)
+            node = parse_json_schema(json.load(fh))
+        out_df = produce_df(run.spark, node, args.n_rows, seed=args.seed)
     else:
-        from drivel_spark.io import read_table
-        from drivel_spark.produce.generator import produce_from_profile
-
-        src = read_table(spark, args.data)
-        prof = profile(src)
-        out_df = produce_from_profile(spark, prof, args.n_rows, seed=args.seed)
-    out_df.write.mode("overwrite").parquet(args.out)
-    n = spark.read.parquet(args.out).count()
-    return {"job": "produce", "n_rows": n, "out": args.out}
+        prof = profile(run.table(args.data))
+        out_df = produce_from_profile(run.spark, prof, args.n_rows, seed=args.seed)
+    return {"job": run.name, "n_rows": _written(out_df, args.out).count(), "out": args.out}
 
 
-def _append_byte_tiers(constraints: list, args, df) -> None:
-    """The opt-in payload tiers below the SNR decode, shared by validate
-    and validate-delta: ``--check-wav-header`` (magics + declared
-    fmt/sr/sizes) and ``--check-pcm-size`` (byte-length arithmetic),
-    both pure Catalyst byte arithmetic in the scan, no decode
-    (constraints/audio.py)."""
-    if "bytes" not in df.columns:
-        return
-    from drivel_spark.constraints import PcmSizeConsistency, WavHeaderCheck
+def _suite(args, meta: dict, baseline, clips, spec: str | None = None) -> tuple:
+    """``(constraints, flags)`` of validate and validate-delta.  The
+    constraints: the built-in suite, or a version-controlled ``spec``
+    file (constraints/specfile.py) that REPLACES it, plus the opt-in
+    payload tiers below the SNR decode, ``--check-wav-header`` (magics +
+    declared fmt/sr/sizes) and ``--check-pcm-size`` (byte-length
+    arithmetic), both pure Catalyst byte arithmetic in the scan
+    (constraints/audio.py).  ``flags``: with ``--check-audio`` on an
+    audio table, what the SNR decode pass (``audio_row_source``)
+    evaluates; None without."""
+    from drivel_spark.constraints import PcmSizeConsistency, WavHeaderCheck, load_spec_file
 
-    if getattr(args, "check_wav_header", False):
-        constraints.append(WavHeaderCheck("wav_header", "bytes"))
-    if getattr(args, "check_pcm_size", False):
-        constraints.append(PcmSizeConsistency("pcm_size_consistency", "bytes"))
+    cs = load_spec_file(spec) if spec else _constraints(baseline)
+    if "bytes" not in clips.columns:
+        return cs, None
+    if args.check_wav_header:
+        cs.append(WavHeaderCheck("wav_header", "bytes"))
+    if args.check_pcm_size:
+        cs.append(PcmSizeConsistency("pcm_size_consistency", "bytes"))
+    if args.check_audio and meta.get("with_audio"):
+        flags, cs = audio_check(cs)
+        return cs, flags
+    return cs, None
 
 
 def _write_report(report: str, passfail, violations) -> None:
     """``{report}/passfail`` (one file, written from the driver-side
     report frame's local relation) + ``{report}/violations`` — the
     layout a later ``validate-delta --prev-report`` reads back."""
-    passfail.coalesce(1).write.mode("overwrite").parquet(f"{report}/passfail")
-    violations.write.mode("overwrite").parquet(f"{report}/violations")
+    _write(passfail.coalesce(1), f"{report}/passfail")
+    _write(violations, f"{report}/violations")
 
 
-def cmd_validate(args) -> dict:
-    spark = build_session("drivel-validate")
-    with open(f"{args.data}/meta.json") as fh:
-        meta = json.load(fh)
-    baseline = None
-    if args.baseline:
-        with open(args.baseline, "rb") as fh:
-            baseline = pickle.load(fh)
-
-    # timed region: everything a production run does per batch —
-    # scan, pass-1 profile, pass-2 constraints, report materialization.
-    from concurrent.futures import ThreadPoolExecutor
-
-    t0 = time.time()
-    phases: dict[str, float] = {}
-    from drivel_spark.io import read_table
-
-    clips_ref = getattr(args, "clips", None) or f"{args.data}/clips"
+@verb("validate",
+      _arg("--data", required=True),
+      _CLIPS,
+      _arg("--transcripts", default=None,
+           help="override transcripts table (path or iceberg:db.tbl ref)"),
+      _BASELINE,
+      _arg("--checkpoint", default=None),
+      _arg("--run-id", default="run0"),
+      _CHECK_AUDIO,
+      _CHECK_PCM_SIZE,
+      _arg("--check-wav-header", action="store_true",
+           help="structural RIFF/fmt/data header tier: magics, mono/"
+                "16-bit, header sr == metadata sr, declared sizes — "
+                "decode-free Catalyst byte arithmetic"),
+      _arg("--constraints", help="JSON constraint-spec file replacing the built-in suite"),
+      _N_SCOPES,
+      _arg("--report", default=None),
+      _arg("--where", default=None,
+           help="SQL predicate pushed to the clips scan — validate "
+                "only the matching slice (e.g. one partition)"),
+      _arg("--quarantine-out", default=None,
+           help="write row-level violations (kept cols + failed "
+                "constraint list) to this parquet dir for triage"),
+      _arg("--clean-out", default=None,
+           help="enforcement: write FULL source rows that passed "
+                "every row-level constraint to this parquet dir "
+                "(violating clip_ids excluded via left_anti)"),
+      _arg("--slice-dims", default=None,
+           help="comma list of kept columns (e.g. codec,sr_hz): "
+                "attribute row-level violations to dim slices "
+                "(ops/audit.py violation_slice_report); top-10 on "
+                "stdout, full report to <report>/slices"),
+      _arg("--history-window", type=int, default=None,
+           help="with --checkpoint: after the run commits, score "
+                "THIS run's metrics against the trailing N runs in "
+                "the store (constraints/history.py) and report "
+                "anomalies in the output JSON"),
+      _arg("--history-max-rel", type=float, default=None,
+           help="with --history-window: also flag metrics whose "
+                "run-over-run relative change exceeds this"),
+      _arg("--slice-per-constraint", action="store_true",
+           help="with --slice-dims: score each failed constraint "
+                "against its own base rate (constraint_slice_report) "
+                "instead of the pooled any-violation rate"))
+def cmd_validate(args, run) -> dict:
+    # every bad flag combination is refused before the first Spark job
+    clips_ref = run.clips_ref(args)
     if args.checkpoint:
-        _refuse_catalog_checkpoint(clips_ref)
-    transcripts_ref = getattr(args, "transcripts", None) or f"{args.data}/transcripts"
-    clips = read_table(spark, clips_ref)
-    transcripts = read_table(spark, transcripts_ref)
-    where = getattr(args, "where", None)
-    if where:
-        if args.checkpoint:
+        run.refuse_checkpoint(args.checkpoint, clips_ref)
+        if args.where:
             raise SystemExit(
                 "--where with --checkpoint is unsupported: the resumable "
                 "profile would cover the full table while constraints "
                 "cover only the slice"
             )
+    elif args.history_window:
+        raise SystemExit("--history-window requires --checkpoint")
+    dims = _csv(args.slice_dims)
+    missing = [d for d in dims if d not in VIOLATION_COLUMNS]
+    if missing:
+        raise SystemExit(
+            f"--slice-dims {missing} not in the violation report's "
+            f"kept columns {VIOLATION_COLUMNS}; add them to "
+            "keep_columns or pick from those"
+        )
+    meta = _meta(args.data)
+    baseline = _unpickle(args.baseline) if args.baseline else None
+    check_audio = bool(args.check_audio and meta.get("with_audio"))
+
+    # timed region: everything a production run does per batch —
+    # scan, pass-1 profile, pass-2 constraints, report materialization.
+    phases: dict[str, float] = {}
+    with _timed() as t:
         # the daily operation at scale: validate one partition/slice;
-        # the predicate reaches the parquet scan (PushedFilters), so
-        # the job never reads the other slices' bytes
-        clips = clips.filter(where)
+        # the --where predicate reaches the parquet scan (PushedFilters),
+        # so the job never reads the other slices' bytes
+        clips = run.table(clips_ref, args.where)
+        transcripts = run.table(args.transcripts or f"{args.data}/transcripts")
 
-    # ---- pass 1: schema + stats profile (optionally resumable) -------
-    # launched on a driver thread so its scan overlaps pass 2;
-    # validate() resolves the future at report-assembly time
-    prof_pool = ThreadPoolExecutor(max_workers=1)
-    resume_stats = None
-    if args.checkpoint:
-        store = CheckpointStore(args.checkpoint)
-
-        def _prof():
-            return resumable_profile(
-                spark, clips_ref, store, run_id=args.run_id,
-                columns=PROFILE_COLUMNS,
+        # ---- pass 1: schema + stats profile (optionally resumable) ---
+        # launched on a driver thread so its scan overlaps pass 2;
+        # validate() resolves the future at report-assembly time
+        prof_pool = ThreadPoolExecutor(max_workers=1)
+        if args.checkpoint:  # (profile, resume stats)
+            fut_prof = prof_pool.submit(
+                resumable_profile, run.spark, clips_ref, CheckpointStore(args.checkpoint),
+                run_id=args.run_id, columns=PROFILE_COLUMNS,
             )
+        else:
+            fut_prof = prof_pool.submit(lambda: (profile(clips, columns=PROFILE_COLUMNS), None))
 
-        fut_prof = prof_pool.submit(_prof)
-        prof_provider = lambda: fut_prof.result()[0]  # noqa: E731
-    else:
-        fut_prof = prof_pool.submit(profile, clips, columns=PROFILE_COLUMNS)
-        prof_provider = fut_prof.result
+        # ---- pass 2: constraints --------------------------------------
+        constraints, flags = _suite(args, meta, baseline, clips, args.constraints)
+        df, ds_df = clips, None
+        if flags is not None:
+            # the SNR decode reads the payload in the Python workers
+            # (constraints/audio.py audio_row_source); the dataset-level
+            # jobs keep their column-pruned JVM scans via ds_df
+            df, ds_df = audio_row_source(clips, meta["n_rows"], seed=meta["seed"], flags=flags), clips
 
-    # ---- pass 2: constraints ------------------------------------------
-    df = clips
-    if getattr(args, "constraints", None):
-        # a version-controlled contract file REPLACES the built-in
-        # profile-shaped suite (constraints/specfile.py); --check-audio
-        # and --check-pcm-size still append their opt-in tiers
-        from drivel_spark.constraints.specfile import load_spec_file
-
-        constraints = load_spec_file(args.constraints)
-    else:
-        constraints = _constraints(baseline)
-    _append_byte_tiers(constraints, args, df)
-    ds_df = None
-    if args.check_audio and meta.get("with_audio") and "bytes" in df.columns:
-        # the SNR decode reads the payload in the Python workers
-        # (constraints/audio.py audio_row_source); the dataset-level
-        # jobs keep their column-pruned JVM scans via ds_df
-        flags, constraints = audio_check(constraints)
-        ds_df = df
-        df = audio_row_source(df, meta["n_rows"], seed=meta["seed"], flags=flags)
-
-    scope = F.pmod(F.xxhash64(F.col("clip_id")), F.lit(args.n_scopes)).cast("long")
-    t1 = time.time()
-    res = validate(
-        df,
-        constraints,
-        scope=scope,
-        ref_tables={"transcripts": transcripts},
-        profile=prof_provider,
-        baseline_profile=baseline,
-        keep_columns=["clip_id", "sr_hz", "dur_ms", "codec"],
-        ds_df=ds_df,
-    )
-    phases["pass2_concurrent_s"] = round(time.time() - t1, 3)
-
-    t1 = time.time()
-    prof = prof_provider()
-    if args.checkpoint:
-        resume_stats = fut_prof.result()[1]
-    prof_pool.shutdown()
-    phases["profile_join_s"] = round(time.time() - t1, 3)
-
-    # the report was built on the driver inside validate(); the
-    # violation-row count is its _rows_any_violation constraint, so no
-    # job touches the flags here
-    t1 = time.time()
-    passfail = res.passfail_pdf()
-    n_violations = n_violation_rows(passfail)
-    phases["reports_s"] = round(time.time() - t1, 3)
-    if args.report:
-        _write_report(args.report, res.passfail, res.violations)
-    wall = time.time() - t0
+        with _timed(phases, "pass2_concurrent_s"):
+            res = validate(
+                df,
+                constraints,
+                scope=scope_of("clip_id", args.n_scopes),
+                ref_tables={"transcripts": transcripts},
+                profile=lambda: fut_prof.result()[0],
+                baseline_profile=baseline,
+                keep_columns=KEEP_COLUMNS,
+                ds_df=ds_df,
+            )
+        with _timed(phases, "profile_join_s"):
+            resume_stats = fut_prof.result()[1]
+            prof_pool.shutdown()
+        # the report was built on the driver inside validate(); the
+        # violation-row count is its _rows_any_violation constraint, so no
+        # job touches the flags here
+        with _timed(phases, "reports_s"):
+            passfail = res.passfail_pdf()
+            n_violations = n_violation_rows(passfail)
+        if args.report:
+            _write_report(args.report, res.passfail, res.violations)
 
     n_rows = meta["n_rows"]
-    if where:
+    if args.where:
         # slice validation: throughput must be measured on rows actually
         # scanned, not the full-table metadata count
         n_rows = int(passfail[passfail.constraint == "_rows_any_violation"]["n_rows"].sum())
-    digest = passfail_digest(passfail)
 
     # ---- enforcement mode (outside the timed region) ----------------
     # --quarantine-out writes the violating rows (kept columns + the
@@ -998,28 +1203,18 @@ def cmd_validate(args) -> dict:
     # findings (duplicate keys, orphans, drift) stay report-level:
     # which COPY of a duplicate to drop is dedup's decision, not a
     # row-local verdict.
-    quarantine_out = getattr(args, "quarantine_out", None)
-    clean_out = getattr(args, "clean_out", None)
     enforce: dict | None = None
-    if quarantine_out or clean_out:
-        t1 = time.time()
+    if args.quarantine_out or args.clean_out:
         enforce = {}
-        if quarantine_out:
-            res.violations.write.mode("overwrite").parquet(quarantine_out)
-            enforce["quarantine_out"] = quarantine_out
-            enforce["n_quarantined"] = int(
-                spark.read.parquet(quarantine_out).count()
-            )
-        if clean_out:
-            bad_ids = res.violations.select("clip_id").dropDuplicates(
-                ["clip_id"]
-            )
-            clips.join(bad_ids, "clip_id", "left_anti").write.mode(
-                "overwrite"
-            ).parquet(clean_out)
-            enforce["clean_out"] = clean_out
-            enforce["n_clean"] = int(spark.read.parquet(clean_out).count())
-        enforce["enforce_wall_s"] = round(time.time() - t1, 3)
+        with _timed(enforce, "enforce_wall_s"):
+            if args.quarantine_out:
+                enforce["quarantine_out"] = args.quarantine_out
+                enforce["n_quarantined"] = _written(res.violations, args.quarantine_out).count()
+            if args.clean_out:
+                bad_ids = res.violations.select("clip_id").dropDuplicates(["clip_id"])
+                clean = _written(clips.join(bad_ids, "clip_id", "left_anti"), args.clean_out)
+                enforce["clean_out"] = args.clean_out
+                enforce["n_clean"] = clean.count()
 
     # ---- violation slice attribution (outside the timed region) -----
     # --slice-dims codec,sr_hz: which dim combination concentrates the
@@ -1029,22 +1224,14 @@ def cmd_validate(args) -> dict:
     # bytes and the constraint exprs (incl. the SNR decode) never
     # re-evaluate.
     slices_out: list | None = None
-    if getattr(args, "slice_dims", None):
+    if dims:
         from drivel_spark.ops import (
             constraint_slice_report,
             top_violation_slices,
             violation_slice_report_from_tables,
         )
 
-        dims = [d.strip() for d in args.slice_dims.split(",") if d.strip()]
-        missing = [d for d in dims if d not in res.violations.columns]
-        if missing:
-            raise SystemExit(
-                f"--slice-dims {missing} not in the violation report's "
-                f"kept columns {res.violations.columns}; add them to "
-                "keep_columns or pick from those"
-            )
-        if getattr(args, "slice_per_constraint", False):
+        if args.slice_per_constraint:
             # each failed constraint scored against its OWN base rate
             srep = constraint_slice_report(
                 clips, res.violations, dims, failed_col="failed",
@@ -1056,9 +1243,7 @@ def cmd_validate(args) -> dict:
             )
         top = top_violation_slices(srep, 10)
         if args.report:
-            srep.coalesce(1).write.mode("overwrite").parquet(
-                f"{args.report}/slices"
-            )
+            _write(srep.coalesce(1), f"{args.report}/slices")
         slices_out = [
             {
                 **(
@@ -1073,71 +1258,51 @@ def cmd_validate(args) -> dict:
                 "slice_order": int(r["slice_order"]),
                 "n_rows": int(r["n_rows"]),
                 "n_viol": int(r["n_viol"]),
-                "lift": None if r["lift"] is None else round(float(r["lift"]), 4),
+                "lift": _round(r["lift"], 4),
                 "excess": round(float(r["excess"]), 2),
             }
             for r in top.collect()
         ]
 
     history_out = None
-    if getattr(args, "history_window", None):
+    if args.history_window:
         # close the loop on a checkpointed run: after this run's
         # commits land, score THIS run's metrics against the trailing
         # runs already in the store (constraints/history.py) — "the
         # data passed its constraints, but is tonight's run normal?"
-        if not args.checkpoint:
-            raise SystemExit("--history-window requires --checkpoint")
         from drivel_spark.constraints import (
             load_metrics_history,
             metric_anomaly_report,
         )
 
-        hist = load_metrics_history(spark, args.checkpoint)
         hrep = metric_anomaly_report(
-            hist,
-            window=int(args.history_window),
+            load_metrics_history(run.spark, args.checkpoint),
+            window=args.history_window,
             k=3.0,
             min_history=2,
-            max_rel_change=getattr(args, "history_max_rel", None),
+            max_rel_change=args.history_max_rel,
         )
         mine = hrep.where(F.col("run_id") == args.run_id).collect()
         history_out = {
             "n_metrics": len(mine),
             "n_hist_runs": int(max((r["n_hist"] for r in mine), default=0)),
-            "anomalies": [
-                {
-                    "metric": r["metric"],
-                    "value": r["value"],
-                    "hist_median": r["hist_median"],
-                    "robust_z": None
-                    if r["robust_z"] is None
-                    else round(r["robust_z"], 4),
-                    "rel_change": None
-                    if r["rel_change"] is None
-                    else round(r["rel_change"], 4),
-                }
-                for r in mine
-                if (r["is_anomaly"] or r["rel_anomaly"])
-            ],
+            "anomalies": [_anomaly(r) for r in mine if r["is_anomaly"] or r["rel_anomaly"]],
         }
 
     return {
-        "job": "validate",
-        "master": spark.sparkContext.master,
-        "where": where,
+        "job": run.name,
+        "master": run.spark.sparkContext.master,
+        "where": args.where,
         "n_rows": n_rows,
-        "wall_s": round(wall, 3),
-        "clips_per_sec": round(n_rows / wall, 1),
+        "wall_s": t["wall_s"],
+        "clips_per_sec": _rate(n_rows, t["wall_s"]),
         "n_passfail_rows": int(len(passfail)),
-        "passfail_digest": digest,  # must match across parallelism levels
+        "passfail_digest": passfail_digest(passfail),  # must match across parallelism levels
         "n_violation_rows": n_violations,
         "all_passed": bool(res.all_passed()),
-        "dataset_checks": [
-            {k: d[k] for k in ("constraint", "n_violations", "passed")}
-            for d in res.dataset
-        ],
+        "dataset_checks": _dataset_checks(res),
         "resume": resume_stats,
-        "check_audio": bool(args.check_audio and meta.get("with_audio")),
+        "check_audio": check_audio,
         "phases": phases,
         "enforce": enforce,
         "violation_slices": slices_out,
@@ -1145,7 +1310,27 @@ def cmd_validate(args) -> dict:
     }
 
 
-def cmd_history(args) -> dict:
+@verb("history",
+      _arg("--checkpoint", default=None,
+           help="commit-table dir accumulated by validate/profile "
+                "--checkpoint runs"),
+      _arg("--stream-checkpoint", default=None,
+           help="validate-stream commit store: score each committed "
+                "file's violation counts + row count against the "
+                "files committed before it"),
+      _arg("--window", type=int, default=10, help="trailing runs in the reference window"),
+      _arg("--k", type=float, default=3.0,
+           help="robust fence multiplier (median +/- k*1.4826*MAD)"),
+      _arg("--min-history", type=int, default=3,
+           help="runs required before a verdict (younger -> NULL)"),
+      _arg("--max-rel-change", type=float, default=None,
+           help="also flag |value - prev| / |prev| above this"),
+      _arg("--abs-tol", type=float, default=0.0,
+           help="absolute deviation floor under BOTH detectors — "
+                "count metrics stepping by <= this never alarm"),
+      _arg("--metrics", default=None, help="comma-separated metric-name subset"),
+      _arg("--out", default=None, help="write the full scored report parquet here"))
+def cmd_history(args, run) -> dict:
     """Run-over-run metric anomaly audit (constraints/history.py): read
     the checkpoint commit table accumulated by repeated ``validate
     --checkpoint`` / resumable-profile runs, flatten each run's
@@ -1166,62 +1351,60 @@ def cmd_history(args) -> dict:
         metric_anomaly_report,
     )
 
-    spark = build_session("drivel-history")
-    t0 = time.time()
-    stream = getattr(args, "stream_checkpoint", None)
+    stream = args.stream_checkpoint
     if stream and args.checkpoint:
         raise SystemExit(
             "history: pass --checkpoint (batch commit table) OR "
             "--stream-checkpoint (validate-stream commit store), not both"
         )
-    if stream:
-        # per-file canary: each committed file's viol.<constraint> /
-        # n_rows scored against the files committed before it
-        hist = load_stream_batch_history(spark, stream)
-    elif args.checkpoint:
-        hist = load_metrics_history(spark, args.checkpoint)
-    else:
+    if not (stream or args.checkpoint):
         raise SystemExit("history: --checkpoint or --stream-checkpoint required")
-    if args.metrics:
-        wanted = [m.strip() for m in args.metrics.split(",") if m.strip()]
-        hist = hist.where(F.col("metric").isin(wanted))
-    rep = metric_anomaly_report(
-        hist,
-        window=args.window,
-        k=args.k,
-        min_history=args.min_history,
-        max_rel_change=args.max_rel_change,
-        abs_tolerance=getattr(args, "abs_tol", 0.0) or 0.0,
-        seq_col="run_seq",
-    ).persist()
-    try:
-        n_scored = rep.count()
-        if n_scored == 0:
-            raise SystemExit(
-                f"history: no committed metrics under {stream or args.checkpoint}"
+    with _timed() as t:
+        if stream:
+            # per-file canary: each committed file's viol.<constraint> /
+            # n_rows scored against the files committed before it
+            hist = load_stream_batch_history(run.spark, stream)
+        else:
+            hist = load_metrics_history(run.spark, args.checkpoint)
+        if args.metrics:
+            hist = hist.where(F.col("metric").isin(_csv(args.metrics)))
+        rep = metric_anomaly_report(
+            hist,
+            window=args.window,
+            k=args.k,
+            min_history=args.min_history,
+            max_rel_change=args.max_rel_change,
+            abs_tolerance=args.abs_tol or 0.0,
+            seq_col="run_seq",
+        ).persist()
+        try:
+            n_scored = rep.count()
+            if n_scored == 0:
+                raise SystemExit(
+                    f"history: no committed metrics under {stream or args.checkpoint}"
+                )
+            n_runs = rep.select("run_id").distinct().count()
+            n_metrics = rep.select("metric").distinct().count()
+            flagged = (
+                metric_anomalies(rep)
+                .orderBy(F.desc_nulls_last("robust_z"), "metric", "run_seq")
+                .limit(50)
+                .collect()
             )
-        n_runs = rep.select("run_id").distinct().count()
-        n_metrics = rep.select("metric").distinct().count()
-        flagged = (
-            metric_anomalies(rep)
-            .orderBy(F.desc_nulls_last("robust_z"), "metric", "run_seq")
-            .limit(50)
-            .collect()
-        )
-        if args.out:
-            rep.coalesce(1).write.mode("overwrite").parquet(args.out)
-    finally:
-        rep.unpersist()
-    dead = None
-    if stream:
-        # coverage complement: checks that never fired across the
-        # observed files are either redundant or mis-specified
-        dead = sorted(
-            {r["constraint"]: r["n_runs"] for r in
-             dead_constraints(hist).collect()}.items()
-        )
+            if args.out:
+                _write(rep.coalesce(1), args.out)
+        finally:
+            rep.unpersist()
+        dead = None
+        if stream:
+            # coverage complement: checks that never fired across the
+            # observed files are either redundant or mis-specified
+            dead = sorted(
+                {r["constraint"]: r["n_runs"] for r in
+                 dead_constraints(hist).collect()}.items()
+            )
     return {
-        "job": "history",
+        "job": run.name,
         "source": stream or args.checkpoint,
         "mode": "stream-files" if stream else "checkpoint-runs",
         "dead_constraints": dead,
@@ -1233,27 +1416,29 @@ def cmd_history(args) -> dict:
         "k": args.k,
         "max_rel_change": args.max_rel_change,
         "anomalies": [
-            {
-                "run_id": r["run_id"],
-                "metric": r["metric"],
-                "value": r["value"],
-                "hist_median": r["hist_median"],
-                "robust_z": None
-                if r["robust_z"] is None
-                else round(r["robust_z"], 4),
-                "rel_change": None
-                if r["rel_change"] is None
-                else round(r["rel_change"], 4),
-                "is_anomaly": r["is_anomaly"],
-                "rel_anomaly": r["rel_anomaly"],
-            }
+            {"run_id": r["run_id"], **_anomaly(r),
+             "is_anomaly": r["is_anomaly"], "rel_anomaly": r["rel_anomaly"]}
             for r in flagged
         ],
-        "wall_s": round(time.time() - t0, 3),
+        "wall_s": t["wall_s"],
     }
 
 
-def cmd_validate_delta(args) -> dict:
+@verb("validate-delta",
+      _arg("--data", required=True, help="NEW snapshot db dir"),
+      _arg("--old-data", required=True, help="previous snapshot db dir"),
+      _arg("--prev-report", required=True,
+           help="report dir a prior `validate --report` (or "
+                "validate-delta --report) wrote for the old snapshot"),
+      _BASELINE,
+      _CHECK_AUDIO,
+      _CHECK_PCM_SIZE,
+      _arg("--check-wav-header", action="store_true"),
+      _arg("--n-scopes", type=int, default=64, help="must match the previous report's value"),
+      _arg("--report", default=None,
+           help="write the MERGED report here (chains into the "
+                "next day's --prev-report)"))
+def cmd_validate_delta(args, run) -> dict:
     """Delta validation (constraints/delta.py): validate a refreshed
     snapshot by re-running the row-level pass ONLY over the scopes
     touched by churn vs the previous snapshot, carrying the untouched
@@ -1265,97 +1450,68 @@ def cmd_validate_delta(args) -> dict:
     touches only the churned fraction of the table.  Requires the
     previous report to have been produced with the same constraint
     suite, seed, and --n-scopes."""
-    spark = build_session("drivel-validate-delta")
-    with open(f"{args.data}/meta.json") as fh:
-        meta = json.load(fh)
-    with open(f"{args.old_data}/meta.json") as fh:
-        old_meta = json.load(fh)
-    if old_meta.get("seed") != meta.get("seed"):
+    from drivel_spark.constraints import churned_scopes, validate_delta
+
+    meta = _meta(args.data)
+    if _meta(args.old_data).get("seed") != meta.get("seed"):
         raise SystemExit(
             "validate-delta: old and new snapshots were prepared with "
             "different seeds; carried report rows would not match"
         )
-    baseline = None
-    if args.baseline:
-        with open(args.baseline, "rb") as fh:
-            baseline = pickle.load(fh)
+    baseline = _unpickle(args.baseline) if args.baseline else None
+    check_audio = bool(args.check_audio and meta.get("with_audio"))
 
-    from concurrent.futures import ThreadPoolExecutor
-
-    from drivel_spark.constraints import churned_scopes, validate_delta
-    from drivel_spark.constraints.delta import scope_of
-    from drivel_spark.io import read_table
-
-    t0 = time.time()
     phases: dict[str, float] = {}
-    clips = read_table(spark, f"{args.data}/clips")
-    old_clips = read_table(spark, f"{args.old_data}/clips")
-    transcripts = read_table(spark, f"{args.data}/transcripts")
+    with _timed() as t:
+        clips = run.table(f"{args.data}/clips")
+        old_clips = run.table(f"{args.old_data}/clips")
+        transcripts = run.table(f"{args.data}/transcripts")
 
-    # ---- churn detection: narrow (key, hash) compare ------------------
-    t1 = time.time()
-    dirty, churn = churned_scopes(
-        old_clips, clips, "clip_id", args.n_scopes
-    )
-    phases["churn_detect_s"] = round(time.time() - t1, 3)
+        # ---- churn detection: narrow (key, hash) compare --------------
+        with _timed(phases, "churn_detect_s"):
+            dirty, churn = churned_scopes(old_clips, clips, "clip_id", args.n_scopes)
 
-    # ---- pass-1 profile over the full new snapshot (cheap scan; feeds
-    # the Unique HLL context and Drift, exactly as full validate does)
-    prof_pool = ThreadPoolExecutor(max_workers=1)
-    fut_prof = prof_pool.submit(profile, clips, columns=PROFILE_COLUMNS)
+        # ---- pass-1 profile over the full new snapshot (cheap scan; feeds
+        # the Unique HLL context and Drift, exactly as full validate does)
+        prof_pool = ThreadPoolExecutor(max_workers=1)
+        fut_prof = prof_pool.submit(profile, clips, columns=PROFILE_COLUMNS)
 
-    constraints = _constraints(baseline)
-    _append_byte_tiers(constraints, args, clips)
+        constraints, flags = _suite(args, meta, baseline, clips)
+        prepare_row_df = None
+        if flags is not None:
+            # applied AFTER the dirty-scope filter, so the decode scales
+            # with churn, not table size
+            def prepare_row_df(df):  # noqa: F811
+                return audio_row_source(df, meta["n_rows"], seed=meta["seed"], flags=flags)
 
-    prepare_row_df = None
-    if args.check_audio and meta.get("with_audio") and "bytes" in clips.columns:
-        flags, constraints = audio_check(constraints)
-
-        # applied AFTER the dirty-scope filter, so the decode scales
-        # with churn, not table size
-        def prepare_row_df(df):  # noqa: F811
-            return audio_row_source(
-                df, meta["n_rows"], seed=meta["seed"], flags=flags
+        with _timed(phases, "delta_validate_s"):
+            res = validate_delta(
+                clips,
+                [c for c in constraints if c.is_row_level],
+                [c for c in constraints if not c.is_row_level],
+                key_col="clip_id",
+                n_scopes=args.n_scopes,
+                dirty_scopes=dirty,
+                churn=churn,
+                prev_passfail=run.spark.read.parquet(f"{args.prev_report}/passfail"),
+                prev_violations=run.spark.read.parquet(f"{args.prev_report}/violations"),
+                prepare_row_df=prepare_row_df,
+                ref_tables={"transcripts": transcripts},
+                profile=fut_prof.result,
+                baseline_profile=baseline,
+                keep_columns=KEEP_COLUMNS,
             )
+        prof_pool.shutdown()
 
-    row_cs = [c for c in constraints if c.is_row_level]
-    ds_cs = [c for c in constraints if not c.is_row_level]
-
-    prev_passfail = spark.read.parquet(f"{args.prev_report}/passfail")
-    prev_violations = spark.read.parquet(f"{args.prev_report}/violations")
-
-    t1 = time.time()
-    res = validate_delta(
-        clips,
-        row_cs,
-        ds_cs,
-        key_col="clip_id",
-        n_scopes=args.n_scopes,
-        dirty_scopes=dirty,
-        churn=churn,
-        prev_passfail=prev_passfail,
-        prev_violations=prev_violations,
-        prepare_row_df=prepare_row_df,
-        ref_tables={"transcripts": transcripts},
-        profile=fut_prof.result,
-        baseline_profile=baseline,
-        keep_columns=["clip_id", "sr_hz", "dur_ms", "codec"],
-    )
-    phases["delta_validate_s"] = round(time.time() - t1, 3)
-    prof_pool.shutdown()
-
-    passfail = res.passfail_pdf
-    digest = passfail_digest(passfail)
-    if args.report:
-        t1 = time.time()
-        _write_report(args.report, passfail_df(spark, passfail), res.violations)
-        phases["report_write_s"] = round(time.time() - t1, 3)
-    wall = time.time() - t0
+        passfail = res.passfail_pdf
+        digest = passfail_digest(passfail)
+        if args.report:
+            with _timed(phases, "report_write_s"):
+                _write_report(args.report, passfail_df(run.spark, passfail), res.violations)
     n_total = int(meta["n_rows"])
-
     return {
-        "job": "validate-delta",
-        "master": spark.sparkContext.master,
+        "job": run.name,
+        "master": run.spark.sparkContext.master,
         "n_rows": n_total,
         "n_rows_revalidated": int(res.n_rows_revalidated),
         "revalidate_fraction": round(
@@ -1364,22 +1520,64 @@ def cmd_validate_delta(args) -> dict:
         "n_dirty_scopes": len(res.dirty_scopes),
         "n_scopes": args.n_scopes,
         "churn": res.churn,
-        "wall_s": round(wall, 3),
-        "clips_per_sec": round(n_total / wall, 1),
+        "wall_s": t["wall_s"],
+        "clips_per_sec": _rate(n_total, t["wall_s"]),
         "n_passfail_rows": int(len(passfail)),
         "passfail_digest": digest,  # must equal full validate's digest
         "n_violation_rows": n_violation_rows(passfail),
         "all_passed": bool(res.all_passed()),
-        "dataset_checks": [
-            {k: d[k] for k in ("constraint", "n_violations", "passed")}
-            for d in res.dataset
-        ],
-        "check_audio": bool(args.check_audio and meta.get("with_audio")),
+        "dataset_checks": _dataset_checks(res),
+        "check_audio": check_audio,
         "phases": phases,
     }
 
 
-def cmd_validate_stream(args) -> dict:
+def _flat_report(run, report: str):
+    """The pass/fail rows of the flat ``--report`` dir that
+    ``validate-stream`` and ``reconcile`` share (none when it does not
+    exist yet).  A dir of ``batch_id=N`` partitions (the layout of the
+    Structured Streaming ``validate-stream``) is refused before
+    anything is computed."""
+    import pandas as pd
+
+    sc = run.spark.sparkContext
+    Path = sc._jvm.org.apache.hadoop.fs.Path
+    fs = Path(report).getFileSystem(sc._jsc.hadoopConfiguration())
+    if fs.globStatus(Path(f"{report}/batch_id=*")):
+        raise SystemExit(
+            f"{report} holds batch_id=N report partitions; {run.name} now keeps one "
+            "flat pass/fail report there: pass a new --report dir"
+        )
+    if not fs.exists(Path(report)):
+        return pd.DataFrame(columns=PASSFAIL_COLS)
+    return run.spark.read.schema(PASSFAIL_SCHEMA).parquet(report).toPandas()
+
+
+def _write_flat_report(spark, report: str, fresh, kept):
+    """Overwrite ``report`` with a verb's ``fresh`` rows plus the
+    ``kept`` rows the other verb wrote; returns the report frame."""
+    import pandas as pd
+
+    totals = normalize_passfail(pd.concat([fresh, kept], ignore_index=True))
+    _write(passfail_df(spark, totals).coalesce(1), report)
+    return totals
+
+
+@verb("validate-stream",
+      _SOURCE,
+      _arg("--report", required=True,
+           help="flat pass/fail report dir shared with reconcile "
+                "(row-level rows overwritten)"),
+      _STORE,
+      _N_SCOPES,
+      _arg("--max-files-per-trigger", type=int, default=None,
+           help="files validated and committed per chunk (default: all)"),
+      _arg("--constraints", help="JSON constraint-spec file (row-level types only)"),
+      _arg("--quarantine-out", default=None,
+           help="streaming gate: write the violating rows (triage "
+                "columns + failed list) of every committed file to "
+                "this dir (overwritten)"))
+def cmd_validate_stream(args, run) -> dict:
     """Incremental row-level validation on the per-file commit store
     (checkpoint/runner.py resumable_rows): each invocation validates
     only the clip files with no commit for their current (path, size,
@@ -1391,41 +1589,34 @@ def cmd_validate_stream(args) -> dict:
     input (pinned by tests/test_streaming.py)."""
     from drivel_spark.checkpoint import resumable_rows
 
-    _refuse_stream_checkpoint(args.checkpoint, "validate-stream")
-    spark = build_session("drivel-validate-stream")
-    t0 = time.time()
-    old = _flat_report(spark, args.report, "validate-stream")
-    if getattr(args, "constraints", None):
-        # same contract-file front-end as batch validate; the stream
-        # accepts ROW-LEVEL specs only (resumable_rows raises on
-        # dataset-level entries — uniqueness/referential belong to the
-        # reconcile verb)
-        from drivel_spark.constraints.specfile import load_spec_file
+    run.refuse_checkpoint(args.checkpoint)
+    with _timed() as t:
+        old = _flat_report(run, args.report)
+        if args.constraints:
+            # same contract-file front-end as batch validate; the stream
+            # accepts ROW-LEVEL specs only (resumable_rows raises on
+            # dataset-level entries — uniqueness/referential belong to the
+            # reconcile verb)
+            from drivel_spark.constraints import load_spec_file
 
-        row_cs = load_spec_file(args.constraints)
-    else:
-        # the batch suite's row-level half; its dataset-level checks
-        # belong to the reconcile verb
-        row_cs = [c for c in _constraints(None) if c.is_row_level]
-    scope = F.pmod(F.xxhash64(F.col("clip_id")), F.lit(args.n_scopes)).cast("long")
-    rows, stats = resumable_rows(
-        spark, args.source, CheckpointStore(args.checkpoint), "validate-stream",
-        row_cs, scope,
-        # quarantine the narrow triage columns, not the audio bytes —
-        # the violating clip is re-fetchable by id
-        keep=["clip_id", "sr_hz", "dur_ms", "codec"],
-        quarantine_dir=getattr(args, "quarantine_out", None),
-        max_files=args.max_files_per_trigger,
-    )
-    totals = _write_flat_report(
-        spark, args.report, rows, old[old.partition_id == GLOBAL_SCOPE]
-    )
-    wall = time.time() - t0
+            row_cs = load_spec_file(args.constraints)
+        else:
+            # the batch suite's row-level half; its dataset-level checks
+            # belong to the reconcile verb
+            row_cs = [c for c in _constraints(None) if c.is_row_level]
+        rows, stats = resumable_rows(
+            run.spark, args.source, CheckpointStore(args.checkpoint), run.name,
+            row_cs, scope_of("clip_id", args.n_scopes), keep=KEEP_COLUMNS,
+            quarantine_dir=args.quarantine_out, max_files=args.max_files_per_trigger,
+        )
+        totals = _write_flat_report(
+            run.spark, args.report, rows, old[old.partition_id == GLOBAL_SCOPE]
+        )
     return {
-        "job": "validate-stream",
-        "master": spark.sparkContext.master,
+        "job": run.name,
+        "master": run.spark.sparkContext.master,
         "n_rows_total": int(rows.loc[rows.constraint == "_rows_any_violation", "n_rows"].sum()),
-        "wall_s": round(wall, 3),
+        "wall_s": t["wall_s"],
         "n_report_rows": int(len(totals)),
         "cumulative_digest": passfail_digest(totals),
         "n_violation_rows_total": n_violation_rows(totals),
@@ -1433,38 +1624,18 @@ def cmd_validate_stream(args) -> dict:
     }
 
 
-def _flat_report(spark, report: str, verb: str):
-    """The pass/fail rows of the flat ``--report`` dir that
-    ``validate-stream`` and ``reconcile`` share (none when it does not
-    exist yet).  A dir of ``batch_id=N`` partitions (the layout of the
-    Structured Streaming ``validate-stream``) is refused before
-    anything is computed."""
-    import pandas as pd
-
-    sc = spark.sparkContext
-    Path = sc._jvm.org.apache.hadoop.fs.Path
-    fs = Path(report).getFileSystem(sc._jsc.hadoopConfiguration())
-    if fs.globStatus(Path(f"{report}/batch_id=*")):
-        raise SystemExit(
-            f"{report} holds batch_id=N report partitions; {verb} now keeps one "
-            "flat pass/fail report there: pass a new --report dir"
-        )
-    if not fs.exists(Path(report)):
-        return pd.DataFrame(columns=PASSFAIL_COLS)
-    return spark.read.schema(PASSFAIL_SCHEMA).parquet(report).toPandas()
-
-
-def _write_flat_report(spark, report: str, fresh, kept):
-    """Overwrite ``report`` with a verb's ``fresh`` rows plus the
-    ``kept`` rows the other verb wrote; returns the report frame."""
-    import pandas as pd
-
-    totals = normalize_passfail(pd.concat([fresh, kept], ignore_index=True))
-    passfail_df(spark, totals).coalesce(1).write.mode("overwrite").parquet(report)
-    return totals
-
-
-def cmd_screen_stream(args) -> dict:
+@verb("screen-stream",
+      _SOURCE,
+      _arg("--report", required=True,
+           help="per-kind totals of every committed file (overwritten)"),
+      _STORE,
+      _arg("--kinds", default="quality,dropout,hum", help="comma list from AUDIO_SCREENS, or 'all'"),
+      _arg("--max-files-per-trigger", type=int, default=None,
+           help="files screened and committed per chunk (default: all)"),
+      _arg("--quarantine-out", default=None,
+           help="write the flagged clip ids (+ the flagging screen "
+                "kind) of every committed file to this dir (overwritten)"))
+def cmd_screen_stream(args, run) -> dict:
     """Incremental audio-QA screening on the per-file commit store
     (checkpoint/runner.py resumable_screen, the store ``screen
     --checkpoint`` uses): each invocation decodes only the clip files
@@ -1477,34 +1648,25 @@ def cmd_screen_stream(args) -> dict:
     (pinned by tests/test_streaming.py).  Decode being the dominant
     cost of every screen, this is the verb that keeps content-level QA
     O(new data) on a continuously-growing corpus."""
-    from drivel_spark.io import local_df
-
-    _refuse_stream_checkpoint(args.checkpoint, "screen-stream")
-    kinds = (
-        sorted(AUDIO_SCREENS)
-        if args.kinds == "all"
-        else [k.strip() for k in args.kinds.split(",") if k.strip()]
-    )
-    spark = build_session("drivel-screen-stream")
-    t0 = time.time()
-    totals, stats = resumable_screen(
-        spark, args.source, CheckpointStore(args.checkpoint), "screen-stream", kinds,
-        quarantine_dir=getattr(args, "quarantine_out", None),
-        max_files=args.max_files_per_trigger,
-    )
-    local_df(
-        spark, totals.itertuples(index=False),
-        "kind string, n_clips long, n_flagged long, n_undecodable long",
-    ).write.mode("overwrite").parquet(args.report)
-    totals = totals.sort_values("kind").reset_index(drop=True)
-    wall = time.time() - t0
+    run.refuse_checkpoint(args.checkpoint)
+    kinds = sorted(AUDIO_SCREENS) if args.kinds == "all" else _csv(args.kinds)
+    with _timed() as t:
+        totals, stats = resumable_screen(
+            run.spark, args.source, CheckpointStore(args.checkpoint), run.name, kinds,
+            quarantine_dir=args.quarantine_out, max_files=args.max_files_per_trigger,
+        )
+        _write(dio.local_df(
+            run.spark, totals.itertuples(index=False),
+            "kind string, n_clips long, n_flagged long, n_undecodable long",
+        ), args.report)
+        totals = totals.sort_values("kind").reset_index(drop=True)
     return {
-        "job": "screen-stream",
-        "master": spark.sparkContext.master,
+        "job": run.name,
+        "master": run.spark.sparkContext.master,
         "kinds": kinds,
         "n_clips_total": int(totals["n_clips"].max()),
         "n_flagged_total": int(totals["n_flagged"].sum()),
-        "wall_s": round(wall, 3),
+        "wall_s": t["wall_s"],
         "cumulative_digest": passfail_digest(totals),
         "per_kind": {
             r["kind"]: int(r["n_flagged"]) for _, r in totals.iterrows()
@@ -1513,7 +1675,15 @@ def cmd_screen_stream(args) -> dict:
     }
 
 
-def cmd_reconcile(args) -> dict:
+@verb("reconcile",
+      _arg("--source", required=True, help="the streamed clips parquet dir"),
+      _arg("--report", required=True,
+           help="the validate-stream report dir (its GLOBAL_SCOPE "
+                "rows are overwritten)"),
+      _arg("--transcripts", default=None,
+           help="transcripts table (path or iceberg:db.tbl) for the "
+                "referential check; omitted = uniqueness only"))
+def cmd_reconcile(args, run) -> dict:
     """Dataset-level reconciliation for a validated stream: row checks
     run incrementally (``validate-stream``); exact global uniqueness
     (and clip↔transcript referential completeness, when a transcripts
@@ -1523,82 +1693,38 @@ def cmd_reconcile(args) -> dict:
     table) and its row-level rows stay, so the report after stream +
     reconcile equals the full batch engine's pass/fail table on the
     same data (pinned by tests/test_streaming.py)."""
-    from drivel_spark.io import read_table
-
-    spark = build_session("drivel-reconcile")
-    t0 = time.time()
-    old = _flat_report(spark, args.report, "reconcile")
-    clips = read_table(spark, args.source)
-    cs: list = [Unique("clip_id_unique", "clip_id")]
-    ref_tables = {}
-    if args.transcripts:
-        ref_tables["transcripts"] = read_table(spark, args.transcripts)
-        cs.append(
-            Referential("clip_has_transcript", "clip_id", "transcripts", "clip_id")
+    with _timed() as t:
+        old = _flat_report(run, args.report)
+        clips = run.table(args.source)
+        cs: list = [Unique("clip_id_unique", "clip_id")]
+        ref_tables = {}
+        if args.transcripts:
+            ref_tables["transcripts"] = run.table(args.transcripts)
+            cs.append(
+                Referential("clip_has_transcript", "clip_id", "transcripts", "clip_id")
+            )
+        res = validate(clips, cs, ref_tables=ref_tables)
+        totals = _write_flat_report(
+            run.spark, args.report, res.passfail_pdf(), old[old.partition_id != GLOBAL_SCOPE]
         )
-    res = validate(clips, cs, ref_tables=ref_tables)
-    totals = _write_flat_report(
-        spark, args.report, res.passfail_pdf(), old[old.partition_id != GLOBAL_SCOPE]
-    )
-    wall = time.time() - t0
     return {
-        "job": "reconcile",
-        "master": spark.sparkContext.master,
-        "wall_s": round(wall, 3),
-        "dataset_checks": [
-            {k: d[k] for k in ("constraint", "n_violations", "passed")}
-            for d in res.dataset
-        ],
+        "job": run.name,
+        "master": run.spark.sparkContext.master,
+        "wall_s": t["wall_s"],
+        "dataset_checks": _dataset_checks(res),
         "n_report_rows": int(len(totals)),
         "cumulative_digest": passfail_digest(totals),
     }
 
 
-def _refuse_stream_checkpoint(checkpoint: str, verb: str) -> None:
-    """Refuse a Structured Streaming checkpoint dir (``metadata`` +
-    ``offsets/``) written by an earlier ``verb``, before anything is
-    written: the verb keeps a per-file commit store there now."""
-    if os.path.isfile(os.path.join(checkpoint, "metadata")) and os.path.isdir(
-        os.path.join(checkpoint, "offsets")
-    ):
-        raise SystemExit(
-            f"{checkpoint} holds a Structured Streaming checkpoint; {verb} now keeps "
-            "a per-file commit store there: pass a new --checkpoint dir"
-        )
-
-
-def cmd_profile_stream(args) -> dict:
-    """Incremental profile on the per-file commit store
-    (checkpoint/runner.py resumable_profile, the store ``validate
-    --checkpoint`` uses): profiles only the files with no commit for
-    their current (path, size, mtime), ``--max-files-per-trigger`` files
-    per commit, and prints the profile of everything committed (equal
-    to the batch profile on the exact fields, pinned by
-    tests/test_streaming.py)."""
-    _refuse_stream_checkpoint(args.checkpoint, "profile-stream")
-    spark = build_session("drivel-profile-stream")
-    t0 = time.time()
-    cols = args.columns.split(",") if args.columns else PROFILE_COLUMNS
-    prof, stats = resumable_profile(
-        spark, args.source, CheckpointStore(args.checkpoint), run_id="profile-stream",
-        columns=cols, max_files=args.max_files_per_trigger,
-    )
-    sys.stderr.write(prof.describe() + "\n")
-    wall = time.time() - t0
-    return {
-        "job": "profile-stream",
-        "master": spark.sparkContext.master,
-        "n_rows_total": prof.n_rows,
-        "wall_s": round(wall, 3),
-        "columns": prof.columns(),
-        "n_state_commits": len(
-            [f for f in os.listdir(args.checkpoint) if f.endswith(".parquet")]
-        ),
-        "resume": stats,
-    }
-
-
-def cmd_track_stream(args) -> dict:
+@verb("track-stream",
+      _SOURCE,
+      _arg("--key", default="codec", help="bounded-cardinality key column"),
+      _arg("--value", default="dur_ms", help="numeric column to track"),
+      _arg("--checkpoint", required=True),
+      _arg("--out", required=True, help="per-batch update rows dir"),
+      _arg("--max-files-per-trigger", type=int, default=None))
+def cmd_track_stream(args, run) -> dict:
     """Keyed online tracking via applyInPandasWithState: per-key
     running column stats over a growing source, state in the streaming
     state store (streaming/stateful.py).  Prints the current per-key
@@ -1606,436 +1732,128 @@ def cmd_track_stream(args) -> dict:
     from drivel_spark.fixtures import CLIPS_SCHEMA
     from drivel_spark.streaming import latest_stats, running_stats_stream
 
-    spark = build_session("drivel-track-stream")
-    t0 = time.time()
-    running_stats_stream(
-        spark,
-        args.source,
-        CLIPS_SCHEMA,
-        args.key,
-        args.value,
-        args.checkpoint,
-        args.out,
-        max_files_per_trigger=args.max_files_per_trigger,
-    )
-    if not os.path.isdir(args.out):
-        # an empty source runs zero batches: no update rows, no out dir
-        rows = []
-    else:
-        import math
-
-        current = latest_stats(spark, args.out, args.key).orderBy(args.key)
+    with _timed() as t:
+        running_stats_stream(
+            run.spark,
+            args.source,
+            CLIPS_SCHEMA,
+            args.key,
+            args.value,
+            args.checkpoint,
+            args.out,
+            max_files_per_trigger=args.max_files_per_trigger,
+        )
+        # an empty source runs zero batches: no update rows, no out dir.
         # NULL stats (all-null keys) round-trip as NaN doubles through
-        # parquet; json.dumps would emit literal NaN (invalid JSON)
+        # parquet
         rows = [
-            {
-                k: (None if isinstance(v, float) and math.isnan(v) else v)
-                for k, v in r.asDict().items()
-            }
-            for r in current.collect()
-        ]
+            {k: _nan_none(v) for k, v in r.asDict().items()}
+            for r in latest_stats(run.spark, args.out, args.key).orderBy(args.key).collect()
+        ] if os.path.isdir(args.out) else []
     return {
-        "job": "track-stream",
-        "master": spark.sparkContext.master,
+        "job": run.name,
+        "master": run.spark.sparkContext.master,
         "key": args.key,
         "value": args.value,
         "n_keys": len(rows),
-        "wall_s": round(time.time() - t0, 3),
+        "wall_s": t["wall_s"],
         "stats": rows,
     }
 
 
-def cmd_window_stream(args) -> dict:
+@verb("window-stream",
+      _arg("--source", required=True, help="growing parquet dir"),
+      _arg("--schema",
+           default="event_id long, ts timestamp, user_id long, "
+                   "event_type string, value double, props string",
+           help="source schema (streaming reads need one); default: events table"),
+      _arg("--event-col", default="ts", help="event-time timestamp column"),
+      _arg("--value", default="value", help="numeric column to aggregate"),
+      _arg("--key", default=None, help="optional sub-group column"),
+      _arg("--window", default="10 minutes"),
+      _arg("--slide", default=None, help="slide < window → sliding windows"),
+      _arg("--watermark", default="10 minutes", help="max allowed lateness"),
+      _arg("--checkpoint", required=True),
+      _arg("--out", required=True, help="finalized per-window rows dir"),
+      _arg("--max-files-per-trigger", type=int, default=None))
+def cmd_window_stream(args, run) -> dict:
     """Event-time windowed aggregation with watermark over a growing
     source (streaming/windows.py): append-mode per-window stats,
     finalized exactly once when the watermark closes the window; late
     rows beyond the watermark are dropped.  Re-invocation with the same
     checkpoint resumes the watermark + open-window state."""
-    import math
-
     from drivel_spark.streaming import load_windowed_stats, windowed_stats_stream
 
-    spark = build_session("drivel-window-stream")
-    t0 = time.time()
-    windowed_stats_stream(
-        spark,
-        args.source,
-        args.schema,
-        args.event_col,
-        args.value,
-        args.checkpoint,
-        args.out,
-        window=args.window,
-        slide=args.slide,
-        watermark=args.watermark,
-        key_col=args.key,
-        max_files_per_trigger=args.max_files_per_trigger,
-    )
-    if not os.path.isdir(args.out):
-        rows = []
-    else:
+    with _timed() as t:
+        windowed_stats_stream(
+            run.spark,
+            args.source,
+            args.schema,
+            args.event_col,
+            args.value,
+            args.checkpoint,
+            args.out,
+            window=args.window,
+            slide=args.slide,
+            watermark=args.watermark,
+            key_col=args.key,
+            max_files_per_trigger=args.max_files_per_trigger,
+        )
         order = ["window_start"] + ([args.key] if args.key else [])
         rows = [
-            {
-                k: (
-                    None
-                    if isinstance(v, float) and math.isnan(v)
-                    else str(v) if k in ("window_start", "window_end") else v
-                )
-                for k, v in r.asDict().items()
-            }
-            for r in load_windowed_stats(spark, args.out).orderBy(*order).collect()
-        ]
+            {k: str(v) if k in ("window_start", "window_end") else _nan_none(v)
+             for k, v in r.asDict().items()}
+            for r in load_windowed_stats(run.spark, args.out).orderBy(*order).collect()
+        ] if os.path.isdir(args.out) else []
     return {
-        "job": "window-stream",
-        "master": spark.sparkContext.master,
+        "job": run.name,
+        "master": run.spark.sparkContext.master,
         "event_col": args.event_col,
         "value": args.value,
         "window": args.window,
         "watermark": args.watermark,
         "n_windows": len(rows),
-        "wall_s": round(time.time() - t0, 3),
+        "wall_s": t["wall_s"],
         "windows": rows,
     }
 
 
+@verb("profile-stream",
+      _SOURCE,
+      _STORE,
+      _COLUMNS,
+      _arg("--max-files-per-trigger", type=int, default=None,
+           help="files profiled and committed per chunk (default: all)"))
+def cmd_profile_stream(args, run) -> dict:
+    """Incremental profile on the per-file commit store
+    (checkpoint/runner.py resumable_profile, the store ``validate
+    --checkpoint`` uses): profiles only the files with no commit for
+    their current (path, size, mtime), ``--max-files-per-trigger`` files
+    per commit, and prints the profile of everything committed (equal
+    to the batch profile on the exact fields, pinned by
+    tests/test_streaming.py)."""
+    run.refuse_checkpoint(args.checkpoint)
+    store = CheckpointStore(args.checkpoint)
+    with _timed() as t:
+        prof, stats = resumable_profile(
+            run.spark, args.source, store, run_id=run.name,
+            columns=_csv(args.columns) or PROFILE_COLUMNS, max_files=args.max_files_per_trigger,
+        )
+        sys.stderr.write(prof.describe() + "\n")
+    return {
+        "job": run.name,
+        "master": run.spark.sparkContext.master,
+        "n_rows_total": prof.n_rows,
+        "wall_s": t["wall_s"],
+        "columns": prof.columns(),
+        "n_state_commits": len(store.commit_files()),
+        "resume": stats,
+    }
+
+
 def main(argv=None) -> None:
-    p = argparse.ArgumentParser(prog="drivel-spark-job")
-    sub = p.add_subparsers(dest="cmd", required=True)
-
-    sp = sub.add_parser("prepare")
-    sp.add_argument("--n-rows", type=int, default=20000)
-    sp.add_argument("--partitions", type=int, default=128)
-    sp.add_argument("--seed", type=int, default=42)
-    sp.add_argument("--variant", default="default")
-    sp.add_argument("--no-audio", action="store_true")
-    sp.add_argument("--shared-seg-every", type=int, default=0,
-                    help="plant one common 750ms PCM segment into every "
-                         "k-th eligible clip (the jingle fixture hook, "
-                         "for dup-segments)")
-    sp.add_argument("--out", required=True)
-
-    sm = sub.add_parser("mix")
-    sm.add_argument("--data", required=True, help="source table (path or iceberg: ref)")
-    sm.add_argument("--by", required=True, help="source/group column")
-    sm.add_argument("--id-col", default="doc_id")
-    sm.add_argument("--weights", required=True, help="key=w,key=w target shares")
-    sm.add_argument("--budget", type=float, default=None,
-                    help="total kept rows (or --size-col units); default = largest exact-proportion budget")
-    sm.add_argument("--size-col", default=None, help="token/size column for the budget")
-    sm.add_argument("--seed", type=int, default=42)
-    sm.add_argument("--out", default=None, help="write survivors here (parquet)")
-
-    sg2 = sub.add_parser("suggest")
-    sg2.add_argument("--data", required=True, help="CLEAN table (path or iceberg: ref)")
-    sg2.add_argument("--columns", default=None, help="comma-separated subset")
-    sg2.add_argument("--margin", type=float, default=0.0,
-                     help="widen numeric ranges by this fraction of the span")
-    sg2.add_argument("--quantile-range", default=None,
-                     help="'p_lo,p_hi' — robust numeric envelopes from the "
-                          "KLL sketch instead of exact min/max")
-    sg2.add_argument("--with-drift", action="store_true",
-                     help="also emit drift gates (validate needs --baseline)")
-    sg2.add_argument("--with-distribution", action="store_true",
-                     help="also emit entropy gates at each enum column's "
-                          "observed Shannon entropy ±25%")
-    sg2.add_argument("--out", required=True, help="spec-file JSON path")
-
-    sl = sub.add_parser("leakage")
-    sl.add_argument("--data", required=True, help="corpus table (path or iceberg: ref)")
-    sl.add_argument("--id-col", default="doc_id")
-    sl.add_argument("--text-col", default="text")
-    sl.add_argument("--weights", required=True, help="key=w,key=w split shares")
-    sl.add_argument("--seed", type=int, default=42)
-    sl.add_argument("--group-col", default=None,
-                    help="key the split on this column (leakage-safe groups)")
-    sl.add_argument("--near", action="store_true",
-                    help="also run the MinHash near-dup tier (row-keyed only)")
-    sl.add_argument("--threshold", type=float, default=0.8,
-                    help="Jaccard threshold for --near")
-    sl.add_argument("--out", default=None,
-                    help="write leak tables here (/exact and /near)")
-
-    sh = sub.add_parser("shuffle")
-    sh.add_argument("--data", required=True, help="source table (path or iceberg: ref)")
-    sh.add_argument("--id-col", default="doc_id")
-    sh.add_argument("--seed", type=int, default=42)
-    sh.add_argument("--shards", type=int, default=None,
-                    help="round-robin shard count; written hive-partitioned by shard")
-    sh.add_argument("--partitions", type=int, default=None,
-                    help="row-id assignment bucket count (defaults to input partitions)")
-    sh.add_argument("--where", default=None,
-                    help="SQL predicate pushed to the source scan")
-    sh.add_argument("--out", required=True)
-
-    ss = sub.add_parser("segment")
-    ss.add_argument("--data", default=None, help="db dir containing /clips")
-    ss.add_argument("--clips", default=None,
-                    help="override clips table (path or iceberg:db.tbl ref)")
-    ss.add_argument("--out", required=True, help="segments table dir")
-    ss.add_argument("--seg-ms", type=int, default=500)
-    ss.add_argument("--min-tail-ms", type=int, default=200)
-    ss.add_argument("--where", default=None,
-                    help="SQL predicate pushed to the clips scan")
-
-    sc = sub.add_parser("screen")
-    sc.add_argument("--data", default=None, help="db dir containing /clips")
-    sc.add_argument("--clips", default=None,
-                    help="override clips table (path or iceberg:db.tbl ref)")
-    sc.add_argument("--kind", required=True,
-                    help=f"one of {sorted(AUDIO_SCREENS)}, or a comma "
-                         "list of fused-capable kinds for a one-decode "
-                         "fused run")
-    sc.add_argument("--out", default=None,
-                    help="optional per-clip report table dir")
-    sc.add_argument("--flag", default=None,
-                    help="SQL predicate over the report columns "
-                         "(default: the screen's published policy)")
-    sc.add_argument("--where", default=None,
-                    help="SQL predicate pushed to the clips scan")
-    sc.add_argument("--checkpoint", default=None,
-                    help="per-file lineage store dir: commit each file's "
-                         "screen counts so an interrupted corpus screen "
-                         "resumes without re-decoding (fused kinds only)")
-    sc.add_argument("--run-id", default=None,
-                    help="lineage run id (default 'screen')")
-
-    sd = sub.add_parser("dup-segments")
-    sd.add_argument("--data", default=None, help="db dir containing /clips")
-    sd.add_argument("--clips", default=None,
-                    help="override clips table (path or iceberg:db.tbl ref)")
-    sd.add_argument("--out", required=True, help="duplicated-span table dir")
-    sd.add_argument("--win-ms", type=int, default=500)
-    sd.add_argument("--hop-ms", type=int, default=250)
-    sd.add_argument("--within-clip", action="store_true",
-                    help="also flag repetition inside a single clip")
-    sd.add_argument("--where", default=None,
-                    help="SQL predicate pushed to the clips scan")
-
-    sb = sub.add_parser("baseline")
-    sb.add_argument("--data", required=True)
-    sb.add_argument("--out", required=True)
-    sb.add_argument("--columns", default=None, help="comma-separated subset")
-    sb.add_argument("--by", default=None,
-                    help="grouped baseline: one profile per value of this "
-                         "category column (per-codec drift reference)")
-
-    sv = sub.add_parser("validate")
-    sv.add_argument("--data", required=True)
-    sv.add_argument("--clips", default=None,
-                    help="override clips table (path or iceberg:db.tbl ref)")
-    sv.add_argument("--transcripts", default=None,
-                    help="override transcripts table (path or iceberg:db.tbl ref)")
-    sv.add_argument("--baseline", default=None)
-    sv.add_argument("--checkpoint", default=None)
-    sv.add_argument("--run-id", default="run0")
-    sv.add_argument("--check-audio", action="store_true")
-    sv.add_argument("--check-pcm-size", action="store_true")
-    sv.add_argument("--check-wav-header", action="store_true",
-                    help="structural RIFF/fmt/data header tier: magics, mono/"
-                         "16-bit, header sr == metadata sr, declared sizes — "
-                         "decode-free Catalyst byte arithmetic")
-    sv.add_argument("--constraints", help="JSON constraint-spec file replacing the built-in suite")
-    sv.add_argument("--n-scopes", type=int, default=64)
-    sv.add_argument("--report", default=None)
-    sv.add_argument("--where", default=None,
-                    help="SQL predicate pushed to the clips scan — validate "
-                         "only the matching slice (e.g. one partition)")
-    sv.add_argument("--quarantine-out", default=None,
-                    help="write row-level violations (kept cols + failed "
-                         "constraint list) to this parquet dir for triage")
-    sv.add_argument("--clean-out", default=None,
-                    help="enforcement: write FULL source rows that passed "
-                         "every row-level constraint to this parquet dir "
-                         "(violating clip_ids excluded via left_anti)")
-    sv.add_argument("--slice-dims", default=None,
-                    help="comma list of kept columns (e.g. codec,sr_hz): "
-                         "attribute row-level violations to dim slices "
-                         "(ops/audit.py violation_slice_report); top-10 on "
-                         "stdout, full report to <report>/slices")
-    sv.add_argument("--history-window", type=int, default=None,
-                    help="with --checkpoint: after the run commits, score "
-                         "THIS run's metrics against the trailing N runs in "
-                         "the store (constraints/history.py) and report "
-                         "anomalies in the output JSON")
-    sv.add_argument("--history-max-rel", type=float, default=None,
-                    help="with --history-window: also flag metrics whose "
-                         "run-over-run relative change exceeds this")
-    sv.add_argument("--slice-per-constraint", action="store_true",
-                    help="with --slice-dims: score each failed constraint "
-                         "against its own base rate (constraint_slice_report) "
-                         "instead of the pooled any-violation rate")
-
-    shy = sub.add_parser("history")
-    shy.add_argument("--checkpoint", default=None,
-                     help="commit-table dir accumulated by validate/profile "
-                          "--checkpoint runs")
-    shy.add_argument("--stream-checkpoint", default=None,
-                     help="validate-stream commit store: score each committed "
-                          "file's violation counts + row count against the "
-                          "files committed before it")
-    shy.add_argument("--window", type=int, default=10,
-                     help="trailing runs in the reference window")
-    shy.add_argument("--k", type=float, default=3.0,
-                     help="robust fence multiplier (median +/- k*1.4826*MAD)")
-    shy.add_argument("--min-history", type=int, default=3,
-                     help="runs required before a verdict (younger -> NULL)")
-    shy.add_argument("--max-rel-change", type=float, default=None,
-                     help="also flag |value - prev| / |prev| above this")
-    shy.add_argument("--abs-tol", type=float, default=0.0,
-                     help="absolute deviation floor under BOTH detectors — "
-                          "count metrics stepping by <= this never alarm")
-    shy.add_argument("--metrics", default=None,
-                     help="comma-separated metric-name subset")
-    shy.add_argument("--out", default=None,
-                     help="write the full scored report parquet here")
-
-    svd = sub.add_parser("validate-delta")
-    svd.add_argument("--data", required=True, help="NEW snapshot db dir")
-    svd.add_argument("--old-data", required=True, help="previous snapshot db dir")
-    svd.add_argument("--prev-report", required=True,
-                     help="report dir a prior `validate --report` (or "
-                          "validate-delta --report) wrote for the old snapshot")
-    svd.add_argument("--baseline", default=None)
-    svd.add_argument("--check-audio", action="store_true")
-    svd.add_argument("--check-pcm-size", action="store_true")
-    svd.add_argument("--check-wav-header", action="store_true")
-    svd.add_argument("--n-scopes", type=int, default=64,
-                     help="must match the previous report's value")
-    svd.add_argument("--report", default=None,
-                     help="write the MERGED report here (chains into the "
-                          "next day's --prev-report)")
-
-    sdf = sub.add_parser("diff")
-    sdf.add_argument("--data", default=None, help="db dir containing /clips")
-    sdf.add_argument("--clips", default=None,
-                     help="override clips table (path or iceberg:db.tbl ref)")
-    sdf.add_argument("--baseline", required=True,
-                     help="baseline profile pickle from the `baseline` verb")
-    sdf.add_argument("--columns", default=None, help="comma-separated subset")
-    sdf.add_argument("--gate", action="store_true",
-                     help="classify each change with a backward-compat "
-                          "severity (profiling/compat.py) and emit the "
-                          "table-level verdict / gate_passed fields")
-
-    sd = sub.add_parser("describe")
-    sd.add_argument("--data", default=None, help="path or iceberg:db.tbl")
-    sd.add_argument("--schema", default=None,
-                    help="describe a JSON Schema file instead of scanning data "
-                         "(the reference's --from-schema, main.rs:30-32)")
-    sd.add_argument("--columns", default=None, help="comma-separated subset")
-    sd.add_argument("--json-schema", action="store_true")
-    sd.add_argument("--extended", action="store_true",
-                    help="lossless JSON Schema (keeps bounds the reference drops)")
-    sd.add_argument("--infer-enum", action="store_true",
-                    help="enable the enum post-pass (reference main.rs:34-37)")
-    sd.add_argument("--enum-max-uniq", type=float, default=0.1,
-                    help="max unique/count ratio for enum (main.rs:38-41)")
-    sd.add_argument("--enum-min-n", type=int, default=1,
-                    help="min sample size for enum (main.rs:42-45)")
-
-    sg = sub.add_parser("produce")
-    sg.add_argument("--data", default=None, help="infer the schema from this table")
-    sg.add_argument("--schema", default=None, help="or parse this JSON Schema file")
-    sg.add_argument("--n-rows", type=int, default=1000)
-    sg.add_argument("--seed", type=int, default=42)
-    sg.add_argument("--out", required=True)
-
-    svs = sub.add_parser("validate-stream")
-    svs.add_argument("--source", required=True, help="growing clips parquet dir")
-    svs.add_argument("--report", required=True,
-                     help="flat pass/fail report dir shared with reconcile "
-                          "(row-level rows overwritten)")
-    svs.add_argument("--checkpoint", required=True, help="per-file commit store dir")
-    svs.add_argument("--n-scopes", type=int, default=64)
-    svs.add_argument("--max-files-per-trigger", type=int, default=None,
-                     help="files validated and committed per chunk (default: all)")
-    svs.add_argument("--constraints",
-                     help="JSON constraint-spec file (row-level types only)")
-    svs.add_argument("--quarantine-out", default=None,
-                     help="streaming gate: write the violating rows (triage "
-                          "columns + failed list) of every committed file to "
-                          "this dir (overwritten)")
-
-    sss = sub.add_parser("screen-stream")
-    sss.add_argument("--source", required=True, help="growing clips parquet dir")
-    sss.add_argument("--report", required=True,
-                     help="per-kind totals of every committed file (overwritten)")
-    sss.add_argument("--checkpoint", required=True, help="per-file commit store dir")
-    sss.add_argument("--kinds", default="quality,dropout,hum",
-                     help="comma list from AUDIO_SCREENS, or 'all'")
-    sss.add_argument("--max-files-per-trigger", type=int, default=None,
-                     help="files screened and committed per chunk (default: all)")
-    sss.add_argument("--quarantine-out", default=None,
-                     help="write the flagged clip ids (+ the flagging screen "
-                          "kind) of every committed file to this dir (overwritten)")
-
-    sr = sub.add_parser("reconcile")
-    sr.add_argument("--source", required=True, help="the streamed clips parquet dir")
-    sr.add_argument("--report", required=True,
-                    help="the validate-stream report dir (its GLOBAL_SCOPE "
-                         "rows are overwritten)")
-    sr.add_argument("--transcripts", default=None,
-                    help="transcripts table (path or iceberg:db.tbl) for the "
-                         "referential check; omitted = uniqueness only")
-
-    st = sub.add_parser("track-stream")
-    st.add_argument("--source", required=True, help="growing clips parquet dir")
-    st.add_argument("--key", default="codec", help="bounded-cardinality key column")
-    st.add_argument("--value", default="dur_ms", help="numeric column to track")
-    st.add_argument("--checkpoint", required=True)
-    st.add_argument("--out", required=True, help="per-batch update rows dir")
-    st.add_argument("--max-files-per-trigger", type=int, default=None)
-
-    sw = sub.add_parser("window-stream")
-    sw.add_argument("--source", required=True, help="growing parquet dir")
-    sw.add_argument(
-        "--schema",
-        default="event_id long, ts timestamp, user_id long, "
-        "event_type string, value double, props string",
-        help="source schema (streaming reads need one); default: events table",
-    )
-    sw.add_argument("--event-col", default="ts", help="event-time timestamp column")
-    sw.add_argument("--value", default="value", help="numeric column to aggregate")
-    sw.add_argument("--key", default=None, help="optional sub-group column")
-    sw.add_argument("--window", default="10 minutes")
-    sw.add_argument("--slide", default=None, help="slide < window → sliding windows")
-    sw.add_argument("--watermark", default="10 minutes", help="max allowed lateness")
-    sw.add_argument("--checkpoint", required=True)
-    sw.add_argument("--out", required=True, help="finalized per-window rows dir")
-    sw.add_argument("--max-files-per-trigger", type=int, default=None)
-
-    sps = sub.add_parser("profile-stream")
-    sps.add_argument("--source", required=True, help="growing clips parquet dir")
-    sps.add_argument("--checkpoint", required=True, help="per-file commit store dir")
-    sps.add_argument("--columns", default=None, help="comma-separated subset")
-    sps.add_argument("--max-files-per-trigger", type=int, default=None,
-                     help="files profiled and committed per chunk (default: all)")
-
-    args = p.parse_args(argv)
-    out = {
-        "prepare": cmd_prepare,
-        "segment": cmd_segment,
-        "screen": cmd_screen,
-        "dup-segments": cmd_dup_segments,
-        "leakage": cmd_leakage,
-        "shuffle": cmd_shuffle,
-        "suggest": cmd_suggest,
-        "mix": cmd_mix,
-        "baseline": cmd_baseline,
-        "validate": cmd_validate,
-        "history": cmd_history,
-        "validate-delta": cmd_validate_delta,
-        "diff": cmd_diff,
-        "describe": cmd_describe,
-        "produce": cmd_produce,
-        "validate-stream": cmd_validate_stream,
-        "screen-stream": cmd_screen_stream,
-        "reconcile": cmd_reconcile,
-        "track-stream": cmd_track_stream,
-        "window-stream": cmd_window_stream,
-        "profile-stream": cmd_profile_stream,
-    }[args.cmd](args)
+    args = parser().parse_args(argv)
+    out = VERBS[args.cmd][0](args)
     sys.stdout.write(json.dumps(out) + "\n")
     sys.stdout.flush()
 
